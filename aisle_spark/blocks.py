@@ -401,9 +401,13 @@ def encode_column(spec: ColumnSpec, arr: pa.Array) -> dict:
             # NATIVE array (uint64 keeps its wrapped int64 stat view, the
             # codec module's convention) instead of int_stats, whose u64
             # widening copy + run/distinct passes the cascade recomputes
-            # per chunk anyway
-            sv = vals.view(np.int64) if vals.dtype == np.uint64 else vals
-            vmin, vmax = int(sv.min()), int(sv.max())
+            # per chunk anyway. floatlist elem stats come from
+            # _float_min_max below, so the int view needs no scan there
+            if spec.kind == "floatlist":
+                vmin = vmax = None
+            else:
+                sv = vals.view(np.int64) if vals.dtype == np.uint64 else vals
+                vmin, vmax = int(sv.min()), int(sv.max())
         elif vals.size:
             vstats = int_stats(vals, exact_distinct=False)
             vcodec = choose_int_codec(vstats, vals.dtype.itemsize)

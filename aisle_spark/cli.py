@@ -10,16 +10,15 @@ Usage (north rule: "runs via spark-submit --py-files"):
 
   spark-submit --py-files aisle_spark.zip -m aisle_spark.cli … \
       encode --input /data/tokens --output /data/encoded \
-             --parts 4096 --sort source,n_tok [--resumable --groups 64]
+             --parts 4096 --sort source,n_tok [--resume]
 
   spark-submit --py-files aisle_spark.zip -m aisle_spark.cli … \
       scan --table /data/encoded \
            --where "source = 'code' AND n_tok > 100" \
            --columns doc_id,n_tok --output /data/result
 
---where takes a SQL predicate (sqlcompile.parse_where); strings containing
-`col(` fall back to the legacy builder-expression form, evaluated with
-ONLY the `col` builder in scope.
+--where takes a SQL predicate, compiled by sqlcompile.parse_where; it is
+parsed, never evaluated as Python.
 """
 
 from __future__ import annotations
@@ -45,44 +44,18 @@ def _session(app: str):
 
 
 def cmd_encode(args) -> None:
-    from aisle_spark.pipeline import (
-        arrow_schema_of,
-        encode_files_inline,
-        _write_schema_sidecar,
-    )
+    from aisle_spark.pipeline import encode_files_direct
 
     spark, owns = _session("aisle-encode")
-    sort_cols = args.sort.split(",") if args.sort else None
-    if args.resumable:
-        from aisle_spark.checkpoint import encode_resumable
-
-        df = spark.read.parquet(args.input)
-        ran = encode_resumable(
-            df,
-            args.output,
-            parts=args.parts,
-            groups=args.groups,
-            sort_cols=sort_cols,
-        )
-        print(f"encoded {ran} group(s) this run (0 = already complete)")
-    elif args.direct:
-        from aisle_spark.pipeline import encode_files_direct
-
-        committed = encode_files_direct(
-            spark,
-            args.input,
-            args.output,
-            parts=args.parts,
-            sort_cols=sort_cols,
-            resume=args.resume,
-        )
-        print(f"committed {len(committed)} block file(s)")
-    else:
-        blocks, schema = encode_files_inline(
-            spark, args.input, parts=args.parts, sort_cols=sort_cols
-        )
-        blocks.write.mode(args.mode).option("compression", "none").parquet(args.output)
-        _write_schema_sidecar(args.output, schema)
+    committed = encode_files_direct(
+        spark,
+        args.input,
+        args.output,
+        parts=args.parts,
+        sort_cols=args.sort.split(",") if args.sort else None,
+        resume=args.resume,
+    )
+    print(f"committed {len(committed)} block file(s)")
     if owns:
         spark.stop()
 
@@ -114,20 +87,13 @@ def cmd_stream(args) -> None:
 
 
 def cmd_scan(args) -> None:
-    from aisle_spark.filterspec import col  # noqa: F401 (eval namespace)
     from aisle_spark.pipeline import read_encoded, scan
+    from aisle_spark.sqlcompile import parse_where
 
+    # parse before starting Spark: a malformed predicate fails fast
+    where = parse_where(args.where) if args.where else None
     spark, owns = _session("aisle-scan")
     blocks, schema = read_encoded(spark, args.table)
-    where = None
-    if args.where:
-        if "col(" in args.where:
-            # legacy builder-expression form
-            where = eval(args.where, {"__builtins__": {}}, {"col": col})  # noqa: S307
-        else:
-            from aisle_spark.sqlcompile import parse_where
-
-            where = parse_where(args.where)
     columns = args.columns.split(",") if args.columns else None
     if args.report and where is not None:
         from aisle_spark.pipeline import prune_report
@@ -322,18 +288,10 @@ def main(argv: list[str] | None = None) -> None:
     e.add_argument("--output", required=True)
     e.add_argument("--parts", type=int, default=256)
     e.add_argument("--sort", default=None, help="comma-separated sort columns")
-    e.add_argument("--mode", default="overwrite")
-    e.add_argument("--resumable", action="store_true")
-    e.add_argument("--groups", type=int, default=16)
-    e.add_argument(
-        "--direct",
-        action="store_true",
-        help="python tasks write block parquet directly (at-scale path)",
-    )
     e.add_argument(
         "--resume",
         action="store_true",
-        help="with --direct: skip inputs already committed in _done/",
+        help="skip inputs already committed in _done/",
     )
     e.set_defaults(fn=cmd_encode)
 

@@ -371,7 +371,8 @@ def _body_chunked(u: np.ndarray, dtype: np.dtype) -> bytes:
     # per-chunk packs) — collapses ~n/4096 small packs into a handful of
     # large ones, which is where the per-call numpy overhead was going
     batch: list[tuple[int, int, bytes, object]] = []  # (ci, width, hdr, vals)
-    dict_cands: list[tuple[int, int, int, np.ndarray]] = []  # (ci, lo, cn, uniq_w)
+    # (ci, lo, cn, uniq_w, codes): codes = inverse indices into uniq_w
+    dict_cands: list[tuple[int, int, int, np.ndarray, np.ndarray]] = []
     for ci in range(nc):
         lo = ci * m
         cn = min(m, n - lo)

@@ -1042,7 +1042,7 @@ class AisleStreamReader(DataSourceStreamReader):
 
 @dataclass
 class AisleCommit(WriterCommitMessage):
-    filename: str
+    filename: str | None  # None: the task wrote no block
     n_blocks: int
     stats: dict | None = None  # per-column [min, max] over the whole file
 
@@ -1404,112 +1404,30 @@ class AisleWriter(DataSourceArrowWriter):
         return to_arrow_schema(self.spark_schema)
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> AisleCommit:
-        import pyarrow.parquet as pq
-
-        from aisle_spark.blocks import encode_block
         from aisle_spark.pipeline import (
-            DEFAULT_MAX_VALUES,
-            _order_and_slice,
+            BlockFileWriter,
+            _fs_mkdirs,
             _pin_worker_threads,
         )
-        from aisle_spark.schema import (
-            blocks_arrow_schema,
-            flatten_table,
-            specs_for_schema,
-        )
+        from aisle_spark.schema import specs_for_schema
 
         _pin_worker_threads()
-        specs = specs_for_schema(self._arrow_schema())
-        fstat_cols = [s.name for s in specs if s.kind in _FILE_STAT_KINDS]
-        map_cols = [s.name for s in specs if s.kind == "map"]
-        fstats: dict = {}
-        out_schema = blocks_arrow_schema(specs)
-        sort_keys = [(c, "ascending") for c in self.sort_cols]
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        target = f"{self.path.rstrip('/')}/{name}"
-        from aisle_spark.pipeline import _fs_mkdirs
-
         _fs_mkdirs(self.fs, self.path)
-        task_salt = uuid.uuid4().int & 0x7FFF_FFFF
-        writer = None
-        n_blocks = 0
-        rows: list[dict] = []
-        pending: list[pa.RecordBatch] = []
-        pending_rows = 0
-        SLAB_ROWS = 262_144  # sort+encode granularity: bounded task memory
-        FLUSH_BLOCKS = 64  # one parquet row group per 64 blocks
-
-        def _flush_rows(force: bool) -> None:
-            nonlocal writer, rows
-            if rows and (force or len(rows) >= FLUSH_BLOCKS):
-                chunk = pa.Table.from_pylist(rows, schema=out_schema)
-                rows = []
-                if writer is None:
-                    writer = pq.ParquetWriter(
-                        target, out_schema, compression="zstd", filesystem=self.fs
-                    )
-                writer.write_table(chunk)
-
-        def _encode_slab() -> None:
-            nonlocal pending, pending_rows, n_blocks
-            if not pending:
-                return
-            tbl = flatten_table(pa.Table.from_batches(pending))
-            pending, pending_rows = [], 0
-            for block in _order_and_slice(
-                tbl, specs, sort_keys, self.block_rows, DEFAULT_MAX_VALUES
-            ):
-                block_id = (task_salt << 24) | n_blocks
-                row = encode_block(specs, block, 0, block_id)
-                _merge_file_stat(fstats, row, fstat_cols, map_cols)
-                rows.append(row)
-                n_blocks += 1
-                _flush_rows(force=False)
-
-        try:
-            for batch in iterator:
-                pending.append(batch)
-                pending_rows += batch.num_rows
-                if pending_rows >= SLAB_ROWS:
-                    _encode_slab()
-            _encode_slab()
-            _flush_rows(force=True)
-            if writer is None:  # empty task still commits an empty file
-                writer = pq.ParquetWriter(
-                    target, out_schema, compression="zstd", filesystem=self.fs
-                )
-        finally:
-            if writer is not None:
-                writer.close()
-        json_stats = {
-            c: (
-                v  # map key-set entries are already JSON-safe
-                if isinstance(v, dict)
-                else [_json_stat_bound(v[0]), _json_stat_bound(v[1]), v[2], v[3]]
-            )
-            for c, v in fstats.items()
-        }
-        json_stats = {
-            c: v
-            for c, v in json_stats.items()
-            if (
-                isinstance(v, dict) and v.get("keys") is not None
-            )
-            or (
-                not isinstance(v, dict)
-                and (v[0] is not None or v[1] is not None or v[2] is not None)
-            )
-        }
-        if "__bytes" not in json_stats:  # a real column of that name wins
-            try:
-                json_stats["__bytes"] = (
-                    os.path.getsize(target)
-                    if self.fs is None
-                    else int(self.fs.get_file_info(target).size)
-                )
-            except OSError:
-                pass  # size is rate-limiter advice only; never fail commit
-        return AisleCommit(filename=name, n_blocks=n_blocks, stats=json_stats)
+        w = BlockFileWriter(
+            specs_for_schema(self._arrow_schema()),
+            self.path,
+            f"part-{uuid.uuid4().hex}.parquet",
+            fs=self.fs,
+            sort_cols=self.sort_cols,
+            block_rows=self.block_rows,
+        )
+        w.write_batches(iterator)
+        rec = w.close()
+        if rec is None:  # empty task: no file, nothing to commit
+            return AisleCommit(filename=None, n_blocks=0)
+        return AisleCommit(
+            filename=rec["file"], n_blocks=rec["n_blocks"], stats=rec["file_stats"]
+        )
 
     def commit(self, messages: list[AisleCommit]) -> None:
         from aisle_spark.pipeline import (
@@ -1566,7 +1484,7 @@ class AisleWriter(DataSourceArrowWriter):
 
     def abort(self, messages: list[AisleCommit]) -> None:
         for m in messages:
-            if m is None:
+            if m is None or m.filename is None:
                 continue
             target = f"{self.path.rstrip('/')}/{m.filename}"
             try:

@@ -255,8 +255,8 @@ def _recompute_file_stats(fs, root: str, rel_files: list[str]) -> dict:
             if isinstance(ks, list) and len(ks) <= MAP_KEYS_MAX:
                 stats[m] = {"keys": [str(k) for k in ks]}
         for i, c in enumerate(cols):
-            # canonical JSON encoding shared with the AisleWriter commit
-            # path (timestamp -> epoch µs, date -> epoch days, duration ->
+            # canonical JSON encoding shared with BlockFileWriter's
+            # file stats (timestamp -> epoch µs, date -> epoch days, duration ->
             # µs, decimal -> exact string, NaN -> None, binary -> tagged
             # base64); one-sided bounds still prune (file_keep treats
             # None as Unknown per side); null/row totals feed IsNull

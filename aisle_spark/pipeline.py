@@ -1,13 +1,20 @@
-"""The distributed encode / scan pipeline — all declarative DataFrame ops
-plus two vectorized Arrow UDFs (one to encode, one to decode).
+"""The distributed encode / scan pipeline — declarative DataFrame ops plus
+vectorized Arrow UDFs.
 
 Shape (SURVEY.md §7.0):
 
-  encode:  input df
-             -> part_id = xxhash64(salt_cols) % P      (salted: defuses
-                long-document skew, BASELINE.json north_rule)
-             -> groupBy(part_id).applyInArrow(encode)   (the ONLY shuffle)
-             -> blocks table (manifest stats columns + payload columns fused)
+  encode:  input parquet files
+             -> packed into byte-balanced tasks (whole files per task)
+             -> mapInArrow: each task reads its files with pyarrow and
+                writes its own block parquet through BlockFileWriter
+                (_order_and_slice -> encode_block -> row groups, file
+                stats folded as it goes)
+             -> per-input _done/ sidecars -> publish_manifest
+
+           ``encode_table`` is the row-shuffle variant: rows move to a
+           salted ``part_id`` (xxhash64(salt_cols) % P) through
+           groupBy(part_id).applyInArrow and come back as a blocks
+           DataFrame (manifest stats columns + payload columns fused).
 
   scan:    blocks df
              -> .filter(spec.keep_blocks())             (tri-state pruning —
@@ -17,12 +24,12 @@ Shape (SURVEY.md §7.0):
              -> .select(required payload columns)       (projection pushdown)
              -> mapInArrow(decode)                      (vectorized)
              -> .filter(spec.residual())                (exact row filter —
-                aisle's RowFilter, /root/reference/src/row_filter.rs)
+                aisle's RowFilter, src/row_filter.rs in the reference)
 
 At 1000-executor / 100 TB scale: the manifest filter is embarrassingly
-parallel over block rows, decode is shuffle-free (narrow), and the only
-wide dependency in the whole engine is the encode groupBy — whose key is
-a uniform hash, so AQE's coalescing and skew handling apply cleanly.
+parallel over block rows, decode is shuffle-free (narrow), and encode
+moves no rows at all — each task encodes the files it reads and only
+file names cross back to the JVM.
 """
 
 from __future__ import annotations
@@ -34,7 +41,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aisle_spark.blocks import cluster_block_rows, decode_block, encode_block
+from aisle_spark.blocks import decode_block, encode_block
 from aisle_spark.filterspec import Spec
 from aisle_spark.schema import (
     ColumnSpec,
@@ -73,37 +80,6 @@ def arrow_schema_of(df: DataFrame) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(df.schema)
-
-
-def _block_slices(
-    tbl: pa.Table, specs: list[ColumnSpec], block_rows: int, max_values: int
-) -> Iterator[pa.Table]:
-    """Split a partition's rows into blocks bounded by rows AND flattened
-    list values (vectorized boundary computation, no per-row Python)."""
-    import numpy as np
-
-    n = tbl.num_rows
-    list_cols = [s.name for s in specs if s.kind in ("intlist", "floatlist")]
-    if not list_cols:
-        for lo in range(0, n, block_rows):
-            yield tbl.slice(lo, min(block_rows, n - lo))
-        return
-    # combined per-row value weight across list columns
-    weight = np.zeros(n, dtype=np.int64)
-    for c in list_cols:
-        col = tbl.column(c)
-        lens = col.combine_chunks().value_lengths().to_numpy(zero_copy_only=False)
-        weight += np.nan_to_num(lens, nan=0).astype(np.int64)
-    cum = np.cumsum(weight)
-    lo = 0
-    while lo < n:
-        hi_rows = min(lo + block_rows, n)
-        base = cum[lo - 1] if lo else 0
-        # first index where cumulative values exceed the cap
-        hi_vals = int(np.searchsorted(cum, base + max_values, side="right"))
-        hi = max(lo + 1, min(hi_rows, hi_vals))
-        yield tbl.slice(lo, hi - lo)
-        lo = hi
 
 
 def _order_and_slice(
@@ -173,6 +149,202 @@ def _order_and_slice(
     return [tbl.slice(a, b - a) for a, b in zip(bounds[:-1], bounds[1:])]
 
 
+def _default_salt_cols(specs: list[ColumnSpec]) -> list[str]:
+    """High-cardinality top-level key columns: the default salt."""
+    return [
+        s.name
+        for s in specs
+        if s.kind in ("string", "int", "timestamp") and "." not in s.name
+    ]
+
+
+# the DataSource writer and the streaming sink hand the block writer
+# record batches; they are sorted and encoded in slabs of this many rows,
+# which bounds task memory whatever the partition size
+SLAB_ROWS = 262_144
+
+
+class BlockFileWriter:
+    """The one task-side block-file writer: direct encode, the DataSource
+    writer and the streaming sink all write block parquet through it.
+
+    ``write(slab)`` takes one slab of flattened rows through
+    ``_order_and_slice`` -> ``encode_block``, folds every block into the
+    file-level stats (``datasource._merge_file_stat``) and streams a
+    parquet row group out every ``flush_blocks`` blocks, so the task's
+    block buffer is bounded whatever the input size. ``close()`` returns
+    the file's commit record: file name, ``n_blocks``/``n_rows``/
+    ``enc_bytes``/``raw_bytes``, the JSON file stats and the sort/encode/
+    write seconds — or None when no block was written (no file is left).
+
+    The rules every caller shares: ``part_id`` = crc32 of the block's
+    first-row salt columns mod ``parts``; ``block_id`` = (Spark partition
+    id << 24) | per-task sequence, 0 outside a task; files are written
+    uncompressed (the payloads already are). Locally the file is written
+    under a dot-tmp name and renamed into place on close, so a final name
+    always holds a complete file and a replayed task replaces it; on an
+    object store (``fs`` given) the final name is written directly —
+    visibility there is governed by the manifest alone."""
+
+    def __init__(
+        self,
+        specs: list[ColumnSpec],
+        out_path: str,
+        fname: str,
+        fs=None,
+        parts: int = 64,
+        salt_cols: list[str] | None = None,
+        sort_cols: list[str] | None = None,
+        block_rows: int = DEFAULT_BLOCK_ROWS,
+        max_values: int = DEFAULT_MAX_VALUES,
+        flush_blocks: int = FLUSH_BLOCKS,
+    ):
+        from pyspark import TaskContext
+
+        from aisle_spark.datasource import _FILE_STAT_KINDS
+
+        tc = TaskContext.get()
+        self._id_base = (tc.partitionId() if tc else 0) << 24
+        self._specs = specs
+        self._schema = blocks_arrow_schema(specs)
+        self._sort_keys = [(c, "ascending") for c in (sort_cols or [])]
+        self._salt_cols = salt_cols or _default_salt_cols(specs)
+        self._parts = parts
+        self._block_rows = block_rows
+        self._max_values = max_values
+        self._flush_blocks = flush_blocks
+        self._stat_cols = [s.name for s in specs if s.kind in _FILE_STAT_KINDS]
+        self._map_cols = [s.name for s in specs if s.kind == "map"]
+        self._fs = fs
+        self.fname = fname
+        root = out_path.rstrip("/")
+        self._final = f"{root}/{fname}"
+        self._target = f"{root}/.{fname}.tmp" if fs is None else self._final
+        self._writer = None
+        self._pending: list[dict] = []
+        self._fstats: dict = {}
+        self._seq = 0
+        self.n_blocks = self.n_rows = self.enc_bytes = self.raw_bytes = 0
+        self.stages = {"sort_sec": 0.0, "encode_sec": 0.0, "write_sec": 0.0}
+
+    def write(self, slab: pa.Table) -> None:
+        import time
+        import zlib
+
+        from aisle_spark.datasource import _merge_file_stat
+
+        ts = time.time()
+        # single-gather ordering: sort + block bounds + width clustering
+        # resolved on indices, ONE take
+        blocks = _order_and_slice(
+            slab, self._specs, self._sort_keys, self._block_rows, self._max_values
+        )
+        self.stages["sort_sec"] += time.time() - ts
+        ts = time.time()
+        for block in blocks:
+            key = "\x1f".join(str(block.column(c)[0].as_py()) for c in self._salt_cols)
+            row = encode_block(
+                self._specs,
+                block,
+                int(zlib.crc32(key.encode()) % self._parts),
+                self._id_base | self._seq,
+            )
+            self._seq += 1
+            _merge_file_stat(self._fstats, row, self._stat_cols, self._map_cols)
+            self._pending.append(row)
+            if len(self._pending) >= self._flush_blocks:
+                self.stages["encode_sec"] += time.time() - ts
+                self._flush()
+                ts = time.time()
+        self.stages["encode_sec"] += time.time() - ts
+
+    def write_batches(self, batches: Iterable[pa.RecordBatch]) -> None:
+        """Flatten and write record batches in slabs of SLAB_ROWS rows."""
+        slab: list[pa.RecordBatch] = []
+        rows = 0
+        for b in batches:
+            slab.append(b)
+            rows += b.num_rows
+            if rows >= SLAB_ROWS:
+                self.write(flatten_table(pa.Table.from_batches(slab)))
+                slab, rows = [], 0
+        if slab:
+            self.write(flatten_table(pa.Table.from_batches(slab)))
+
+    def _flush(self) -> None:
+        import time
+
+        import pyarrow.parquet as pq
+
+        if not self._pending:
+            return
+        ts = time.time()
+        if self._writer is None:
+            self._writer = pq.ParquetWriter(
+                self._target, self._schema, compression="none", filesystem=self._fs
+            )
+        self._writer.write_table(
+            pa.Table.from_pylist(self._pending, schema=self._schema),
+            row_group_size=self._flush_blocks,
+        )
+        self.stages["write_sec"] += time.time() - ts
+        self.n_blocks += len(self._pending)
+        for r in self._pending:
+            self.n_rows += int(r["n_rows"])
+            for c, v in r.items():
+                if c.endswith("__enc_bytes"):
+                    self.enc_bytes += int(v)
+                elif c.endswith("__raw_bytes"):
+                    self.raw_bytes += int(v)
+        self._pending.clear()
+
+    def close(self) -> dict | None:
+        import os
+
+        self._flush()
+        if self._writer is None:
+            return None
+        self._writer.close()
+        if self._fs is None:
+            os.replace(self._target, self._final)
+        return {
+            "file": self.fname,
+            "n_blocks": self.n_blocks,
+            "n_rows": self.n_rows,
+            "enc_bytes": self.enc_bytes,
+            "raw_bytes": self.raw_bytes,
+            "file_stats": self._json_stats(),
+            "stages": {k: round(v, 4) for k, v in self.stages.items()},
+        }
+
+    def _json_stats(self) -> dict:
+        """The file stats in the manifest's JSON encoding; columns with no
+        evidence at all are left out (absent = Unknown = file kept)."""
+        import os
+
+        from aisle_spark.datasource import _json_stat_bound
+
+        out: dict = {}
+        for c, v in self._fstats.items():
+            if isinstance(v, dict):  # map key set, already JSON-safe
+                if v.get("keys") is not None:
+                    out[c] = v
+                continue
+            b = [_json_stat_bound(v[0]), _json_stat_bound(v[1]), v[2], v[3]]
+            if b[0] is not None or b[1] is not None or b[2] is not None:
+                out[c] = b
+        if "__bytes" not in out:  # a real column of that name wins
+            try:
+                out["__bytes"] = (
+                    os.path.getsize(self._final)
+                    if self._fs is None
+                    else int(self._fs.get_file_info(self._final).size)
+                )
+            except OSError:
+                pass  # size is rate-limiter advice only; never fail commit
+        return out
+
+
 def encode_table(
     df: DataFrame,
     parts: int = 64,
@@ -181,7 +353,11 @@ def encode_table(
     block_rows: int = DEFAULT_BLOCK_ROWS,
     max_values: int = DEFAULT_MAX_VALUES,
 ) -> DataFrame:
-    """Encode ``df`` into the blocks table (manifest + payload fused).
+    """The row-shuffle encode: rows move to their salted partition
+    (``part_id`` = xxhash64 of ``salt_cols`` mod ``parts``) through
+    ``groupBy(part_id).applyInArrow``, and each group is encoded into
+    block rows returned as a DataFrame (manifest + payload fused). It
+    writes no files; ``encode_files_direct`` is the encode that does.
 
     Two knobs reconcile skew-balance with pruning power:
     * ``salt_cols`` — hashed into ``part_id`` so partitions are byte-
@@ -193,41 +369,15 @@ def encode_table(
       balances BETWEEN partitions; sorting clusters WITHIN them — the
       same layout trick as parquet's sortWithinPartitions + row groups.
     """
-    salted = with_part_id(df, parts, salt_cols)
-    return encode_salted(salted, sort_cols, block_rows, max_values)
-
-
-def with_part_id(
-    df: DataFrame, parts: int, salt_cols: list[str] | None = None
-) -> DataFrame:
-    """Assign the salted partition id: xxhash64 over high-cardinality key
-    columns mod ``parts``. Uniform regardless of source skew or document
-    length — the explicit skew defense of the north rule."""
-    specs = specs_for_schema(arrow_schema_of(df))
-    salt_cols = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-    return df.withColumn(
-        "part_id",
-        F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(parts)).cast("int"),
-    )
-
-
-def encode_salted(
-    salted: DataFrame,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-) -> DataFrame:
-    """Encode a DataFrame that already carries ``part_id``."""
-    df = salted.drop("part_id")
     aschema = arrow_schema_of(df)
     specs = specs_for_schema(aschema)
     out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
     sort_keys = [(c, "ascending") for c in (sort_cols or [])]
+    salt = salt_cols or _default_salt_cols(specs)
+    salted = df.withColumn(
+        "part_id",
+        F.pmod(F.xxhash64(*[F.col(c) for c in salt]), F.lit(parts)).cast("int"),
+    )
 
     def encode_group(key: tuple, tbl: pa.Table) -> pa.Table:
         _pin_worker_threads()
@@ -241,144 +391,9 @@ def encode_salted(
             rows.append(encode_block(specs, block, part_id, block_id))
         return pa.Table.from_pylist(rows, schema=out_schema)
 
-    return salted.groupBy("part_id").applyInArrow(encode_group, schema=out_spark)
-
-
-def encode_table_inline(
-    df: DataFrame,
-    parts: int = 64,
-    salt_cols: list[str] | None = None,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-    redistribute: bool = True,
-) -> DataFrame:
-    """Encode WITHOUT shuffling raw rows: a narrow ``mapInArrow`` pass
-    compresses each INPUT SPLIT into blocks (sorting rows within the split
-    first, so per-block stats stay tight), then the mandated salted
-    repartition runs over the already-compressed blocks — ~6x fewer bytes
-    cross the JVM/Python boundary and the shuffle.
-
-    Why this is the at-scale design: at 100 TB the raw-row shuffle moves
-    100 TB twice (shuffle write + read) and row<->Arrow converts every
-    token array in the JVM (GC-bound, measured anti-scaling locally);
-    shuffling compressed blocks moves ~25 TB once, and input splits are
-    already byte-balanced by ``spark.sql.files.maxPartitionBytes`` so
-    long-document skew never concentrates in one task. part_id remains
-    the salted hash of (salt_cols) of the block's first row — block-level
-    salting — so lineage/resume grouping is unchanged.
-    """
-    aschema = arrow_schema_of(df)
-    specs = specs_for_schema(aschema)
-    out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
-    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-
-    def encode_split(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_threads()
-        import zlib
-
-        from pyspark import TaskContext
-
-        got = list(batches)
-        if not got:
-            return
-        tbl = flatten_table(pa.Table.from_batches(got))
-        # block_id = (task partition, local sequence): unique by
-        # construction — first-row salt hashes collide whenever sorted
-        # runs span blocks (ADVICE r1); the salt hash decides ONLY part_id
-        task_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-        rows = []
-        for seq, block in enumerate(
-            _order_and_slice(tbl, specs, sort_keys, block_rows, max_values)
-        ):
-            first = {c: block.column(c)[0].as_py() for c in salt_cols_eff}
-            key = "\x1f".join(str(first[c]) for c in salt_cols_eff).encode()
-            part_id = int(zlib.crc32(key) % parts)
-            block_id = (task_id << 24) | seq
-            rows.append(encode_block(specs, block, part_id, block_id))
-        yield from pa.Table.from_pylist(rows, schema=out_schema).to_batches()
-
-    blocks = df.mapInArrow(encode_split, out_spark)
-    if redistribute:
-        # the salted repartition of the north rule, over compressed blocks;
-        # AQE right-sizes the shuffle partitions
-        blocks = blocks.repartition(F.col("part_id"))
-    return blocks
-
-
-def encode_files_inline(
-    spark: SparkSession,
-    input_path: str,
-    parts: int = 64,
-    salt_cols: list[str] | None = None,
-    sort_cols: list[str] | None = None,
-    block_rows: int = DEFAULT_BLOCK_ROWS,
-    max_values: int = DEFAULT_MAX_VALUES,
-    redistribute: bool = True,
-) -> tuple[DataFrame, pa.Schema]:
-    """Fastest encode path: Spark schedules; each python task reads its
-    parquet file directly with pyarrow (C++ decode straight to Arrow — the
-    JVM never materializes the raw rows at all) and emits compressed
-    blocks. Profiling here showed the JVM parquet->InternalRow->Arrow
-    conversion of array columns is the hard throughput ceiling (it doesn't
-    scale past ~8 cores); with pyarrow-native reads the encode scales like
-    the raw numpy codecs. At cluster scale the same pattern reads from
-    S3/HDFS via pyarrow.fs inside executors."""
-    files, specs, in_schema = _input_files(input_path)
-    out_schema = blocks_arrow_schema(specs)
-    out_spark = blocks_spark_schema(specs)
-    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
-    # pyarrow reads the ORIGINAL top-level columns; structs flatten after
-    names = [f.name for f in in_schema if not f.name.startswith("_")]
-
-    def encode_file(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _pin_worker_threads()
-        import zlib
-
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        task_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-        seq = 0
-        for b in batches:
-            for path in b.column(0).to_pylist():  # per input FILE
-                tbl = flatten_table(pq.read_table(path, columns=names))
-                rows = []
-                for block in _order_and_slice(
-                    tbl, specs, sort_keys, block_rows, max_values
-                ):
-                    first = {c: block.column(c)[0].as_py() for c in salt_cols_eff}
-                    key = "\x1f".join(str(first[c]) for c in salt_cols_eff).encode()
-                    rows.append(
-                        encode_block(
-                            specs,
-                            block,
-                            int(zlib.crc32(key) % parts),
-                            (task_id << 24) | seq,
-                        )
-                    )
-                    seq += 1
-                yield from pa.Table.from_pylist(rows, schema=out_schema).to_batches()
-
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        len(files)
+    return salted.groupBy("part_id").applyInArrow(
+        encode_group, schema=blocks_spark_schema(specs)
     )
-    blocks = fdf.mapInArrow(encode_file, out_spark)
-    if redistribute:
-        blocks = blocks.repartition(F.col("part_id"))
-    in_arrow = pa.schema([pa.field(s.name, s.arrow_type) for s in specs])
-    return blocks, in_arrow
 
 
 def _fs_write_json(fs, path: str, obj) -> None:
@@ -615,6 +630,11 @@ def _fs_mkdirs(fs, path: str) -> None:
         fs.create_dir(path, recursive=True)
 
 
+# task layout of the direct encode: inputs with more than ENCODE_WAVES x
+# cores files run as this many waves of byte-balanced tasks
+ENCODE_WAVES = 4
+
+
 def encode_files_direct(
     spark: SparkSession,
     input_path: str,
@@ -624,39 +644,37 @@ def encode_files_direct(
     sort_cols: list[str] | None = None,
     block_rows: int = DEFAULT_BLOCK_ROWS,
     max_values: int = DEFAULT_MAX_VALUES,
-    compression: str = "none",
     resume: bool = False,
     filesystem=None,
 ) -> list[str]:
-    """The at-scale encode: python tasks read their input parquet with
-    pyarrow, encode blocks, and WRITE the block parquet themselves — only
-    tiny (file, n_blocks, n_rows) manifest rows ever cross the
-    Python->JVM boundary. Returns the committed file names.
+    """The encode: python tasks read their input parquet with pyarrow and
+    write the block parquet themselves through ``BlockFileWriter`` — only
+    tiny (file, n_blocks, n_rows) rows ever cross the Python->JVM
+    boundary. Returns the committed file names.
 
-    Why: the block-return path (``encode_files_inline`` -> Spark write)
-    moves every compressed payload Python->JVM->shuffle->writer; that
-    exchange was measured as the end-to-end scaling ceiling (BENCH_r01:
-    e2e efficiency 0.22-0.63 at 8->32 cores while the pure codec stack
-    scales at 0.93). Here the JVM only schedules tasks and collects file
-    names, so throughput scales with the python workers.
+    Why: returning compressed blocks to Spark for it to write moves every
+    payload Python->JVM->writer; that exchange was measured as the
+    end-to-end scaling ceiling (BENCH_r01: e2e efficiency 0.22-0.63 at
+    8->32 cores while the pure codec stack scales at 0.93). Here the JVM
+    only schedules tasks and collects file names, so throughput scales
+    with the python workers.
 
     Commit protocol (speculation/retry-safe): each attempt writes a
-    uniquely-named file via tmp-name + atomic rename, then a per-input
-    lineage sidecar under ``_done/`` (also atomic rename) recording the
-    data file plus codec/size/throughput metrics — the sidecar IS the
-    per-input commit point. The driver's ``_aisle_files.json`` is rebuilt
-    from the sidecars; readers list that manifest, never the directory,
-    so orphans from failed attempts are invisible. On an object store the
-    renames drop out and the manifest alone is the commit (same shape as
-    Iceberg's file-list commit).
+    uniquely-named file (tmp-name + atomic rename locally), then a
+    per-input lineage sidecar under ``_done/`` (also atomic) recording
+    the data file, its file-level stats and codec/size/throughput
+    metrics — the sidecar IS the per-input commit point. The driver
+    publishes ``_aisle_files.json`` from the sidecars; readers list that
+    manifest, never the directory, so orphans from failed attempts are
+    invisible. On an object store the renames drop out and the manifest
+    alone is the commit (same shape as Iceberg's file-list commit).
 
     ``resume=True`` skips every input file that already has a committed
     sidecar — an interrupted run continues from the last committed input
-    (the north rule's "resumes from the last committed partition" for the
-    at-scale path; ``lineage_files`` exposes the metrics table).
-    ``part_id`` is still the salted crc32 of each block's first-row salt
-    columns — the skew defense groups lineage/resume by it — while task
-    input stays byte-balanced by Spark's input-split planning."""
+    (``lineage_files`` exposes the metrics table). Task input is
+    byte-balanced by packing whole input files into tasks."""
+    import hashlib
+    import json as _json
     import os as _os
 
     fs = filesystem
@@ -670,23 +688,17 @@ def encode_files_direct(
         files = [f for f in files if _os.path.basename(f) not in committed_inputs]
         if not files:
             return _rebuild_manifest(out_path, in_schema, fs)
-    out_schema = blocks_arrow_schema(specs)
-    sort_keys = [(c, "ascending") for c in (sort_cols or [])]
-    salt_cols_eff = salt_cols or [
-        s.name
-        for s in specs
-        if s.kind in ("string", "int", "timestamp") and "." not in s.name
-    ]
     # pyarrow reads the ORIGINAL top-level columns; structs flatten after
     names = [f.name for f in in_schema if not f.name.startswith("_")]
     _fs_mkdirs(fs, out_path)
+    # read on the driver: tasks must see a patched FLUSH_BLOCKS too
+    flush_blocks = FLUSH_BLOCKS
 
     def encode_and_write(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_threads()
         import os
         import time
         import uuid
-        import zlib
 
         import pyarrow.parquet as pq
         from pyspark import TaskContext
@@ -695,54 +707,20 @@ def encode_files_direct(
         task_id = tc.partitionId() if tc else 0
         attempt = tc.taskAttemptId() if tc else 0
         t0 = time.time()
-        inputs: list[str] = []
-        seq = 0
-        fname = f"blocks-{task_id:05d}-{attempt}-{uuid.uuid4().hex[:8]}.parquet"
-        # local: tmp + atomic rename; object store: write the uniquely
-        # named final object directly — visibility is governed solely by
-        # the sidecar manifest, so no rename primitive is needed
-        tmp = (
-            os.path.join(out_path, f".{fname}.tmp")
-            if fs is None
-            else f"{out_path.rstrip('/')}/{fname}"
+        w = BlockFileWriter(
+            specs,
+            out_path,
+            f"blocks-{task_id:05d}-{attempt}-{uuid.uuid4().hex[:8]}.parquet",
+            fs=fs,
+            parts=parts,
+            salt_cols=salt_cols,
+            sort_cols=sort_cols,
+            block_rows=block_rows,
+            max_values=max_values,
+            flush_blocks=flush_blocks,
         )
-        writer = None
-        n_blocks = total_rows = enc_bytes = raw_bytes = 0
-        pending: list[dict] = []
-        # per-stage wall (read/sort/encode/write) recorded in the commit
-        # sidecar: the scaling gate's per-stage table aggregates these
-        stages = {"read_sec": 0.0, "sort_sec": 0.0, "encode_sec": 0.0, "write_sec": 0.0}
-
-        def flush() -> None:
-            # stream pending blocks out as one parquet row group: peak
-            # task memory is FLUSH_BLOCKS blocks, independent of input
-            # file size (VERDICT r2 — the accumulate-then-from_pylist
-            # variant held every block of every assigned input in RAM)
-            nonlocal writer, n_blocks, total_rows, enc_bytes, raw_bytes
-            if not pending:
-                return
-            ts = time.time()
-            if writer is None:
-                writer = pq.ParquetWriter(
-                    tmp, out_schema, compression=compression, filesystem=fs
-                )
-            writer.write_table(
-                pa.Table.from_pylist(pending, schema=out_schema),
-                row_group_size=FLUSH_BLOCKS,
-            )
-            stages["write_sec"] += time.time() - ts
-            n_blocks += len(pending)
-            total_rows += int(sum(r["n_rows"] for r in pending))
-            enc_bytes += int(
-                sum(r[c] for r in pending for c in r if c.endswith("__enc_bytes"))
-            )
-            raw_bytes += int(
-                sum(r[c] for r in pending for c in r if c.endswith("__raw_bytes"))
-            )
-            pending.clear()
-
-        import json as _json
-
+        inputs: list[str] = []
+        read_sec = 0.0
         for b in batches:
             for blob in b.column(0).to_pylist():
                 for path in _json.loads(blob):
@@ -751,42 +729,11 @@ def encode_files_direct(
                     tbl = flatten_table(
                         pq.read_table(path, columns=names, filesystem=fs)
                     )
-                    stages["read_sec"] += time.time() - ts
-                    ts = time.time()
-                    # single-gather ordering: sort + block bounds + width
-                    # clustering resolved on indices, ONE take
-                    blocks_list = _order_and_slice(
-                        tbl, specs, sort_keys, block_rows, max_values
-                    )
-                    stages["sort_sec"] += time.time() - ts
-                    ts = time.time()
-                    for block in blocks_list:
-                        first = {
-                            c: block.column(c)[0].as_py() for c in salt_cols_eff
-                        }
-                        key = "\x1f".join(
-                            str(first[c]) for c in salt_cols_eff
-                        ).encode()
-                        pending.append(
-                            encode_block(
-                                specs,
-                                block,
-                                int(zlib.crc32(key) % parts),
-                                (task_id << 24) | seq,
-                            )
-                        )
-                        seq += 1
-                        if len(pending) >= FLUSH_BLOCKS:
-                            stages["encode_sec"] += time.time() - ts
-                            flush()
-                            ts = time.time()
-                    stages["encode_sec"] += time.time() - ts
-        flush()
-        if writer is None:
+                    read_sec += time.time() - ts
+                    w.write(tbl)
+        rec = w.close()
+        if rec is None:
             return
-        writer.close()
-        if fs is None:
-            os.replace(tmp, os.path.join(out_path, fname))
         # the per-input COMMIT: data file is in place, now the sidecar.
         # keyed by input names, so a retried/resumed task for the same
         # inputs REPLACES this entry (and its orphan data file is never
@@ -794,25 +741,19 @@ def encode_files_direct(
         wall = time.time() - t0
         meta = {
             "inputs": inputs,
-            "file": fname,
-            "n_blocks": n_blocks,
-            "n_rows": total_rows,
-            "enc_bytes": enc_bytes,
-            "raw_bytes": raw_bytes,
+            **rec,
             "wall_sec": round(wall, 4),
-            "rows_per_sec": round(total_rows / wall, 1) if wall > 0 else 0.0,
-            "stages": {k: round(v, 4) for k, v in stages.items()},
+            "rows_per_sec": round(rec["n_rows"] / wall, 1) if wall > 0 else 0.0,
+            "stages": {"read_sec": round(read_sec, 4), **rec["stages"]},
         }
         # collision-resistant sidecar key (ADVICE r2 medium): a 32-bit
         # crc32 over ~1e5 input sets has tens-of-percent birthday collision
         # odds, and a collision silently drops one input's blocks from the
         # rebuilt manifest
-        import hashlib
-
         skey = hashlib.sha256("|".join(sorted(inputs)).encode()).hexdigest()[:24]
         _fs_write_json(fs, f"{out_path.rstrip('/')}/_done/{skey}.json", meta)
         yield pa.RecordBatch.from_pylist(
-            [{"file": fname, "n_blocks": n_blocks, "n_rows": total_rows}],
+            [{k: rec[k] for k in ("file", "n_blocks", "n_rows")}],
             schema=pa.schema(
                 [
                     pa.field("file", pa.string()),
@@ -822,12 +763,12 @@ def encode_files_direct(
             ),
         )
 
-    # Task layout: ~4 waves of byte-balanced tasks, several input files
-    # per task when files outnumber that. One-file-per-task paid a fixed
-    # ~0.3 core-sec of task overhead (scheduling + Arrow handshake +
-    # writer/sidecar setup) per file — ~25% of the encode wall at
-    # files >> cores (guide §2.2 "fewer, larger map tasks"; §6 open
-    # cost). Greedy LPT over file sizes: largest first into the
+    # Task layout: ~ENCODE_WAVES waves of byte-balanced tasks, several
+    # input files per task when files outnumber that. One-file-per-task
+    # paid a fixed ~0.3 core-sec of task overhead (scheduling + Arrow
+    # handshake + writer/sidecar setup) per file — ~25% of the encode
+    # wall at files >> cores (guide §2.2 "fewer, larger map tasks"; §6
+    # open cost). Greedy LPT over file sizes: largest first into the
     # currently-lightest task keeps tasks byte-balanced, and tasks are
     # emitted heaviest-first so the big ones start in the first wave and
     # the light ones backfill the tail — the same minimal-straggler
@@ -835,19 +776,17 @@ def encode_files_direct(
     size_of = dict(_fs_list(fs, input_path, ".parquet"))
     files_by_size = sorted(files, key=lambda f: -size_of.get(f, 0))
     cores = max(1, spark.sparkContext.defaultParallelism)
-    waves = int(_os.environ.get("AISLE_ENCODE_WAVES", "4"))
-    if len(files_by_size) <= max(1, waves * cores):
-        # at most `waves` files per core: the wave target would keep one
-        # task per file, paying the fixed per-task overhead (scheduling +
-        # Arrow handshake + writer/sidecar setup) up to `waves` times per
-        # core for no balance benefit — collapse to ONE wave of
-        # byte-balanced tasks (measured -10% on the 64-file/32-core
-        # headline encode, 3 interleaved A/B pairs). Inputs larger than
-        # waves*cores keep the multi-wave layout: there the extra waves
+    if len(files_by_size) <= ENCODE_WAVES * cores:
+        # at most ENCODE_WAVES files per core: the wave target would keep
+        # one task per file, paying the fixed per-task overhead up to
+        # ENCODE_WAVES times per core for no balance benefit — collapse
+        # to ONE wave of byte-balanced tasks (measured -10% on the
+        # 64-file/32-core headline encode, 3 interleaved A/B pairs).
+        # Larger inputs keep the multi-wave layout: there the extra waves
         # are what lets fast cores backfill a straggler's tail.
         n_tasks = min(len(files_by_size), cores)
     else:
-        n_tasks = max(1, waves * cores)
+        n_tasks = ENCODE_WAVES * cores
     group_files: list[list[str]] = [[] for _ in range(n_tasks)]
     group_bytes = [0] * n_tasks
     for f in files_by_size:
@@ -861,8 +800,6 @@ def encode_files_direct(
         )
         if g
     ]
-    import json as _json
-
     fdf = spark.createDataFrame(
         spark.sparkContext.parallelize(
             [(_json.dumps(g),) for g in groups], len(groups)
@@ -877,25 +814,22 @@ def encode_files_direct(
 
 def _rebuild_manifest(out_path: str, in_schema: pa.Schema, fs=None) -> list[str]:
     """Manifest = exactly the data files named by committed ``_done/``
-    sidecars (this run's AND previous runs', so resume unions correctly).
-    On an object store the manifest PUT is the only commit primitive —
-    no rename anywhere on the fs path."""
-    committed = sorted(
-        _fs_read_json(fs, p)["file"]
+    sidecars (this run's AND previous runs', so resume unions correctly),
+    with the per-file [min,max] bounds each sidecar carries from the
+    writer — the manifest-list pruning tier the data source plans with
+    (datasource.file_keep). A sidecar without stats gives its file no
+    entry (Unknown: the file is always kept). On an object store the
+    manifest PUT is the only commit primitive — no rename anywhere on the
+    fs path."""
+    cars = [
+        _fs_read_json(fs, p)
         for p, _sz in _fs_list(fs, f"{out_path.rstrip('/')}/_done", ".json")
-    )
-    manifest: dict = {"files": committed}
-    if committed:
-        # per-file [min,max] bounds: the manifest-list pruning tier the
-        # data source plans with (datasource.file_keep). One projected
-        # DuckDB aggregate over the stat columns, once per JOB (not per
-        # input commit) — at 10^5 files this is the same footer-sized
-        # metadata pass the planning side performs
-        from aisle_spark.maintenance import _recompute_file_stats
-
-        manifest["file_stats"] = _recompute_file_stats(
-            fs, out_path.rstrip("/"), committed
-        )
+    ]
+    committed = sorted(c["file"] for c in cars)
+    manifest = {
+        "files": committed,
+        "file_stats": {c["file"]: c["file_stats"] for c in cars if c.get("file_stats")},
+    }
     with manifest_lock(fs, out_path):
         publish_manifest(fs, out_path, manifest)
     # sidecar records the ORIGINAL (possibly nested) schema — scan derives

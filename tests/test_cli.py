@@ -25,7 +25,7 @@ def encoded(spark, tmp_path_factory):
     df = spark.createDataFrame(pa.Table.from_batches([synth_batch(13, 4000)]))
     df.write.mode("overwrite").parquet(src)
     main([
-        "encode", "--input", src, "--output", out, "--direct",
+        "encode", "--input", src, "--output", out,
         "--parts", "2", "--sort", "source,n_tok",
     ])
     return df, out, base
@@ -128,3 +128,18 @@ class TestDescribeAndMinMaxBy:
             .collect()
         }
         assert got == exp
+
+
+class TestScanWhere:
+    def test_col_expression_rejected_never_evaluated(self, monkeypatch):
+        """``--where`` is SQL only: a Python ``col(...)`` expression is a
+        compile error, raised before any Spark work, and ``col`` is never
+        called (the string is never evaluated as Python)."""
+        import aisle_spark.filterspec as fsp
+        from aisle_spark.sqlcompile import SqlCompileError
+
+        called = []
+        monkeypatch.setattr(fsp, "col", lambda *a: called.append(a))
+        with pytest.raises(SqlCompileError, match="unsupported function COL"):
+            main(["scan", "--table", "/nonexistent", "--where", "col('n_tok') > 1"])
+        assert called == []

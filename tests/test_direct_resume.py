@@ -168,16 +168,18 @@ def test_object_store_commit_mode(spark, dirs):
     assert tuple(got) == tuple(exp)
 
 
-def test_task_layout_waves(spark, dirs, monkeypatch):
-    """Task grouping: inputs with at most waves*cores files collapse to
-    ONE wave of byte-balanced tasks (<= cores sidecars); larger inputs
-    keep the multi-wave layout (waves*cores tasks). Both layouts must
-    round-trip identically — grouping is scheduling only."""
+def test_task_layout_waves(spark, dirs):
+    """Task grouping: inputs with at most ENCODE_WAVES*cores files
+    collapse to ONE wave of byte-balanced tasks (<= cores sidecars);
+    larger inputs keep the multi-wave layout (ENCODE_WAVES*cores tasks).
+    Both layouts must round-trip identically — grouping is scheduling
+    only."""
+    from aisle_spark.pipeline import ENCODE_WAVES
+
     src, out = dirs
     cores = spark.sparkContext.defaultParallelism  # 4 in this suite
-    monkeypatch.setenv("AISLE_ENCODE_WAVES", "2")
 
-    # 6 files <= 2*4: one wave -> at most `cores` tasks/sidecars
+    # 6 files <= ENCODE_WAVES*4: one wave -> at most `cores` tasks/sidecars
     for i in range(6):
         _drop(src, f"f{i}.parquet", i * 100, 80)
     encode_files_direct(spark, src, out, parts=4, sort_cols=["source", "n_tok"])
@@ -192,16 +194,76 @@ def test_task_layout_waves(spark, dirs, monkeypatch):
     ref = spark.read.parquet(src).agg(F.count("*"), F.sum("n_tok")).collect()[0]
     assert tuple(got) == tuple(ref)
 
-    # 10 files > 2*4: multi-wave layout -> waves*cores tasks
+    # more than ENCODE_WAVES*cores files: multi-wave layout ->
+    # ENCODE_WAVES*cores tasks
+    n_files = ENCODE_WAVES * cores + 2
     src2 = os.path.join(BASE, "src2")
     out2 = os.path.join(BASE, "enc2")
     os.makedirs(src2)
-    for i in range(10):
+    for i in range(n_files):
         _drop(src2, f"g{i}.parquet", i * 100, 50)
     encode_files_direct(spark, src2, out2, parts=4, sort_cols=["source", "n_tok"])
     sidecars2 = glob.glob(os.path.join(out2, "_done/*.json"))
-    assert len(sidecars2) == 2 * cores
+    assert len(sidecars2) == ENCODE_WAVES * cores
     blocks2, schema2 = read_encoded(spark, out2)
     got2 = scan(blocks2, schema2).agg(F.count("*"), F.sum("n_tok")).collect()[0]
     ref2 = spark.read.parquet(src2).agg(F.count("*"), F.sum("n_tok")).collect()[0]
     assert tuple(got2) == tuple(ref2)
+
+
+def test_resume_after_crash_before_sidecar(spark, dirs, tmp_path):
+    """A crash after one task renamed its data file but before it wrote
+    the sidecar, while another attempt died mid-write (a dot-tmp file is
+    left): ``resume=True`` re-encodes only the input without a sidecar,
+    and the decoded table equals an uninterrupted run's."""
+    src, out = dirs
+    for i in range(4):
+        _drop(src, f"f{i}.parquet", i * 1000, 1000)
+    kw = dict(parts=8, sort_cols=["source", "n_tok"], block_rows=512)
+    encode_files_direct(spark, src, out, **kw)
+    cars = sorted(glob.glob(os.path.join(out, "_done/*.json")))
+    assert len(cars) == 4  # one task per input on four cores
+    lost = json.load(open(cars[0]))
+    os.remove(cars[0])
+    with open(os.path.join(out, ".blocks-00000-99-deadbeef.parquet.tmp"), "wb") as fh:
+        fh.write(b"PAR1 torn write")
+    kept = {p: os.path.getmtime(p) for p in cars[1:]}
+
+    committed = encode_files_direct(spark, src, out, resume=True, **kw)
+    for p, mt in kept.items():
+        assert os.path.getmtime(p) == mt, "committed input was re-encoded"
+    redone = set(glob.glob(os.path.join(out, "_done/*.json"))) - set(kept)
+    assert [json.load(open(p))["inputs"] for p in redone] == [lost["inputs"]]
+    assert lost["file"] not in committed  # the orphan stays unlisted
+    assert len(committed) == 4
+
+    clean = str(tmp_path / "clean")
+    encode_files_direct(spark, src, clean, **kw)
+    a_blocks, schema = read_encoded(spark, out)
+    b_blocks, _ = read_encoded(spark, clean)
+    a = scan(a_blocks, schema).orderBy("doc_id").toPandas()
+    b = scan(b_blocks, schema).orderBy("doc_id").toPandas()
+    assert a["doc_id"].tolist() == b["doc_id"].tolist()
+    assert a["n_tok"].tolist() == b["n_tok"].tolist()
+    for x, y in zip(a["tokens"], b["tokens"]):
+        assert list(x) == list(y)
+
+
+def test_sidecar_skew_balance(spark, dirs):
+    """Byte-balanced task packing keeps per-task raw bytes within 3x of
+    each other although the input files differ in size by 15x; the
+    sidecars' lineage metrics add up to the input."""
+    src, out = dirs
+    rows = [3000, 200, 200, 200, 1000, 1000, 500, 500, 800, 800, 400, 400]
+    start = 0
+    for i, n in enumerate(rows):
+        _drop(src, f"f{i:02d}.parquet", start, n)
+        start += n
+    encode_files_direct(spark, src, out, parts=8, sort_cols=["source", "n_tok"])
+    cars = [json.load(open(p)) for p in glob.glob(os.path.join(out, "_done/*.json"))]
+    assert len(cars) == spark.sparkContext.defaultParallelism
+    raw = [c["raw_bytes"] for c in cars]
+    assert max(raw) < 3 * min(raw)
+    assert sum(c["n_rows"] for c in cars) == sum(rows)
+    assert all(0 < c["enc_bytes"] < c["raw_bytes"] for c in cars)
+    assert all(c["rows_per_sec"] > 0 for c in cars)

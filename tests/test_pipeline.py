@@ -192,23 +192,36 @@ class TestEndToEnd:
         assert out.count() == df.filter("source = 'books'").count()
 
 
-class TestInlineEncode:
-    """encode_table_inline: narrow encode + compressed-block shuffle."""
+class TestDirectEncode:
+    """encode_files_direct: tasks write their own block files."""
 
-    def test_inline_roundtrip_and_prune(self, spark):
-        df = spark.createDataFrame(pa.Table.from_batches([synth_batch(0, 3000)]))
-        from aisle_spark.pipeline import encode_table_inline
+    def test_direct_roundtrip_and_prune(self, spark, tmp_path):
+        import pyarrow.parquet as pq
 
-        blocks = encode_table_inline(
-            df, parts=8, sort_cols=["source", "n_tok"], block_rows=256
-        ).cache()
-        out = scan(blocks, TOKEN_SCHEMA).orderBy("doc_id").toPandas()
+        from aisle_spark.pipeline import encode_files_direct
+
+        src = tmp_path / "src"
+        src.mkdir()
+        for i in range(3):
+            pq.write_table(
+                pa.Table.from_batches([synth_batch(i * 1000, 1000)]),
+                str(src / f"f{i}.parquet"),
+            )
+        out = str(tmp_path / "enc")
+        encode_files_direct(
+            spark, str(src), out, parts=8, sort_cols=["source", "n_tok"],
+            block_rows=256,
+        )
+        blocks, schema = read_encoded(spark, out)
+        blocks = blocks.cache()
+        df = spark.read.parquet(str(src))
+        out_rows = scan(blocks, schema).orderBy("doc_id").toPandas()
         exp = df.orderBy("doc_id").toPandas()
-        assert out["doc_id"].tolist() == exp["doc_id"].tolist()
-        for x, y in zip(out["tokens"], exp["tokens"]):
+        assert out_rows["doc_id"].tolist() == exp["doc_id"].tolist()
+        for x, y in zip(out_rows["tokens"], exp["tokens"]):
             assert list(x) == list(y)
         spec = (col("n_tok").between(5, 60)) & (col("source") == "code")
-        got = scan(blocks, TOKEN_SCHEMA, where=spec).count()
+        got = scan(blocks, schema, where=spec).count()
         want = df.filter("n_tok between 5 and 60 and source = 'code'").count()
         assert got == want
         assert blocks.filter(spec.keep_blocks()).count() < blocks.count()

@@ -3,7 +3,6 @@ file-manifest commit, readable by scan() between batches."""
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 
@@ -15,7 +14,7 @@ from pyspark.sql import functions as F
 from aisle_spark.filterspec import col
 from aisle_spark.pipeline import read_encoded, scan
 from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
-from aisle_spark.streaming import _read_manifest, encode_stream
+from aisle_spark.streaming import _read_manifest, encode_stream, write_batch
 
 BASE = "/tmp/aisle_stream_test"
 
@@ -32,9 +31,12 @@ def dirs():
 
 
 def _drop(src: str, name: str, start: int, n: int) -> None:
-    pq.write_table(
-        pa.Table.from_batches([synth_batch(start, n)]), os.path.join(src, name)
-    )
+    # write under a hidden name, then rename: a running file stream that
+    # lists the file while it is still empty consumes it as an empty
+    # batch and never reads it again
+    tmp = os.path.join(src, f".{name}.tmp")
+    pq.write_table(pa.Table.from_batches([synth_batch(start, n)]), tmp)
+    os.replace(tmp, os.path.join(src, name))
 
 
 def test_stream_encode_commits_and_scans(spark, dirs):
@@ -77,8 +79,8 @@ def test_stream_encode_commits_and_scans(spark, dirs):
 
 
 def test_replayed_batch_is_idempotent(spark, dirs):
-    """A batch re-run with the same batchId (crash before manifest rename)
-    must replace its files, never duplicate rows."""
+    """A batch re-run with the same batchId (crash before the manifest
+    commit) must replace its files, never duplicate rows."""
     src, out, ckp = dirs
     _drop(src, "a.parquet", 0, 1500)
     stream = (
@@ -91,28 +93,17 @@ def test_replayed_batch_is_idempotent(spark, dirs):
         q.processAllAvailable()
     finally:
         q.stop()
-    # simulate the replay: re-run batch 0's sink steps with the same id
-    from aisle_spark import streaming as S
-
-    batch_df = spark.read.parquet(src)
     assert any(f.startswith("stream-b") for f in os.listdir(out))
     blocks, schema = read_encoded(spark, out)
     n_before = scan(blocks, schema).count()
-    # write the same batch again under the same id
-    from aisle_spark.pipeline import encode_table_inline
-
-    bl = encode_table_inline(batch_df, parts=2, block_rows=512, redistribute=False)
-    staging = os.path.join(out, ".staging-batch-0")
-    bl.write.mode("overwrite").option("compression", "none").parquet(staging)
-    names = []
-    for k, srcf in enumerate(sorted(glob.glob(os.path.join(staging, "part-*.parquet")))):
-        name = f"stream-b{0:08d}-{k:04d}.parquet"
-        os.replace(srcf, os.path.join(out, name))
-        names.append(name)
-    shutil.rmtree(staging, ignore_errors=True)
-    S._commit_batch(out, 0, names)
-    blocks, schema = read_encoded(spark, out)
-    assert scan(blocks, schema).count() == n_before  # replaced, not appended
+    # replay batch 0 through the sink's per-batch step, twice
+    batch_df = spark.read.parquet(src)
+    for _ in range(2):
+        files = write_batch(batch_df, 0, out, parts=2, block_rows=512)
+        assert files and all(f.startswith("stream-b00000000-") for f in files)
+        blocks, schema = read_encoded(spark, out)
+        assert scan(blocks, schema).count() == n_before  # replaced, not appended
+        assert _read_manifest(out)["batches"]["0"] == files
 
 
 def test_batch_commit_after_compaction_keeps_compacted_files(spark, dirs):
