@@ -4,19 +4,27 @@ page index that aisle's second pruning granularity consumes
 src/prune/eval.rs:66-176).
 
 Each 4096-row block stores, per scalar column, min/max/null-count arrays
-over fixed ROW_CHUNK-row chunks. Block-level stats prune whole blocks via
-Catalyst; these arrays refine INSIDE the reader: before decoding anything,
-``chunk_keep`` evaluates the same Kleene tri-state the manifest filter
-uses — but vectorized in numpy over the chunk arrays — and a block whose
-every chunk is definitely-false is skipped without touching a single
-payload byte (the reference's page-index cut rows-read 79.5%,
-/root/reference/benches/df_compare/README.md:43).
+over fixed ROW_CHUNK-row chunks. ``chunk_keep`` refines INSIDE the
+reader: before decoding anything it evaluates the Kleene tri-state
+vectorized in numpy over the chunk arrays, and a block whose every chunk
+is definitely-false is skipped without touching a single payload byte
+(the reference's page-index cut rows-read 79.5%, per its
+benches/df_compare/README.md:43).
+
+The same evaluator is the block tier off the JVM: ``manifest_keep`` runs
+it over the manifest rows (one per block) that the DataSource planner
+reads, selecting exactly the blocks Catalyst's ``Spec.keep()`` selects —
+dictionary, bloom, list-element, list-length and map-key evidence
+included. One tri-state, two granularities: stat arrays over N units
+plus each unit's row count (aisle's compile-once pruner evaluating every
+metadata granularity, src/prune/api.rs).
 
 Soundness invariants match filterspec's:
-  f[i] True  => no row in chunk i evaluates TRUE   (prunable)
-  t[i] True  => no row in chunk i evaluates FALSE  (Not-prunable dual)
-All-null chunks set both (every row is NULL). Unsupported leaves return
-(False, False) = Unknown — never a wrong skip.
+  f[i] True  => no row in unit i evaluates TRUE   (prunable)
+  t[i] True  => no row in unit i evaluates FALSE  (Not-prunable dual)
+All-null chunks set both (every row is NULL); a manifest row's NULL stat
+is Unknown, as in Catalyst. Unsupported leaves return (False, False) =
+Unknown — never a wrong skip.
 """
 
 from __future__ import annotations
@@ -25,6 +33,7 @@ import datetime as _dt
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 ROW_CHUNK = 512
 
@@ -126,25 +135,103 @@ def chunk_stats_string(arr: pa.Array, n: int) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# query side: Kleene tri-state over the chunk arrays
+# query side: one Kleene tri-state over the stat arrays of N pruning units
 # ---------------------------------------------------------------------------
 
 
-def _lit_num(v, spec_obj):
-    """Predicate literal -> the numeric domain the chunk arrays use, or
-    None unless the literal's Python type EXACTLY matches the column's
-    stat domain (then the leaf is Unknown — conservative, never a wrong
-    skip). Truncating coercion must never happen here (ADVICE r2 high):
-    ``int(3.5)`` on an int column, or a datetime literal converted to µs
-    against date32 stats stored in DAYS, turns Unknown into a wrong
-    definitely-false and silently drops matching rows."""
+class _Units:
+    """Stat arrays over N pruning units — the chunks of one block or the
+    blocks of a manifest — under the manifest's stat names (``{c}__min``,
+    ``{c}__nulls``, ``{c}__dict``, ...). ``get(name)`` returns a stat's
+    raw per-unit values (a list or a pyarrow array), or None when the
+    granularity carries no such stat (the leaf is then Unknown).
+
+    ``null_units_decide``: an all-null unit decides every min/max leaf
+    both ways (every row is NULL, so none is TRUE or FALSE). Chunks set
+    it; manifest rows leave it to their NULL min/max, which is Unknown —
+    exactly what Catalyst's ``keep()`` does with them."""
+
+    def __init__(self, get, n_rows, kinds, null_units_decide: bool):
+        self.get = get
+        self.n_rows = np.asarray(n_rows, dtype=np.int64)
+        self.kinds = kinds
+        self.null_units_decide = null_units_decide
+        self._memo: dict = {}
+
+    def none(self) -> np.ndarray:
+        """All-False over the units: no evidence."""
+        return np.zeros(self.n_rows.size, dtype=bool)
+
+    def stat(self, name: str, kind: str):
+        """(values, valid) of one stat in the comparison domain, or None."""
+        if name not in self._memo:
+            raw = self.get(name)
+            self._memo[name] = None if raw is None else _domain(raw, kind)
+        return self._memo[name]
+
+
+def _combined(raw):
+    return raw.combine_chunks() if isinstance(raw, pa.ChunkedArray) else raw
+
+
+def _domain(raw, kind: str):
+    """Per-unit stat values in the chunk arrays' comparison domain, plus
+    validity: int64 for ints, bools, dates (days), timestamps and
+    durations (µs) and decimals (unscaled) — the ``ct`` table of
+    ``schema.blocks_arrow_schema`` — float64 for floats, object for
+    strings and bytes (NULL slots filled with an empty value). Chunk
+    arrays arrive as lists already in that domain; manifest stat columns
+    arrive as Arrow arrays of their stat type."""
+    if not isinstance(raw, (pa.Array, pa.ChunkedArray)):
+        if kind in ("string", "binary"):
+            valid = np.fromiter((x is not None for x in raw), bool, len(raw))
+            vals = np.array(raw, dtype=object)
+            vals[~valid] = "" if kind == "string" else b""
+            return vals, valid
+        vals = np.asarray(raw, dtype=np.float64 if kind == "float" else np.int64)
+        return vals, np.ones(vals.size, dtype=bool)
+    arr = _combined(raw)
+    valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    t = arr.type
+    if pa.types.is_decimal(t):
+        # precision <= 18: the low word of each little-endian 128-bit
+        # value is the exact unscaled int64
+        words = np.frombuffer(arr.buffers()[1], dtype=np.int64)
+        return words[2 * arr.offset : 2 * (arr.offset + len(arr)) : 2], valid
+    if pa.types.is_timestamp(t) or pa.types.is_duration(t):
+        if t.unit != "us":
+            arr = arr.cast(
+                pa.timestamp("us", t.tz) if pa.types.is_timestamp(t) else pa.duration("us")
+            )
+        arr = arr.view(pa.int64())
+    elif pa.types.is_date32(t):
+        arr = arr.view(pa.int32())
+    if pa.types.is_floating(t):
+        return arr.cast(pa.float64()).fill_null(0).to_numpy(), valid
+    if pa.types.is_integer(arr.type) or pa.types.is_boolean(t):
+        return arr.cast(pa.int64()).fill_null(0).to_numpy(), valid
+    empty = b"" if pa.types.is_binary(t) or pa.types.is_large_binary(t) else ""
+    return arr.fill_null(empty).to_numpy(zero_copy_only=False), valid
+
+
+def _literal(v, s):
+    """Predicate literal -> the unit arrays' domain, or None unless the
+    literal has an exact place there (the leaf is then Unknown —
+    conservative, never a wrong skip). Truncating coercion must never
+    happen here: ``int(3.5)`` on an int column, or a datetime literal
+    converted to µs against date32 stats stored in DAYS, turns Unknown
+    into a wrong definitely-false. A float literal on an int column stays
+    a float and the column compares in float64: Spark's promotion, the
+    very comparison Catalyst's ``keep()`` runs."""
     import decimal as _decimal
 
-    kind = spec_obj.kind
+    kind = s.kind if s is not None else None
+    if kind in ("string", "binary"):
+        return v if isinstance(v, str if kind == "string" else bytes) else None
     if kind == "decimal":
         if isinstance(v, bool) or not isinstance(v, (int, _decimal.Decimal)):
             return None
-        unscaled = _decimal.Decimal(v).scaleb(spec_obj.arrow_type.scale)
+        unscaled = _decimal.Decimal(v).scaleb(s.arrow_type.scale)
         if unscaled != int(unscaled):  # more precision than the column
             return None
         return int(unscaled)
@@ -164,9 +251,7 @@ def _lit_num(v, spec_obj):
             return None
         return (v.days * 86400 + v.seconds) * 1_000_000 + v.microseconds
     if kind == "int":
-        import pyarrow as _pa
-
-        if _pa.types.is_date(spec_obj.arrow_type):
+        if pa.types.is_date(s.arrow_type):
             # date32 stats are DAYS; datetime (a date SUBCLASS) carries
             # time-of-day and belongs to a different comparison domain
             if isinstance(v, _dt.datetime) or not isinstance(v, _dt.date):
@@ -174,21 +259,304 @@ def _lit_num(v, spec_obj):
             return (v - _EPOCH_DATE).days
         if isinstance(v, bool):
             return int(v)
-        if isinstance(v, int):
+        if isinstance(v, (int, float)):
             return v
-        if isinstance(v, float) and v.is_integer() and abs(v) <= 2.0**62:
-            return int(v)  # integral float: the int comparison is exact
-        return None
     return None
 
 
-def _leaf_arrays(row: dict, c: str):
-    mn = row.get(f"{c}__chunk_min")
-    mx = row.get(f"{c}__chunk_max")
-    nl = row.get(f"{c}__chunk_nulls")
-    if mn is None or mx is None or nl is None:
-        return None
-    return mn, mx, np.asarray(nl, dtype=np.int64)
+_NP_OPS = {
+    "eq": np.equal, "ne": np.not_equal, "lt": np.less,
+    "le": np.less_equal, "gt": np.greater, "ge": np.greater_equal,
+}
+
+
+def _cmp(a: np.ndarray, op: str, v) -> np.ndarray:
+    """``a op v`` per unit under Spark's ordering: NaN sorts above every
+    value and equals itself; an int column meets a float literal as
+    float64."""
+    if isinstance(v, float) and a.dtype.kind in "iu":
+        a = a.astype(np.float64)
+    if a.dtype.kind != "f":
+        return _NP_OPS[op](a, v)
+    nan = np.isnan(a)
+    if v != v:
+        lt, eq, gt = ~nan, nan, np.zeros_like(nan)
+    else:
+        lt, eq, gt = a < v, a == v, nan | (a > v)
+    return {"eq": eq, "ne": ~eq, "lt": lt, "le": lt | eq, "gt": gt, "ge": gt | eq}[op]
+
+
+def _range_tri(op: str, lo, hi, no_nulls: np.ndarray, v):
+    """(t, f) of ``x op v`` over units whose non-null values lie in
+    [lo, hi]. Each bound is (values, valid); a NULL bound is no evidence.
+    ``no_nulls`` marks units known to hold no NULL (t needs it: a NULL
+    row is never TRUE)."""
+    (mn, mn_ok), (mx, mx_ok) = lo, hi
+
+    def lo_(o):
+        return mn_ok & _cmp(mn, o, v)
+
+    def hi_(o):
+        return mx_ok & _cmp(mx, o, v)
+
+    if op == "eq":
+        return lo_("eq") & hi_("eq") & no_nulls, lo_("gt") | hi_("lt")
+    if op == "ne":
+        return (lo_("gt") | hi_("lt")) & no_nulls, lo_("eq") & hi_("eq") & no_nulls
+    if op == "lt":
+        return hi_("lt") & no_nulls, lo_("ge")
+    if op == "le":
+        return hi_("le") & no_nulls, lo_("gt")
+    if op == "gt":
+        return lo_("gt") & no_nulls, hi_("le")
+    if op == "ge":
+        return lo_("ge") & no_nulls, hi_("lt")
+    raise ValueError(op)  # pragma: no cover
+
+
+def _bounds(u: _Units, col: str, lo: str, hi: str, kind: str):
+    """The [lo, hi] stat pair of ``col``; None when either is missing."""
+    b = u.stat(f"{col}__{lo}", kind), u.stat(f"{col}__{hi}", kind)
+    return None if b[0] is None or b[1] is None else b
+
+
+def _no_nulls(u: _Units, col: str) -> np.ndarray:
+    nl = u.stat(f"{col}__nulls", "int")
+    return u.none() if nl is None else nl[1] & (nl[0] == 0)
+
+
+def _point_values(spec) -> tuple:
+    """The literals of a string/bytes point lookup (``eq`` or IN), which a
+    unit's dictionary or bloom can prove absent as a whole; () otherwise."""
+    from aisle_spark import filterspec as fs
+
+    if isinstance(spec, fs.InList):
+        vals = spec.values
+    elif isinstance(spec, fs.Cmp) and spec.op == "eq":
+        vals = (spec.value,)
+    else:
+        return ()
+    return tuple(vals) if all(isinstance(v, (str, bytes)) for v in vals) else ()
+
+
+def _list_hits(lst, values):
+    """(valid, rows, positions) of the list elements equal to one of
+    ``values``: per-unit list validity, and for every hit its unit and
+    its position in the flat child array."""
+    lst = _combined(lst)
+    offs = lst.offsets.to_numpy()
+    hit = pc.is_in(lst.values, value_set=pa.array(values, lst.type.value_type))
+    pos = np.flatnonzero(hit.fill_null(False).to_numpy(zero_copy_only=False))
+    pos = pos[(pos >= offs[0]) & (pos < offs[-1])]
+    rows = np.searchsorted(offs, pos, side="right") - 1
+    valid = lst.is_valid().to_numpy(zero_copy_only=False)
+    keep = valid[rows]
+    return valid, rows[keep], pos[keep]
+
+
+def _dict_absent(u: _Units, col: str, values) -> np.ndarray:
+    """Units whose exact distinct set (``{c}__dict``) holds none of the
+    values: their non-null rows are all FALSE (Catalyst's
+    ``array_contains``/``arrays_overlap`` evidence)."""
+    d = u.get(f"{col}__dict")
+    want = bytes if d is not None and pa.types.is_binary(d.type.value_type) else str
+    if d is None or not all(isinstance(v, want) for v in values):
+        return u.none()
+    valid, rows, _ = _list_hits(d, list(values))
+    out = valid.copy()
+    out[rows] = False
+    return out
+
+
+def _bloom_absent(u: _Units, col: str, values) -> np.ndarray:
+    """Units whose bloom filter proves EVERY value absent; a NULL bloom
+    is no evidence."""
+    from aisle_spark.codecs.bloom import M_WORDS, bloom_positions, blooms_absent_matrix
+
+    b = u.get(f"{col}__bloom")
+    if b is None:
+        return u.none()
+    b = _combined(b)
+    ok = b.is_valid().to_numpy(zero_copy_only=False) & (
+        pc.list_value_length(b).fill_null(0).to_numpy() == M_WORDS
+    )
+    if not ok.any():
+        return u.none()
+    words = pc.list_flatten(b.filter(pa.array(ok))).to_numpy().reshape(-1, M_WORDS)
+    absent = np.ones(words.shape[0], dtype=bool)
+    for v in values:
+        key = v if isinstance(v, bytes) else v.encode("utf-8")
+        absent &= blooms_absent_matrix(words, bloom_positions(key))
+    out = u.none()
+    out[ok] = absent
+    return out
+
+
+def _cmp_leaf(spec, u: _Units):
+    s = u.kinds.get(spec.col)
+    v = _literal(spec.value, s)
+    b = None if v is None else _bounds(u, spec.col, "min", "max", s.kind)
+    if b is None:
+        return u.none(), u.none()
+    return _range_tri(spec.op, *b, _no_nulls(u, spec.col), v)
+
+
+def _inlist_leaf(spec, u: _Units):
+    """OR of eq over the values (the range evidence of every value)."""
+    c, s = spec.col, u.kinds.get(spec.col)
+    nn = _no_nulls(u, c)
+    t, f = u.none(), ~u.none()
+    for val in spec.values:
+        v = _literal(val, s)
+        b = None if v is None else _bounds(u, c, "min", "max", s.kind)
+        if b is None:  # Unknown value: no range evidence at all
+            f = u.none()
+            continue
+        ti, fi = _range_tri("eq", *b, nn, v)
+        t, f = t | ti, f & fi
+    return t, f
+
+
+def _startswith_leaf(spec, u: _Units):
+    from aisle_spark.filterspec import next_prefix
+
+    c, p = spec.col, spec.prefix
+    s = u.kinds.get(c)
+    if s is None or s.kind != "string":
+        return u.none(), u.none()
+    nn = _no_nulls(u, c)
+    if p == "":  # every non-null string starts with ""
+        return nn, u.none()
+    b = _bounds(u, c, "min", "max", "string")
+    if b is None:
+        return u.none(), u.none()
+    (mn, mn_ok), (mx, mx_ok) = b
+    f = mx_ok & (mx < p)
+    t = mn_ok & (mn >= p) & nn
+    np_ = next_prefix(p)
+    if np_ is not None:  # None: all-U+10FFFF prefix, s >= p is exact
+        f = f | (mn_ok & (mn >= np_))
+        t = t & mx_ok & (mx < np_)
+    return t, f
+
+
+def _element_spec(s):
+    """ColumnSpec of a list column's elements / a map column's values."""
+    from aisle_spark.schema import ColumnSpec, map_value_kind
+
+    if s.kind == "map":
+        return ColumnSpec(s.name, map_value_kind(s.arrow_type), s.arrow_type.item_type)
+    kind = "float" if s.kind == "floatlist" else "int"
+    return ColumnSpec(s.name, kind, s.arrow_type.value_type)
+
+
+def _arrayany_leaf(spec, u: _Units):
+    """f only: no element of the unit can satisfy. t is never certain —
+    a row with an empty list evaluates FALSE."""
+    s = u.kinds.get(spec.col)
+    if s is None or s.kind not in ("intlist", "floatlist"):
+        return u.none(), u.none()
+    es = _element_spec(s)
+    v = _literal(spec.value, es)
+    b = None if v is None else _bounds(u, spec.col, "elem_min", "elem_max", es.kind)
+    if b is None:
+        return u.none(), u.none()
+    return u.none(), _range_tri(spec.op, *b, ~u.none(), v)[1]
+
+
+def _arraylen_leaf(spec, u: _Units):
+    b = _bounds(u, spec.col, "len_min", "len_max", "int")
+    if b is None:
+        return u.none(), u.none()
+    return _range_tri(spec.op, *b, _no_nulls(u, spec.col), int(spec.value))
+
+
+def _mapkey_leaf(spec, u: _Units):
+    """f only: the key is absent from the unit's exact key set (every row
+    evaluates NULL), or the key's [kmin, kmax] excludes the literal. t is
+    never certain — a row without the key evaluates NULL."""
+    c = spec.col
+    s = u.kinds.get(c)
+    keys = u.get(f"{c}__keys")
+    if s is None or s.kind != "map" or keys is None:
+        return u.none(), u.none()
+    valid, rows, pos = _list_hits(keys, [spec.key])
+    f = valid.copy()
+    f[rows] = False  # the key occurs in these units
+    j = pos - _combined(keys).offsets.to_numpy()[rows]  # its index there
+    es = _element_spec(s)
+    v = _literal(spec.value, es)
+
+    def entry(name):
+        """(values, valid) of the key's entry in a kmin/kmax list, over
+        the units holding the key."""
+        raw = u.get(name)
+        if raw is None:
+            return None
+        lst = _combined(raw)
+        offs = lst.offsets.to_numpy()
+        ok = lst.is_valid().to_numpy(zero_copy_only=False)[rows] & (
+            j < offs[rows + 1] - offs[rows]
+        )
+        return _domain(lst.values.take(pa.array(offs[rows] + j, mask=~ok)), es.kind)
+
+    lo, hi = entry(f"{c}__kmin"), entry(f"{c}__kmax")
+    if v is not None and lo is not None and hi is not None:
+        f[rows] = _range_tri(spec.op, lo, hi, np.ones(rows.size, dtype=bool), v)[1]
+    return u.none(), f
+
+
+# leaves whose evidence is a [min, max] range of the column itself; an
+# all-null chunk decides these (``_Units.null_units_decide``)
+_MINMAX_LEAVES = {"Cmp": _cmp_leaf, "InList": _inlist_leaf, "StartsWith": _startswith_leaf}
+_NESTED_LEAVES = {
+    "ArrayAny": _arrayany_leaf, "ArrayLen": _arraylen_leaf, "MapKeyCmp": _mapkey_leaf,
+}
+
+
+def _tri(spec, u: _Units):
+    """(t, f) bool arrays over the units; Kleene connectives. Each leaf
+    is the numpy twin of its Catalyst ``not_true()``/``keep()`` form:
+    t = NOT not_true, f = NOT keep."""
+    from aisle_spark import filterspec as fs
+
+    if isinstance(spec, fs.And):
+        ts, fs_ = zip(*(_tri(p, u) for p in spec.parts))
+        return np.logical_and.reduce(ts), np.logical_or.reduce(fs_)
+    if isinstance(spec, fs.Or):
+        ts, fs_ = zip(*(_tri(p, u) for p in spec.parts))
+        return np.logical_or.reduce(ts), np.logical_and.reduce(fs_)
+    if isinstance(spec, fs.Not):
+        t, f = _tri(spec.inner, u)
+        return f, t
+    if isinstance(spec, fs.AlwaysTrue):
+        return ~u.none(), u.none()
+    if isinstance(spec, fs.Between):
+        return _tri(spec._parts(), u)
+    if isinstance(spec, fs.IsNull):
+        nl = u.stat(f"{spec.col}__nulls", "int")
+        if nl is None:
+            return u.none(), u.none()
+        t = nl[1] & (nl[0] == u.n_rows)  # no row FALSE for "IS NULL"
+        f = nl[1] & (nl[0] == 0)
+        return (f, t) if spec.negated else (t, f)
+    name = type(spec).__name__
+    if name in _NESTED_LEAVES:
+        return _NESTED_LEAVES[name](spec, u)
+    if name not in _MINMAX_LEAVES:
+        return u.none(), u.none()  # Like / Regexp: residual-only, Unknown
+    if isinstance(spec, fs.InList) and not spec.values:
+        return u.none(), ~u.none()
+    t, f = _MINMAX_LEAVES[name](spec, u)
+    pts = _point_values(spec)
+    if pts:  # dictionary and bloom evidence cover the lookup as a whole
+        f = f | _dict_absent(u, spec.col, pts) | _bloom_absent(u, spec.col, pts)
+    if u.null_units_decide:  # an all-null chunk: no row TRUE, none FALSE
+        nl = u.stat(f"{spec.col}__nulls", "int")
+        if nl is not None:
+            an = nl[1] & (nl[0] == u.n_rows)
+            t, f = t | an, f | an
+    return t, f
 
 
 def _chunk_lens(n: int) -> np.ndarray:
@@ -199,195 +567,55 @@ def _chunk_lens(n: int) -> np.ndarray:
     return lens
 
 
-def _cmp_tri(op: str, mn, mx, all_null, no_nulls, v, is_float: bool):
-    """Vectorized chunk tri for one comparison; mn/mx are numpy arrays
-    (float64 for float columns — NaN max follows Spark total order, where
-    NaN > everything, so comparisons must special-case it)."""
-    if is_float:
-        nan_max = np.isnan(mx)
-        nan_min = np.isnan(mn)  # all values NaN
-        # Spark total order: NaN greater than all reals, NaN == NaN
-        if np.isnan(v):
-            gt_v = np.zeros_like(mx, dtype=bool)  # nothing exceeds NaN
-            max_lt_v = ~nan_max  # any real max < NaN
-            min_gt_v = np.zeros_like(mn, dtype=bool)
-            eq_possible = nan_max  # only NaN equals NaN
-            if op == "eq":
-                f = ~eq_possible
-                t = nan_min & no_nulls
-            elif op == "ne":
-                f = nan_min & no_nulls
-                t = ~eq_possible & no_nulls
-            elif op == "lt":  # x < NaN: true for all reals
-                f = nan_min
-                t = ~nan_max & no_nulls
-            elif op == "le":
-                f = np.zeros_like(mx, dtype=bool)
-                t = no_nulls
-            elif op == "gt":  # x > NaN: never
-                f = np.ones_like(mx, dtype=bool)
-                t = np.zeros_like(mx, dtype=bool)
-            elif op == "ge":  # x >= NaN: only NaN
-                f = ~nan_max
-                t = nan_min & no_nulls
-            else:  # pragma: no cover
-                raise ValueError(op)
-            return t, f
-        # real literal; effective max for ordering is +inf when NaN present
-        emax = np.where(nan_max, np.inf, mx)
-        emin = np.where(nan_min, np.inf, mn)  # all-NaN chunk: min also "NaN"
-        mn, mx = emin, emax
-    if op == "eq":
-        f = (mn > v) | (mx < v)
-        t = (mn == v) & (mx == v) & no_nulls
-    elif op == "ne":
-        f = (mn == v) & (mx == v) & no_nulls
-        t = ((mn > v) | (mx < v)) & no_nulls
-    elif op == "lt":
-        f = mn >= v
-        t = (mx < v) & no_nulls
-    elif op == "le":
-        f = mn > v
-        t = (mx <= v) & no_nulls
-    elif op == "gt":
-        f = mx <= v
-        t = (mn > v) & no_nulls
-    elif op == "ge":
-        f = mx < v
-        t = (mn >= v) & no_nulls
-    else:  # pragma: no cover
-        raise ValueError(op)
-    f = f | all_null
-    t = t | all_null  # all rows NULL: no row FALSE either
-    return t, f
-
-
-def _tri(spec, row: dict, kinds, n: int):
-    """Returns (t, f) bool arrays over chunks; Kleene connectives."""
-    from aisle_spark import filterspec as fs
-
-    k = n_chunks(n)
-    unknown = (np.zeros(k, dtype=bool), np.zeros(k, dtype=bool))
-    lens = _chunk_lens(n)
-
-    if isinstance(spec, fs.And):
-        ts, fss = zip(*(_tri(p, row, kinds, n) for p in spec.parts))
-        return np.logical_and.reduce(ts), np.logical_or.reduce(fss)
-    if isinstance(spec, fs.Or):
-        ts, fss = zip(*(_tri(p, row, kinds, n) for p in spec.parts))
-        return np.logical_or.reduce(ts), np.logical_and.reduce(fss)
-    if isinstance(spec, fs.Not):
-        t, f = _tri(spec.inner, row, kinds, n)
-        return f, t
-    if isinstance(spec, fs.AlwaysTrue):
-        return np.ones(k, dtype=bool), np.zeros(k, dtype=bool)
-    if isinstance(spec, fs.Between):
-        return _tri(spec._parts(), row, kinds, n)
-    if isinstance(spec, fs.IsNull):
-        arrs = _leaf_arrays(row, spec.col)
-        if arrs is None:
-            return unknown
-        _, _, nl = arrs
-        t_null = nl == lens  # no row FALSE for "IS NULL"
-        f_null = nl == 0
-        return (f_null, t_null) if spec.negated else (t_null, f_null)
-    if isinstance(spec, fs.InList):
-        parts = [_tri(fs.Cmp(spec.col, "eq", v), row, kinds, n) for v in spec.values]
-        if not parts:
-            return np.zeros(k, dtype=bool), np.ones(k, dtype=bool)
-        ts, fss = zip(*parts)
-        return np.logical_or.reduce(ts), np.logical_and.reduce(fss)
-    if isinstance(spec, fs.StartsWith):
-        arrs = _leaf_arrays(row, spec.col)
-        so = kinds.get(spec.col)
-        if arrs is None or so is None or so.kind != "string":
-            return unknown
-        mn, mx, nl = arrs
-        all_null = nl == lens
-        no_nulls = nl == 0
-        p = spec.prefix
-        np_ = fs.next_prefix(p) if p else None
-        t = np.zeros(k, dtype=bool)
-        f = np.zeros(k, dtype=bool)
-        for i in range(k):
-            if all_null[i]:
-                t[i] = f[i] = True
-                continue
-            lo_s, hi_s = mn[i], mx[i]
-            if lo_s is None or hi_s is None:  # truncation overflow => Unknown
-                continue
-            if p == "":
-                t[i] = no_nulls[i]
-                continue
-            fi = hi_s < p
-            ti = (lo_s >= p) and no_nulls[i]
-            if np_ is not None:
-                fi = fi or (lo_s >= np_)
-                ti = ti and (hi_s < np_)
-            t[i], f[i] = ti, fi
-        return t, f
-    if isinstance(spec, fs.Cmp):
-        spec_obj = kinds.get(spec.col)
-        kind = spec_obj.kind if spec_obj is not None else None
-        arrs = _leaf_arrays(row, spec.col)
-        if arrs is None or spec_obj is None:
-            return unknown
-        mn, mx, nl = arrs
-        all_null = nl == lens
-        no_nulls = nl == 0
-        if kind in ("string", "binary"):
-            want = str if kind == "string" else bytes
-            if spec.op not in fs.Cmp._SQL_OP or not isinstance(spec.value, want):
-                return unknown
-            t = np.zeros(k, dtype=bool)
-            f = np.zeros(k, dtype=bool)
-            for i in range(k):
-                if all_null[i]:
-                    t[i] = f[i] = True
-                    continue
-                if mn[i] is None or mx[i] is None:  # truncation overflow
-                    continue
-                ti, fi = _scalar_cmp(spec.op, mn[i], mx[i], no_nulls[i], spec.value)
-                t[i], f[i] = ti, fi
-            return t, f
-        if kind in ("int", "timestamp", "duration", "float", "decimal"):
-            v = _lit_num(spec.value, spec_obj)
-            if v is None or isinstance(v, str):
-                return unknown
-            is_float = kind == "float"
-            dt = np.float64 if is_float else np.int64
-            return _cmp_tri(
-                spec.op,
-                np.asarray(mn, dtype=dt),
-                np.asarray(mx, dtype=dt),
-                all_null,
-                no_nulls,
-                float(v) if is_float else int(v),
-                is_float,
-            )
-        return unknown
-    return unknown
-
-
-def _scalar_cmp(op: str, mn, mx, no_nulls: bool, v):
-    if op == "eq":
-        return (mn == v and mx == v and no_nulls), (mn > v or mx < v)
-    if op == "ne":
-        return ((mn > v or mx < v) and no_nulls), (mn == v and mx == v and no_nulls)
-    if op == "lt":
-        return (mx < v and no_nulls), mn >= v
-    if op == "le":
-        return (mx <= v and no_nulls), mn > v
-    if op == "gt":
-        return (mn > v and no_nulls), mx <= v
-    if op == "ge":
-        return (mn >= v and no_nulls), mx < v
-    raise ValueError(op)  # pragma: no cover
-
-
 def chunk_keep(spec, row: dict, kinds, n_rows: int) -> np.ndarray:
     """keep[i] = chunk i may contain a matching row (~f). ``kinds`` maps
     column name -> ColumnSpec. A block whose mask is all-False is skipped
     before any payload decode."""
-    _, f = _tri(spec, row, kinds, n_rows)
+
+    def get(name: str):
+        c, _, stat = name.rpartition("__")
+        return row.get(f"{c}__chunk_{stat}") if stat in ("min", "max", "nulls") else None
+
+    _, f = _tri(spec, _Units(get, _chunk_lens(n_rows), kinds, True))
     return ~f
+
+
+def manifest_keep(spec, stats: pa.Table, kinds) -> np.ndarray:
+    """keep[i] = manifest row i (one block) may hold a matching row — the
+    block tier off the JVM, selecting exactly the blocks Catalyst's
+    ``spec.keep()`` selects. ``stats`` holds ``n_rows`` and the
+    ``stat_columns(spec)`` a manifest has, each in its stat type; a
+    missing stat is Unknown."""
+    names = set(stats.column_names)
+
+    def get(name: str):
+        return stats.column(name) if name in names else None
+
+    _, f = _tri(spec, _Units(get, stats.column("n_rows").to_numpy(), kinds, False))
+    return ~f
+
+
+_LEAF_STATS = {
+    "IsNull": ("nulls",),
+    "ArrayAny": ("elem_min", "elem_max"),
+    "ArrayLen": ("len_min", "len_max", "nulls"),
+    "MapKeyCmp": ("keys", "kmin", "kmax"),
+    **{name: ("min", "max", "nulls") for name in _MINMAX_LEAVES},
+}
+
+
+def stat_columns(spec) -> set[str]:
+    """The manifest stat columns ``manifest_keep`` reads for ``spec`` —
+    never a payload or chunk array, and a bloom only for a point lookup."""
+    from aisle_spark import filterspec as fs
+
+    if isinstance(spec, (fs.And, fs.Or)):
+        return set().union(*map(stat_columns, spec.parts))
+    if isinstance(spec, fs.Not):
+        return stat_columns(spec.inner)
+    if isinstance(spec, fs.Between):
+        return stat_columns(spec._parts())
+    stats = _LEAF_STATS.get(type(spec).__name__, ())
+    if _point_values(spec):
+        stats += ("dict", "bloom")
+    return {f"{spec.col}__{st}" for st in stats}

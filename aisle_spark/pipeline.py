@@ -301,6 +301,8 @@ class BlockFileWriter:
     def close(self) -> dict | None:
         import os
 
+        from aisle_spark.datasource import _json_file_stats
+
         self._flush()
         if self._writer is None:
             return None
@@ -313,36 +315,9 @@ class BlockFileWriter:
             "n_rows": self.n_rows,
             "enc_bytes": self.enc_bytes,
             "raw_bytes": self.raw_bytes,
-            "file_stats": self._json_stats(),
+            "file_stats": _json_file_stats(self._fstats, self._fs, self._final),
             "stages": {k: round(v, 4) for k, v in self.stages.items()},
         }
-
-    def _json_stats(self) -> dict:
-        """The file stats in the manifest's JSON encoding; columns with no
-        evidence at all are left out (absent = Unknown = file kept)."""
-        import os
-
-        from aisle_spark.datasource import _json_stat_bound
-
-        out: dict = {}
-        for c, v in self._fstats.items():
-            if isinstance(v, dict):  # map key set, already JSON-safe
-                if v.get("keys") is not None:
-                    out[c] = v
-                continue
-            b = [_json_stat_bound(v[0]), _json_stat_bound(v[1]), v[2], v[3]]
-            if b[0] is not None or b[1] is not None or b[2] is not None:
-                out[c] = b
-        if "__bytes" not in out:  # a real column of that name wins
-            try:
-                out["__bytes"] = (
-                    os.path.getsize(self._final)
-                    if self._fs is None
-                    else int(self._fs.get_file_info(self._final).size)
-                )
-            except OSError:
-                pass  # size is rate-limiter advice only; never fail commit
-        return out
 
 
 def encode_table(

@@ -1,20 +1,21 @@
-"""Differential test of the DuckDB-dialect evidence predicates: for
-randomized predicate trees (the same generator the Catalyst soundness
-sweep uses) over one encoded manifest, ``prune_sql.keep_sql`` through
-DuckDB must select exactly the block set ``filterspec.keep()`` selects
-through Catalyst — both with evidence on and off."""
+"""Differential test of the numpy block tier: for randomized predicate
+trees (the same generator the Catalyst soundness sweep uses) over one
+encoded manifest, the DataSource planner's block tier
+(``chunkstats.manifest_keep`` over the stat columns it reads) must select
+exactly the block set ``filterspec.keep()`` selects through Catalyst."""
 
 from __future__ import annotations
 
 import random
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from aisle_spark.filterspec import PruneOptions, col
+from aisle_spark.datasource import AisleReader, _manifest_of
+from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col
 from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
-from aisle_spark.prune_sql import keep_sql
-from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
+from aisle_spark.schema import synth_batch
 
 from tests.test_random_predicates import _rand_spec
 
@@ -22,51 +23,75 @@ from tests.test_random_predicates import _rand_spec
 @pytest.fixture(scope="module")
 def manifest(spark, tmp_path_factory):
     """Encoded blocks both as a cached DataFrame (Catalyst side) and as a
-    parquet directory (DuckDB side)."""
+    parquet directory (numpy side)."""
     df = spark.createDataFrame(pa.Table.from_batches([synth_batch(3, 3000)]))
     blocks = encode_table(
         df, parts=4, block_rows=256, sort_cols=["source", "n_tok"]
     ).cache()
-    out = str(tmp_path_factory.mktemp("prunesql") / "enc")
+    out = str(tmp_path_factory.mktemp("blocktier") / "enc")
     write_encoded(blocks, out, arrow_schema_of(df))
     return blocks, out
 
 
-def _duck(out: str):
-    import duckdb
+def _catalyst(blocks, spec) -> set:
+    return {
+        r.block_id
+        for r in blocks.filter(spec.keep(DEFAULT_OPTIONS)).select("block_id").collect()
+    }
 
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    con.execute(
-        f"CREATE VIEW m AS SELECT * FROM read_parquet('{out}/*.parquet')"
-    )
-    return con
+
+def _numpy(out: str, spec) -> set:
+    """block_ids of the manifest rows the planner's block tier keeps."""
+    files, _ = _manifest_of(None, out)
+    rows = AisleReader(out)._surviving_rows(files, spec)
+    return {
+        b
+        for f, rs in zip(files, rows)
+        for b in pq.read_table(f, columns=["block_id"])
+        .column(0)
+        .take(pa.array(rs, pa.int64()))
+        .to_pylist()
+    }
 
 
 @pytest.mark.parametrize("seed", [11, 12, 13])
-def test_keep_sql_matches_catalyst(spark, manifest, seed):
+def test_block_tier_matches_catalyst(spark, manifest, seed):
     blocks, out = manifest
-    con = _duck(out)
     rng = random.Random(seed)
     for _ in range(20):
         spec = _rand_spec(rng)
-        for opts in (PruneOptions(), PruneOptions(use_dict=False, use_bloom=False)):
-            cat = {
-                r.block_id for r in blocks.filter(spec.keep(opts)).select("block_id").collect()
-            }
-            sql = keep_sql(spec, opts)
-            duck = {
-                r[0]
-                for r in con.execute(
-                    f"SELECT block_id FROM m WHERE {sql}"
-                ).fetchall()
-            }
-            assert duck == cat, f"seed={seed} spec={spec!r}\nsql={sql}"
+        assert _numpy(out, spec) == _catalyst(blocks, spec), f"seed={seed} spec={spec!r}"
 
 
-def test_keep_sql_typed_operands(spark, tmp_path):
+def test_block_tier_bloom_point_lookups(spark, manifest):
+    """doc_id blocks carry bloom evidence (too many distinct values for a
+    dictionary): a present id keeps its block; an absent id inside the
+    blocks' [min, max] ranges is pruned by the bloom."""
+    blocks, out = manifest
+    present = synth_batch(3, 3000).column("doc_id")[1234].as_py()
+    absent = present + "-x"  # sorts right after a written id, never written
+    for spec in (
+        col("doc_id") == present,
+        col("doc_id") == absent,
+        col("doc_id").isin(present, absent),
+        col("doc_id").isin(absent),
+        ~(col("doc_id") == absent),
+    ):
+        assert _numpy(out, spec) == _catalyst(blocks, spec), f"spec={spec!r}"
+    assert _numpy(out, col("doc_id") == present)
+    spec = col("doc_id") == absent
+    ranges_only = {
+        r.block_id
+        for r in blocks.filter(spec.keep(PruneOptions(use_dict=False, use_bloom=False)))
+        .select("block_id")
+        .collect()
+    }
+    assert _numpy(out, spec) < ranges_only
+
+
+def test_block_tier_typed_operands(spark, tmp_path):
     """Decimal, timestamp, date, duration, binary, map-key and nested
-    struct leaves through both dialects."""
+    struct leaves through both evaluators."""
     import datetime as dt
     from decimal import Decimal
 
@@ -112,7 +137,6 @@ def test_keep_sql_typed_operands(spark, tmp_path):
     blocks = encode_table(df, parts=2, block_rows=256, sort_cols=["id"]).cache()
     out = str(tmp_path / "enc")
     write_encoded(blocks, out, arrow_schema_of(df))
-    con = _duck(out)
 
     specs = [
         col("price") > Decimal("333.33"),
@@ -126,23 +150,21 @@ def test_keep_sql_typed_operands(spark, tmp_path):
         col("id").like("d00%"),
         col("id").like("%7"),  # residual-only Like: keep everything
         col("m").map_key("score") > 50,
+        col("m").map_key("nope") == 1,  # a key absent from every block
         col("meta.lang") == "en",
         (col("meta.lang") == "de") | (col("price") < Decimal("50.00")),
         col("price").is_null(),
         col("blob").is_not_null() & (col("d") != dt.date(2024, 1, 5)),
     ]
     for spec in specs:
-        cat = {
-            r.block_id for r in blocks.filter(spec.keep()).select("block_id").collect()
-        }
-        sql = keep_sql(spec)
-        duck = {r[0] for r in con.execute(f"SELECT block_id FROM m WHERE {sql}").fetchall()}
-        assert duck == cat, f"spec={spec!r}\nsql={sql}"
+        assert _numpy(out, spec) == _catalyst(blocks, spec), f"spec={spec!r}"
+    # the absent key prunes every block whose key set is known
+    assert len(_numpy(out, col("m").map_key("nope") == 1)) < blocks.count()
 
 
-def test_keep_sql_adversarial_strings(spark, tmp_path):
-    """Values containing quotes/backslashes/unicode must render into valid
-    DuckDB SQL selecting the same blocks as Catalyst."""
+def test_block_tier_adversarial_strings(spark, tmp_path):
+    """Values containing quotes/backslashes/unicode select the same blocks
+    through both evaluators."""
     from pyspark.sql import types as T
 
     nasty = ["o'brien", "100%", "back\\slash", "émoji🙂", "''", "plain"]
@@ -153,15 +175,7 @@ def test_keep_sql_adversarial_strings(spark, tmp_path):
     blocks = encode_table(df, parts=2, block_rows=64, sort_cols=["s"]).cache()
     out = str(tmp_path / "enc")
     write_encoded(blocks, out, arrow_schema_of(df))
-    con = _duck(out)
     for v in nasty:
         for spec in (col("s") == v, col("s") != v, col("s").isin(v), col("s").startswith(v[:3])):
-            cat = {r.block_id for r in blocks.filter(spec.keep()).select("block_id").collect()}
-            duck = {
-                r[0]
-                for r in con.execute(
-                    f"SELECT block_id FROM m WHERE {keep_sql(spec)}"
-                ).fetchall()
-            }
-            assert duck == cat, f"{v!r} {spec!r}"
+            assert _numpy(out, spec) == _catalyst(blocks, spec), f"{v!r} {spec!r}"
     blocks.unpersist()

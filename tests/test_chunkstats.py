@@ -217,6 +217,13 @@ class TestLiteralDomainGuard:
         keep = chunk_keep(col("x") < 3.5, row, _kinds(specs), N)
         assert keep.all()  # int(3.5)=3 would have skipped every chunk
 
+    def test_nonintegral_float_on_int_column_prunes_as_double(self):
+        # Spark promotes the int side to double; the chunk tier does too
+        specs, row = _block({"x": pa.array(np.arange(N, dtype=np.int64))})
+        keep = chunk_keep(col("x") < 1000.5, row, _kinds(specs), N)
+        assert list(np.flatnonzero(keep)) == [0, 1]
+        assert not chunk_keep(col("x") > N - 0.5, row, _kinds(specs), N).any()
+
     def test_integral_float_on_int_column_is_exact(self):
         specs, row = _block({"x": pa.array(np.arange(N, dtype=np.int64))})
         keep = chunk_keep(col("x") == 1000.0, row, _kinds(specs), N)

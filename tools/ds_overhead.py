@@ -4,8 +4,8 @@ of a scan the library runs in ~0.7-1.0 s. This script times each phase on
 the same encoded table, cold and warm:
 
   load     — schema resolution (spawns a Python planning worker)
-  collect  — pushFilters + partitions (second planning worker: DuckDB
-             block pruning over manifest stat columns) + read tasks
+  collect  — pushFilters + partitions (second planning worker: numpy
+             block-tier pruning over manifest stat columns) + read tasks
   library  — read_encoded + scan() on the same table/predicate
 
 Run: python tools/ds_overhead.py [table_dir]
