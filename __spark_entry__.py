@@ -639,12 +639,11 @@ def _ds_typed_file_prune_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.format("aisle")
         .option(
-            # INTEGER price literal: sqlcompile parses 60000.00 as a
-            # Python float and file_keep's float-vs-decimal branch is
-            # deliberately no-evidence (double-cast boundary rounding) —
-            # an int literal coerces exactly into the decimal stat
-            # domain, so this gate genuinely exercises the decimal
-            # manifest-list tier (code-review r5 finding)
+            # INTEGER price literal: it coerces exactly into the decimal
+            # stat domain (unscaled int64), so this gate exercises the
+            # decimal manifest-list tier on exact bounds. A float literal
+            # (sqlcompile parses 60000.00 as a Python float) would prune
+            # too, with the decimal compared as a double as Spark does
             "where",
             "l_price >= 60000 AND delay >= INTERVAL 30000 SECONDS",
         )

@@ -11,19 +11,22 @@ is definitely-false is skipped without touching a single payload byte
 (the reference's page-index cut rows-read 79.5%, per its
 benches/df_compare/README.md:43).
 
-The same evaluator is the block tier off the JVM: ``manifest_keep`` runs
-it over the manifest rows (one per block) that the DataSource planner
-reads, selecting exactly the blocks Catalyst's ``Spec.keep()`` selects —
-dictionary, bloom, list-element, list-length and map-key evidence
-included. One tri-state, two granularities: stat arrays over N units
-plus each unit's row count (aisle's compile-once pruner evaluating every
-metadata granularity, src/prune/api.rs).
+The same evaluator is the block and file tiers off the JVM:
+``manifest_keep`` runs it over the manifest rows (one per block) that the
+DataSource planner reads, selecting exactly the blocks Catalyst's
+``Spec.keep()`` selects — dictionary, bloom, list-element, list-length
+and map-key evidence included — and over the one row per file that
+``datasource.file_stats_table`` decodes from the manifest's JSON
+``file_stats``. One tri-state, three granularities (file → block →
+512-row chunk): stat arrays over N units plus each unit's row count
+(aisle's compile-once pruner evaluating every metadata granularity,
+src/prune/api.rs).
 
 Soundness invariants match filterspec's:
   f[i] True  => no row in unit i evaluates TRUE   (prunable)
   t[i] True  => no row in unit i evaluates FALSE  (Not-prunable dual)
-All-null chunks set both (every row is NULL); a manifest row's NULL stat
-is Unknown, as in Catalyst. Unsupported leaves return (False, False) =
+All-null chunks set both (every row is NULL); a block's or a file's
+NULL stat is Unknown, as in Catalyst. Unsupported leaves return (False, False) =
 Unknown — never a wrong skip.
 """
 
@@ -140,16 +143,17 @@ def chunk_stats_string(arr: pa.Array, n: int) -> dict:
 
 
 class _Units:
-    """Stat arrays over N pruning units — the chunks of one block or the
-    blocks of a manifest — under the manifest's stat names (``{c}__min``,
-    ``{c}__nulls``, ``{c}__dict``, ...). ``get(name)`` returns a stat's
-    raw per-unit values (a list or a pyarrow array), or None when the
-    granularity carries no such stat (the leaf is then Unknown).
+    """Stat arrays over N pruning units — the chunks of one block, the
+    blocks of a manifest or the files of a table — under the manifest's
+    stat names (``{c}__min``, ``{c}__nulls``, ``{c}__dict``, ...).
+    ``get(name)`` returns a stat's raw per-unit values (a list or a
+    pyarrow array), or None when the granularity carries no such stat
+    (the leaf is then Unknown).
 
     ``null_units_decide``: an all-null unit decides every min/max leaf
     both ways (every row is NULL, so none is TRUE or FALSE). Chunks set
-    it; manifest rows leave it to their NULL min/max, which is Unknown —
-    exactly what Catalyst's ``keep()`` does with them."""
+    it; blocks and files leave it to their NULL min/max, which is
+    Unknown — exactly what Catalyst's ``keep()`` does with them."""
 
     def __init__(self, get, n_rows, kinds, null_units_decide: bool):
         self.get = get
@@ -220,15 +224,17 @@ def _literal(v, s):
     conservative, never a wrong skip). Truncating coercion must never
     happen here: ``int(3.5)`` on an int column, or a datetime literal
     converted to µs against date32 stats stored in DAYS, turns Unknown
-    into a wrong definitely-false. A float literal on an int column stays
-    a float and the column compares in float64: Spark's promotion, the
-    very comparison Catalyst's ``keep()`` runs."""
+    into a wrong definitely-false. A float literal on an int or decimal
+    column stays a float and the column compares in float64: Spark's
+    promotion, the very comparison Catalyst's ``keep()`` runs."""
     import decimal as _decimal
 
     kind = s.kind if s is not None else None
     if kind in ("string", "binary"):
         return v if isinstance(v, str if kind == "string" else bytes) else None
     if kind == "decimal":
+        if isinstance(v, float):  # compared in float64 (``_minmax``)
+            return v if s.arrow_type.scale >= 0 else None
         if isinstance(v, bool) or not isinstance(v, (int, _decimal.Decimal)):
             return None
         unscaled = _decimal.Decimal(v).scaleb(s.arrow_type.scale)
@@ -320,6 +326,23 @@ def _bounds(u: _Units, col: str, lo: str, hi: str, kind: str):
     return None if b[0] is None or b[1] is None else b
 
 
+def _minmax(u: _Units, col: str, s, v):
+    """The [min, max] bounds of ``col`` that the ``_literal`` ``v``
+    compares against; None (Unknown) without a literal or a bound. A
+    float literal meets a decimal column in float64, as in Spark: each
+    unscaled bound becomes ``unscaled / 10**scale``, one IEEE division of
+    two exact doubles and so the correctly rounded double of the decimal
+    (what ``Decimal.toDouble`` returns). Past 2**53 the unscaled int64 is
+    not exact as a double, so such a bound is no evidence."""
+    b = None if v is None else _bounds(u, col, "min", "max", s.kind)
+    if b is not None and s.kind == "decimal" and isinstance(v, float):
+        den = float(10**s.arrow_type.scale)
+        b = tuple(
+            (vals / den, ok & (vals > -(2**53)) & (vals < 2**53)) for vals, ok in b
+        )
+    return b
+
+
 def _no_nulls(u: _Units, col: str) -> np.ndarray:
     nl = u.stat(f"{col}__nulls", "int")
     return u.none() if nl is None else nl[1] & (nl[0] == 0)
@@ -395,7 +418,7 @@ def _bloom_absent(u: _Units, col: str, values) -> np.ndarray:
 def _cmp_leaf(spec, u: _Units):
     s = u.kinds.get(spec.col)
     v = _literal(spec.value, s)
-    b = None if v is None else _bounds(u, spec.col, "min", "max", s.kind)
+    b = _minmax(u, spec.col, s, v)
     if b is None:
         return u.none(), u.none()
     return _range_tri(spec.op, *b, _no_nulls(u, spec.col), v)
@@ -408,7 +431,7 @@ def _inlist_leaf(spec, u: _Units):
     t, f = u.none(), ~u.none()
     for val in spec.values:
         v = _literal(val, s)
-        b = None if v is None else _bounds(u, c, "min", "max", s.kind)
+        b = _minmax(u, c, s, v)
         if b is None:  # Unknown value: no range evidence at all
             f = u.none()
             continue
@@ -581,11 +604,12 @@ def chunk_keep(spec, row: dict, kinds, n_rows: int) -> np.ndarray:
 
 
 def manifest_keep(spec, stats: pa.Table, kinds) -> np.ndarray:
-    """keep[i] = manifest row i (one block) may hold a matching row — the
-    block tier off the JVM, selecting exactly the blocks Catalyst's
-    ``spec.keep()`` selects. ``stats`` holds ``n_rows`` and the
-    ``stat_columns(spec)`` a manifest has, each in its stat type; a
-    missing stat is Unknown."""
+    """keep[i] = unit i may hold a matching row. A unit is a block (one
+    manifest row: the block tier off the JVM, selecting exactly the
+    blocks Catalyst's ``spec.keep()`` selects) or a file (one row of
+    ``datasource.file_stats_table``: the file tier). ``stats`` holds
+    ``n_rows`` and the ``stat_columns(spec)`` the units have, each in its
+    stat type; a missing or NULL stat is Unknown."""
     names = set(stats.column_names)
 
     def get(name: str):

@@ -13,14 +13,14 @@ contract):
   pruning evidence (the standard DSv2 posture), so the engine never has
   to promise exact evaluation and correctness always rests on Catalyst's
   own residual filter.
-* ``partitions`` prunes at PLANNING time: whole files drop on their
-  manifest-list bounds (``file_keep``), then the surviving files'
-  manifest stat columns are evaluated by the numpy block tier
-  (``chunkstats.manifest_keep`` — the same tri-state the reader runs per
-  chunk, differentially tested against Catalyst's ``keep()``), producing
-  one input partition per file that still has surviving blocks,
-  carrying the survivors' row numbers. Blocks that are definitely-false
-  never get a task scheduled.
+* ``partitions`` prunes at PLANNING time with one numpy tri-state
+  (``chunkstats.manifest_keep`` — the evaluator the reader runs per
+  chunk, differentially tested against Catalyst's ``keep()``) at two
+  granularities: whole files drop on the manifest's per-file stats
+  (``file_stats_table``), then the surviving files' manifest stat
+  columns prune blocks, producing one input partition per file that
+  still has surviving blocks, carrying the survivors' row numbers.
+  Blocks that are definitely-false never get a task scheduled.
 * ``read`` decodes surviving blocks through the very same plan the
   ``scan()`` path uses (``pipeline._decode_fn``: chunk-level skip +
   in-reader row mask + struct reassembly) and yields Arrow batches.
@@ -535,10 +535,12 @@ class AisleReader(DataSourceReader):
         prune = self._prune_spec()
         if prune is None or not files:
             return _pack_partitions([(f, None) for f in files], fstats)
-        # manifest-list level: whole files drop on their [min,max] bounds
-        # before a single manifest row is scanned
-        doms = file_stat_domains(self.arrow_schema)
-        files = sorted(f for f in files if file_keep(fstats.get(f), prune, doms))
+        # one normalized predicate for both tiers: a DATE literal on a
+        # timestamp column compares at midnight of the driver's time zone
+        where = utc_normalize(coerce_temporals(prune, self.arrow_schema))
+        # file tier: whole files drop on their manifest file_stats before
+        # a single manifest row is read
+        files = sorted(_files_kept(files, fstats, where, self.arrow_schema))
         if not files:
             return []
         # survivors in (file, row number) order; plan-size cap (VERDICT r3
@@ -548,21 +550,21 @@ class AisleReader(DataSourceReader):
         return _pack_partitions(
             [
                 (f, tuple(rows) if len(rows) <= _PARTITION_ROWS_CAP else None)
-                for f, rows in zip(files, self._surviving_rows(files, prune))
+                for f, rows in zip(files, self._surviving_rows(files, where))
                 if rows
             ],
             fstats,
         )
 
-    def _surviving_rows(self, files: list[str], prune: Spec) -> list[list[int]]:
-        """Per file, the manifest rows (blocks) the numpy block tier keeps.
-        Each file's stat columns are cast to the block schema's types —
-        Spark-written and pyarrow-written files then concatenate — and one
-        evaluation covers every file."""
+    def _surviving_rows(self, files: list[str], where: Spec) -> list[list[int]]:
+        """Per file, the manifest rows (blocks) the numpy block tier keeps
+        for ``where`` (already ``utc_normalize``d). Each file's stat
+        columns are cast to the block schema's types — Spark-written and
+        pyarrow-written files then concatenate — and one evaluation covers
+        every file."""
         from aisle_spark.chunkstats import manifest_keep, stat_columns
         from aisle_spark.schema import blocks_arrow_schema, specs_for_schema
 
-        where = utc_normalize(prune)
         specs = specs_for_schema(self.arrow_schema)
         target = blocks_arrow_schema(specs)
         cols = ["n_rows", *sorted(stat_columns(where) & set(target.names))]
@@ -1000,19 +1002,13 @@ class AisleStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[AislePartition]:
         new, fstats = self._new_files(start, end)  # validates start <= end
         self._cursor = dict(end)
+        if self.exact_where is not None and new:
+            # the file tier per micro-batch: whole new files drop on their
+            # manifest file_stats when the where option excludes them
+            where = utc_normalize(self.exact_where)
+            new = _files_kept(new, fstats, where, self.arrow_schema)
         root = self.path.rstrip("/")
-        parts = [AislePartition(f"{root}/{f}", None) for f in new]
-        if self.exact_where is not None and parts:
-            # manifest-list pruning per micro-batch: whole new files drop
-            # on their [min,max] bounds when the where option excludes them
-            full_stats = {f"{root}/{k}": v for k, v in fstats.items()}
-            doms = file_stat_domains(self.arrow_schema)
-            parts = [
-                p
-                for p in parts
-                if file_keep(full_stats.get(p.path), self.exact_where, doms)
-            ]
-        return parts
+        return [AislePartition(f"{root}/{f}", None) for f in new]
 
     def read(self, partition: AislePartition) -> Iterator[pa.RecordBatch]:
         if partition is None:
@@ -1063,7 +1059,8 @@ def _json_stat_bound(v):
     domain), date -> epoch-days int, duration -> µs int, decimal -> exact
     string, float NaN -> None (Unknown — Spark orders NaN greatest, so a
     lost NaN bound would wrongly prune ``x > v`` files; ADVICE r3
-    medium). Anything unrepresentable -> None = no evidence."""
+    medium). Anything unrepresentable -> None = no evidence.
+    :func:`file_stats_table` inverts it."""
     import datetime as _dt
     import decimal as _decimal
     import math
@@ -1094,119 +1091,128 @@ def _json_stat_bound(v):
     return None
 
 
-def file_stat_domains(schema: pa.Schema) -> dict[str, str]:
-    """Leaf column -> the integer/string domain its manifest file-level
-    stat bounds live in (the encoding of :func:`_json_stat_bound`):
-    ``micros`` (timestamp, epoch-µs), ``days`` (date, epoch-days), ``us``
-    (duration), ``int``/``float``/``decimal``/``string``/``binary``.
-    file_keep needs this to coerce predicate literals into the COLUMN's
-    domain — a DATE literal against a timestamp column must become
-    midnight epoch-µs, never epoch-days, or both sides are plain ints and
-    whole files silently mis-prune (ADVICE r4 high)."""
-    from aisle_spark.schema import specs_for_schema
+def file_stats_table(entries: list, specs, columns) -> pa.Table:
+    """The manifest's JSON ``file_stats`` entries (one per file; None when
+    a file has none) decoded back from :func:`_json_stat_bound` into one
+    row per file in the stat types of ``blocks_arrow_schema`` — the table
+    the file tier runs ``chunkstats.manifest_keep`` over. Only ``columns``
+    (``stat_columns`` of the predicate) are decoded: ``{c}__min/max`` from
+    the µs, day, decimal-string, tagged-base64 and plain bounds,
+    ``{c}__nulls`` and ``n_rows`` from the ``[mn, mx, nulls, rows]``
+    totals, ``{m}__keys`` from ``{"keys": [...]}``; the manifest carries no
+    other stat. The manifest is input read from disk, so nothing here
+    raises: a missing entry, a legacy ``[mn, mx]`` entry's totals, or a
+    bound that does not parse in its column's type decodes to NULL —
+    Unknown, the file is kept. ``n_rows`` is int64 (a file can outgrow a
+    block's int32); a column's nulls count only when its row total is
+    the file's."""
+    kinds = {s.name: s for s in specs}
+    sts = [e if isinstance(e, dict) else {} for e in entries]
+    n = len(sts)
 
-    out: dict[str, str] = {}
-    for s in specs_for_schema(schema):
-        if s.kind == "timestamp":
-            out[s.name] = "micros"
-        elif s.kind == "duration":
-            out[s.name] = "us"
-        elif s.kind == "int":
-            out[s.name] = "days" if pa.types.is_date(s.arrow_type) else "int"
-        elif s.kind == "decimal":
-            # carry the scale: float-literal coercion needs it to prove
-            # the double-rounding-flip-freedom condition
-            out[s.name] = f"decimal:{s.arrow_type.scale}"
-        elif s.kind in ("float", "string", "binary"):
-            out[s.name] = s.kind
-    return out
+    def field(c: str, i: int) -> list:
+        """Element i of each file's ``[mn, mx, nulls, rows]`` entry for c."""
+        return [
+            e[i] if isinstance(e, list) and len(e) > i else None
+            for e in (st.get(c) for st in sts)
+        ]
+
+    def counts(c: str, i: int) -> np.ndarray:
+        return np.fromiter(
+            (x if type(x) is int and 0 <= x < 2**63 else -1 for x in field(c, i)),
+            np.int64,
+            n,
+        )
+
+    out: dict[str, pa.Array] = {}
+    n_rows = np.full(n, -1, dtype=np.int64)
+    totals = {}
+    for name in sorted(columns):
+        c, _, stat = name.rpartition("__")
+        s = kinds.get(c)
+        if s is None:
+            continue
+        if stat == "keys" and s.kind == "map":
+            keys = [e.get("keys") if isinstance(e, dict) else None
+                    for e in (st.get(c) for st in sts)]
+            out[name] = pa.array(
+                [k if isinstance(k, list) and all(isinstance(x, str) for x in k) else None
+                 for k in keys],
+                pa.list_(pa.string()),
+            )
+        elif stat in ("min", "max") and s.kind in _FILE_STAT_KINDS:
+            out[name] = _stat_bounds(field(c, 0 if stat == "min" else 1), s)
+        elif stat == "nulls":
+            totals[name] = nulls, rows = counts(c, 2), counts(c, 3)
+            n_rows = np.where(n_rows < 0, rows, n_rows)
+    for name, (nulls, rows) in totals.items():
+        ok = (nulls >= 0) & (rows >= 0) & (rows == n_rows) & (nulls <= rows)
+        out[name] = pa.array(nulls, pa.int64(), mask=~ok)
+    return pa.table({"n_rows": np.maximum(n_rows, 0), **out})
 
 
-_NO_EVIDENCE = object()  # literal can't be placed in the column's domain
-
-
-def _literal_in_domain(v, domain: str | None):
-    """Predicate literal -> the COLUMN's manifest stat-bound domain
-    (:func:`_json_stat_bound`), or ``_NO_EVIDENCE`` when the literal
-    cannot be soundly expressed there. Temporal coercions mirror
-    Catalyst: a naive datetime gets the driver-tz instant ``F.lit``
-    would produce; a date literal against a timestamp column becomes
-    session-tz midnight (Spark casts DATE up to TIMESTAMP). A datetime
-    against a date column is rejected (epoch-days can't hold sub-day
-    precision; Spark casts the COLUMN up, not the literal down).
-    ``domain=None`` (no schema available) rejects all temporal literals
-    — plain int/str/bytes/Decimal bounds are domain-unambiguous."""
-    import datetime as _dt
+def _stat_bounds(vals: list, s) -> pa.Array:
+    """One column's JSON file bounds -> an array of its stat type; a value
+    that does not parse in that type is NULL."""
     import decimal as _decimal
 
-    if isinstance(v, _dt.datetime):
-        if domain != "micros":
-            return _NO_EVIDENCE
-        from aisle_spark.filterspec import _utc_value
+    import pyarrow.compute as pc
 
-        u = _utc_value(v)
-        return (u - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-    if isinstance(v, _dt.date):
-        if domain == "days":
-            return (v - _dt.date(1970, 1, 1)).days
-        if domain == "micros":
-            from aisle_spark.filterspec import _utc_value
+    t = s.stat_type
+    if s.kind == "decimal":
 
-            u = _utc_value(_dt.datetime(v.year, v.month, v.day))
-            return (u - _dt.datetime(1970, 1, 1)) // _dt.timedelta(
-                microseconds=1
-            )
-        return _NO_EVIDENCE
-    if isinstance(v, _dt.timedelta):
-        if domain != "us":
-            return _NO_EVIDENCE
-        return v // _dt.timedelta(microseconds=1)
-    is_decimal_dom = domain is not None and domain.startswith("decimal")
-    if isinstance(v, bool):
-        return int(v) if domain in ("int", None) else _NO_EVIDENCE
-    if isinstance(v, int):
-        if is_decimal_dom:
-            return _decimal.Decimal(v)  # exact; prunes against str bounds
-        return v if domain in ("int", "float", None) else _NO_EVIDENCE
-    if isinstance(v, float):
-        if is_decimal_dom:
-            # float vs decimal column: Spark casts the DECIMAL side to
-            # double, so boundary-strictness can flip within half an ulp
-            # of the literal. The coercion is sound exactly when (a) the
-            # literal sits ON the column's 10^-s grid (Decimal(v) is
-            # always the exact binary value) and (b) half an ulp at |v|
-            # is smaller than the grid step — then no decimal value other
-            # than v itself can round across v, so the double comparison
-            # and the exact-Decimal comparison agree. `60000.00`-shaped
-            # money predicates regain whole-file pruning; inexact doubles
-            # stay no-evidence (VERDICT r5 missing #4).
-            import math
-
-            if ":" not in domain or not math.isfinite(v):
-                return _NO_EVIDENCE
-            scale = int(domain.split(":", 1)[1])
-            d = _decimal.Decimal(v)
+        def parse(v):
             try:
-                on_grid = d.scaleb(scale) % 1 == 0
-            except _decimal.InvalidOperation:
-                return _NO_EVIDENCE
-            if on_grid and (
-                v == 0.0 or math.ulp(abs(v)) < 10.0 ** (-scale)
-            ):
-                return d
-            return _NO_EVIDENCE
-        return v if domain in ("int", "float", None) else _NO_EVIDENCE
-    if isinstance(v, _decimal.Decimal):
-        # decimal literal vs int column: Spark widens the column to
-        # decimal; exact Python Decimal-vs-int comparison matches
-        return (
-            v if (is_decimal_dom or domain in ("int", None)) else _NO_EVIDENCE
-        )
-    if isinstance(v, str):
-        return v if domain in ("string", None) else _NO_EVIDENCE
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        return bytes(v) if domain in ("binary", None) else _NO_EVIDENCE
-    return _NO_EVIDENCE
+                d = _decimal.Decimal(v)
+                u = d.scaleb(t.scale)
+                if u == u.to_integral_value() and abs(u) < 10**t.precision:
+                    return d
+            except ArithmeticError:  # decimal.InvalidOperation
+                pass
+            return None
+
+        return pa.array([parse(v) if isinstance(v, str) else None for v in vals], t)
+    if s.kind == "binary":
+        import base64
+
+        def parse(v):
+            raw = v.get("b64") if isinstance(v, dict) else None
+            if isinstance(raw, str):
+                try:
+                    return base64.b64decode(raw, validate=True)
+                except ValueError:  # binascii.Error, non-ASCII text
+                    pass
+            return None
+
+        return pa.array([parse(v) for v in vals], t)
+    if s.kind == "string":
+        return pa.array([v if isinstance(v, str) else None for v in vals], t)
+    if s.kind == "float":
+        wide = pa.array([v if type(v) is float else None for v in vals], pa.float64())
+        if t == pa.float64():
+            return wide
+        out = wide.cast(t, safe=False)  # float32: exact or NULL
+        return pc.if_else(pc.equal(out.cast(pa.float64()), wide), out, None)
+    # ints, bools and dates (days), timestamps and durations (µs)
+    if pa.types.is_boolean(t):
+        return pa.array([v == 1 if type(v) is int and v in (0, 1) else None for v in vals], t)
+    bits = t.bit_width
+    lo, hi = (0, 2**bits - 1) if pa.types.is_unsigned_integer(t) else (
+        -(2 ** (bits - 1)), 2 ** (bits - 1) - 1)
+    return pa.array([v if type(v) is int and lo <= v <= hi else None for v in vals], t)
+
+
+def _files_kept(files: list[str], fstats: dict, where: Spec, schema: pa.Schema) -> list[str]:
+    """The file tier: ``files`` whose manifest ``file_stats`` may hold a
+    row matching ``where`` (already ``utc_normalize``d), in order — the
+    block tier's own evaluator over one row per file."""
+    from aisle_spark.chunkstats import manifest_keep, stat_columns
+    from aisle_spark.schema import specs_for_schema
+
+    specs = specs_for_schema(schema)
+    table = file_stats_table([fstats.get(f) for f in files], specs, stat_columns(where))
+    keep = manifest_keep(where, table, {s.name: s for s in specs})
+    return [f for f, k in zip(files, keep) if k]
 
 
 def _merge_file_stat(
@@ -1290,128 +1296,6 @@ def _json_file_stats(acc: dict, fs, path: str) -> dict:
         except OSError:
             pass  # size is rate-limiter advice only; never fail a commit
     return out
-
-
-def file_keep(
-    stats: dict | None, spec: Spec, domains: dict[str, str] | None = None
-) -> bool:
-    """File-level keep from per-file [min, max] bounds — the manifest-list
-    level of the two-tier pruning (block rows are the manifest-file
-    level). DELIBERATELY tiny: only top-level AND of Cmp/Between/InList/
-    StartsWith conjuncts ever prunes; every other shape, any missing
-    bound, and any type surprise returns keep. ``domains`` (from
-    :func:`file_stat_domains`) maps each column to its stat-bound domain
-    so temporal literals coerce into the COLUMN's encoding; without it
-    temporal literals yield no evidence. Differentially tested against
-    block-level survival (a file is kept whenever ANY of its blocks
-    could be)."""
-    if not stats:
-        return True
-
-    def rng(c, value):
-        v = stats.get(c)
-        if not (isinstance(v, (list, tuple)) and len(v) >= 2):
-            return None, None
-        import decimal as _decimal
-        import math
-
-        def side(b):
-            # NaN bounds (Spark orders NaN greatest) don't compare
-            # usefully in Python — degrade to Unknown, always sound
-            if isinstance(b, float) and math.isnan(b):
-                return None
-            # decimal bounds are stored as exact strings; parse back
-            # when the predicate compares decimals (a non-decimal string
-            # raises InvalidOperation => the outer guard keeps the file)
-            if isinstance(value, _decimal.Decimal) and isinstance(b, str):
-                return _decimal.Decimal(b)
-            # binary bounds are tagged base64 ({"b64": ...}); decode back
-            # to bytes for byte-order comparison (a dict reaching any
-            # other comparison raises TypeError => file kept)
-            if isinstance(b, dict):
-                import base64
-
-                raw = b.get("b64")
-                if isinstance(value, (bytes, bytearray)) and isinstance(raw, str):
-                    return base64.b64decode(raw)
-                return None
-            return b
-
-        return side(v[0]), side(v[1])
-
-    def conj_keep(node: Spec) -> bool:
-        try:
-            from aisle_spark.filterspec import MapKeyCmp
-
-            if isinstance(node, MapKeyCmp):
-                # per-file sorted key-set union ({"keys": [...]}, exact or
-                # absent): a key occurring in NO row of the file makes
-                # every row evaluate NULL => definitely false for every
-                # op (incl. ne) — the dictionary-hint discipline at file
-                # granularity (src/prune/dictionary.rs:8-70 analog)
-                v = stats.get(node.col)
-                if isinstance(v, dict) and isinstance(v.get("keys"), list):
-                    return node.key in v["keys"]
-                return True
-            if isinstance(node, IsNull):
-                # per-file null/row totals ([mn, mx, nulls, rows] entries,
-                # r4): a file with zero nulls cannot satisfy IS NULL; an
-                # all-null file cannot satisfy IS NOT NULL. Older len-2
-                # entries carry no null evidence => keep.
-                v = stats.get(node.col)
-                if not (isinstance(v, (list, tuple)) and len(v) >= 4):
-                    return True
-                nulls, rows = v[2], v[3]
-                if not isinstance(nulls, int) or not isinstance(rows, int):
-                    return True
-                return (nulls < rows) if node.negated else (nulls > 0)
-            if isinstance(node, Between):
-                return conj_keep(Cmp(node.col, "ge", node.low)) and conj_keep(
-                    Cmp(node.col, "le", node.high)
-                )
-            if isinstance(node, InList):
-                return any(conj_keep(Cmp(node.col, "eq", v)) for v in node.values)
-            if isinstance(node, StartsWith):
-                from aisle_spark.filterspec import next_prefix
-
-                mn, mx = rng(node.col, node.prefix)
-                if node.prefix == "":
-                    return True
-                if mx is not None and mx < node.prefix:
-                    return False
-                np_ = next_prefix(node.prefix)
-                if np_ is not None and mn is not None and mn >= np_:
-                    return False
-                return True
-            if not isinstance(node, Cmp):
-                return True
-            # coerce the literal into the COLUMN's stat-bound domain
-            # (epoch µs / epoch days / µs / Decimal — _json_stat_bound);
-            # a literal the column's domain can't hold is no evidence
-            v = _literal_in_domain(
-                node.value, domains.get(node.col) if domains else None
-            )
-            if v is _NO_EVIDENCE:
-                return True
-            mn, mx = rng(node.col, v)
-            if node.op == "eq":
-                return (mn is None or mn <= v) and (mx is None or mx >= v)
-            if node.op == "lt":
-                return mn is None or mn < v
-            if node.op == "le":
-                return mn is None or mn <= v
-            if node.op == "gt":
-                return mx is None or mx > v
-            if node.op == "ge":
-                return mx is None or mx >= v
-            return True  # ne: file-level bounds cannot exclude (nulls unknown)
-        except (TypeError, ArithmeticError):
-            # cross-domain comparison / unparseable decimal string
-            # (decimal.InvalidOperation is an ArithmeticError): no evidence
-            return True
-
-    conjuncts = spec.parts if isinstance(spec, And) else [spec]
-    return all(conj_keep(c) for c in conjuncts)
 
 
 class AisleWriter(DataSourceArrowWriter):

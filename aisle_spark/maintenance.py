@@ -164,7 +164,7 @@ def compact_encoded(
 
 def _recompute_file_stats(fs, root: str, rel_files: list[str]) -> dict:
     """Per-file stats for the manifest-list pruning tier
-    (datasource.file_keep), folded from each committed file's block stat
+    (datasource._files_kept), folded from each committed file's block stat
     columns with the block writer's own code (``_merge_file_stat`` +
     ``_json_file_stats``): NULL-poisoned bounds, null/row totals, map
     key-set unions and ``__bytes``, exactly as ``BlockFileWriter`` records

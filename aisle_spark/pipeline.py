@@ -792,7 +792,7 @@ def _rebuild_manifest(out_path: str, in_schema: pa.Schema, fs=None) -> list[str]
     sidecars (this run's AND previous runs', so resume unions correctly),
     with the per-file [min,max] bounds each sidecar carries from the
     writer — the manifest-list pruning tier the data source plans with
-    (datasource.file_keep). A sidecar without stats gives its file no
+    (datasource._files_kept). A sidecar without stats gives its file no
     entry (Unknown: the file is always kept). On an object store the
     manifest PUT is the only commit primitive — no rename anywhere on the
     fs path."""

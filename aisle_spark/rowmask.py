@@ -63,14 +63,16 @@ def _promote(c, v):
     """Spark's implicit comparison casts, applied to the COLUMN so this
     mask agrees with the Catalyst residual (which it must match EXACTLY —
     rows it drops are gone): integer/decimal column vs float literal
-    compares as double; date32 column vs datetime literal compares as
+    compares as double (an unchecked cast: a long past 2**53 rounds to
+    nearest, as Spark's long -> double does); date32 column vs datetime
+    literal compares as
     timestamp (UTC-midnight cast — scan() enforces a UTC session when
     datetime literals are present). Any combination not handled here makes
     ``pa.scalar(v, c.type)`` raise, which decode_block_filtered catches by
     falling back to full decode + Catalyst residual (ADVICE r2 high)."""
     is_float_lit = isinstance(v, float) and not isinstance(v, bool)
     if is_float_lit and (pa.types.is_integer(c.type) or pa.types.is_decimal(c.type)):
-        return c.cast(pa.float64())
+        return c.cast(pa.float64(), safe=False)
     if isinstance(v, _dt.datetime) and pa.types.is_date(c.type):
         return c.cast(pa.timestamp("us"))
     return c

@@ -57,7 +57,7 @@ def _commit_batch(
     """Atomically record this batch's files; replays replace, never add.
     ``file_stats`` maps each file to the [min,max] bounds its writer
     folded, so streamed tables participate in the manifest-list pruning
-    tier (datasource.file_keep) like batch-written ones; a file without
+    tier (datasource._files_kept) like batch-written ones; a file without
     an entry is Unknown and always kept."""
     from aisle_spark.pipeline import manifest_lock
 

@@ -13,7 +13,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from aisle_spark.datasource import AisleReader, _manifest_of
-from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col
+from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col, utc_normalize
 from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
 from aisle_spark.schema import synth_batch
 
@@ -43,7 +43,7 @@ def _catalyst(blocks, spec) -> set:
 def _numpy(out: str, spec) -> set:
     """block_ids of the manifest rows the planner's block tier keeps."""
     files, _ = _manifest_of(None, out)
-    rows = AisleReader(out)._surviving_rows(files, spec)
+    rows = AisleReader(out)._surviving_rows(files, utc_normalize(spec))
     return {
         b
         for f, rs in zip(files, rows)
@@ -93,6 +93,7 @@ def test_block_tier_typed_operands(spark, tmp_path):
     """Decimal, timestamp, date, duration, binary, map-key and nested
     struct leaves through both evaluators."""
     import datetime as dt
+    import math
     from decimal import Decimal
 
     from pyspark.sql import types as T
@@ -141,6 +142,13 @@ def test_block_tier_typed_operands(spark, tmp_path):
     specs = [
         col("price") > Decimal("333.33"),
         col("price").between(Decimal("100.00"), Decimal("200.00")),
+        # float literals: Spark compares the decimal as a double
+        col("price") > 333.25,
+        col("price") < 100.10,
+        col("price").between(99.995, 200.005),
+        col("price").isin(1.5, 2.10),
+        col("price") > math.inf,
+        col("price") <= math.nan,
         col("ts") >= dt.datetime(2024, 1, 1, 12, 0),
         ~(col("ts") < dt.datetime(2024, 1, 1, 6, 30)),
         col("d") == dt.date(2024, 2, 1),

@@ -149,3 +149,16 @@ def test_rowmask_timestamp_tz_coercion():
     b = pa.RecordBatch.from_arrays([arr], names=["ts"])
     m = row_mask(C("ts").between(datetime.datetime(2024, 1, 1), datetime.datetime(2024, 1, 31)), b)
     assert m.tolist() == [True, False]
+
+
+def test_rowmask_long_vs_float_past_2_53():
+    # Spark compares a long column with a double literal in double; the
+    # long -> double cast rounds to nearest past 2**53 instead of raising
+    from aisle_spark.filterspec import col as C
+    from aisle_spark.rowmask import row_mask
+
+    n = pa.array([2**53 + i for i in range(1, 5)], pa.int64())
+    b = pa.RecordBatch.from_arrays([n], names=["n"])
+    # doubles: 2**53 (ties to even), 2**53 + 2, 2**53 + 4 (tie), 2**53 + 4
+    assert row_mask(C("n") == 9007199254740992.0, b).tolist() == [True, False, False, False]
+    assert row_mask(C("n") > 9007199254740994.0, b).tolist() == [False, False, True, True]

@@ -224,6 +224,30 @@ class TestLiteralDomainGuard:
         assert list(np.flatnonzero(keep)) == [0, 1]
         assert not chunk_keep(col("x") > N - 0.5, row, _kinds(specs), N).any()
 
+    def test_float_on_decimal_column_compares_as_double(self):
+        # Spark casts the decimal side to double: unscaled / 10**scale
+        from decimal import Decimal
+
+        t = pa.decimal128(18, 2)
+        v = pa.array([Decimal(i).scaleb(-2) for i in range(N)], t)  # 0.00 .. 40.95
+        specs, row = _block({"p": v})
+        keep = chunk_keep(col("p") < 5.125, row, _kinds(specs), N)
+        assert list(np.flatnonzero(keep)) == [0, 1]
+        assert not chunk_keep(col("p") > 40.955, row, _kinds(specs), N).any()
+
+    def test_float_on_decimal_column_past_2_53_keeps(self):
+        # unscaled 553468892355352739 is past 2**53: float64(u) / 100 ends
+        # on ...528.0, but the decimal's correctly rounded double (Spark's
+        # Decimal.toDouble) is ...527.0 — equal to the literal, so every
+        # row is TRUE and the bound must give no evidence
+        from decimal import Decimal
+
+        d = Decimal("5534688923553527.39")
+        assert float(d) == 5534688923553527.0
+        specs, row = _block({"p": pa.array([d] * N, pa.decimal128(18, 2))})
+        keep = chunk_keep(col("p") == 5534688923553527.0, row, _kinds(specs), N)
+        assert keep.all()
+
     def test_integral_float_on_int_column_is_exact(self):
         specs, row = _block({"x": pa.array(np.arange(N, dtype=np.int64))})
         keep = chunk_keep(col("x") == 1000.0, row, _kinds(specs), N)

@@ -21,6 +21,16 @@ from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
 from aisle_spark.schema import synth_batch
 
 
+def _kept(stats: dict | None, spec, schema: pa.Schema) -> bool:
+    """The file tier's verdict on one file's manifest ``file_stats`` entry,
+    with the predicate normalized as ``AisleReader.partitions`` does."""
+    from aisle_spark.datasource import _files_kept, coerce_temporals
+    from aisle_spark.filterspec import utc_normalize
+
+    where = utc_normalize(coerce_temporals(spec, schema))
+    return bool(_files_kept(["f"], {"f": stats}, where, schema))
+
+
 def _entries(parts):
     """Flattened (path, rows) pairs of a plan — unpacks combined
     small-file partitions."""
@@ -253,6 +263,25 @@ class TestWhereOption:
         )
         exp = df.filter("doc_id LIKE 'code-%' AND n_tok > 50")
         assert got.count() == exp.count() > 0
+
+    def test_where_float_literal_on_long_past_2_53(self, spark, tmp_path):
+        """A long column meets a double literal as a double, in every tier
+        and in the row mask: 2**53 + 1 rounds to 2**53, so one row
+        matches, as in Spark."""
+        from pyspark.sql import functions as F
+
+        register(spark)
+        out = str(tmp_path / "big")
+        df = spark.range(1, 5).selectExpr("id + 9007199254740992 AS n")
+        df.repartition(1).write.format("aisle").mode("append").save(out)
+        exp = df.filter(F.col("n") == F.lit(9007199254740992.0)).count()
+        got = (
+            spark.read.format("aisle")
+            .option("where", "n = 9007199254740992.0")
+            .load(out)
+            .count()
+        )
+        assert got == exp == 1
 
     def test_where_option_rejects_array_predicates(self, spark, encoded_dir):
         _df, out = encoded_dir
@@ -544,7 +573,18 @@ class TestFileLevelPruning:
         touched = set(planned_files(r.partitions()))
         assert len(touched) == 1  # exactly the 'web' file
 
-    def test_file_keep_superset_of_block_survivors(self, spark, per_source_files):
+    def test_file_tier_prunes_an_or(self, spark, per_source_files):
+        """An Or of two eqs keeps exactly the one file that can match."""
+        from aisle_spark.datasource import _files_kept, _manifest_of, _read_sidecar_schema
+        from aisle_spark.filterspec import col
+
+        _df, out = per_source_files
+        files, fstats = _manifest_of(None, out)
+        spec = (col("source") == "web") | (col("source") == "news")
+        kept = _files_kept(files, fstats, spec, _read_sidecar_schema(None, out))
+        assert [fstats[f]["source"][:2] for f in kept] == [["web", "web"]]
+
+    def test_file_tier_superset_of_block_survivors(self, spark, per_source_files):
         """Stripping file_stats must never ADD result files — file-level
         pruning only removes files whose every block was doomed anyway."""
         import random
@@ -900,7 +940,9 @@ class TestMapKeyFileStats:
 
 
 class TestFileKeepDomains:
-    """file_keep unit semantics in the typed JSON bound domain."""
+    """File-tier semantics in the typed JSON bound domain: the manifest's
+    file_stats decoded per column type and run through the block tier's
+    tri-state."""
 
     def _b(self, v):
         from aisle_spark.datasource import _json_stat_bound
@@ -910,7 +952,6 @@ class TestFileKeepDomains:
     def test_timestamp_domain(self):
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         utc = dt.timezone.utc
@@ -920,23 +961,14 @@ class TestFileKeepDomains:
                 self._b(dt.datetime(2024, 1, 2)),
             ]
         }
-        doms = {"ts": "micros"}
-        assert not file_keep(
-            stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc), doms
-        )
-        assert file_keep(
-            stats, col("ts") > dt.datetime(2024, 1, 1, 12, tzinfo=utc), doms
-        )
-        assert not file_keep(
-            stats, col("ts") < dt.datetime(2023, 12, 1, tzinfo=utc), doms
-        )
-        # without domain knowledge a temporal literal is no evidence
-        assert file_keep(stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc))
+        sch = pa.schema([("ts", pa.timestamp("us", tz="UTC"))])
+        assert not _kept(stats, col("ts") > dt.datetime(2024, 1, 3, tzinfo=utc), sch)
+        assert _kept(stats, col("ts") > dt.datetime(2024, 1, 1, 12, tzinfo=utc), sch)
+        assert not _kept(stats, col("ts") < dt.datetime(2023, 12, 1, tzinfo=utc), sch)
 
     def test_date_and_duration_domains(self):
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         stats = {
@@ -946,11 +978,11 @@ class TestFileKeepDomains:
                 self._b(dt.timedelta(seconds=500)),
             ],
         }
-        doms = {"d": "days", "dur": "us"}
-        assert not file_keep(stats, col("d") > dt.date(2024, 2, 2), doms)
-        assert file_keep(stats, col("d") == dt.date(2024, 1, 15), doms)
-        assert not file_keep(stats, col("dur") > dt.timedelta(seconds=600), doms)
-        assert file_keep(stats, col("dur") >= dt.timedelta(seconds=499), doms)
+        sch = pa.schema([("d", pa.date32()), ("dur", pa.duration("us"))])
+        assert not _kept(stats, col("d") > dt.date(2024, 2, 2), sch)
+        assert _kept(stats, col("d") == dt.date(2024, 1, 15), sch)
+        assert not _kept(stats, col("dur") > dt.timedelta(seconds=600), sch)
+        assert _kept(stats, col("dur") >= dt.timedelta(seconds=499), sch)
 
     def test_cross_domain_literals(self):
         """ADVICE r4 high: a DATE literal against a timestamp column (or a
@@ -958,7 +990,6 @@ class TestFileKeepDomains:
         epoch-µs — coerce into the column's domain or keep the file."""
         import datetime as dt
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         ts_stats = {
@@ -967,88 +998,75 @@ class TestFileKeepDomains:
                 self._b(dt.datetime(2024, 1, 31)),
             ]
         }
-        doms = {"ts": "micros"}
-        # every row matches ts < DATE '2024-06-01' — the pre-fix code
-        # compared epoch-days to epoch-µs and silently pruned the file
-        assert file_keep(ts_stats, col("ts") < dt.date(2024, 6, 1), doms)
+        ts = pa.schema([("ts", pa.timestamp("us", tz="UTC"))])
+        # every row matches ts < DATE '2024-06-01' — comparing epoch-days
+        # to epoch-µs would silently prune the file
+        assert _kept(ts_stats, col("ts") < dt.date(2024, 6, 1), ts)
         # the coercion is real, not a blanket keep: midnight 2024-06-01
         # epoch-µs correctly excludes this January file for ">"
-        assert not file_keep(ts_stats, col("ts") > dt.date(2024, 6, 1), doms)
+        assert not _kept(ts_stats, col("ts") > dt.date(2024, 6, 1), ts)
 
         d_stats = {"d": [self._b(dt.date(2024, 1, 1)), self._b(dt.date(2024, 1, 31))]}
         # datetime literal vs date column: epoch-days can't hold sub-day
-        # precision — no evidence, file kept (pre-fix: epoch-µs is a huge
-        # int so "d > datetime" wrongly pruned every file)
-        assert file_keep(
-            d_stats, col("d") > dt.datetime(2024, 1, 1), {"d": "days"}
+        # precision — no evidence, file kept (epoch-µs is a huge int, so
+        # "d > datetime" compared as ints would prune every file)
+        assert _kept(
+            d_stats, col("d") > dt.datetime(2024, 1, 1), pa.schema([("d", pa.date32())])
         )
         # duration literal vs non-duration column: no evidence
-        assert file_keep(
-            ts_stats, col("ts") > dt.timedelta(seconds=1), doms
-        )
+        assert _kept(ts_stats, col("ts") > dt.timedelta(seconds=1), ts)
 
     def test_decimal_domain_exact_strings(self):
         import decimal
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         # lexicographic comparison of these strings would invert: "9.50" > "10.20"
         stats = {"price": ["9.50", "10.20"]}
-        assert file_keep(stats, col("price") >= decimal.Decimal("10"))
-        assert not file_keep(stats, col("price") > decimal.Decimal("10.20"))
-        assert not file_keep(stats, col("price") < decimal.Decimal("9.50"))
+        sch = pa.schema([("price", pa.decimal128(12, 2))])
+        assert _kept(stats, col("price") >= decimal.Decimal("10"), sch)
+        assert not _kept(stats, col("price") > decimal.Decimal("10.20"), sch)
+        assert not _kept(stats, col("price") < decimal.Decimal("9.50"), sch)
         # unparseable bound => Unknown => keep (never crash)
-        assert file_keep({"price": ["abc", "def"]}, col("price") > decimal.Decimal(1))
+        assert _kept({"price": ["abc", "def"]}, col("price") > decimal.Decimal(1), sch)
         # INT literal vs decimal domain coerces exactly and prunes (the
         # where-grammar path: "l_price >= 60000" parses as Python int)
-        doms = {"price": "decimal"}
-        assert not file_keep(stats, col("price") > 11, doms)
-        assert file_keep(stats, col("price") > 10, doms)
-        # float literal vs SCALELESS decimal domain: no evidence
-        # (double-cast boundary rounding could flip strict comparisons)
-        assert file_keep(stats, col("price") > 11.0, doms)
+        assert not _kept(stats, col("price") > 11, sch)
+        assert _kept(stats, col("price") > 10, sch)
+        # float literal: the decimal compares as a double, as in Spark
+        assert not _kept(stats, col("price") > 11.0, sch)
 
     def test_decimal_domain_exact_float_literals(self):
         import decimal
         import math
 
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         stats = {"price": ["9.50", "10.25"]}
-        doms = {"price": "decimal:2"}
-        # on-grid float literal (integer-valued, or binary-exact like
-        # .5/.25), ulp far below the 0.01 grid step: full evidence — the
-        # common "WHERE price >= 60000.00" money shape
-        assert not file_keep(stats, col("price") > 11.0, doms)
-        assert not file_keep(stats, col("price") > 10.25, doms)
-        assert file_keep(stats, col("price") >= 10.25, doms)
-        assert not file_keep(stats, col("price") < 9.50, doms)
-        assert file_keep(stats, col("price") <= 9.50, doms)
-        assert not file_keep(stats, col("price") == 60000.00, doms)
-        # off-grid literal (neither 0.1 nor 10.2 is exactly representable
-        # in binary, so Decimal(v) is off the 10^-2 grid): no evidence —
-        # Spark's double-domain comparison of the near-boundary grid
-        # value could disagree with the exact-Decimal one
-        assert file_keep(stats, col("price") < 0.10, doms)
-        assert file_keep(stats, col("price") > 10.20, doms)
-        # magnitude where the ulp exceeds the grid step: no evidence
-        big = float(2**60)
-        assert math.ulp(big) > 0.01  # the condition the guard must catch
-        assert file_keep(stats, col("price") > big, doms)
-        # non-finite: no evidence
-        assert file_keep(stats, col("price") > math.inf, doms)
+        sch = pa.schema([("price", pa.decimal128(12, 2))])
+        # Spark compares a float literal with the decimal cast to double;
+        # each bound's double is the correctly rounded unscaled / 10**2
+        assert not _kept(stats, col("price") > 11.0, sch)
+        assert not _kept(stats, col("price") > 10.25, sch)
+        assert _kept(stats, col("price") >= 10.25, sch)
+        assert not _kept(stats, col("price") < 9.50, sch)
+        assert _kept(stats, col("price") <= 9.50, sch)
+        assert not _kept(stats, col("price") == 60000.00, sch)
+        # off-grid literals compare in double too: 9.5 >= 0.1 everywhere,
+        # 10.25 > 10.2 may match
+        assert not _kept(stats, col("price") < 0.10, sch)
+        assert _kept(stats, col("price") > 10.20, sch)
+        # past every bound, however coarse its ulp, and non-finite
+        assert not _kept(stats, col("price") > float(2**60), sch)
+        assert not _kept(stats, col("price") > math.inf, sch)
         # int and Decimal literals keep working against the scaled domain
-        assert not file_keep(stats, col("price") > 11, doms)
-        assert not file_keep(
-            stats, col("price") > decimal.Decimal("10.25"), doms
-        )
+        assert not _kept(stats, col("price") > 11, sch)
+        assert not _kept(stats, col("price") > decimal.Decimal("10.25"), sch)
 
     def test_nan_bound_poisons_merge(self):
         import math
 
-        from aisle_spark.datasource import _merge_file_stat, file_keep
+        from aisle_spark.datasource import _merge_file_stat
         from aisle_spark.filterspec import col
 
         acc: dict = {}
@@ -1056,16 +1074,69 @@ class TestFileKeepDomains:
         _merge_file_stat(acc, {"x__min": 2.0, "x__max": math.nan}, ["x"])
         assert acc["x"][:2] == [1.0, None]  # NaN block => max side Unknown
         # a NaN-bearing file must stay for x > v under Spark's NaN-greatest order
-        assert file_keep({"x": [1.0, None]}, col("x") > 100.0)
+        sch = pa.schema([("x", pa.float64())])
+        assert _kept({"x": [1.0, None]}, col("x") > 100.0, sch)
+        # a NaN literal too: every non-NaN value is < NaN, NaN == NaN
+        assert _kept({"x": [1.0, 5.0]}, col("x") < math.nan, sch)
+        assert _kept({"x": [1.0, None]}, col("x") == math.nan, sch)
+        assert not _kept({"x": [1.0, 5.0]}, col("x") > math.nan, sch)
 
     def test_string_bounds_stay_lexicographic(self):
-        from aisle_spark.datasource import file_keep
         from aisle_spark.filterspec import col
 
         # string columns keep plain string comparison: "10" < "9"
         stats = {"s": ["10", "9"]}
-        assert not file_keep(stats, col("s") > "95")
-        assert file_keep(stats, col("s") == "42")
+        sch = pa.schema([("s", pa.string())])
+        assert not _kept(stats, col("s") > "95", sch)
+        assert _kept(stats, col("s") == "42", sch)
+
+    def test_shapes_beyond_conjunctions(self):
+        """Or, Not, ne and nested connectives prune files through the
+        same tri-state as blocks."""
+        from aisle_spark.filterspec import col
+
+        stats = {"v": [5, 5, 0, 10], "m": {"keys": ["a", "b"]}}
+        sch = pa.schema([("v", pa.int64()), ("m", pa.map_(pa.string(), pa.int64()))])
+        assert not _kept(stats, (col("v") == 4) | (col("v") == 6), sch)
+        assert _kept(stats, (col("v") == 4) | (col("v") == 5), sch)
+        assert not _kept(stats, ~(col("v") != 6), sch)
+        assert _kept(stats, ~(col("v") != 5), sch)
+        assert not _kept(stats, col("v") != 5, sch)  # single-valued, no nulls
+        assert not _kept(stats, col("v").is_null() | (col("v") == 6), sch)
+        assert not _kept(stats, (col("m").map_key("z") == 1) | (col("v") == 6), sch)
+        assert _kept(stats, (col("m").map_key("a") == 1) | (col("v") == 6), sch)
+
+    def test_malformed_entries_keep(self):
+        """The manifest is read from disk: entries of the wrong shape or
+        type, or out of their column's range, are Unknown, never an
+        error."""
+        from aisle_spark.filterspec import col
+
+        sch = pa.schema([
+            ("i", pa.int32()),
+            ("b", pa.bool_()),
+            ("f", pa.float32()),
+            ("m", pa.map_(pa.string(), pa.int64())),
+        ])
+        spec = (
+            (col("i") > 5) & (col("b") == 1) & (col("f") > 0.5)
+            & (col("m").map_key("z") == 1)
+        )
+        for stats in (
+            None,
+            [],
+            {"i": "x", "b": 3, "f": {"a": 1}, "m": [1]},
+            {"i": [2**40, 2**40], "b": [7, 7, 0, 1], "f": [0.1, 0.1], "m": {"keys": [1]}},
+            {"i": [None, True], "f": ["a", "b"], "m": {"keys": "ab"}},
+        ):
+            assert _kept(stats, spec, sch), stats
+        assert not _kept({"i": [1, 2]}, spec, sch)  # legacy bounds still prune
+        # null totals count only against the file's row total
+        either = col("i").is_not_null() | col("b").is_null()
+        assert not _kept({"b": [0, 1, 0, 20], "i": [None, None, 20, 20]}, either, sch)
+        assert _kept({"b": [0, 1, 0, 20], "i": [None, None, 20, 30]}, either, sch)
+        assert _kept({"b": [0, 1, 0, 20], "i": [None, None, 30, 20]}, either, sch)
+        assert _kept({"b": [0, 1, 0, 20], "i": [None, None, -1, 20]}, either, sch)
 
 
 class _CountingFS:
@@ -1212,8 +1283,8 @@ class TestBinaryFileStats:
     pruning for byte-ordered predicates (closes the last kind gap in
     _FILE_STAT_KINDS)."""
 
-    def test_file_keep_bytes_domain(self):
-        from aisle_spark.datasource import _json_stat_bound, file_keep
+    def test_file_tier_bytes_domain(self):
+        from aisle_spark.datasource import _json_stat_bound
         from aisle_spark.filterspec import col
 
         stats = {"h": [_json_stat_bound(b"\x10aa"), _json_stat_bound(b"\x20zz")]}
@@ -1221,13 +1292,15 @@ class TestBinaryFileStats:
         import json
 
         json.dumps(stats)  # JSON-safe
-        assert not file_keep(stats, col("h") > b"\x30")
-        assert file_keep(stats, col("h") >= b"\x15")
-        assert not file_keep(stats, col("h") < b"\x10aa")
+        sch = pa.schema([("h", pa.binary())])
+        assert not _kept(stats, col("h") > b"\x30", sch)
+        assert _kept(stats, col("h") >= b"\x15", sch)
+        assert not _kept(stats, col("h") < b"\x10aa", sch)
         # corrupted / foreign dict bound => Unknown => keep
-        assert file_keep({"h": [{"x": 1}, {"x": 2}]}, col("h") > b"\x30")
+        assert _kept({"h": [{"x": 1}, {"x": 2}]}, col("h") > b"\x30", sch)
+        assert _kept({"h": [{"b64": "!!"}, {"b64": 3}]}, col("h") > b"\x30", sch)
         # non-bytes predicate against a b64 bound => Unknown => keep
-        assert file_keep(stats, col("h") > "zzz")
+        assert _kept(stats, col("h") > "zzz", sch)
 
     def test_planning_drops_files_on_binary_bounds(self, spark, tmp_path):
         from pyspark.sql import functions as F
@@ -1262,22 +1335,22 @@ class TestNullCountFileStats:
     r4): IS NULL drops files with zero nulls, IS NOT NULL drops all-null
     files — the `WHERE deleted_at IS NULL` shape at file granularity."""
 
-    def test_file_keep_null_semantics(self):
-        from aisle_spark.datasource import file_keep
+    def test_file_tier_null_semantics(self):
         from aisle_spark.filterspec import col
 
         no_nulls = {"v": [1, 9, 0, 100]}
         some_nulls = {"v": [1, 9, 40, 100]}
         all_nulls = {"v": [None, None, 100, 100]}
         legacy = {"v": [1, 9]}  # pre-r4 entry: no null evidence
-        assert not file_keep(no_nulls, col("v").is_null())
-        assert file_keep(some_nulls, col("v").is_null())
-        assert file_keep(all_nulls, col("v").is_null())
-        assert file_keep(no_nulls, col("v").is_not_null())
-        assert file_keep(some_nulls, col("v").is_not_null())
-        assert not file_keep(all_nulls, col("v").is_not_null())
-        assert file_keep(legacy, col("v").is_null())
-        assert file_keep(legacy, col("v").is_not_null())
+        sch = pa.schema([("v", pa.int64())])
+        assert not _kept(no_nulls, col("v").is_null(), sch)
+        assert _kept(some_nulls, col("v").is_null(), sch)
+        assert _kept(all_nulls, col("v").is_null(), sch)
+        assert _kept(no_nulls, col("v").is_not_null(), sch)
+        assert _kept(some_nulls, col("v").is_not_null(), sch)
+        assert not _kept(all_nulls, col("v").is_not_null(), sch)
+        assert _kept(legacy, col("v").is_null(), sch)
+        assert _kept(legacy, col("v").is_not_null(), sch)
 
     @pytest.fixture()
     def null_files(self, spark, tmp_path):

@@ -173,7 +173,7 @@ def test_stream_commits_record_file_stats(spark, dirs):
     some = next(iter(m["file_stats"].values()))
     assert "n_tok" in some and some["n_tok"][0] <= some["n_tok"][1]
 
-    from aisle_spark.datasource import file_keep
+    from aisle_spark.datasource import _files_kept, _read_sidecar_schema
 
-    spec = col("n_tok") > 10**9
-    assert all(not file_keep(s, spec) for s in m["file_stats"].values())
+    schema = _read_sidecar_schema(None, out)
+    assert not _files_kept(list(m["file_stats"]), m["file_stats"], col("n_tok") > 10**9, schema)
