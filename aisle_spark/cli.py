@@ -110,47 +110,36 @@ def cmd_scan(args) -> None:
 
 def cmd_aggregate(args) -> None:
     """Stats-only aggregation through the public surface: routes to
-    pipeline.scan_count / scan_sum / scan_min_max / scan_count_by /
-    scan_sum_by, which answer from block evidence (definitely-true
-    blocks contribute their recorded stats; only boundary blocks decode)
-    — a 100 TB table's ``SELECT count(*) WHERE …`` reads KB of manifest,
-    not the payloads."""
-    from pyspark.sql import SparkSession
+    pipeline.scan_count / scan_sum / scan_avg / scan_min_max /
+    scan_count_by / scan_sum_by / scan_min_max_by, which answer from
+    block evidence (definitely-true blocks contribute their recorded
+    stats; only boundary blocks decode) — a 100 TB table's
+    ``SELECT count(*) WHERE …`` reads KB of manifest, not the payloads."""
+    from aisle_spark import pipeline
+    from aisle_spark.sqlcompile import parse_where
 
-    from aisle_spark.pipeline import (
-        read_encoded,
-        scan_avg,
-        scan_count,
-        scan_count_by,
-        scan_min_max,
-        scan_min_max_by,
-        scan_sum,
-        scan_sum_by,
-    )
-
-    spark, owns = _session("aisle-aggregate")
-    blocks, schema = read_encoded(spark, args.table)
-    where = args.where or None
+    # parse before starting Spark: a malformed predicate or a GROUP:COL
+    # pair without its value column fails fast
+    where = parse_where(args.where) if args.where else None
     if args.count_by:
-        out = scan_count_by(blocks, schema, args.count_by, where=where)
-    elif args.min_max_by:
-        group, _, val = args.min_max_by.partition(":")
+        fn, cols = pipeline.scan_count_by, [args.count_by]
+    elif args.min_max_by or args.sum_by:
+        fn = pipeline.scan_min_max_by if args.min_max_by else pipeline.scan_sum_by
+        group, _, val = (args.min_max_by or args.sum_by).partition(":")
         if not val:
-            raise SystemExit("--min-max-by takes GROUP_COL:VALUE_COL")
-        out = scan_min_max_by(blocks, schema, group, val, where=where)
-    elif args.sum_by:
-        group, _, val = args.sum_by.partition(":")
-        if not val:
-            raise SystemExit("--sum-by takes GROUP_COL:SUM_COL")
-        out = scan_sum_by(blocks, schema, group, val, where=where)
+            raise SystemExit("--min-max-by and --sum-by take GROUP_COL:VALUE_COL")
+        cols = [group, val]
     elif args.sum:
-        out = scan_sum(blocks, schema, args.sum, where=where)
+        fn, cols = pipeline.scan_sum, [args.sum]
     elif args.avg:
-        out = scan_avg(blocks, schema, args.avg, where=where)
+        fn, cols = pipeline.scan_avg, [args.avg]
     elif args.min_max:
-        out = scan_min_max(blocks, schema, args.min_max, where=where)
+        fn, cols = pipeline.scan_min_max, [args.min_max]
     else:  # --count is the default aggregate
-        out = scan_count(blocks, schema, where=where)
+        fn, cols = pipeline.scan_count, []
+    spark, owns = _session("aisle-aggregate")
+    blocks, schema = pipeline.read_encoded(spark, args.table)
+    out = fn(blocks, schema, *cols, where=where)
     if args.output:
         out.write.mode(args.mode).parquet(args.output)
     else:
@@ -191,20 +180,15 @@ def cmd_describe(args) -> None:
     import json as _json
 
     from aisle_spark.datasource import _fs_of, _read_sidecar_schema
-    from aisle_spark.pipeline import list_snapshots, load_manifest
+    from aisle_spark.pipeline import _fs_list, list_snapshots, load_manifest
 
     fs, root = _fs_of(args.table)
     root = root.rstrip("/")
-    try:
-        m = load_manifest(fs, root)
-    except (FileNotFoundError, OSError):
+    m = load_manifest(fs, root)
+    if m is None:
         # manifest-less layout (plain blocks.write.parquet): list files,
         # no stats totals
-        from aisle_spark.pipeline import _fs_list
-
-        m = {
-            "files": [p for p, _sz in _fs_list(fs, root, ".parquet")],
-        }
+        m = {"files": [p for p, _sz in _fs_list(fs, root, ".parquet")]}
     stats = m.get("file_stats", {})
     total_bytes = 0
     rows = 0

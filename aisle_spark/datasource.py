@@ -28,9 +28,10 @@ contract):
 Write path: each task slices its Arrow stream into sorted blocks
 (``pipeline._order_and_slice`` + ``blocks.encode_block``), writes ONE
 parquet file, and reports it in its commit message; ``commit`` publishes
-the file list into ``_aisle_files.json`` plus the Arrow schema sidecar —
-the same manifest-commit protocol the direct-write encode uses, so
-readers never observe files from failed or speculative attempts.
+the file list into the manifest (``pipeline.MANIFEST``) plus the Arrow
+schema sidecar — the same manifest-commit protocol the direct-write
+encode uses, so readers never observe files from failed or speculative
+attempts.
 
 Scale notes: planning reads ONLY the manifest stat columns the predicate
 needs (parquet projection pushdown; payload bytes untouched) — the same
@@ -92,7 +93,6 @@ from aisle_spark.filterspec import (
 )
 
 _SCHEMA_SIDECAR = "_aisle_schema.arrow"
-_FILES_MANIFEST = "_aisle_files.json"
 
 
 # ---------------------------------------------------------------------------
@@ -301,18 +301,15 @@ def _manifest_of(
 ) -> tuple[list[str], dict]:
     """(full file paths, per-file stats keyed by full path); ``version``
     pins a committed snapshot (time travel)."""
-    from aisle_spark.pipeline import _fs_list, _fs_read_json, read_snapshot
+    from aisle_spark.pipeline import _fs_list, load_manifest, read_snapshot
 
     root = path.rstrip("/")
     if version is not None:
         m = read_snapshot(fs, root, version)
     else:
-        manifest = f"{root}/{_FILES_MANIFEST}"
-        if not _exists(fs, manifest):
-            return [p for p, _size in _fs_list(fs, path, ".parquet")], {}
-        from aisle_spark.pipeline import load_manifest
-
         m = load_manifest(fs, root)
+        if m is None:
+            return [p for p, _size in _fs_list(fs, path, ".parquet")], {}
     stats = m.get("file_stats", {})
     return (
         [f"{root}/{f}" for f in m["files"]],
@@ -613,7 +610,7 @@ def _decode_file(
     import pyarrow.parquet as pq
 
     from aisle_spark.pipeline import _decode_fn
-    from aisle_spark.schema import specs_for_schema
+    from aisle_spark.schema import chunk_stat_columns, specs_for_schema
 
     specs = specs_for_schema(schema)
     where = utc_normalize(prune) if prune is not None else None
@@ -648,16 +645,7 @@ def _decode_file(
                 plan.append(("leaf", c))
     flat_need = [s.name for s in specs if s.name in set(flat_need)]
     payload_cols = [f"{c}__payload" for c in flat_need]
-    if where is not None:
-        chunk_kinds = (
-            "int", "timestamp", "duration", "float", "string", "binary", "decimal",
-        )
-        for c in sorted(where.columns()):
-            s = next((s for s in specs if s.name == c), None)
-            if s is not None and s.kind in chunk_kinds:
-                payload_cols += [
-                    f"{c}__chunk_min", f"{c}__chunk_max", f"{c}__chunk_nulls",
-                ]
+    payload_cols += chunk_stat_columns(specs, pred_cols)
     if rows is None:
         src = fs.open_input_file(path) if fs is not None else path
         tbl = pq.read_table(src, columns=payload_cols)
@@ -713,7 +701,7 @@ def _decode_file(
 class AisleStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("aisle")`` — the streaming face of the
     manifest-commit protocol: every micro-batch reads exactly the block
-    files that entered ``_aisle_files.json`` since the last offset. Pairs
+    files that entered the manifest since the last offset. Pairs
     with the engine's streaming sink (streaming.py) and the batch writer's
     append mode for an end-to-end exactly-once encoded stream: files
     become visible atomically at manifest rename, so an offset is a
@@ -1340,27 +1328,23 @@ class AisleWriter(DataSourceArrowWriter):
 
     def commit(self, messages: list[AisleCommit]) -> None:
         from aisle_spark.pipeline import (
-            _fs_read_json,
-            _fs_write_json,
             _write_schema_sidecar,
+            load_manifest,
+            manifest_lock,
+            publish_manifest,
         )
-
-        from aisle_spark.pipeline import manifest_lock
 
         live = [m for m in messages if m is not None and m.n_blocks > 0]
         new_files = sorted(m.filename for m in live)
         new_stats = {m.filename: m.stats for m in live if m.stats}
-        manifest = f"{self.path.rstrip('/')}/{_FILES_MANIFEST}"
         # read-merge-write under the manifest lock: concurrent local
         # appends can never drop each other's files (object-store callers
         # get last-writer-wins; see manifest_lock)
         with manifest_lock(self.fs, self.path):
             files, fstats = new_files, new_stats
             extras: dict = {}
-            if not self.overwrite and _exists(self.fs, manifest):
-                from aisle_spark.pipeline import load_manifest
-
-                old = load_manifest(self.fs, self.path)
+            old = None if self.overwrite else load_manifest(self.fs, self.path)
+            if old is not None:
                 files = sorted(set(old["files"]) | set(files))
                 fstats = {**old.get("file_stats", {}), **fstats}
                 # carry manifest extras forward — dropping the streaming
@@ -1382,8 +1366,6 @@ class AisleWriter(DataSourceArrowWriter):
             # local: tmp + atomic rename; object store: one atomic PUT —
             # the same commit discipline as the direct-write encode; every
             # commit also publishes an immutable snapshot (time travel)
-            from aisle_spark.pipeline import publish_manifest
-
             publish_manifest(
                 self.fs,
                 self.path,

@@ -41,9 +41,22 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from aisle_spark.datasource import _fs_of
-from aisle_spark.pipeline import _fs_list, _fs_read_json, _fs_write_json
+from aisle_spark.pipeline import (
+    MANIFEST,
+    _fs_list,
+    _fs_read_json,
+    _fs_write_json,
+    load_manifest,
+)
 
-_MANIFEST = "_aisle_files.json"
+
+def _current_manifest(fs, root: str) -> dict:
+    """Maintenance rewrites or deletes committed files, so a table
+    without a manifest is an error here, not an empty table."""
+    m = load_manifest(fs, root)
+    if m is None:
+        raise FileNotFoundError(f"no {MANIFEST} under {root}")
+    return m
 
 
 def compact_encoded(
@@ -68,9 +81,7 @@ def compact_encoded(
     fs, root = _fs_of(path)
     root = root.rstrip("/")
     spark_root = path.rstrip("/")  # Spark sees the original path/URI
-    from aisle_spark.pipeline import load_manifest
-
-    files = load_manifest(fs, root)["files"]
+    files = _current_manifest(fs, root)["files"]
     if not files:
         return {"files_before": 0, "files_after": 0, "skipped": True}
     if fs is None:
@@ -118,16 +129,13 @@ def compact_encoded(
     )
     if not new_files:
         raise RuntimeError("compaction produced no files")
-    manifest = f"{root}/{_MANIFEST}"
     new_stats = _recompute_file_stats(fs, root, new_files)
     from aisle_spark.pipeline import manifest_lock
 
     with manifest_lock(fs, root):
         # re-read under the lock: files appended since compaction started
         # (not among our inputs) must survive the manifest swap
-        from aisle_spark.pipeline import load_manifest
-
-        old = load_manifest(fs, root)
+        old = _current_manifest(fs, root)
         survivors = sorted(set(old["files"]) - set(files))
         old_stats = old.get("file_stats", {})
         payload: dict = {
@@ -222,9 +230,7 @@ def vacuum_encoded(
 
     fs, root = _fs_of(path)
     root = root.rstrip("/")
-    from aisle_spark.pipeline import load_manifest
-
-    keep = set(load_manifest(fs, root)["files"])
+    keep = set(_current_manifest(fs, root)["files"])
     # time travel: every RETAINED snapshot's files stay readable — expire
     # snapshots first if you want their files collected
     for v in list_snapshots(fs, root):
@@ -330,7 +336,7 @@ def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
         versions = list_snapshots(fs, root)
         victims = versions[:-keep_last] if keep_last > 0 else list(versions)
         try:
-            cur = _fs_read_json(fs, f"{root}/{_MANIFEST}")
+            cur = _fs_read_json(fs, f"{root}/{MANIFEST}")
         except FileNotFoundError:
             cur = {}  # no manifest yet => nothing pointed at
         # any OTHER read failure propagates: proceeding without the

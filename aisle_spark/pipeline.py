@@ -35,10 +35,10 @@ file names cross back to the JVM.
 from __future__ import annotations
 
 import struct
-from typing import Iterable, Iterator
+from typing import Callable, Iterable, Iterator, NamedTuple
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aisle_spark.blocks import decode_block, encode_block
@@ -48,6 +48,7 @@ from aisle_spark.schema import (
     assemble_struct,
     blocks_arrow_schema,
     blocks_spark_schema,
+    chunk_stat_columns,
     flatten_table,
     leaves_under,
     specs_for_schema,
@@ -419,6 +420,9 @@ def manifest_lock(fs, root: str):
 
 
 _SNAP_DIR = "_aisle_snapshots"
+# the current-state manifest: the committed file list (+ per-file stats),
+# or a pointer to the snapshot holding it
+MANIFEST = "_aisle_files.json"
 
 
 def list_snapshots(fs, root: str) -> list[int]:
@@ -486,9 +490,9 @@ def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
         return payload
     try:
         prev = load_manifest(fs, root)
-    except (FileNotFoundError, OSError):
+    except OSError:
         return payload
-    if prev.get("version") != version - 1:
+    if prev is None or prev.get("version") != version - 1:
         return payload
     old_files = set(prev.get("files", []))
     new_files = set(payload.get("files", []))
@@ -527,12 +531,16 @@ def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
 _MANIFEST_POINTER_MIN_FILES = 4096
 
 
-def load_manifest(fs, root: str) -> dict:
+def load_manifest(fs, root: str) -> dict | None:
     """The current-state manifest as a FULL dict, resolving the pointer
-    form through the snapshot chain. Every in-engine reader of
-    ``_aisle_files.json`` goes through here."""
+    form through the snapshot chain; None when the table has no manifest
+    (a plain ``blocks.write.parquet`` layout, or nothing committed yet).
+    Every in-engine reader of the manifest goes through here."""
     root = root.rstrip("/")
-    m = _fs_read_json(fs, f"{root}/_aisle_files.json")
+    try:
+        m = _fs_read_json(fs, f"{root}/{MANIFEST}")
+    except FileNotFoundError:
+        return None
     if "files" in m:
         return m
     return read_snapshot(fs, root, int(m["version"]))
@@ -559,7 +567,7 @@ def publish_manifest(fs, root: str, payload: dict) -> int:
         current = {"version": version, "pointer": True}
     else:
         current = payload
-    _fs_write_json(fs, f"{root}/_aisle_files.json", current)
+    _fs_write_json(fs, f"{root}/{MANIFEST}", current)
     return version
 
 
@@ -1086,21 +1094,10 @@ def scan(
         from aisle_spark.filterspec import DEFAULT_OPTIONS
 
         blocks = blocks.filter(where.keep_blocks(opts or DEFAULT_OPTIONS))
+    # ship the per-chunk stat arrays of predicate columns into the reader
+    # so it can skip chunks (page-index analog) before decode
     payload_cols = [f"{c}__payload" for c in need]
-    if where is not None:
-        # ship the per-chunk stat arrays of predicate columns into the
-        # reader so it can skip chunks (page-index analog) before decode
-        chunk_kinds = (
-            "int", "timestamp", "duration", "float", "string", "binary", "decimal",
-        )
-        for c in pred_leaves:
-            s = next((s for s in specs if s.name == c), None)
-            if s is not None and s.kind in chunk_kinds:
-                payload_cols += [
-                    f"{c}__chunk_min",
-                    f"{c}__chunk_max",
-                    f"{c}__chunk_nulls",
-                ]
+    payload_cols += chunk_stat_columns(specs, pred_leaves)
     # the executor-side mask gets UTC-normalized datetime literals (the
     # same instants F.lit produces), computed driver-side
     from aisle_spark.filterspec import utc_normalize
@@ -1125,6 +1122,230 @@ def scan(
     return decoded.select(*out_cols)
 
 
+# Stats-only aggregates. All seven public entry points run one plan
+# (_stats_aggregate): a block whose evidence proves every row matches
+# (``NOT not_true()`` — aisle's definitely-true side, the De Morgan dual
+# of keep(), null-guarded at the leaves), whose group column holds one
+# value, and whose needed stats are recorded answers from those stats
+# without touching a payload byte; every other kept block (the boundary)
+# decodes and aggregates exactly, and the two partial results merge.
+
+
+class _Part(NamedTuple):
+    """One partial-result column of a stats aggregate: ``sure`` is the
+    extra condition for a block to answer from its stats, ``block`` the
+    aggregate over those stats, ``row`` the aggregate over decoded rows,
+    ``merge`` the function that folds both sides' partials."""
+
+    name: str
+    sure: Column
+    block: Column
+    row: Column
+    merge: Callable[[str], Column]
+
+
+def _rows_part(stat, value, scale) -> _Part:
+    return _Part(
+        "c", F.lit(True), F.sum(F.col("n_rows").cast("long")),
+        F.count(F.lit(1)), F.sum,
+    )
+
+
+def _values_part(stat, value, scale) -> _Part:
+    nulls = stat("__nulls")
+    return _Part(
+        "c", nulls.isNotNull(), F.sum((F.col("n_rows") - nulls).cast("long")),
+        F.count(value), F.sum,
+    )
+
+
+def _sum_part(stat, value, scale) -> _Part:
+    # accumulate in decimal(38,0): millions of int64 block sums can exceed
+    # int64, 38 digits cannot. A NULL __sum is the encode-time overflow
+    # guard (that block decodes); an all-null block records __sum = 0,
+    # mapped back to NULL so SUM over only NULLs stays NULL like SQL's
+    total = stat("__sum")
+    all_null = F.coalesce(stat("__nulls"), F.lit(-1)) == F.col("n_rows")
+    if scale:  # decimals sum unscaled: no rounding ever happens
+        value = value * F.lit(10**scale)
+    return _Part(
+        "t", total.isNotNull(),
+        F.sum(F.when(all_null, F.lit(None)).otherwise(total).cast("decimal(38,0)")),
+        F.sum(value.cast("decimal(38,0)")), F.sum,
+    )
+
+
+def _min_part(stat, value, scale) -> _Part:
+    return _Part("mn", F.lit(True), F.min(stat("__min")), F.min(value), F.min)
+
+
+def _max_part(stat, value, scale) -> _Part:
+    return _Part("mx", F.lit(True), F.max(stat("__max")), F.max(value), F.max)
+
+
+def _spec_of(schema: pa.Schema, column: str) -> ColumnSpec:
+    spec = next((s for s in specs_for_schema(schema) if s.name == column), None)
+    if spec is None:
+        raise KeyError(f"unknown column {column}")
+    return spec
+
+
+def _exact_sum_spec(schema: pa.Schema, column: str, op_name: str) -> ColumnSpec:
+    """Sums and averages run in an exact domain: integers, and decimals
+    unscaled; float sums depend on the order of addition."""
+    spec = _spec_of(schema, column)
+    t = spec.arrow_type
+    if spec.kind != "decimal" and (
+        spec.kind != "int" or pa.types.is_date(t) or pa.types.is_boolean(t)
+    ):
+        raise TypeError(
+            f"{op_name} supports integer and decimal columns; {column!r} is "
+            f"{spec.kind} (float sums are order-dependent — use scan + agg)"
+        )
+    return spec
+
+
+_MINMAX_EXACT_KINDS = ("int", "timestamp", "duration", "decimal", "float")
+
+
+def _exact_minmax_spec(schema: pa.Schema, column: str, op_name: str) -> ColumnSpec:
+    """Long string/binary stats are truncation BOUNDS, not values, so
+    they cannot answer an aggregate."""
+    spec = _spec_of(schema, column)
+    if spec.kind not in _MINMAX_EXACT_KINDS:
+        raise TypeError(
+            f"{op_name} needs exact stats; kind {spec.kind!r} of "
+            f"{column!r} stores bounds (use scan + agg instead)"
+        )
+    return spec
+
+
+def _scale(spec: ColumnSpec | None) -> int:
+    return spec.arrow_type.scale if spec is not None and spec.kind == "decimal" else 0
+
+
+def _sum_out(spec: ColumnSpec) -> list[Column]:
+    if spec.kind != "decimal":
+        return [F.col("t").cast("long").alias("total")]
+    # unscaled -> decimal(38, s); the quotient is exact by construction
+    # (the unscaled total has >= s trailing digits)
+    s = _scale(spec)
+    return [(F.col("t") / F.lit(10**s)).cast(f"decimal(38,{s})").alias("total")]
+
+
+def _avg_out(spec: ColumnSpec) -> list[Column]:
+    # exact unscaled total / (count * 10^scale): one decimal division at
+    # the end rounds the true quotient once
+    divisor = F.col("c").cast("decimal(38,0)") * F.lit(10 ** _scale(spec))
+    return [
+        F.when(
+            F.coalesce(F.col("c"), F.lit(0)) > 0, (F.col("t") / divisor).cast("double")
+        ).alias("avg")
+    ]
+
+
+class _StatsOp(NamedTuple):
+    check: Callable | None  # value-column kind rule (None: no value column)
+    parts: tuple  # partial-result builders (stat, value, scale) -> _Part
+    finish: Callable  # value spec -> output columns over the merged partials
+
+
+_STATS_OPS = {
+    "count": _StatsOp(
+        None, (_rows_part,),
+        lambda spec: [F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("cnt")],
+    ),
+    "sum": _StatsOp(_exact_sum_spec, (_sum_part,), _sum_out),
+    "avg": _StatsOp(_exact_sum_spec, (_sum_part, _values_part), _avg_out),
+    "min_max": _StatsOp(
+        _exact_minmax_spec, (_min_part, _max_part),
+        lambda spec: [F.col("mn"), F.col("mx")],
+    ),
+}
+
+
+def _stats_aggregate(
+    blocks: DataFrame,
+    schema: pa.Schema,
+    where: "Spec | str | None",
+    opts: "PruneOptions | None",
+    group_col: str | None,
+    value_col: str | None,
+    op: str,
+) -> DataFrame:
+    """The one plan behind the stats-only aggregates: sure blocks answer
+    from their stats, boundary blocks decode, both merge by group."""
+    from aisle_spark.filterspec import DEFAULT_OPTIONS
+
+    op_name = f"scan_{op}" + ("_by" if group_col is not None else "")
+    check, part_fns, finish = _STATS_OPS[op]
+    keys: list[Column] = []
+    sure_key: list[Column] = []
+    sure = F.lit(True)
+    if group_col is not None:
+        gspec = _spec_of(schema, group_col)
+        if gspec.kind in ("intlist", "floatlist", "map") or "." in group_col:
+            raise TypeError(
+                f"{op_name} needs a top-level scalar group column, got "
+                f"{group_col!r} ({gspec.kind})"
+            )
+        gmin, gmax, gnulls = (
+            F.col(f"`{group_col}__{s}`") for s in ("min", "max", "nulls")
+        )
+        known_nulls = F.coalesce(gnulls, F.lit(-1))
+        # single-valued (min == max with zero nulls — exact even for
+        # strings, a truncated bound pair can never be equal) or all-NULL
+        sure = (
+            gmin.isNotNull() & gmax.isNotNull() & (gmin == gmax)
+            & (known_nulls == 0)
+        ) | (known_nulls == F.col("n_rows"))
+        keys = [F.col(f"`{group_col}`")]
+        sure_key = [F.when(gnulls == 0, gmin).alias(group_col)]
+    vspec = check(schema, value_col, op_name) if check is not None else None
+    if isinstance(where, str):
+        from aisle_spark.sqlcompile import parse_where
+
+        where = parse_where(where)
+    opts = opts or DEFAULT_OPTIONS
+    if where is not None:
+        sure = sure & ~where.not_true(opts)
+
+    def stat(suffix: str) -> Column:
+        # a table written before a stat existed (no __sum) gets a typed
+        # NULL: its sure condition folds to false, every kept block decodes
+        name = f"{value_col}{suffix}"
+        if name in blocks.columns:
+            return F.col(f"`{name}`")
+        return F.lit(None).cast("decimal(38,0)")
+
+    value = None
+    if value_col is not None:
+        value = F.col(value_col) if "." in value_col else F.col(f"`{value_col}`")
+    parts = [fn(stat, value, _scale(vspec)) for fn in part_fns]
+    for p in parts:
+        sure = sure & p.sure
+    out = blocks.filter(sure).groupBy(*sure_key).agg(
+        *[p.block.alias(p.name) for p in parts]
+    )
+    keep = where.keep(opts) if where is not None else F.lit(True)
+    boundary_blocks = blocks.filter(keep & ~sure)
+    # an empty boundary skips the decode branch entirely: the mapInArrow
+    # stage costs a Python-worker spin-up even for zero rows, and one
+    # stats-only job decides
+    if not boundary_blocks.isEmpty():
+        proj = {c.split(".")[0] for c in where.columns()} if where else set()
+        proj |= {c.split(".")[0] for c in (group_col, value_col) if c is not None}
+        rows = (
+            scan(boundary_blocks, schema, where=where, columns=sorted(proj))
+            .groupBy(*keys)
+            .agg(*[p.row.alias(p.name) for p in parts])
+        )
+        out = out.unionAll(rows).groupBy(*keys).agg(
+            *[p.merge(p.name).alias(p.name) for p in parts]
+        )
+    return out.select(*keys, *finish(vspec))
+
+
 def scan_count(
     blocks: DataFrame,
     schema: pa.Schema,
@@ -1132,47 +1353,15 @@ def scan_count(
     opts: "PruneOptions | None" = None,
 ) -> DataFrame:
     """``SELECT count(*) WHERE …`` answered from block STATISTICS:
-    blocks whose evidence proves every row matches (``NOT not_true()``
-    — the De Morgan dual of keep(), null-guarded at the leaves)
-    contribute ``n_rows`` without touching a single payload byte; only
-    the boundary blocks (kept but not definitely-true) decode and count
+    definitely-true blocks contribute ``n_rows`` without touching a
+    single payload byte; only the boundary blocks decode and count
     exactly. On a range-clustered table the boundary is the two edge
     blocks of the range — the classic stats-only aggregation pushdown
     (beyond the reference, which has no aggregation surface).
 
     Returns a one-row DataFrame ``(cnt bigint)`` — same laziness
     contract as :func:`scan`."""
-    from aisle_spark.filterspec import DEFAULT_OPTIONS
-
-    opts = opts or DEFAULT_OPTIONS
-    if isinstance(where, str):
-        from aisle_spark.sqlcompile import parse_where
-
-        where = parse_where(where)
-    if where is None:
-        return blocks.agg(
-            F.coalesce(F.sum(F.col("n_rows").cast("long")), F.lit(0))
-            .cast("long")
-            .alias("cnt")
-        )
-    sure = blocks.filter(~where.not_true(opts)).agg(
-        F.coalesce(F.sum(F.col("n_rows").cast("long")), F.lit(0)).alias("c")
-    )
-    boundary_blocks = blocks.filter(where.keep(opts) & where.not_true(opts))
-    # empty boundary (fully clustered predicate): skip the decode branch
-    # entirely — the mapInArrow stage costs a Python-worker spin-up even
-    # for zero rows. One cheap stats-only job decides, eagerly.
-    if boundary_blocks.isEmpty():
-        return sure.select(F.col("c").cast("long").alias("cnt"))
-    # decode only the predicate's own columns on the boundary
-    proj = sorted({c.split(".")[0] for c in where.columns()})
-    boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    return (
-        sure.unionAll(boundary)
-        .agg(F.sum("c").cast("long").alias("cnt"))
-    )
+    return _stats_aggregate(blocks, schema, where, opts, None, None, "count")
 
 
 def scan_sum(
@@ -1192,99 +1381,7 @@ def scan_sum(
 
     Returns a one-row DataFrame ``(total)`` — bigint for ints, decimal
     (38, s) for decimal(p, s) columns; NULL when no rows match."""
-    import pyarrow as _pa
-
-    from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
-
-    opts = opts or DEFAULT_OPTIONS
-    spec_ = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if spec_ is None:
-        raise KeyError(f"unknown column {column}")
-    is_decimal = spec_.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            spec_.kind == "int"
-            and not _pa.types.is_date(spec_.arrow_type)
-            and not _pa.types.is_boolean(spec_.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_sum supports integer and decimal columns; {column!r} is "
-            f"{spec_.kind} (float sums are order-dependent — use scan + agg)"
-        )
-    if isinstance(where, str):
-        from aisle_spark.sqlcompile import parse_where
-
-        where = parse_where(where)
-    sum_name = f"{column}__sum"
-    has_sums = sum_name in blocks.columns  # pre-r4 tables: decode it all
-    where_sure = (~where.not_true(opts)) if where is not None else F.lit(True)
-    keep_mask = where.keep(opts) if where is not None else F.lit(True)
-    if has_sums:
-        sure_mask = where_sure & F.col(f"`{sum_name}`").isNotNull()
-        # accumulate in decimal(38,0): millions of int64 block sums can
-        # exceed int64; 38 digits cannot be exceeded by any real table.
-        # An all-null block's recorded __sum is 0 — map it back to NULL
-        # so SUM over a fully-NULL selection stays NULL like SQL's
-        sure = blocks.filter(sure_mask).agg(
-            F.sum(
-                F.when(
-                    F.coalesce(F.col(f"`{column}__nulls`"), F.lit(-1))
-                    == F.col("n_rows"),
-                    F.lit(None),
-                )
-                .otherwise(F.col(f"`{sum_name}`"))
-                .cast("decimal(38,0)")
-            ).alias("t")
-        )
-        boundary_blocks = blocks.filter(keep_mask & ~sure_mask)
-    else:
-        # pre-r4 table without __sum stats: the documented "decode it
-        # all" fallback — every kept block is a boundary block, and the
-        # sure branch must NOT reference the absent column (ADVICE r4
-        # medium: the unconditional F.col(__sum) was an AnalysisException)
-        sure = None
-        boundary_blocks = blocks.filter(keep_mask)
-    scale = spec_.arrow_type.scale if is_decimal else 0
-
-    def finish(total: Column) -> Column:
-        if not is_decimal:
-            return total.cast("long").alias("total")
-        # unscaled -> decimal(38, s); the quotient is exact by
-        # construction (the unscaled total has >= s trailing digits)
-        return (
-            (total / F.lit(10**scale)).cast(f"decimal(38,{scale})")
-        ).alias("total")
-
-    if boundary_blocks.isEmpty():
-        if sure is None:  # no kept blocks at all: SUM over zero rows
-            return blocks.sparkSession.range(1).select(
-                finish(F.lit(None).cast("decimal(38,0)"))
-            )
-        return sure.select(finish(F.col("t")))
-    proj = sorted(
-        {column.split(".")[0]}
-        | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    bval = F.col(column) if "." in column else F.col(f"`{column}`")
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
-    boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.sum(bval).alias("t")
-    )
-    if sure is None:
-        return boundary.select(finish(F.col("t")))
-    return (
-        sure.unionAll(boundary)
-        .agg(F.sum("t").alias("t"))
-        .select(finish(F.col("t")))
-    )
+    return _stats_aggregate(blocks, schema, where, opts, None, column, "sum")
 
 
 def scan_avg(
@@ -1302,137 +1399,27 @@ def scan_avg(
     end (decimal division, ≥6 fractional digits, then double). Returns a
     one-row DataFrame ``(avg)`` — double, NULL when no non-null values
     match."""
-    import pyarrow as _pa
-
-    from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
-
-    opts = opts or DEFAULT_OPTIONS
-    spec_ = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if spec_ is None:
-        raise KeyError(f"unknown column {column}")
-    is_decimal = spec_.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            spec_.kind == "int"
-            and not _pa.types.is_date(spec_.arrow_type)
-            and not _pa.types.is_boolean(spec_.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_avg supports integer and decimal columns; {column!r} is "
-            f"{spec_.kind} (float averages are order-dependent — use scan + agg)"
-        )
-    if isinstance(where, str):
-        from aisle_spark.sqlcompile import parse_where
-
-        where = parse_where(where)
-    sum_name, nulls_name = f"{column}__sum", f"{column}__nulls"
-    has_stats = sum_name in blocks.columns and nulls_name in blocks.columns
-    where_sure = (~where.not_true(opts)) if where is not None else F.lit(True)
-    keep_mask = where.keep(opts) if where is not None else F.lit(True)
-    scale = spec_.arrow_type.scale if is_decimal else 0
-    if has_stats:
-        sure_mask = (
-            where_sure
-            & F.col(f"`{sum_name}`").isNotNull()
-            & F.col(f"`{nulls_name}`").isNotNull()
-        )
-        sure = blocks.filter(sure_mask).agg(
-            F.sum(F.col(f"`{sum_name}`").cast("decimal(38,0)")).alias("t"),
-            F.sum(
-                (F.col("n_rows") - F.col(f"`{nulls_name}`")).cast("long")
-            ).alias("c"),
-        )
-        boundary_blocks = blocks.filter(keep_mask & ~sure_mask)
-    else:
-        sure = None
-        boundary_blocks = blocks.filter(keep_mask)
-
-    def finish(df: DataFrame) -> DataFrame:
-        # exact unscaled total / (count * 10^scale): one division at the
-        # end — decimal/decimal division rounds the true quotient once
-        return df.select(
-            F.when(
-                F.coalesce(F.col("c"), F.lit(0)) > 0,
-                (
-                    F.col("t")
-                    / (F.col("c").cast("decimal(38,0)") * F.lit(10**scale))
-                ).cast("double"),
-            ).alias("avg")
-        )
-
-    if boundary_blocks.isEmpty():
-        if sure is None:
-            return blocks.sparkSession.range(1).select(
-                F.lit(None).cast("double").alias("avg")
-            )
-        return finish(sure)
-    proj = sorted(
-        {column.split(".")[0]}
-        | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    bval = F.col(column) if "." in column else F.col(f"`{column}`")
-    cnt_src = bval
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
-    boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.sum(bval).alias("t"), F.count(cnt_src).cast("long").alias("c")
-    )
-    merged = boundary if sure is None else sure.unionAll(boundary)
-    return finish(
-        merged.agg(F.sum("t").alias("t"), F.sum("c").alias("c"))
-    )
+    return _stats_aggregate(blocks, schema, where, opts, None, column, "avg")
 
 
-def _group_evidence(
-    schema: pa.Schema, group_col: str, where, opts, op_name: str
-):
-    """Shared scaffolding of the GROUP-BY statistics aggregates
-    (scan_count_by / scan_sum_by / scan_min_max_by): validate the group
-    column, parse a SQL ``where``, and build the group-evidence masks.
-    Returns ``(where, opts, where_sure, keep_mask, group_sure,
-    group_key)`` — ``group_sure`` marks blocks whose group value is
-    provably constant (min == max with zero nulls; exact even for
-    strings, a truncated bound pair can never be equal) or all-NULL;
-    ``group_key`` is the aggregation key expression (NULL for all-null
-    blocks). One definition so an evidence fix can never diverge across
-    the three aggregates."""
-    from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
+def scan_min_max(
+    blocks: DataFrame,
+    schema: pa.Schema,
+    column: str,
+    where: "Spec | str | None" = None,
+    opts: "PruneOptions | None" = None,
+) -> DataFrame:
+    """``SELECT min(col), max(col) WHERE …`` from block statistics:
+    definitely-true blocks answer from their exact ``__min``/``__max``
+    (null-excluding, Spark NaN-greatest order — the same total order the
+    engine stats use); boundary blocks decode and aggregate exactly.
+    Restricted to kinds whose stats are always exact
+    (int/date/timestamp/duration/decimal/float) — long string/binary
+    stats are truncation BOUNDS, not values, so they cannot answer an
+    aggregate and raise here.
 
-    opts = opts or DEFAULT_OPTIONS
-    gspec = next(
-        (s for s in specs_for_schema(schema) if s.name == group_col), None
-    )
-    if gspec is None:
-        raise KeyError(f"unknown column {group_col}")
-    if gspec.kind in ("intlist", "floatlist", "map") or "." in group_col:
-        raise TypeError(
-            f"{op_name} needs a top-level scalar group column, got "
-            f"{group_col!r} ({gspec.kind})"
-        )
-    if isinstance(where, str):
-        from aisle_spark.sqlcompile import parse_where
-
-        where = parse_where(where)
-    gmin = F.col(f"`{group_col}__min`")
-    gmax = F.col(f"`{group_col}__max`")
-    gnulls = F.col(f"`{group_col}__nulls`")
-    where_sure = (~where.not_true(opts)) if where is not None else F.lit(True)
-    keep_mask = where.keep(opts) if where is not None else F.lit(True)
-    single = (
-        gmin.isNotNull() & gmax.isNotNull() & (gmin == gmax)
-        & (F.coalesce(gnulls, F.lit(-1)) == 0)
-    )
-    g_all_null = F.coalesce(gnulls, F.lit(-1)) == F.col("n_rows")
-    group_key = F.when(gnulls == 0, gmin).alias(group_col)
-    return where, opts, where_sure, keep_mask, single | g_all_null, group_key
+    Returns a one-row DataFrame ``(mn, mx)`` in the column's type."""
+    return _stats_aggregate(blocks, schema, where, opts, None, column, "min_max")
 
 
 def scan_count_by(
@@ -1454,32 +1441,7 @@ def scan_count_by(
 
     Returns a DataFrame ``(group_col, cnt)``; restricted to top-level
     scalar group columns."""
-    where, opts, where_sure, keep_mask, group_sure, group_key = (
-        _group_evidence(schema, group_col, where, opts, "scan_count_by")
-    )
-    n_rows = F.col("n_rows").cast("long")
-    sure_mask = where_sure & group_sure
-    sure = (
-        blocks.filter(sure_mask)
-        .groupBy(group_key)
-        .agg(F.sum(n_rows).cast("long").alias("cnt"))
-    )
-    boundary_blocks = blocks.filter(keep_mask & ~sure_mask)
-    if boundary_blocks.isEmpty():  # skip the zero-row mapInArrow stage
-        return sure
-    proj = sorted(
-        {group_col} | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    boundary = (
-        scan(boundary_blocks, schema, where=where, columns=proj)
-        .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return (
-        sure.unionAll(boundary)
-        .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    return _stats_aggregate(blocks, schema, where, opts, group_col, None, "count")
 
 
 def scan_sum_by(
@@ -1492,108 +1454,14 @@ def scan_sum_by(
 ) -> DataFrame:
     """``SELECT g, sum(col) … GROUP BY g`` from block statistics — the
     natural join of :func:`scan_count_by` and :func:`scan_sum`: a block
-    whose group column is SINGLE-VALUED (min == max, zero nulls — exact
-    even for strings, truncated bound pairs can never be equal) or
-    ALL-NULL contributes its recorded per-block ``__sum`` without
-    decoding, provided the WHERE evidence proves the whole block matches
-    and the sum stat exists (NULL = the encode-time overflow guard
-    tripped); every other kept block decodes and aggregates exactly.
-    EXACT domains only, like scan_sum: int and decimal (decimal sums run
-    unscaled; float sums are order-dependent and rejected).
+    single-valued or all-NULL in the group column contributes its
+    recorded ``__sum`` without decoding when the WHERE evidence proves
+    the whole block matches and the sum stat exists. EXACT domains only,
+    like scan_sum.
 
     Returns a DataFrame ``(group_col, total)`` — total is bigint for int
     columns, decimal(38, s) for decimal(p, s)."""
-    import pyarrow as _pa
-
-    from aisle_spark.schema import specs_for_schema
-
-    where, opts, where_sure, keep_mask, group_sure, group_key = (
-        _group_evidence(schema, group_col, where, opts, "scan_sum_by")
-    )
-    sspec = next(
-        (s for s in specs_for_schema(schema) if s.name == sum_col), None
-    )
-    if sspec is None:
-        raise KeyError(f"unknown column {sum_col}")
-    is_decimal = sspec.kind == "decimal"
-    if not (
-        is_decimal
-        or (
-            sspec.kind == "int"
-            and not _pa.types.is_date(sspec.arrow_type)
-            and not _pa.types.is_boolean(sspec.arrow_type)
-        )
-    ):
-        raise TypeError(
-            f"scan_sum_by supports integer and decimal sum columns; "
-            f"{sum_col!r} is {sspec.kind}"
-        )
-    sum_name = f"{sum_col}__sum"
-    has_sums = sum_name in blocks.columns
-    scale = sspec.arrow_type.scale if is_decimal else 0
-
-    def finish(total: Column) -> Column:
-        if not is_decimal:
-            return total.cast("long").alias("total")
-        return (
-            (total / F.lit(10**scale)).cast(f"decimal(38,{scale})")
-        ).alias("total")
-
-    if has_sums:
-        sure_mask = (
-            where_sure & group_sure & F.col(f"`{sum_name}`").isNotNull()
-        )
-        # an all-null sum block records __sum = 0; map it back to NULL so
-        # a group whose every value is NULL totals NULL like SQL
-        contrib = (
-            F.when(
-                F.coalesce(F.col(f"`{sum_col}__nulls`"), F.lit(-1))
-                == F.col("n_rows"),
-                F.lit(None),
-            )
-            .otherwise(F.col(f"`{sum_name}`"))
-            .cast("decimal(38,0)")
-        )
-        sure = (
-            blocks.filter(sure_mask)
-            .groupBy(group_key)
-            .agg(F.sum(contrib).alias("t"))
-        )
-        boundary_blocks = blocks.filter(keep_mask & ~sure_mask)
-    else:  # pre-r4 table: decode every kept block
-        sure = None
-        boundary_blocks = blocks.filter(keep_mask)
-    if boundary_blocks.isEmpty():
-        if sure is None:
-            # empty result in the GROUP COLUMN'S type (the __min stat
-            # column shares it) — a hardcoded string schema would break
-            # unions with non-empty results (code-review r5 finding)
-            out = blocks.limit(0).select(
-                F.col(f"`{group_col}__min`").alias(group_col),
-                F.lit(None).cast("decimal(38,0)").alias("t"),
-            )
-            return out.select(F.col(f"`{group_col}`"), finish(F.col("t")))
-        return sure.select(F.col(f"`{group_col}`"), finish(F.col("t")))
-    proj = sorted(
-        {group_col, sum_col.split(".")[0]}
-        | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    bval = F.col(sum_col) if "." in sum_col else F.col(f"`{sum_col}`")
-    if is_decimal:
-        bval = (bval * F.lit(10**scale)).cast("decimal(38,0)")
-    else:
-        bval = bval.cast("decimal(38,0)")
-    boundary = (
-        scan(boundary_blocks, schema, where=where, columns=proj)
-        .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.sum(bval).alias("t"))
-    )
-    merged = boundary if sure is None else sure.unionAll(boundary)
-    return (
-        merged.groupBy(F.col(f"`{group_col}`"))
-        .agg(F.sum("t").alias("t"))
-        .select(F.col(f"`{group_col}`"), finish(F.col("t")))
-    )
+    return _stats_aggregate(blocks, schema, where, opts, group_col, sum_col, "sum")
 
 
 def scan_min_max_by(
@@ -1605,111 +1473,15 @@ def scan_min_max_by(
     opts: "PruneOptions | None" = None,
 ) -> DataFrame:
     """``SELECT g, min(col), max(col) … GROUP BY g`` from block
-    statistics: a block SINGLE-VALUED in the group column (min == max,
-    zero nulls) or ALL-NULL in it contributes its exact per-block
-    ``__min``/``__max`` without decoding when the WHERE evidence proves
-    every row matches; other kept blocks decode. Value kinds restricted
-    to exact-stat domains like :func:`scan_min_max`.
+    statistics: a block single-valued or all-NULL in the group column
+    contributes its exact per-block ``__min``/``__max`` without decoding
+    when the WHERE evidence proves every row matches; other kept blocks
+    decode. Value kinds restricted to exact-stat domains like
+    :func:`scan_min_max`.
 
     Returns a DataFrame ``(group_col, mn, mx)``."""
-    from aisle_spark.schema import specs_for_schema
-
-    where, opts, where_sure, keep_mask, group_sure, group_key = (
-        _group_evidence(schema, group_col, where, opts, "scan_min_max_by")
-    )
-    vspec = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if vspec is None:
-        raise KeyError(f"unknown column {column}")
-    if vspec.kind not in _MINMAX_EXACT_KINDS:
-        raise TypeError(
-            f"scan_min_max_by needs exact stats; kind {vspec.kind!r} of "
-            f"{column!r} stores bounds (use scan + agg instead)"
-        )
-    vmin, vmax = F.col(f"`{column}__min`"), F.col(f"`{column}__max`")
-    sure_mask = where_sure & group_sure
-    sure = (
-        blocks.filter(sure_mask)
-        .groupBy(group_key)
-        .agg(F.min(vmin).alias("mn"), F.max(vmax).alias("mx"))
-    )
-    boundary_blocks = blocks.filter(keep_mask & ~sure_mask)
-    if boundary_blocks.isEmpty():
-        return sure
-    proj = sorted(
-        {group_col, column.split(".")[0]}
-        | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    vcol = F.col(column) if "." in column else F.col(f"`{column}`")
-    boundary = (
-        scan(boundary_blocks, schema, where=where, columns=proj)
-        .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.min(vcol).alias("mn"), F.max(vcol).alias("mx"))
-    )
-    return (
-        sure.unionAll(boundary)
-        .groupBy(F.col(f"`{group_col}`"))
-        .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
-    )
-
-
-_MINMAX_EXACT_KINDS = ("int", "timestamp", "duration", "decimal", "float")
-
-
-def scan_min_max(
-    blocks: DataFrame,
-    schema: pa.Schema,
-    column: str,
-    where: "Spec | str | None" = None,
-    opts: "PruneOptions | None" = None,
-) -> DataFrame:
-    """``SELECT min(col), max(col) WHERE …`` from block statistics:
-    definitely-true blocks answer from their exact ``__min``/``__max``
-    (null-excluding, Spark NaN-greatest order — the same total order the
-    engine stats use); boundary blocks decode and aggregate exactly.
-    Restricted to kinds whose stats are always exact
-    (int/date/timestamp/duration/decimal/float) — long string/binary
-    stats are truncation BOUNDS, not values, so they cannot answer an
-    aggregate and raise here.
-
-    Returns a one-row DataFrame ``(mn, mx)`` in the column's type."""
-    from aisle_spark.filterspec import DEFAULT_OPTIONS
-    from aisle_spark.schema import specs_for_schema
-
-    opts = opts or DEFAULT_OPTIONS
-    spec_ = next(
-        (s for s in specs_for_schema(schema) if s.name == column), None
-    )
-    if spec_ is None:
-        raise KeyError(f"unknown column {column}")
-    if spec_.kind not in _MINMAX_EXACT_KINDS:
-        raise TypeError(
-            f"scan_min_max needs exact stats; kind {spec_.kind!r} of "
-            f"{column!r} stores bounds (use scan + agg instead)"
-        )
-    if isinstance(where, str):
-        from aisle_spark.sqlcompile import parse_where
-
-        where = parse_where(where)
-    mn_c, mx_c = F.col(f"`{column}__min`"), F.col(f"`{column}__max`")
-    if where is None:
-        sure_blocks, boundary_blocks = blocks, blocks.limit(0)
-    else:
-        sure_blocks = blocks.filter(~where.not_true(opts))
-        boundary_blocks = blocks.filter(where.keep(opts) & where.not_true(opts))
-    sure = sure_blocks.agg(F.min(mn_c).alias("mn"), F.max(mx_c).alias("mx"))
-    if boundary_blocks.isEmpty():  # same spin-up skip as scan_count
-        return sure
-    proj = sorted(
-        {column.split(".")[0]}
-        | ({c.split(".")[0] for c in where.columns()} if where else set())
-    )
-    boundary = scan(boundary_blocks, schema, where=where, columns=proj).agg(
-        F.min(F.col(column)).alias("mn"), F.max(F.col(column)).alias("mx")
-    )
-    return sure.unionAll(boundary).agg(
-        F.min("mn").alias("mn"), F.max("mx").alias("mx")
+    return _stats_aggregate(
+        blocks, schema, where, opts, group_col, column, "min_max"
     )
 
 
@@ -1808,16 +1580,15 @@ def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
 
 
 def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
-    import json
     import os
 
     with open(os.path.join(path, "_aisle_schema.arrow"), "rb") as fh:
         schema = pa.ipc.read_schema(pa.py_buffer(fh.read()))
-    manifest = os.path.join(path, "_aisle_files.json")
-    if os.path.exists(manifest):
+    m = load_manifest(None, path)
+    if m is not None:
         # direct-write layout: read EXACTLY the committed file list —
         # orphans from failed/speculative attempts are never visible
         # (load_manifest resolves the large-table pointer form)
-        files = load_manifest(None, path)["files"]
-        return spark.read.parquet(*[os.path.join(path, f) for f in files]), schema
+        files = [os.path.join(path, f) for f in m["files"]]
+        return spark.read.parquet(*files), schema
     return spark.read.parquet(path), schema

@@ -299,21 +299,38 @@ def blocks_arrow_schema(specs: list[ColumnSpec]) -> pa.Schema:
             # per-chunk (page-index analog) stats, consumed by the
             # in-reader refinement — aisle's page-level granularity
             # (/root/reference/src/prune/page.rs:71-137)
-            ct = {
-                "int": pa.int64(),
-                "timestamp": pa.int64(),
-                "duration": pa.int64(),
-                "decimal": pa.int64(),  # unscaled
-                "float": pa.float64(),
-                "string": pa.string(),
-                "binary": pa.binary(),
-            }[s.kind]
+            ct = _CHUNK_STAT_TYPES[s.kind]
             fields += [
                 pa.field(f"{c}__chunk_min", pa.list_(ct)),
                 pa.field(f"{c}__chunk_max", pa.list_(ct)),
                 pa.field(f"{c}__chunk_nulls", pa.list_(pa.int32())),
             ]
     return pa.schema(fields)
+
+
+# element type of the per-chunk min/max lists of each scalar kind
+_CHUNK_STAT_TYPES = {
+    "int": pa.int64(),
+    "timestamp": pa.int64(),
+    "duration": pa.int64(),
+    "decimal": pa.int64(),  # unscaled
+    "float": pa.float64(),
+    "string": pa.string(),
+    "binary": pa.binary(),
+}
+
+
+def chunk_stat_columns(specs: list[ColumnSpec], leaves: list[str]) -> list[str]:
+    """The ``{c}__chunk_min/max/nulls`` columns of the ``leaves`` that
+    carry them (the scalar kinds), in ``leaves`` order: what a reader
+    ships next to the payloads so it can skip chunks before decoding."""
+    kinds = {s.name: s.kind for s in specs}
+    return [
+        f"{c}__chunk_{stat}"
+        for c in leaves
+        if kinds.get(c) in _CHUNK_STAT_TYPES
+        for stat in ("min", "max", "nulls")
+    ]
 
 
 def blocks_spark_schema(specs: list[ColumnSpec]) -> T.StructType:

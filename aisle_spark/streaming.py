@@ -36,17 +36,11 @@ from aisle_spark.pipeline import (
 )
 
 
-def _manifest_path(out_path: str) -> str:
-    return os.path.join(out_path, "_aisle_files.json")
-
-
 def _read_manifest(out_path: str) -> dict:
-    p = _manifest_path(out_path)
-    if not os.path.exists(p):
-        return {"files": [], "batches": {}}
     from aisle_spark.pipeline import load_manifest
 
-    m = load_manifest(None, out_path)  # resolves the pointer form
+    # resolves the pointer form; a sink's first commit starts empty
+    m = load_manifest(None, out_path) or {"files": []}
     m.setdefault("batches", {})
     return m
 

@@ -143,3 +143,22 @@ class TestScanWhere:
         with pytest.raises(SqlCompileError, match="unsupported function COL"):
             main(["scan", "--table", "/nonexistent", "--where", "col('n_tok') > 1"])
         assert called == []
+
+    def test_aggregate_arguments_checked_before_spark(self, monkeypatch):
+        """``aggregate`` compiles ``--where`` and splits its GROUP:COL
+        pair before it starts a session, like ``scan``."""
+        import aisle_spark.cli as cli
+        import aisle_spark.filterspec as fsp
+        from aisle_spark.sqlcompile import SqlCompileError
+
+        called = []
+        monkeypatch.setattr(fsp, "col", lambda *a: called.append(a))
+        monkeypatch.setattr(cli, "_session", lambda app: called.append(app))
+        with pytest.raises(SqlCompileError, match="unsupported function COL"):
+            main([
+                "aggregate", "--table", "/nonexistent",
+                "--where", "col('n_tok') > 1",
+            ])
+        with pytest.raises(SystemExit, match="GROUP_COL:VALUE_COL"):
+            main(["aggregate", "--table", "/nonexistent", "--sum-by", "source"])
+        assert called == []

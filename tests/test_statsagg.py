@@ -563,3 +563,43 @@ class TestScanMinMaxBy:
         with pytest.raises(TypeError, match="bounds"):
             # string value column: truncation bounds, not values
             scan_min_max_by(blocks, schema, "g", "g")
+
+
+_RESULT_TYPES = {
+    "scan_count": ((), [("cnt", "bigint")]),
+    "scan_sum": (("n_tok",), [("total", "bigint")]),
+    "scan_avg": (("n_tok",), [("avg", "double")]),
+    "scan_min_max": (("n_tok",), [("mn", "int"), ("mx", "int")]),
+    "scan_count_by": (("source",), [("source", "string"), ("cnt", "bigint")]),
+    "scan_sum_by": (
+        ("source", "n_tok"), [("source", "string"), ("total", "bigint")]
+    ),
+    "scan_min_max_by": (
+        ("source", "n_tok"),
+        [("source", "string"), ("mn", "int"), ("mx", "int")],
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_RESULT_TYPES))
+def test_result_types_independent_of_path(spark, table, name):
+    """Every answer path — all blocks sure, a decoded boundary, nothing
+    kept, a legacy table without ``__sum`` — yields the same columns and
+    types; a global aggregate always has one row, a grouped one none
+    when no block can match."""
+    import aisle_spark.pipeline as pl
+
+    _df, blocks, schema = table
+    args, types = _RESULT_TYPES[name]
+    fn = getattr(pl, name)
+    impossible = "n_tok > 1000000000"
+    for label, tbl in (("full", blocks), ("legacy", blocks.drop("n_tok__sum"))):
+        for where in (None, "n_tok >= -1", "n_tok BETWEEN 100 AND 3000",
+                      impossible):
+            out = fn(tbl, schema, *args, where=where)
+            assert out.dtypes == types, (label, where)
+            n = out.count()
+            if name.endswith("_by"):
+                assert (n == 0) == (where == impossible), (label, where)
+            else:
+                assert n == 1, (label, where)
