@@ -295,8 +295,11 @@ def _cmp(a: np.ndarray, op: str, v) -> np.ndarray:
 def _range_tri(op: str, lo, hi, no_nulls: np.ndarray, v):
     """(t, f) of ``x op v`` over units whose non-null values lie in
     [lo, hi]. Each bound is (values, valid); a NULL bound is no evidence.
-    ``no_nulls`` marks units known to hold no NULL (t needs it: a NULL
-    row is never TRUE)."""
+    ``no_nulls`` marks units known to hold no NULL. One f rule per
+    operator (the numpy twin of ``filterspec._range_keep``); t is the
+    negated operator's f on a NULL-free unit (a NULL row is never TRUE)."""
+    from aisle_spark.filterspec import _NEGATE
+
     (mn, mn_ok), (mx, mx_ok) = lo, hi
 
     def lo_(o):
@@ -305,19 +308,16 @@ def _range_tri(op: str, lo, hi, no_nulls: np.ndarray, v):
     def hi_(o):
         return mx_ok & _cmp(mx, o, v)
 
-    if op == "eq":
-        return lo_("eq") & hi_("eq") & no_nulls, lo_("gt") | hi_("lt")
-    if op == "ne":
-        return (lo_("gt") | hi_("lt")) & no_nulls, lo_("eq") & hi_("eq") & no_nulls
-    if op == "lt":
-        return hi_("lt") & no_nulls, lo_("ge")
-    if op == "le":
-        return hi_("le") & no_nulls, lo_("gt")
-    if op == "gt":
-        return lo_("gt") & no_nulls, hi_("le")
-    if op == "ge":
-        return lo_("ge") & no_nulls, hi_("lt")
-    raise ValueError(op)  # pragma: no cover
+    f = {
+        "eq": lambda: lo_("gt") | hi_("lt"),
+        # as Catalyst's keep(ne): a NULL row keeps the unit
+        "ne": lambda: lo_("eq") & hi_("eq") & no_nulls,
+        "lt": lambda: lo_("ge"),
+        "le": lambda: lo_("gt"),
+        "gt": lambda: hi_("le"),
+        "ge": lambda: hi_("lt"),
+    }
+    return f[_NEGATE[op]]() & no_nulls, f[op]()
 
 
 def _bounds(u: _Units, col: str, lo: str, hi: str, kind: str):

@@ -3,34 +3,47 @@
 This is the engine's analog of aisle's pruning IR (`Expr`,
 /root/reference/src/expr.rs:94-165) and its row-group evaluators
 (/root/reference/src/prune/cmp.rs, in_list.rs, between.rs, is_null.rs,
-starts_with.rs, dictionary.rs). Every node evaluates against a block's
-stats columns to a Kleene tri-state, represented as a PAIR of null-free
-boolean Columns ``(definitely_true, definitely_false)``:
+starts_with.rs, dictionary.rs). Every node lowers against a block's
+stats columns to the two sides of a Kleene tri-state, each a boolean
+Column with Unknown mapped to True:
 
-    False  => prune the block
+    keep()      NOT definitely-false: False => prune the block
+    not_true()  NOT definitely-true:  False => every row matches
+                (the stats-only aggregates' "sure" blocks)
+
     True/Unknown => keep          (never skip data that might match —
                                    /root/reference/docs/architecture.md:8)
 
 Missing stats (all-null block, or a block written without stats) make the
-underlying comparisons NULL; every leaf wraps both sides in
-``coalesce(..., false)`` so NULL collapses to Unknown=keep, never to a
-wrong prune (the subtle Spark trap named in SURVEY.md §7.3: a bare NULL
-skip-condition inside ``filter`` would silently drop blocks).
+underlying comparisons NULL; every leaf spells that out as an explicit
+``(cmp OR stat IS NULL)`` disjunct (``_or_null``), so NULL collapses to
+Unknown=keep, never to a wrong prune (the subtle Spark trap named in
+SURVEY.md §7.3: a bare NULL skip-condition inside ``filter`` would
+silently drop blocks) — and, unlike a ``coalesce`` wrapper, stays
+translatable into the block files' parquet filter pushdown. The six
+comparison operators share one interval rule (``_range_keep``); the
+not_true side of ``x op v`` is the keep side of its negation
+(``_NEGATE``) or a NULL row.
 
-Connectives are Kleene (/root/reference/src/expr.rs:15-37):
-  and: t = all(t_i), f = any(f_i);  or: t = any(t_i), f = all(f_i)
-  not: swap(t, f) — Unknown is a fixed point.
+Connectives are Kleene (aisle's src/expr.rs:15-37), written as
+De Morgan duals:
+  keep(And)   = all keep_i        not_true(And) = any not_true_i
+  keep(Or)    = any keep_i        not_true(Or)  = all not_true_i
+  keep(Not x) = not_true(x)       not_true(Not x) = keep(x)
 
 The same AST lowers three ways:
   * ``keep_blocks()``   -> manifest filter Column (block pruning)
   * ``residual()``      -> exact row filter Column on the decoded frame
                            (aisle's RowFilter, /root/reference/src/row_filter.rs:50-312)
   * ``to_sql()``        -> ANSI SQL for the DuckDB oracle
+The numpy twin of keep()/not_true() (stat arrays off the JVM) is
+``chunkstats._tri``.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import operator
 from dataclasses import dataclass
 
 from pyspark.sql import Column
@@ -97,7 +110,7 @@ def truncate_stat_max(v, limit: int = STAT_TRUNC):
 
 
 # ---------------------------------------------------------------------------
-# tri-state algebra
+# evidence options
 # ---------------------------------------------------------------------------
 
 
@@ -114,34 +127,6 @@ class PruneOptions:
 
 
 DEFAULT_OPTIONS = PruneOptions()
-
-
-@dataclass(frozen=True)
-class Tri:
-    t: Column  # definitely true (null-free)
-    f: Column  # definitely false (null-free)
-
-
-def _c(x: Column) -> Column:
-    return F.coalesce(x, F.lit(False))
-
-
-def tri_and(parts: list[Tri]) -> Tri:
-    t = parts[0].t
-    f = parts[0].f
-    for p in parts[1:]:
-        t = t & p.t
-        f = f | p.f
-    return Tri(t, f)
-
-
-def tri_or(parts: list[Tri]) -> Tri:
-    t = parts[0].t
-    f = parts[0].f
-    for p in parts[1:]:
-        t = t | p.t
-        f = f & p.f
-    return Tri(t, f)
 
 
 # ---------------------------------------------------------------------------
@@ -190,9 +175,6 @@ class Spec:
         return Not(self)
 
     # -- interface --
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:  # block-level tri-state
-        raise NotImplementedError
-
     def residual(self) -> Column:  # exact row-level Column
         raise NotImplementedError
 
@@ -206,20 +188,19 @@ class Spec:
         """Manifest filter: keep unless definitely false
         (/root/reference/src/prune/api.rs:58-60 analog).
 
-        Built STRUCTURALLY as ``NOT f`` with null-handling expanded into
-        explicit ``(cmp OR col IS NULL)`` disjuncts at the leaves, never a
+        Built STRUCTURALLY, with null-handling expanded into explicit
+        ``(cmp OR col IS NULL)`` disjuncts at the leaves, never a
         ``coalesce`` wrapper: coalesce blocks Catalyst's data-source filter
         translation, and the whole point of the manifest being a parquet
         table is that these very comparisons ALSO prune the blocks table's
         own row groups (payload bytes of skipped blocks are then never
-        read). Semantics identical to ``~tri().f`` — tests assert both."""
+        read). It selects exactly the blocks the numpy evaluator
+        ``chunkstats.manifest_keep`` keeps — tests assert both."""
         return self.keep(opts)
 
-    # structural NOT-f (keep) and NOT-t (not definitely true), with
-    # Unknown mapping to True in both — the De Morgan duals of tri():
-    #   keep(And)=all keep_i      not_true(And)=any not_true_i
-    #   keep(Or)=any keep_i       not_true(Or)=all not_true_i
-    #   keep(Not x)=not_true(x)   not_true(Not x)=keep(x)
+    # NOT definitely-false (keep) and NOT definitely-true (not_true),
+    # Unknown => True in both; the connectives are De Morgan duals (see
+    # the module docstring)
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         raise NotImplementedError
 
@@ -235,21 +216,8 @@ def _sc(name: str) -> Column:
 
 
 def _stats(col: str):
-    return (
-        _sc(f"{col}__min"),
-        _sc(f"{col}__max"),
-        F.coalesce(_sc(f"{col}__nulls"), F.lit(0)),
-        F.col("n_rows").cast("long"),
-    )
-
-
-def _raw_stats(col: str):
-    return (
-        _sc(f"{col}__min"),
-        _sc(f"{col}__max"),
-        _sc(f"{col}__nulls"),
-        F.col("n_rows").cast("long"),
-    )
+    """(min, max, nulls) stat columns of ``col``, NULL where unrecorded."""
+    return _sc(f"{col}__min"), _sc(f"{col}__max"), _sc(f"{col}__nulls")
 
 
 def _or_null(cmp: Column, *operands: Column) -> Column:
@@ -259,6 +227,32 @@ def _or_null(cmp: Column, *operands: Column) -> Column:
     for c in operands:
         out = out | c.isNull()
     return out
+
+
+# one operator table: the comparison leaves' residuals and _range_keep
+_OPS = {
+    "eq": operator.eq, "ne": operator.ne, "lt": operator.lt,
+    "le": operator.le, "gt": operator.gt, "ge": operator.ge,
+}
+# x op v is definitely true where x _NEGATE[op] v is definitely false
+_NEGATE = {"eq": "ne", "ne": "eq", "lt": "ge", "le": "gt", "gt": "le", "ge": "lt"}
+
+
+def _range_keep(lo: Column, hi: Column, op: str, v: Column) -> Column:
+    """NOT definitely-false of ``x op v`` over values within [lo, hi]
+    (aisle's min/max window rules, src/prune/cmp.rs): a
+    NULL bound is Unknown and keeps. NULL rows are the caller's."""
+    if op == "eq":
+        return _or_null(lo <= v, lo) & _or_null(hi >= v, hi)
+    if op == "ne":
+        return _or_null(lo != v, lo) | _or_null(hi != v, hi)
+    if op in ("lt", "le"):
+        return _or_null(_OPS[op](lo, v), lo)
+    return _or_null(_OPS[op](hi, v), hi)
+
+
+def _has_nulls(nulls: Column) -> Column:
+    return _or_null(nulls != 0, nulls)
 
 
 def _dict_col(col: str) -> Column:
@@ -291,6 +285,20 @@ def _bloom_absent(colname: str, values: tuple[str, ...]) -> Column:
     return F.coalesce(absent_all, F.lit(False))
 
 
+def _interval_keep(lo: Column, hi: Column, nulls: Column, op: str, v: Column) -> Column:
+    """keep() of a two-sided comparison leaf: NOT definitely-false. ``ne``
+    also keeps a block with NULL rows, which makes ``keep(x != v)`` equal
+    ``keep(NOT x = v)``: both spellings prune the same blocks."""
+    out = _range_keep(lo, hi, op, v)
+    return out | _has_nulls(nulls) if op == "ne" else out
+
+
+def _interval_not_true(lo: Column, hi: Column, nulls: Column, op: str, v: Column) -> Column:
+    """not_true() of a two-sided comparison leaf: the keep side of the
+    negated operator, or a NULL row (never TRUE)."""
+    return _range_keep(lo, hi, _NEGATE[op], v) | _has_nulls(nulls)
+
+
 @dataclass(frozen=True)
 class Cmp(Spec):
     col: str
@@ -299,111 +307,26 @@ class Cmp(Spec):
 
     _SQL_OP = {"eq": "=", "ne": "<>", "lt": "<", "le": "<=", "gt": ">", "ge": ">="}
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        smin, smax, nulls, nrows = _stats(self.col)
-        v = F.lit(self.value)
-        no_nulls = nulls == 0
-        op = self.op
-        if op == "eq":
-            f = (smin > v) | (smax < v)
-            t = (smin == v) & (smax == v) & no_nulls
-        elif op == "ne":
-            f = (smin == v) & (smax == v) & no_nulls
-            t = ((smin > v) | (smax < v)) & no_nulls
-        elif op == "lt":
-            f = smin >= v
-            t = (smax < v) & no_nulls
-        elif op == "le":
-            f = smin > v
-            t = (smax <= v) & no_nulls
-        elif op == "gt":
-            f = smax <= v
-            t = (smin > v) & no_nulls
-        elif op == "ge":
-            f = smax < v
-            t = (smin >= v) & no_nulls
-        else:  # pragma: no cover
-            raise ValueError(op)
-        if op == "eq" and isinstance(self.value, (str, bytes)):
+    def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
+        out = _interval_keep(*_stats(self.col), self.op, F.lit(self.value))
+        if self.op == "eq" and isinstance(self.value, (str, bytes)):
             # dictionary definite-absence (/root/reference/src/prune/
             # dictionary.rs:8-70): value outside the exact per-block
-            # distinct set => every non-null row is F, null rows N —
-            # sound for the f-side invariant (f => no row evaluates TRUE)
-            # under any Not nesting, since Not swaps into the t-side
-            # invariant (t => no row evaluates FALSE)… which "all rows
-            # F-or-N" also satisfies after the swap maps F to T.
+            # distinct set => every non-null row is FALSE, null rows NULL
             if opts.use_dict:
                 d = _dict_col(self.col)
-                f = f | (d.isNotNull() & ~F.array_contains(d, self.value))
+                out = out & _or_null(F.array_contains(d, self.value), d)
             # bloom definite-absence (aisle BloomFilterEq,
             # /root/reference/src/prune/bloom.rs:9-54)
             if opts.use_bloom:
-                f = f | _bloom_absent(self.col, (self.value,))
-        return Tri(_c(t), _c(f))
-
-    def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, nulls, _ = _raw_stats(self.col)
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            out = _or_null(smin <= v, smin) & _or_null(smax >= v, smax)
-            if isinstance(self.value, (str, bytes)):
-                if opts.use_dict:
-                    d = _dict_col(self.col)
-                    out = out & _or_null(F.array_contains(d, self.value), d)
-                if opts.use_bloom:
-                    out = out & ~_bloom_absent(self.col, (self.value,))
-            return out
-        if op == "ne":
-            return (
-                _or_null(smin != v, smin)
-                | _or_null(smax != v, smax)
-                | _or_null(nulls != 0, nulls)
-            )
-        if op == "lt":
-            return _or_null(smin < v, smin)
-        if op == "le":
-            return _or_null(smin <= v, smin)
-        if op == "gt":
-            return _or_null(smax > v, smax)
-        if op == "ge":
-            return _or_null(smax >= v, smax)
-        raise ValueError(op)  # pragma: no cover
+                out = out & ~_bloom_absent(self.col, (self.value,))
+        return out
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, nulls, _ = _raw_stats(self.col)
-        v = F.lit(self.value)
-        has_nulls = _or_null(nulls != 0, nulls)
-        op = self.op
-        if op == "eq":
-            return (
-                _or_null(smin != v, smin) | _or_null(smax != v, smax) | has_nulls
-            )
-        if op == "ne":
-            return (
-                _or_null(smin <= v, smin) & _or_null(smax >= v, smax)
-            ) | has_nulls
-        if op == "lt":
-            return _or_null(smax >= v, smax) | has_nulls
-        if op == "le":
-            return _or_null(smax > v, smax) | has_nulls
-        if op == "gt":
-            return _or_null(smin <= v, smin) | has_nulls
-        if op == "ge":
-            return _or_null(smin < v, smin) | has_nulls
-        raise ValueError(op)  # pragma: no cover
+        return _interval_not_true(*_stats(self.col), self.op, F.lit(self.value))
 
     def residual(self) -> Column:
-        c = F.col(self.col)
-        v = F.lit(self.value)
-        return {
-            "eq": c == v,
-            "ne": c != v,
-            "lt": c < v,
-            "le": c <= v,
-            "gt": c > v,
-            "ge": c >= v,
-        }[self.op]
+        return _OPS[self.op](F.col(self.col), F.lit(self.value))
 
     def to_sql(self) -> str:
         return f"{self.col} {self._SQL_OP[self.op]} {_sql_lit(self.value)}"
@@ -420,9 +343,6 @@ class Between(Spec):
 
     def _parts(self) -> Spec:
         return And([Cmp(self.col, "ge", self.low), Cmp(self.col, "le", self.high)])
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return self._parts().tri(opts)
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return self._parts().keep(opts)
@@ -445,28 +365,16 @@ class InList(Spec):
     col: str
     values: tuple
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        # OR of Eq (short-circuit semantics come from the Kleene fold,
-        # /root/reference/src/prune/in_list.rs:6-45)
-        base = tri_or([Cmp(self.col, "eq", v).tri(opts) for v in self.values])
-        if opts.use_dict and all(isinstance(v, (str, bytes)) for v in self.values) and self.values:
-            d = _dict_col(self.col)
-            absent_all = d.isNotNull() & ~F.arrays_overlap(
-                d, F.array(*[F.lit(v) for v in self.values])
-            )
-            base = Tri(base.t, base.f | _c(absent_all))
-        return base
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, _, _ = _raw_stats(self.col)
-        parts = [
-            _or_null(smin <= F.lit(v), smin) & _or_null(smax >= F.lit(v), smax)
-            for v in self.values
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out | p
-        if all(isinstance(v, (str, bytes)) for v in self.values) and self.values:
+        # OR of eq over the values (aisle's src/prune/in_list.rs:6-45);
+        # an empty list is definitely false
+        if not self.values:
+            return F.lit(False)
+        smin, smax, _ = _stats(self.col)
+        out = _range_keep(smin, smax, "eq", F.lit(self.values[0]))
+        for v in self.values[1:]:
+            out = out | _range_keep(smin, smax, "eq", F.lit(v))
+        if all(isinstance(v, (str, bytes)) for v in self.values):
             if opts.use_dict:
                 d = _dict_col(self.col)
                 out = out & _or_null(
@@ -498,28 +406,15 @@ class IsNull(Spec):
     col: str
     negated: bool = False
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        _, _, nulls_raw, nrows = _stats(self.col)
-        nulls = _sc(f"{self.col}__nulls")  # keep NULL-able: missing stats => Unknown
-        t = nulls == nrows
-        f = nulls == 0
-        if self.negated:
-            t, f = f, t
-        return Tri(_c(t), _c(f))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         nulls = _sc(f"{self.col}__nulls")
-        nrows = F.col("n_rows").cast("long")
         if self.negated:  # prune iff nulls == n_rows (all null)
-            return _or_null(nulls != nrows, nulls)
-        return _or_null(nulls != 0, nulls)  # prune iff no nulls at all
+            return _or_null(nulls != F.col("n_rows").cast("long"), nulls)
+        return _has_nulls(nulls)  # prune iff no nulls at all
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        nulls = _sc(f"{self.col}__nulls")
-        nrows = F.col("n_rows").cast("long")
-        if self.negated:
-            return _or_null(nulls != 0, nulls)
-        return _or_null(nulls != nrows, nulls)
+        # never NULL: definitely true iff the opposite test is definitely false
+        return IsNull(self.col, not self.negated).keep(opts)
 
     def residual(self) -> Column:
         c = F.col(self.col)
@@ -534,33 +429,17 @@ class IsNull(Spec):
 
 @dataclass(frozen=True)
 class StartsWith(Spec):
+    """Prefix match as the range [p, next_prefix(p))
+    (aisle's src/prune/starts_with.rs:4-69); an all-U+10FFFF
+    prefix has no successor, and there ``s >= p`` alone is exact
+    (src/prune/strings.rs:13-27)."""
+
     col: str
     prefix: str
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        # prefix -> range rewrite [p, next_prefix(p))
-        # (/root/reference/src/prune/starts_with.rs:4-69)
-        smin, smax, nulls, _ = _stats(self.col)
-        if self.prefix == "":
-            # every non-null string starts with ""
-            return Tri(_c(nulls == 0), F.lit(False))
-        p = F.lit(self.prefix)
-        np_ = next_prefix(self.prefix)
-        f = smax < p
-        t = (smin >= p) & (nulls == 0)
-        if np_ is None:
-            # all-U+10FFFF prefix: s >= p  <=>  s startswith p, so the
-            # lower bound alone is exact (overflow case,
-            # /root/reference/src/prune/strings.rs:13-27)
-            pass
-        else:
-            f = f | (smin >= F.lit(np_))
-            t = t & (smax < F.lit(np_))
-        return Tri(_c(t), _c(f))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, _, _ = _raw_stats(self.col)
-        if self.prefix == "":
+        smin, smax, _ = _stats(self.col)
+        if self.prefix == "":  # every non-null string starts with ""
             return F.lit(True)
         out = _or_null(smax >= F.lit(self.prefix), smax)
         np_ = next_prefix(self.prefix)
@@ -569,8 +448,8 @@ class StartsWith(Spec):
         return out
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, nulls, _ = _raw_stats(self.col)
-        has_nulls = _or_null(nulls != 0, nulls)
+        smin, smax, nulls = _stats(self.col)
+        has_nulls = _has_nulls(nulls)
         if self.prefix == "":
             return has_nulls
         out = _or_null(smin < F.lit(self.prefix), smin) | has_nulls
@@ -597,12 +476,12 @@ class ArrayAny(Spec):
     (/root/reference/tests/prune_list_map.rs, src/compile.rs element
     aliases), pruned via the per-block ``{col}__elem_min/max`` stats.
 
-    Tri-state: the f-side (no row TRUE) follows from "no ELEMENT in the
-    block can satisfy", a pure interval test on element stats; the t-side
-    stays False (a row with an empty list evaluates FALSE, and stats
-    can't exclude empty lists), so Not(ArrayAny) conservatively keeps —
-    the same one-sidedness the reference's page algebra has for exists-
-    style predicates. Float element stats record max=NaN when a NaN is
+    One-sided: keep() follows from "no ELEMENT in the block can satisfy",
+    the interval rule over element stats; not_true() stays True (a row
+    with an empty list evaluates FALSE, and stats can't exclude empty
+    lists), so Not(ArrayAny) conservatively keeps — the same one-
+    sidedness the reference's page algebra has for exists-style
+    predicates. Float element stats record max=NaN when a NaN is
     present, and Spark evaluates NaN > v as TRUE, so NaN-bearing blocks
     are never skipped."""
 
@@ -610,65 +489,16 @@ class ArrayAny(Spec):
     op: str  # eq ne lt le gt ge
     value: object
 
-    def _estats(self):
-        return _sc(f"{self.col}__elem_min"), _sc(f"{self.col}__elem_max")
-
-    def _f(self) -> Column:
-        emin, emax = self._estats()
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            return (emin > v) | (emax < v)
-        if op == "ne":
-            return (emin == v) & (emax == v)
-        if op == "lt":
-            return emin >= v
-        if op == "le":
-            return emin > v
-        if op == "gt":
-            return emax <= v
-        if op == "ge":
-            return emax < v
-        raise ValueError(op)  # pragma: no cover
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), _c(self._f()))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        emin, emax = self._estats()
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            return _or_null(emin <= v, emin) & _or_null(emax >= v, emax)
-        if op == "ne":
-            return _or_null(emin != v, emin) | _or_null(emax != v, emax)
-        if op == "lt":
-            return _or_null(emin < v, emin)
-        if op == "le":
-            return _or_null(emin <= v, emin)
-        if op == "gt":
-            return _or_null(emax > v, emax)
-        if op == "ge":
-            return _or_null(emax >= v, emax)
-        raise ValueError(op)  # pragma: no cover
+        emin, emax = _sc(f"{self.col}__elem_min"), _sc(f"{self.col}__elem_max")
+        return _range_keep(emin, emax, self.op, F.lit(self.value))
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        return F.lit(True)  # t-side is never certain (empty lists)
+        return F.lit(True)  # never certain (empty lists)
 
     def residual(self) -> Column:
-        op = self.op
         v = F.lit(self.value)
-        return F.exists(
-            F.col(self.col),
-            lambda x: {
-                "eq": x == v,
-                "ne": x != v,
-                "lt": x < v,
-                "le": x <= v,
-                "gt": x > v,
-                "ge": x >= v,
-            }[op],
-        )
+        return F.exists(F.col(self.col), lambda x: _OPS[self.op](x, v))
 
     def to_sql(self) -> str:
         sqlop = Cmp._SQL_OP[self.op]
@@ -685,9 +515,9 @@ class ArrayAny(Spec):
 class ArrayLen(Spec):
     """``size(col) op value`` over a list column, pruned via the per-block
     ``{col}__len_min/len_max`` stats. Unlike ArrayAny this one is two-
-    sided: every non-null row has a definite length, so both tri sides
-    follow the ordinary Cmp interval rules (null rows excluded via the
-    null count, exactly as for scalar Cmp)."""
+    sided: every non-null row has a definite length, so keep() and
+    not_true() follow the scalar Cmp interval rules (null rows excluded
+    via the null count)."""
 
     col: str
     op: str
@@ -700,79 +530,14 @@ class ArrayLen(Spec):
             _sc(f"{self.col}__nulls"),
         )
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        smin, smax, nulls = self._stats()
-        v = F.lit(int(self.value))
-        no_nulls = F.coalesce(nulls, F.lit(0)) == 0
-        op = self.op
-        if op == "eq":
-            f = (smin > v) | (smax < v)
-            t = (smin == v) & (smax == v) & no_nulls
-        elif op == "ne":
-            f = (smin == v) & (smax == v) & no_nulls
-            t = ((smin > v) | (smax < v)) & no_nulls
-        elif op == "lt":
-            f, t = smin >= v, (smax < v) & no_nulls
-        elif op == "le":
-            f, t = smin > v, (smax <= v) & no_nulls
-        elif op == "gt":
-            f, t = smax <= v, (smin > v) & no_nulls
-        elif op == "ge":
-            f, t = smax < v, (smin >= v) & no_nulls
-        else:  # pragma: no cover
-            raise ValueError(op)
-        return Tri(_c(t), _c(f))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, nulls = self._stats()
-        v = F.lit(int(self.value))
-        op = self.op
-        if op == "eq":
-            return _or_null(smin <= v, smin) & _or_null(smax >= v, smax)
-        if op == "ne":
-            return (
-                _or_null(smin != v, smin)
-                | _or_null(smax != v, smax)
-                | _or_null(nulls != 0, nulls)
-            )
-        if op == "lt":
-            return _or_null(smin < v, smin)
-        if op == "le":
-            return _or_null(smin <= v, smin)
-        if op == "gt":
-            return _or_null(smax > v, smax)
-        if op == "ge":
-            return _or_null(smax >= v, smax)
-        raise ValueError(op)  # pragma: no cover
+        return _interval_keep(*self._stats(), self.op, F.lit(int(self.value)))
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        smin, smax, nulls = self._stats()
-        v = F.lit(int(self.value))
-        has_nulls = _or_null(nulls != 0, nulls)
-        op = self.op
-        if op == "eq":
-            return _or_null(smin != v, smin) | _or_null(smax != v, smax) | has_nulls
-        if op == "ne":
-            return (
-                _or_null(smin <= v, smin) & _or_null(smax >= v, smax)
-            ) | has_nulls
-        if op == "lt":
-            return _or_null(smax >= v, smax) | has_nulls
-        if op == "le":
-            return _or_null(smax > v, smax) | has_nulls
-        if op == "gt":
-            return _or_null(smin <= v, smin) | has_nulls
-        if op == "ge":
-            return _or_null(smin < v, smin) | has_nulls
-        raise ValueError(op)  # pragma: no cover
+        return _interval_not_true(*self._stats(), self.op, F.lit(int(self.value)))
 
     def residual(self) -> Column:
-        c = F.size(F.col(self.col))
-        v = F.lit(int(self.value))
-        return {
-            "eq": c == v, "ne": c != v, "lt": c < v,
-            "le": c <= v, "gt": c > v, "ge": c >= v,
-        }[self.op]
+        return _OPS[self.op](F.size(F.col(self.col)), F.lit(int(self.value)))
 
     def to_sql(self) -> str:
         return f"len({self.col}) {Cmp._SQL_OP[self.op]} {int(self.value)}"
@@ -793,9 +558,6 @@ class Like(Spec):
 
     col: str
     pattern: str
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), F.lit(False))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
@@ -825,9 +587,6 @@ class Regexp(Spec):
 
     col: str
     pattern: str
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(False), F.lit(False))
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
@@ -859,7 +618,7 @@ class MapKeyCmp(Spec):
     keys, kmin/kmax), key)`` — pure Catalyst, no Python in the manifest
     filter. All three stats are NULL above MAP_KEYS_MAX keys (Unknown).
     One-sided like ArrayAny: a row without the key evaluates NULL, and
-    stats cannot exclude key-less rows, so the t-side is never certain
+    stats cannot exclude key-less rows, so not_true() is always True
     and ``Not(MapKeyCmp)`` conservatively keeps.
 
     ``sql_expr`` optionally overrides the oracle-side access expression
@@ -879,65 +638,19 @@ class MapKeyCmp(Spec):
         kmax = F.element_at(F.map_from_arrays(keys, _sc(f"{self.col}__kmax")), k)
         return keys, kmin, kmax
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        keys, kmin, kmax = self._kstats()
-        absent = keys.isNotNull() & ~F.array_contains(keys, F.lit(self.key))
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            rng = (kmin > v) | (kmax < v)
-        elif op == "ne":
-            # all present values == v => ne is FALSE for key-bearing rows
-            # and NULL for the rest: no row TRUE (null values for the key
-            # evaluate NULL too, so the min==max==v evidence stays sound)
-            rng = (kmin == v) & (kmax == v)
-        elif op == "lt":
-            rng = kmin >= v
-        elif op == "le":
-            rng = kmin > v
-        elif op == "gt":
-            rng = kmax <= v
-        elif op == "ge":
-            rng = kmax < v
-        else:  # pragma: no cover
-            raise ValueError(op)
-        return Tri(F.lit(False), _c(absent | rng))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         keys, kmin, kmax = self._kstats()
-        out = _or_null(F.array_contains(keys, F.lit(self.key)), keys)
-        v = F.lit(self.value)
-        op = self.op
-        if op == "eq":
-            return out & _or_null(kmin <= v, kmin) & _or_null(kmax >= v, kmax)
-        if op == "ne":
-            return out & (_or_null(kmin != v, kmin) | _or_null(kmax != v, kmax))
-        if op == "lt":
-            return out & _or_null(kmin < v, kmin)
-        if op == "le":
-            return out & _or_null(kmin <= v, kmin)
-        if op == "gt":
-            return out & _or_null(kmax > v, kmax)
-        if op == "ge":
-            return out & _or_null(kmax >= v, kmax)
-        raise ValueError(op)  # pragma: no cover
+        present = _or_null(F.array_contains(keys, F.lit(self.key)), keys)
+        return present & _range_keep(kmin, kmax, self.op, F.lit(self.value))
 
     def not_true(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
-        return F.lit(True)  # t-side never certain (key-less rows are NULL)
+        return F.lit(True)  # never certain (key-less rows are NULL)
 
     def residual(self) -> Column:
         # try_element_at: missing key -> NULL (plain element_at THROWS
         # under Spark 4's default ANSI mode)
         c = F.try_element_at(F.col(self.col), F.lit(self.key))
-        v = F.lit(self.value)
-        return {
-            "eq": c == v,
-            "ne": c != v,
-            "lt": c < v,
-            "le": c <= v,
-            "gt": c > v,
-            "ge": c >= v,
-        }[self.op]
+        return _OPS[self.op](c, F.lit(self.value))
 
     def to_sql(self) -> str:
         esc = self.key.replace("'", "''")
@@ -951,9 +664,6 @@ class MapKeyCmp(Spec):
 @dataclass(frozen=True)
 class And(Spec):
     parts: list
-
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return tri_and([p.tri(opts) for p in self.parts])
 
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         out = self.parts[0].keep(opts)
@@ -984,9 +694,6 @@ class And(Spec):
 class Or(Spec):
     parts: list
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return tri_or([p.tri(opts) for p in self.parts])
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         out = self.parts[0].keep(opts)
         for p in self.parts[1:]:
@@ -1016,10 +723,6 @@ class Or(Spec):
 class Not(Spec):
     inner: Spec
 
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        i = self.inner.tri(opts)
-        return Tri(i.f, i.t)
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return self.inner.not_true(opts)
 
@@ -1038,9 +741,6 @@ class Not(Spec):
 
 @dataclass(frozen=True)
 class AlwaysTrue(Spec):
-    def tri(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Tri:
-        return Tri(F.lit(True), F.lit(False))
-
     def keep(self, opts: PruneOptions = DEFAULT_OPTIONS) -> Column:
         return F.lit(True)
 
@@ -1081,8 +781,8 @@ def has_naive_datetime(spec: Spec) -> bool:
     """True when the predicate carries a tz-NAIVE datetime literal.
     ``F.lit`` converts those with the DRIVER PROCESS time zone, so a
     non-UTC driver would compare a shifted instant against the engine's
-    UTC-stored stats — ``scan()`` refuses that combination outright
-    (VERDICT r2 #9). tz-aware literals are safe everywhere."""
+    UTC-stored stats — ``scan()`` warns about that combination (VERDICT
+    r2 #9). tz-aware literals are safe everywhere."""
     naive = lambda v: isinstance(v, _dt.datetime) and v.tzinfo is None  # noqa: E731
     if isinstance(spec, Cmp):
         return naive(spec.value)

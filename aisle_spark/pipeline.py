@@ -1125,7 +1125,8 @@ def scan(
 # Stats-only aggregates. All seven public entry points run one plan
 # (_stats_aggregate): a block whose evidence proves every row matches
 # (``NOT not_true()`` — aisle's definitely-true side, the De Morgan dual
-# of keep(), null-guarded at the leaves), whose group column holds one
+# of keep(), null-guarded at the leaves and, under a Not, by
+# _negation_guard), whose group column holds one
 # value, and whose needed stats are recorded answers from those stats
 # without touching a payload byte; every other kept block (the boundary)
 # decodes and aggregates exactly, and the two partial results merge.
@@ -1264,6 +1265,36 @@ _STATS_OPS = {
 }
 
 
+def _negation_guard(blocks: DataFrame, where: Spec) -> Column:
+    """The extra sure condition a ``Not`` in ``where`` needs. Under a Not,
+    ``NOT not_true()`` proves only that no row is FALSE: a row whose
+    predicate is NULL stays NULL and does not match. So the block is sure
+    only when no column of ``where`` holds a NULL, and never when a Not
+    covers an ArrayAny or MapKeyCmp (an element or key the stats cannot
+    see makes the row NULL)."""
+    from aisle_spark.filterspec import And, ArrayAny, MapKeyCmp, Not, Or
+
+    def nodes(spec):
+        yield spec
+        if isinstance(spec, (And, Or)):
+            for p in spec.parts:
+                yield from nodes(p)
+        elif isinstance(spec, Not):
+            yield from nodes(spec.inner)
+
+    negated = [n.inner for n in nodes(where) if isinstance(n, Not)]
+    if not negated:
+        return F.lit(True)
+    if any(isinstance(x, (ArrayAny, MapKeyCmp)) for n in negated for x in nodes(n)):
+        return F.lit(False)
+    guard = F.lit(True)
+    for c in sorted(where.columns()):
+        if f"{c}__nulls" not in blocks.columns:
+            return F.lit(False)
+        guard = guard & (F.coalesce(F.col(f"`{c}__nulls`"), F.lit(-1)) == 0)
+    return guard
+
+
 def _stats_aggregate(
     blocks: DataFrame,
     schema: pa.Schema,
@@ -1308,7 +1339,7 @@ def _stats_aggregate(
         where = parse_where(where)
     opts = opts or DEFAULT_OPTIONS
     if where is not None:
-        sure = sure & ~where.not_true(opts)
+        sure = sure & ~where.not_true(opts) & _negation_guard(blocks, where)
 
     def stat(suffix: str) -> Column:
         # a table written before a stat existed (no __sum) gets a typed

@@ -162,16 +162,17 @@ class TestPruning:
             assert got == exp, f"{spec!r}: {len(got)} vs {len(exp)}"
         blocks.unpersist()
 
-    def test_tri_matches_keep_duals(self, spark):
+    def test_keep_matches_manifest_keep(self, spark):
+        """Catalyst keep() and the numpy evaluator select the same blocks."""
+        from tests.test_pipeline import _kept, _manifest_kept
+
         df, blocks, schema = self._blocks(spark)
         for spec in [
             col("props").map_key("k").__le__(500),
             ~(col("props").map_key("key_0") == 3),
             col("props").map_key("nope") > 0,
         ]:
-            t = blocks.filter(~spec.tri().f).count()
-            k = blocks.filter(spec.keep_blocks()).count()
-            assert t == k
+            assert _kept(blocks, spec) == _manifest_kept(blocks, spec, schema)
         blocks.unpersist()
 
 

@@ -12,6 +12,7 @@ from aisle_spark.filterspec import col
 from aisle_spark.pipeline import encode_table, read_encoded, scan, write_encoded
 from aisle_spark.schema import (
     TOKEN_SCHEMA,
+    blocks_arrow_schema,
     blocks_spark_schema,
     specs_for_schema,
     synth_batch,
@@ -41,6 +42,22 @@ def _kept(blocks, spec):
     return sorted(
         r.block_id for r in blocks.filter(spec.keep_blocks()).select("block_id").collect()
     )
+
+
+def _manifest_kept(frame, spec, schema=TOKEN_SCHEMA):
+    """block_ids the numpy evaluator ``chunkstats.manifest_keep`` keeps
+    over ``frame``'s stat columns, cast to the block schema's types as
+    the DataSource planner reads them."""
+    from aisle_spark.chunkstats import manifest_keep, stat_columns
+    from aisle_spark.filterspec import utc_normalize
+
+    specs = specs_for_schema(schema)
+    target = blocks_arrow_schema(specs)
+    cols = ["block_id", "n_rows", *sorted(stat_columns(spec) & set(frame.columns))]
+    t = frame.select(*[f"`{c}`" for c in cols]).toArrow()
+    t = t.cast(pa.schema([target.field(c) for c in cols]))
+    keep = manifest_keep(utc_normalize(spec), t, {s.name: s for s in specs})
+    return sorted(t.column("block_id").filter(pa.array(keep)).to_pylist())
 
 
 class TestBlockSkipCounts:
@@ -103,6 +120,20 @@ class TestBlockSkipCounts:
         blocks = _two_block_manifest(spark)
         assert _kept(blocks, col("n_tok").is_null()) == []  # no nulls anywhere
         assert _kept(blocks, col("n_tok").is_not_null()) == [0, 1]
+
+
+def test_empty_in_list_is_definitely_false(spark):
+    """``x IN ()`` matches no row: keep() prunes every block, as the numpy
+    evaluator does, and its negation keeps every block."""
+    from aisle_spark.pipeline import scan_count
+
+    blocks = _two_block_manifest(spark)
+    spec = col("source").isin()
+    assert _kept(blocks, spec) == _manifest_kept(blocks, spec) == []
+    assert _kept(blocks, ~spec) == _manifest_kept(blocks, ~spec) == [0, 1]
+    assert scan(blocks, TOKEN_SCHEMA, where=spec).count() == 0
+    assert scan_count(blocks, TOKEN_SCHEMA, where=spec).collect()[0].cnt == 0
+    assert scan(blocks, TOKEN_SCHEMA, where=~spec).count() == 10
 
 
 class TestUnknownKeeps:
@@ -191,6 +222,36 @@ class TestEndToEnd:
         out = scan(blocks2, schema2, where=col("source") == "books")
         assert out.count() == df.filter("source = 'books'").count()
 
+    def test_keep_pushed_into_block_file_scan(self, spark, tmp_path):
+        """keep() spells Unknown as ``cmp OR stat IS NULL``, never as a
+        coalesce, so Spark pushes its min/max leaves into the parquet scan
+        of the block files (the dictionary and bloom leaves stay in the
+        Filter above it)."""
+        import contextlib
+        import io
+
+        df = spark.createDataFrame(pa.Table.from_batches([synth_batch(0, 1000)]))
+        path = str(tmp_path / "enc")
+        write_encoded(encode_table(df, parts=2), path, TOKEN_SCHEMA)
+        blocks, schema = read_encoded(spark, path)
+
+        def pushed(where):
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                scan(blocks, schema, where=where).explain(mode="formatted")
+            return [ln for ln in buf.getvalue().splitlines() if "PushedFilters:" in ln]
+
+        assert pushed(col("source") == "code") == [
+            "PushedFilters: [Or(LessThanOrEqual(source__min,code),IsNull(source__min)), "
+            "Or(GreaterThanOrEqual(source__max,code),IsNull(source__max))]"
+        ]
+        assert pushed("n_tok BETWEEN 1000 AND 2000 AND source = 'books'") == [
+            "PushedFilters: [Or(GreaterThanOrEqual(n_tok__max,1000),IsNull(n_tok__max)), "
+            "Or(LessThanOrEqual(n_tok__min,2000),IsNull(n_tok__min)), "
+            "Or(LessThanOrEqual(source__min,books),IsNull(source__min)), "
+            "Or(GreaterThanOrEqual(source__max,books),IsNull(source__max))]"
+        ]
+
 
 class TestDirectEncode:
     """encode_files_direct: tasks write their own block files."""
@@ -230,10 +291,11 @@ class TestDirectEncode:
         blocks.unpersist()
 
 
-class TestKeepEqualsTri:
-    """The pushdown-friendly structural keep() must agree with the
-    coalesce-based tri-state reference implementation on every predicate
-    shape, including missing-stats blocks."""
+class TestKeepEqualsNumpy:
+    """The pushdown-friendly Catalyst keep() must select exactly the
+    blocks of the independent numpy evaluator (``chunkstats.
+    manifest_keep``) on every predicate shape, including missing-stats
+    blocks."""
 
     SPECS_TO_CHECK = [
         col("n_tok") > 9,
@@ -258,7 +320,7 @@ class TestKeepEqualsTri:
         ~(col("doc_id").startswith("web")),
     ]
 
-    def test_keep_matches_not_f(self, spark):
+    def test_keep_matches_manifest_keep(self, spark):
         from pyspark.sql import functions as F
 
         blocks = _two_block_manifest(spark)
@@ -270,15 +332,9 @@ class TestKeepEqualsTri:
             )
         for frame in (blocks, damaged):
             for spec in self.SPECS_TO_CHECK:
-                a = sorted(
-                    r.block_id
-                    for r in frame.filter(spec.keep_blocks()).select("block_id").collect()
-                )
-                b = sorted(
-                    r.block_id
-                    for r in frame.filter(~spec.tri().f).select("block_id").collect()
-                )
-                assert a == b, f"keep() != ~tri().f for {spec!r}: {a} vs {b}"
+                a = _kept(frame, spec)
+                b = _manifest_kept(frame, spec)
+                assert a == b, f"keep() != manifest_keep for {spec!r}: {a} vs {b}"
 
 
 class TestPruneReport:

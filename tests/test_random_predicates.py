@@ -177,7 +177,7 @@ def _rand_typed_spec(rng: random.Random, depth: int = 2) -> Spec:
 
 @pytest.mark.parametrize("seed", [11, 12])
 def test_random_predicates_sound_typed(spark, seed):
-    from aisle_spark.pipeline import arrow_schema_of
+    from aisle_spark.pipeline import arrow_schema_of, scan_count
 
     rng = random.Random(seed)
     df = _typed_df(spark).cache()
@@ -193,5 +193,7 @@ def test_random_predicates_sound_typed(spark, seed):
         g = {r.id for r in got.collect()}
         e = {r.id for r in exp.collect()}
         assert g == e, f"seed={seed} mismatch for {spec!r}: extra={g - e} missing={e - g}"
+        cnt = scan_count(blocks, schema, where=spec).collect()[0].cnt
+        assert cnt == len(e), f"seed={seed} scan_count {cnt} != {len(e)} for {spec!r}"
     blocks.unpersist()
     df.unpersist()

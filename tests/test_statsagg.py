@@ -603,3 +603,55 @@ def test_result_types_independent_of_path(spark, table, name):
                 assert (n == 0) == (where == impossible), (label, where)
             else:
                 assert n == 1, (label, where)
+
+
+_NOT_PROBE_AGGS = {
+    "scan_count": ((), ["count(1) AS cnt"]),
+    "scan_sum": (("id",), ["sum(id) AS total"]),
+    "scan_avg": (("id",), ["avg(id) AS avg"]),
+    "scan_min_max": (("id",), ["min(id) AS mn", "max(id) AS mx"]),
+    "scan_count_by": (("g",), ["count(1) AS cnt"]),
+    "scan_sum_by": (("g", "id"), ["sum(id) AS total"]),
+    "scan_min_max_by": (("g", "id"), ["min(id) AS mn", "max(id) AS mx"]),
+}
+
+
+@pytest.fixture(scope="module")
+def not_probes(spark):
+    """Two tables on which a NOT leaves rows whose predicate is NULL:
+    ``v`` is NULL on every 5th row under ``NOT (v < 5)``, and no map row
+    holds the key ``zz`` under ``NOT (props['zz'] > 1)``. Every block's
+    group ``g`` is single-valued, so the grouped aggregates have sure
+    blocks too."""
+    nulls = spark.range(2000).selectExpr(
+        "id", "cast(id div 1024 AS int) AS g",
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE id + 10 END AS v",
+    )
+    maps = spark.range(1000).selectExpr(
+        "id", "cast(id div 512 AS int) AS g", "map('k', id) AS props"
+    )
+    probes = []
+    for df, where in (
+        (nulls, ~(col("v") < 5)),
+        (maps, ~(col("props").map_key("zz") > 1)),
+    ):
+        blocks = encode_table(df, parts=1, block_rows=512, sort_cols=["id"]).persist()
+        probes.append((df, blocks, arrow_schema_of(df), where))
+    yield probes
+    for _df, blocks, _schema, _where in probes:
+        blocks.unpersist()
+
+
+@pytest.mark.parametrize("name", sorted(_NOT_PROBE_AGGS))
+def test_not_counts_only_true_rows(spark, not_probes, name):
+    """Under a NOT, a block with no FALSE row may still hold NULL rows,
+    which do not match: every aggregate equals Spark's over the filter."""
+    import aisle_spark.pipeline as pl
+
+    args, aggs = _NOT_PROBE_AGGS[name]
+    keys = args[:1] if name.endswith("_by") else ()
+    for df, blocks, schema, where in not_probes:
+        got = sorted(map(tuple, getattr(pl, name)(blocks, schema, *args, where=where).collect()))
+        ref = df.filter(where.residual()).groupBy(*keys).agg(*map(F.expr, aggs))
+        exp = sorted(map(tuple, ref.collect()))
+        assert got == exp, (name, where)
