@@ -22,8 +22,10 @@ contract):
   still has surviving blocks, carrying the survivors' row numbers.
   Blocks that are definitely-false never get a task scheduled.
 * ``read`` decodes surviving blocks through the very same plan the
-  ``scan()`` path uses (``pipeline._decode_fn``: chunk-level skip +
-  in-reader row mask + struct reassembly) and yields Arrow batches.
+  ``scan()`` path uses (``schema.read_plan``: the projection and the
+  predicate leaves decide the decode set and the partial-struct output)
+  and decoder (``pipeline._decode_fn``: chunk-level skip + in-reader row
+  mask + struct reassembly), and yields Arrow batches.
 
 Write path: each task slices its Arrow stream into sorted blocks
 (``pipeline._order_and_slice`` + ``blocks.encode_block``), writes ONE
@@ -389,14 +391,14 @@ def coerce_temporals(spec: Spec, arrow_schema: pa.Schema) -> Spec:
     second surface of the date/timestamp domain mix)."""
     import datetime as _dt
 
-    from aisle_spark.filterspec import Between, InList, Or
+    from aisle_spark.filterspec import _map_literals
     from aisle_spark.schema import specs_for_schema
 
     ts_cols = {
         s.name for s in specs_for_schema(arrow_schema) if s.kind == "timestamp"
     }
 
-    def fix(v, c):
+    def fix(c, v):
         if (
             c in ts_cols
             and isinstance(v, _dt.date)
@@ -405,92 +407,23 @@ def coerce_temporals(spec: Spec, arrow_schema: pa.Schema) -> Spec:
             return _dt.datetime(v.year, v.month, v.day)
         return v
 
-    def walk(node: Spec) -> Spec:
-        if isinstance(node, Cmp):
-            return Cmp(node.col, node.op, fix(node.value, node.col))
-        if isinstance(node, Between):
-            return Between(
-                node.col, fix(node.low, node.col), fix(node.high, node.col)
-            )
-        if isinstance(node, InList):
-            return InList(node.col, tuple(fix(v, node.col) for v in node.values))
-        if isinstance(node, And):
-            return And([walk(p) for p in node.parts])
-        if isinstance(node, Or):
-            return Or([walk(p) for p in node.parts])
-        if isinstance(node, Not):
-            return Not(walk(node.inner))
-        return node
-
-    return walk(spec)
+    return _map_literals(spec, fix)
 
 
-def _project_schema(arrow: pa.Schema, columns: list[str] | None) -> pa.Schema:
-    """Projected output schema; dotted names ("meta.lang") select nested
-    leaves and produce PARTIAL structs — the reader then decodes only
-    those leaves (plus validity chains), the leaf-granular
-    ProjectionMask semantics shared with ``scan(columns=...)`` (r4)."""
-    if not columns:
-        return arrow
-    from aisle_spark.schema import leaves_under, specs_for_schema
+def _open_read(path: str, where: str | None):
+    """What both readers' constructors share: (fs, fs-local path, sidecar
+    schema, the validated and temporal-coerced ``where`` option Spec or
+    None)."""
+    fs, root = _fs_of(path)
+    arrow_schema = _read_sidecar_schema(fs, root)
+    exact = None
+    if where:
+        from aisle_spark.sqlcompile import parse_where
 
-    by_name = {arrow.field(i).name: arrow.field(i) for i in range(len(arrow))}
-    spec_names = {s.name for s in specs_for_schema(arrow)}
-    needed: dict[str, set] = {}
-    order: list[str] = []
-    whole: set[str] = set()
-    for c in columns:
-        if c in by_name:
-            top = c
-            whole.add(c)
-        elif "." in c:
-            top = c.split(".")[0]
-            tfld = by_name.get(top)
-            if tfld is None or not pa.types.is_struct(tfld.type):
-                raise ValueError(f"columns option: unknown columns [{c!r}]")
-            try:
-                ls = leaves_under(arrow, c)
-            except KeyError:
-                raise ValueError(f"columns option: unknown columns [{c!r}]")
-            parts = c.split(".")
-            chain = [
-                ".".join(parts[:d]) + ".__defined"
-                for d in range(1, len(parts))
-                if ".".join(parts[:d]) + ".__defined" in spec_names
-            ]
-            needed.setdefault(top, set()).update([*ls, *chain])
-        else:
-            raise ValueError(f"columns option: unknown columns [{c!r}]")
-        if top not in order:
-            order.append(top)
-    from aisle_spark.pipeline import _partial_struct_type
-
-    fields = []
-    for top in order:
-        f = by_name[top]
-        if top in whole or not pa.types.is_struct(f.type):
-            fields.append(f)
-        else:
-            fields.append(
-                pa.field(top, _partial_struct_type(f, "", needed[top]), f.nullable)
-            )
-    return pa.schema(fields)
-
-
-def _partial_leaves(spec_names: set, fld: pa.Field, prefix: str = "") -> list[str]:
-    """Dotted leaf + validity-leaf names described by a (possibly
-    PARTIAL) struct field — the decode set of exactly what the field's
-    type carries, nothing more."""
-    name = prefix + fld.name
-    if not pa.types.is_struct(fld.type):
-        return [name]
-    out = []
-    d = f"{name}.__defined"
-    if d in spec_names:
-        out.append(d)
-    for i in range(fld.type.num_fields):
-        out += _partial_leaves(spec_names, fld.type.field(i), name + ".")
-    return out
+        exact = parse_where(where)
+        _validate_exact_where(exact, arrow_schema)
+        exact = coerce_temporals(exact, arrow_schema)
+    return fs, root, arrow_schema, exact
 
 
 class AisleReader(DataSourceReader):
@@ -498,19 +431,11 @@ class AisleReader(DataSourceReader):
                  columns: list[str] | None = None,
                  version: int | None = None):
         self.version = version
-        self.fs, self.path = _fs_of(path)
-        self.arrow_schema = _read_sidecar_schema(self.fs, self.path)
-        self.out_schema = _project_schema(self.arrow_schema, columns)
+        self.fs, self.path, self.arrow_schema, self.exact_where = _open_read(
+            path, where
+        )
+        self.columns = columns
         self.spec: Spec | None = None
-        self.exact_where: Spec | None = None
-        if where:
-            from aisle_spark.sqlcompile import parse_where
-
-            self.exact_where = parse_where(where)
-            _validate_exact_where(self.exact_where, self.arrow_schema)
-            self.exact_where = coerce_temporals(
-                self.exact_where, self.arrow_schema
-            )
 
     def _prune_spec(self) -> Spec | None:
         parts = [s for s in (self.spec, self.exact_where) if s is not None]
@@ -586,7 +511,7 @@ class AisleReader(DataSourceReader):
         for path, rows in partition.entries():  # packed small files
             yield from _decode_file(
                 self.arrow_schema,
-                self.out_schema,
+                self.columns,
                 path,
                 rows,
                 self._prune_spec(),
@@ -597,7 +522,7 @@ class AisleReader(DataSourceReader):
 
 def _decode_file(
     schema: pa.Schema,
-    out_schema: pa.Schema,
+    columns: list[str] | None,
     path: str,
     rows: tuple | None,
     prune: Spec | None,
@@ -605,50 +530,22 @@ def _decode_file(
     fs=None,
 ) -> Iterator[pa.RecordBatch]:
     """Decode one committed block file (optionally only the ``rows``
-    manifest rows) into Arrow batches of ``out_schema`` — the shared read
-    engine of the batch reader and the streaming reader."""
+    manifest rows) into Arrow batches of the ``columns`` projection — the
+    shared read engine of the batch reader and the streaming reader.
+    Predicate-only columns decode for the mask and drop before yield;
+    Spark pushes filters only on columns of the projected schema, so no
+    struct ever carries a predicate-only child here."""
     import pyarrow.parquet as pq
 
     from aisle_spark.pipeline import _decode_fn
-    from aisle_spark.schema import chunk_stat_columns, specs_for_schema
+    from aisle_spark.schema import read_plan, specs_for_schema
 
-    specs = specs_for_schema(schema)
     where = utc_normalize(prune) if prune is not None else None
     exact = utc_normalize(exact_where) if exact_where is not None else None
-
-    # decode set = projected leaves ∪ predicate leaves (the columns
-    # option prunes decode like scan(columns=...); predicate-only
-    # leaves ride along for the mask and are dropped before yield)
-    from aisle_spark.schema import leaves_under
-
-    out_names = [out_schema.field(i).name for i in range(len(out_schema))]
-    pred_cols = sorted(where.columns()) if where is not None else []
-    spec_names = {s.name for s in specs}
-    flat_need: list[str] = []
-    plan = []
-    for i in range(len(out_schema)):
-        fld = out_schema.field(i)
-        if pa.types.is_struct(fld.type):
-            # decode exactly the leaves the (possibly partial) struct
-            # type carries — dotted `columns` projections never touch
-            # the un-projected siblings' payloads
-            ls = _partial_leaves(spec_names, fld)
-            flat_need.extend(ls)
-            plan.append(("struct", fld, set(ls)))
-        else:
-            flat_need.extend(leaves_under(schema, fld.name))
-            plan.append(("leaf", fld.name))
-    for c in pred_cols:
-        if c not in flat_need:
-            flat_need.append(c)
-            if "." not in c:
-                plan.append(("leaf", c))
-    flat_need = [s.name for s in specs if s.name in set(flat_need)]
-    payload_cols = [f"{c}__payload" for c in flat_need]
-    payload_cols += chunk_stat_columns(specs, pred_cols)
+    plan = read_plan(schema, columns, where.columns() if where is not None else ())
     if rows is None:
         src = fs.open_input_file(path) if fs is not None else path
-        tbl = pq.read_table(src, columns=payload_cols)
+        tbl = pq.read_table(src, columns=plan.columns)
     else:
         # row-group-granular I/O: both writers emit one row group per
         # ~64 blocks, so the payload bytes of pruned blocks in other
@@ -663,7 +560,7 @@ def _decode_file(
         wanted = sorted(
             {bisect.bisect_right(bounds, r) - 1 for r in rows}
         )
-        tbl = pf.read_row_groups(wanted, columns=payload_cols)
+        tbl = pf.read_row_groups(wanted, columns=plan.columns)
         offset = {g: bounds[g] for g in wanted}
         local_base: dict[int, int] = {}
         acc = 0
@@ -677,8 +574,9 @@ def _decode_file(
                 for r in rows
             ]
         )
-    decode, dec_schema = _decode_fn(specs, flat_need, plan, where)
-    project = list(dec_schema.names) != out_names
+    decode = _decode_fn(specs_for_schema(schema), plan, where)
+    out_names = plan.out.names
+    project = plan.decoded.names != out_names
     for batch in tbl.to_batches():
         for out in decode(iter([batch])):
             if exact is not None and out.num_rows:
@@ -723,10 +621,10 @@ class AisleStreamReader(DataSourceStreamReader):
                  columns: list[str] | None = None,
                  max_files_per_trigger: int | None = None,
                  max_bytes_per_trigger: int | None = None):
-        self.fs, self.path = _fs_of(path)
-        self.arrow_schema = _read_sidecar_schema(self.fs, self.path)
-        self.out_schema = _project_schema(self.arrow_schema, columns)
-        self.exact_where: Spec | None = None
+        self.fs, self.path, self.arrow_schema, self.exact_where = _open_read(
+            path, where
+        )
+        self.columns = columns
         self._max_files = max_files_per_trigger
         self._max_bytes = max_bytes_per_trigger
         # last offset this reader planned or committed — the anchor the
@@ -734,14 +632,6 @@ class AisleStreamReader(DataSourceStreamReader):
         # first latestOffset() then runs uncapped (the Python stream API
         # gives latestOffset no start offset), every later one is capped.
         self._cursor: dict | None = None
-        if where:
-            from aisle_spark.sqlcompile import parse_where
-
-            self.exact_where = parse_where(where)
-            _validate_exact_where(self.exact_where, self.arrow_schema)
-            self.exact_where = coerce_temporals(
-                self.exact_where, self.arrow_schema
-            )
 
     def initialOffset(self) -> dict:
         self._cursor = {"version": 0}
@@ -1003,7 +893,7 @@ class AisleStreamReader(DataSourceStreamReader):
             return
         yield from _decode_file(
             self.arrow_schema,
-            self.out_schema,
+            self.columns,
             partition.path,
             None,
             self.exact_where,
@@ -1423,9 +1313,10 @@ class AisleDataSource(DataSource):
     * ``columns`` — read path: comma-separated projection; only these
       payloads decode (the Python DataSource contract has no
       column-pruning pushdown, so projection is an option, like
-      ``scan(columns=...)``). Dotted names (``meta.lang``) select
-      nested LEAVES: the reader yields a partial struct and never
-      touches un-projected siblings' payloads.
+      ``scan(columns=...)``; both resolve it with ``schema.read_plan``).
+      Dotted names (``meta.lang``) select nested LEAVES: the reader
+      yields a partial struct and never touches un-projected siblings'
+      payloads. An unknown name raises ValueError.
     * ``sortCols`` — write path: comma-separated within-partition sort
       columns (tight per-block stat ranges; same knob as
       ``encode_table(sort_cols=...)``).
@@ -1452,10 +1343,15 @@ class AisleDataSource(DataSource):
 
         from aisle_spark.schema import _spark_type
 
+        from aisle_spark.schema import read_plan
+
         fs, root = _fs_of(self._path())
-        arrow = _project_schema(_read_sidecar_schema(fs, root), self._columns())
+        try:
+            out = read_plan(_read_sidecar_schema(fs, root), self._columns(), ()).out
+        except KeyError as e:
+            raise ValueError(f"columns option: unknown columns [{e.args[0]!r}]")
         return T.StructType(
-            [T.StructField(f.name, _spark_type(f.type), True) for f in arrow]
+            [T.StructField(f.name, _spark_type(f.type), True) for f in out]
         )
 
     def reader(self, schema: StructType) -> AisleReader:

@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import operator
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -777,46 +777,37 @@ def _utc_value(v):
     return v
 
 
+def _map_literals(spec: Spec, fn) -> Spec:
+    """Copy of ``spec`` with every literal ``v`` of column ``c`` replaced
+    by ``fn(c, v)`` — the one walk over the literal-carrying nodes."""
+    if isinstance(spec, (Cmp, ArrayAny, MapKeyCmp)):
+        return replace(spec, value=fn(spec.col, spec.value))
+    if isinstance(spec, Between):
+        return Between(spec.col, fn(spec.col, spec.low), fn(spec.col, spec.high))
+    if isinstance(spec, InList):
+        return InList(spec.col, tuple(fn(spec.col, v) for v in spec.values))
+    if isinstance(spec, (And, Or)):
+        return type(spec)([_map_literals(p, fn) for p in spec.parts])
+    if isinstance(spec, Not):
+        return Not(_map_literals(spec.inner, fn))
+    return spec  # IsNull / StartsWith / Like / ... carry no value literal
+
+
 def has_naive_datetime(spec: Spec) -> bool:
     """True when the predicate carries a tz-NAIVE datetime literal.
     ``F.lit`` converts those with the DRIVER PROCESS time zone, so a
     non-UTC driver would compare a shifted instant against the engine's
     UTC-stored stats — ``scan()`` warns about that combination (VERDICT
     r2 #9). tz-aware literals are safe everywhere."""
-    naive = lambda v: isinstance(v, _dt.datetime) and v.tzinfo is None  # noqa: E731
-    if isinstance(spec, Cmp):
-        return naive(spec.value)
-    if isinstance(spec, Between):
-        return naive(spec.low) or naive(spec.high)
-    if isinstance(spec, InList):
-        return any(naive(v) for v in spec.values)
-    if isinstance(spec, (And, Or)):
-        return any(has_naive_datetime(p) for p in spec.parts)
-    if isinstance(spec, Not):
-        return has_naive_datetime(spec.inner)
-    return False
+    seen: list = []
+    _map_literals(spec, lambda _c, v: seen.append(v) or v)
+    return any(isinstance(v, _dt.datetime) and v.tzinfo is None for v in seen)
 
 
 def utc_normalize(spec: Spec) -> Spec:
     """Copy of ``spec`` with every datetime literal rewritten to its naive-
     UTC instant, for executor-side evaluation against UTC-stored data."""
-    if isinstance(spec, Cmp):
-        return Cmp(spec.col, spec.op, _utc_value(spec.value))
-    if isinstance(spec, Between):
-        return Between(spec.col, _utc_value(spec.low), _utc_value(spec.high))
-    if isinstance(spec, InList):
-        return InList(spec.col, tuple(_utc_value(v) for v in spec.values))
-    if isinstance(spec, And):
-        return And([utc_normalize(p) for p in spec.parts])
-    if isinstance(spec, Or):
-        return Or([utc_normalize(p) for p in spec.parts])
-    if isinstance(spec, Not):
-        return Not(utc_normalize(spec.inner))
-    if isinstance(spec, MapKeyCmp):
-        return MapKeyCmp(
-            spec.col, spec.key, spec.op, _utc_value(spec.value), spec.sql_expr
-        )
-    return spec  # IsNull / StartsWith / AlwaysTrue carry no datetime
+    return _map_literals(spec, lambda _c, v: _utc_value(v))
 
 
 # ---------------------------------------------------------------------------

@@ -45,12 +45,12 @@ from aisle_spark.blocks import decode_block, encode_block
 from aisle_spark.filterspec import Spec
 from aisle_spark.schema import (
     ColumnSpec,
+    ReadPlan,
     assemble_struct,
     blocks_arrow_schema,
     blocks_spark_schema,
-    chunk_stat_columns,
     flatten_table,
-    leaves_under,
+    read_plan,
     specs_for_schema,
 )
 
@@ -873,21 +873,13 @@ def _input_files(input_path: str, fs=None):
     return files, specs, in_schema
 
 
-def _decode_fn(specs: list[ColumnSpec], flat_need: list[str], plan: list, where=None):
-    """``plan`` entries: ("leaf", name) or ("struct", top_field, needed
-    leaf set) — struct outputs are reassembled from decoded flat leaves
+def _decode_fn(specs: list[ColumnSpec], plan: ReadPlan, where=None):
+    """Decode block rows into batches of ``plan.decoded``: the flat
+    ``plan.leaves`` decode, then each struct field reassembles from them
     (nested dotted-path support, /root/reference/src/compile.rs:369-518)."""
     by_name = {s.name: s for s in specs}
-    ordered = [s.name for s in specs if s.name in flat_need]
-    out_fields = []
-    for entry in plan:
-        if entry[0] == "leaf":
-            out_fields.append(pa.field(entry[1], by_name[entry[1]].arrow_type))
-        else:
-            _, fld, needed = entry
-            # partial struct type mirrors what assemble_struct will build
-            out_fields.append(pa.field(fld.name, _partial_struct_type(fld, "", needed)))
-    out_schema = pa.schema(out_fields)
+    ordered = plan.leaves
+    flat_out = plan.decoded.names == ordered  # no struct to reassemble
 
     def decode(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         _pin_worker_threads()
@@ -916,39 +908,21 @@ def _decode_fn(specs: list[ColumnSpec], flat_need: list[str], plan: list, where=
                     flat = decode_block_filtered(sub, row, ordered, where)
                 else:
                     flat = decode_block(sub, row, ordered)
-                if all(e[0] == "leaf" for e in plan) and [
-                    e[1] for e in plan
-                ] == list(flat.schema.names):
+                if flat_out:
                     yield flat
                     continue
                 leaves = {n: flat.column(j) for j, n in enumerate(flat.schema.names)}
-                arrays = []
-                for entry in plan:
-                    if entry[0] == "leaf":
-                        arrays.append(leaves[entry[1]])
-                    else:
-                        _, fld, needed = entry
-                        arr, _t = assemble_struct(fld, "", leaves, needed)
-                        arrays.append(arr)
-                yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
-
-    return decode, out_schema
-
-
-def _partial_struct_type(field: pa.Field, prefix: str, needed: set) -> pa.DataType:
-    name = prefix + field.name
-    cfields = []
-    for i in range(field.type.num_fields):
-        ch = field.type.field(i)
-        chname = f"{name}.{ch.name}"
-        if pa.types.is_struct(ch.type):
-            if any(n == chname or n.startswith(chname + ".") for n in needed):
-                cfields.append(
-                    pa.field(ch.name, _partial_struct_type(ch, name + ".", needed))
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        assemble_struct(f, "", leaves, set(leaves))[0]
+                        if pa.types.is_struct(f.type)
+                        else leaves[f.name]
+                        for f in plan.decoded
+                    ],
+                    names=plan.decoded.names,
                 )
-        elif chname in needed:
-            cfields.append(pa.field(ch.name, ch.type))
-    return pa.struct(cfields)
+
+    return decode
 
 
 def _assert_utc_for_datetime_literals(blocks: DataFrame, where: Spec) -> None:
@@ -1003,123 +977,67 @@ def scan(
     amount of block skipping changes.
 
     ``schema`` is the ORIGINAL (possibly nested) table schema; ``columns``
-    names top-level columns; predicates may use dotted leaf paths
-    (``col("meta.lang") == "en"``) — the residual then evaluates as
-    Spark's native nested field access on the reassembled struct."""
+    names top-level columns or dotted nested paths (``"meta.lang"`` yields
+    a PARTIAL struct, ``schema.read_plan``); predicates may use dotted
+    leaf paths (``col("meta.lang") == "en"``) — the residual then
+    evaluates as Spark's native nested field access on the reassembled
+    struct."""
     if isinstance(where, str):
         from aisle_spark.sqlcompile import parse_where
 
         where = parse_where(where)
-    specs = specs_for_schema(schema)
-    top_fields = {schema.field(i).name: schema.field(i) for i in range(len(schema))}
-    out_cols = columns or list(top_fields)
-
-    pred_leaves: list[str] = sorted(where.columns()) if where else []
-    spec_names = {s.name for s in specs}
-    for p in pred_leaves:
-        if p not in spec_names:
-            raise KeyError(f"unknown predicate column {p}")
-
-    # flat decode set = projection leaves ∪ predicate leaves ∪ the
-    # __defined chain of every struct a predicate leaf lives in.
-    # Projections may name nested leaves ("meta.lang"): only those
-    # leaves (plus the validity chain) decode, and the output carries a
-    # PARTIAL struct under the top-level name — the leaf-granular
-    # ProjectionMask semantics of the reference
-    # (/root/reference/src/prune/result.rs:59-86).
-    flat_need: list[str] = []
-    struct_needed: dict[str, set] = {}
-    out_tops: list[str] = []
-    for c in out_cols:
-        fld = top_fields.get(c)
-        if fld is None and "." in c:
-            top = c.split(".")[0]
-            tfld = top_fields.get(top)
-            if tfld is None or not pa.types.is_struct(tfld.type):
-                raise KeyError(f"unknown column {c}")
-            ls = leaves_under(schema, c)
-            parts_c = c.split(".")
-            defined_chain = [
-                ".".join(parts_c[:d]) + ".__defined"
-                for d in range(1, len(parts_c))
-                if ".".join(parts_c[:d]) + ".__defined" in spec_names
-            ]
-            flat_need.extend([*ls, *defined_chain])
-            struct_needed.setdefault(top, set()).update([*ls, *defined_chain])
-            if top not in out_tops:
-                out_tops.append(top)
-            continue
-        if fld is None:
-            raise KeyError(f"unknown column {c}")
-        ls = leaves_under(schema, c)
-        flat_need.extend(ls)
-        if pa.types.is_struct(fld.type):
-            struct_needed.setdefault(c, set()).update(ls)
-        if c not in out_tops:
-            out_tops.append(c)
-    out_cols = out_tops
-    for p in pred_leaves:
-        flat_need.append(p)
-        parts = p.split(".")
-        defined_chain = [
-            ".".join(parts[:d]) + ".__defined"
-            for d in range(1, len(parts))
-            if ".".join(parts[:d]) + ".__defined" in spec_names
-        ]
-        flat_need.extend(defined_chain)
-        if "." in p:
-            top = parts[0]
-            struct_needed.setdefault(top, set()).update([p, *defined_chain])
-    need = [s.name for s in specs if s.name in set(flat_need)]
-
-    # output plan: projected columns in order, then predicate-only columns
-    # (plain leaves and minimal structs — dropped by the final select
-    # after the residual filter)
-    plan: list = []
-    for c in out_cols:
-        fld = top_fields[c]
-        if pa.types.is_struct(fld.type):
-            plan.append(("struct", fld, struct_needed[c]))
-        else:
-            plan.append(("leaf", c))
-    for p in pred_leaves:
-        if "." not in p and p not in out_cols:
-            plan.append(("leaf", p))
-    for top, needed in struct_needed.items():
-        if top not in out_cols:
-            plan.append(("struct", top_fields[top], needed))
-
+    plan = read_plan(schema, columns, where.columns() if where is not None else ())
     if where is not None:
         _assert_utc_for_datetime_literals(blocks, where)
         from aisle_spark.filterspec import DEFAULT_OPTIONS
 
         blocks = blocks.filter(where.keep_blocks(opts or DEFAULT_OPTIONS))
-    # ship the per-chunk stat arrays of predicate columns into the reader
-    # so it can skip chunks (page-index analog) before decode
-    payload_cols = [f"{c}__payload" for c in need]
-    payload_cols += chunk_stat_columns(specs, pred_leaves)
-    # the executor-side mask gets UTC-normalized datetime literals (the
-    # same instants F.lit produces), computed driver-side
-    from aisle_spark.filterspec import utc_normalize
-
-    decode, out_schema = _decode_fn(
-        specs, need, plan, utc_normalize(where) if where is not None else None
-    )
-    from aisle_spark.schema import _spark_type
     from pyspark.sql import types as T
 
-    spark_out = T.StructType(
-        [T.StructField(f.name, _spark_type(f.type), True) for f in out_schema]
-    )
+    from aisle_spark.filterspec import utc_normalize
+    from aisle_spark.schema import _spark_type
+
+    # the plan's columns ship the predicate columns' per-chunk stat arrays
+    # into the reader, so it skips chunks (page-index analog) before
+    # decode; the executor-side mask gets UTC-normalized datetime literals
+    # (the same instants F.lit produces), computed driver-side
     decoded = blocks.select(
-        *[
-            F.col(f"`{c}`").alias(c.replace(".", "__dot__"))
-            for c in payload_cols
-        ]
-    ).mapInArrow(decode, spark_out)
+        *[F.col(f"`{c}`").alias(c.replace(".", "__dot__")) for c in plan.columns]
+    ).mapInArrow(
+        _decode_fn(
+            specs_for_schema(schema),
+            plan,
+            utc_normalize(where) if where is not None else None,
+        ),
+        T.StructType(
+            [T.StructField(f.name, _spark_type(f.type), True) for f in plan.decoded]
+        ),
+    )
     if where is not None:
         decoded = decoded.filter(where.residual())
-    return decoded.select(*out_cols)
+    # predicate-only columns and struct children drop after the residual
+    # (dropFields keeps a NULL struct NULL)
+    cut = {
+        f.name: _extra_fields(plan.decoded.field(f.name).type, f.type)
+        for f in plan.out
+    }
+    return decoded.select(
+        *[F.col(n).dropFields(*x).alias(n) if x else n for n, x in cut.items()]
+    )
+
+
+def _extra_fields(dec: pa.DataType, out: pa.DataType, prefix: str = "") -> list[str]:
+    """Dotted paths of the struct children ``dec`` carries beyond ``out``."""
+    if not pa.types.is_struct(dec):
+        return []
+    extra = []
+    for ch in dec:
+        i = out.get_field_index(ch.name)
+        if i < 0:
+            extra.append(prefix + ch.name)
+        else:
+            extra += _extra_fields(ch.type, out.field(i).type, f"{prefix}{ch.name}.")
+    return extra
 
 
 # Stats-only aggregates. All seven public entry points run one plan

@@ -202,6 +202,100 @@ def leaves_under(schema: pa.Schema, name: str) -> list[str]:
     return under
 
 
+@dataclass(frozen=True)
+class ReadPlan:
+    """What one read decodes and emits: aisle's leaf-granular
+    ProjectionMask (/root/reference/src/prune/result.rs:59-86), held as
+    (partial) Arrow fields.
+
+    * ``out`` — the projected schema; a dotted name ("meta.lang") yields
+      a PARTIAL struct under its top-level name.
+    * ``decoded`` — ``out`` plus the predicate leaves: a predicate-only
+      column is appended, a nested predicate leaf joins its struct or an
+      appended predicate-only partial struct.
+    * ``leaves`` — the flat decode set in spec order: every leaf
+      ``decoded`` carries plus each present struct's ``__defined``.
+    * ``columns`` — the block-table columns to read: each leaf's
+      payload, then the predicate leaves' chunk stats."""
+
+    out: pa.Schema
+    decoded: pa.Schema
+    leaves: list[str]
+    columns: list[str]
+
+
+def read_plan(
+    schema: pa.Schema, columns: list[str] | None, pred_leaves
+) -> ReadPlan:
+    """The one projection + predicate -> decode work rule of ``scan()``
+    and the DataSource readers. ``columns`` names top-level columns or
+    dotted nested paths (None = every column); ``pred_leaves`` are flat
+    spec names. Raises KeyError naming an unknown column or leaf."""
+    specs = specs_for_schema(schema)
+    tops = {f.name: f for f in schema}
+    paths: dict[str, list[tuple]] = {}
+    for c in columns or tops:
+        top, rest = _field_path(tops, c)
+        paths.setdefault(top, []).append(rest)
+    out = pa.schema([_prune_field(tops[t], ps) for t, ps in paths.items()])
+    pred = sorted(set(pred_leaves))
+    spec_names = {s.name for s in specs}
+    for p in pred:
+        if p not in spec_names:
+            raise KeyError(p)
+        top, rest = _field_path(tops, p)
+        paths.setdefault(top, []).append(rest)
+    decoded = pa.schema([_prune_field(tops[t], ps) for t, ps in paths.items()])
+    have = {n for f in decoded for n in _field_leaves(f, "")}
+    leaves = [s.name for s in specs if s.name in have]
+    return ReadPlan(
+        out,
+        decoded,
+        leaves,
+        [f"{c}__payload" for c in leaves] + chunk_stat_columns(specs, pred),
+    )
+
+
+def _field_path(tops: dict, name: str) -> tuple[str, tuple]:
+    """(top-level name, child-name path below it) of column ``name``."""
+    if name in tops:
+        return name, ()
+    top, *rest = name.split(".")
+    if top not in tops:
+        raise KeyError(name)
+    t = tops[top].type
+    for part in rest:
+        if not pa.types.is_struct(t) or t.get_field_index(part) < 0:
+            raise KeyError(name)
+        t = t.field(part).type
+    return top, tuple(rest)
+
+
+def _prune_field(field: pa.Field, paths: list[tuple]) -> pa.Field:
+    """``field`` cut down to the union of ``paths`` (an empty path keeps
+    the whole subtree); children stay in schema order."""
+    if () in paths:
+        return field
+    children = []
+    for ch in field.type:
+        sub = [p[1:] for p in paths if p[0] == ch.name]
+        if sub:
+            children.append(_prune_field(ch, sub))
+    return pa.field(field.name, pa.struct(children), field.nullable)
+
+
+def _field_leaves(field: pa.Field, prefix: str) -> list[str]:
+    """Flat leaf names a (possibly partial) field carries, each struct's
+    ``__defined`` included."""
+    name = prefix + field.name
+    if not pa.types.is_struct(field.type):
+        return [name]
+    out = [f"{name}.__defined"]
+    for ch in field.type:
+        out += _field_leaves(ch, name + ".")
+    return out
+
+
 def assemble_struct(
     field: pa.Field, prefix: str, leaves: dict[str, pa.Array], needed: set[str]
 ) -> tuple[pa.Array, pa.DataType]:

@@ -1568,6 +1568,91 @@ class TestLeafColumnsOption:
                 .count()
             )
 
+    def test_scan_projection_matches_datasource(self, spark, nested_table):
+        """scan() and format("aisle") resolve one projection to one
+        schema, and a predicate-only leaf never leaks into the projected
+        struct: predicate-only children drop after the residual, and a
+        NULL struct stays NULL (the IS NULL case keeps those rows)."""
+        from aisle_spark.filterspec import col
+        from aisle_spark.pipeline import read_encoded, scan
+
+        df, out = nested_table
+        blocks, schema = read_encoded(spark, out)
+        cases = [
+            (["meta.lang"], col("meta.score") > 1500, "meta.score > 1500"),
+            (["doc_id", "meta.lang"], col("meta.score") > 1500, "meta.score > 1500"),
+            (["meta.score"], col("meta.lang") == "de", "meta.lang = 'de'"),
+            (["doc_id"], col("meta.score") > 1500, "meta.score > 1500"),
+            (["doc_id", "meta.lang"], col("meta.score").is_null(), "meta.score IS NULL"),
+        ]
+
+        def rows(frame, columns):
+            def leaf(r, c):
+                top, *rest = c.split(".")
+                v = r[top]
+                return v if not rest or v is None else (v[rest[0]],)
+
+            return sorted(
+                (tuple(leaf(r, c) for c in columns) for r in frame.collect()),
+                key=repr,
+            )
+
+        for columns, where, sql in cases:
+            got = scan(blocks, schema, where=where, columns=columns)
+            ds = spark.read.format("aisle").option("columns", ",".join(columns)).load(out)
+            assert got.schema == ds.schema, (columns, sql)
+            exp = rows(df.filter(sql), columns)
+            assert exp, sql
+            assert rows(got, columns) == exp, (columns, sql)
+
+    def test_predicate_only_leaf_decodes_alone(self, spark, nested_table):
+        """A nested leaf only the predicate reads decodes with its
+        validity chain and nothing else: the un-projected sibling's
+        payload is gone from the block files and the scan still runs."""
+        import pyarrow.parquet as pq
+
+        from aisle_spark.filterspec import col
+        from aisle_spark.pipeline import read_encoded, scan
+
+        df, out = nested_table
+        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        for f in m["files"]:
+            p = os.path.join(out, f)
+            pq.write_table(pq.read_table(p).drop_columns(["meta.lang__payload"]), p)
+        blocks, schema = read_encoded(spark, out)
+        got = scan(blocks, schema, where=col("meta.score") > 1500, columns=["doc_id"])
+        assert got.count() == df.filter("meta.score > 1500").count() > 0
+
+    def test_read_plan_columns(self):
+        """The block-table columns a read requests: each decoded leaf's
+        payload in spec order, then the predicate leaves' chunk stats."""
+        from aisle_spark.schema import TOKEN_SCHEMA, read_plan
+
+        chunks = lambda c: [f"{c}__chunk_{s}" for s in ("min", "max", "nulls")]  # noqa: E731
+        flat = read_plan(TOKEN_SCHEMA, ["n_tok", "doc_id"], {"source"})
+        assert flat.out.names == ["n_tok", "doc_id"]
+        assert flat.columns == [
+            "doc_id__payload", "n_tok__payload", "source__payload", *chunks("source")
+        ]
+        meta_t = pa.struct([pa.field("lang", pa.string()), pa.field("score", pa.int64())])
+        nested = pa.schema([pa.field("doc_id", pa.string()), pa.field("meta", meta_t)])
+        dotted = read_plan(nested, ["meta.lang"], ())
+        assert dotted.out.field("meta").type == pa.struct([pa.field("lang", pa.string())])
+        assert dotted.columns == ["meta.__defined__payload", "meta.lang__payload"]
+        pred = read_plan(nested, ["doc_id"], ["meta.score"])
+        assert pred.out.names == ["doc_id"]
+        assert pred.decoded.field("meta").type == pa.struct([pa.field("score", pa.int64())])
+        assert pred.columns == [
+            "doc_id__payload",
+            "meta.__defined__payload",
+            "meta.score__payload",
+            *chunks("meta.score"),
+        ]
+        with pytest.raises(KeyError):
+            read_plan(nested, ["meta.nope"], ())
+        with pytest.raises(KeyError):
+            read_plan(nested, None, ["meta"])
+
 
 class TestWhereOptionRandomDifferential:
     """Seeded randomized soundness for the AUTHORITATIVE where option:

@@ -268,3 +268,17 @@ class TestUtcGuard:
             blocks, schema, where=col("ts") > dt.datetime(2024, 1, 1, 1), columns=["id"]
         ).count()
         assert n == 500 - 61
+
+    @pytest.mark.parametrize("wrap", ["alone", "not", "and"])
+    def test_naive_datetime_seen_in_map_literal(self, wrap):
+        """A map-value comparison carries its literal like a Cmp does, so
+        the naive-datetime check sees it alone and under Not/And."""
+        from aisle_spark.filterspec import And, Cmp, MapKeyCmp, Not, has_naive_datetime
+
+        def tree(v):
+            m = MapKeyCmp("p", "k", "gt", v)
+            return {"alone": m, "not": Not(m), "and": And([Cmp("x", "eq", 1), m])}[wrap]
+
+        assert has_naive_datetime(tree(dt.datetime(2024, 1, 1)))
+        aware = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+        assert not has_naive_datetime(tree(aware))
