@@ -16,11 +16,16 @@ contract):
 * ``partitions`` prunes at PLANNING time with one numpy tri-state
   (``chunkstats.manifest_keep`` — the evaluator the reader runs per
   chunk, differentially tested against Catalyst's ``keep()``) at two
-  granularities: whole files drop on the manifest's per-file stats
-  (``file_stats_table``), then the surviving files' manifest stat
-  columns prune blocks, producing one input partition per file that
-  still has surviving blocks, carrying the survivors' row numbers.
-  Blocks that are definitely-false never get a task scheduled.
+  granularities (``plan_pruned``): whole files drop on the manifest's
+  per-file stats (``file_stats_table``), then the surviving files'
+  manifest stat columns prune blocks. Each file that still has
+  surviving blocks becomes one entry carrying the survivors' row numbers
+  and the bytes its task reads (the decode set's ``<leaf>__enc_bytes``
+  over the row groups that hold a survivor), and entries pack into tasks
+  by those bytes: a point lookup over four small files is one Python
+  task, not four. Blocks that are definitely-false never get a task
+  scheduled. ``pipeline.scan`` packs its decode stage by the same rule,
+  from the manifest's per-file ``__enc_bytes`` totals.
 * ``read`` decodes surviving blocks through the very same plan the
   ``scan()`` path uses (``schema.read_plan``: the projection and the
   predicate leaves decide the decode set and the partial-struct output)
@@ -36,19 +41,22 @@ encode uses, so readers never observe files from failed or speculative
 attempts.
 
 Scale notes: planning reads ONLY the manifest stat columns the predicate
-needs (parquet projection pushdown; payload bytes untouched) — the same
+needs and the decode set's ``__enc_bytes`` (parquet projection pushdown;
+payload bytes untouched) — the same
 footer-sized I/O the reference's metadata load performs — one file per
 task of a bounded thread pool, locally and on object stores alike. At
-10^5+ files the per-file partition list stays O(files); small files
-(< 4 MB by their manifest ``__bytes``) bin-pack sequentially into
-combined ~32 MB partitions so a not-yet-OPTIMIZEd streaming table never
-schedules 10^5 near-empty tasks. No driver-side collect touches payload
-data anywhere.
+10^5+ files the per-file partition list stays O(files); small entries
+(< 4 MB by the bytes their task reads when pruned, by their manifest
+``__bytes`` otherwise) bin-pack sequentially into combined ~32 MB
+partitions so a not-yet-OPTIMIZEd streaming table never schedules 10^5
+near-empty tasks, and a pruned read of small files pays the fixed cost
+of a Python task (0.2 s of worker set-up measured on a 4-vCPU host by
+tools/python_task_floor.py) per packed task, not per file. No
+driver-side collect touches payload data anywhere.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 from dataclasses import dataclass
@@ -167,7 +175,7 @@ class AislePartition(InputPartition):
     # additional (path, rows) pairs PACKED into this task: at 10^5
     # small files (a streaming sink's natural state before OPTIMIZE) one
     # task per file means 10^5 task schedulings for KB of work each —
-    # small files bin-pack sequentially (name order preserves any sort
+    # small entries bin-pack sequentially (name order preserves any sort
     # clustering) up to _PACK_MAX_BYTES per task
     more: tuple = ()
 
@@ -181,21 +189,41 @@ def planned_files(parts: Sequence["AislePartition"]) -> list[str]:
     return [path for p in parts for path, _rows in p.entries()]
 
 
-# only files below _PACK_SMALL_BYTES pack (normal-sized files keep one
+# only entries below _PACK_SMALL_BYTES pack (normal-sized ones keep one
 # task each so healthy tables lose no parallelism); packed tasks stop
-# growing at _PACK_MAX_BYTES
+# growing at _PACK_MAX_BYTES. scan() sizes a pruned decode stage by the
+# same packing (pipeline._decode_tasks)
 _PACK_SMALL_BYTES = 4 * 1024 * 1024
 _PACK_MAX_BYTES = 32 * 1024 * 1024
 
 
+def _file_bytes(fstats: dict, path: str) -> int | None:
+    """A file's manifest ``__bytes`` stat; None when unknown."""
+    b = (fstats.get(path) or {}).get("__bytes")
+    return b if isinstance(b, int) else None
+
+
+def _decode_set_bytes(fstats: dict, path: str, leaves: Sequence[str]) -> int | None:
+    """A file's payload bytes for the decode set ``leaves``: its manifest
+    ``__enc_bytes`` totals (``_json_file_stats``) summed; None when one is
+    unknown (a table committed before the totals were recorded)."""
+    sizes = (fstats.get(path) or {}).get("__enc_bytes")
+    if not isinstance(sizes, dict) or not all(isinstance(sizes.get(c), int) for c in leaves):
+        return None
+    return sum(sizes[c] for c in leaves)
+
+
 def _pack_partitions(
-    entries: list[tuple[str, tuple | None]], fstats: dict
+    entries: list[tuple[str, tuple | None, int | None]]
 ) -> list[AislePartition]:
-    """Sequential first-fit packing of small files (size = the manifest's
-    per-file ``__bytes`` stat; unknown size = never packed) into combined
-    partitions. Sequential, not best-fit: committed file lists are name-
-    sorted, so neighbors cover adjacent value ranges under clustering and
-    a packed task stays range-local."""
+    """Sequential first-fit packing of ``(path, rows, size)`` entries into
+    combined partitions. ``size`` is the bytes the entry's task reads: for
+    a pruned entry, the decode set's ``<leaf>__enc_bytes`` over the row
+    groups that hold a kept block (``plan_pruned``; a task reads whole row
+    groups), else the file's manifest ``__bytes``; an entry of unknown
+    size (None) never packs. Sequential, not best-fit: committed file
+    lists are name-sorted, so neighbors cover adjacent value ranges under
+    clustering and a packed task stays range-local."""
     out: list[AislePartition] = []
     cur: list[tuple[str, tuple | None]] = []
     cur_b = 0
@@ -206,9 +234,8 @@ def _pack_partitions(
             out.append(AislePartition(cur[0][0], cur[0][1], tuple(cur[1:])))
             cur, cur_b = [], 0
 
-    for path, rows in entries:
-        b = (fstats.get(path) or {}).get("__bytes")
-        if not isinstance(b, int) or b >= _PACK_SMALL_BYTES:
+    for path, rows, b in entries:
+        if b is None or b >= _PACK_SMALL_BYTES:
             flush()
             out.append(AislePartition(path, rows))
             continue
@@ -271,17 +298,30 @@ def _parallel_fetch(fn, items: list):
 def read_stat_columns(fs, paths: list[str], columns: Sequence[str]) -> list[pa.Table]:
     """Each file's ``columns`` (those it has, in ``columns`` order) as one
     table per path — one open per file under the bounded planning thread
-    pool. The one reader of manifest stat columns: block-tier planning
-    and the file-stat recompute both use it, so payload and chunk-array
-    bytes never move."""
+    pool. The one reader of manifest stat columns: the file-stat
+    recompute uses it and block-tier planning its row-group form
+    (``_read_stat_groups``), so payload and chunk-array bytes never
+    move."""
+    return [t for t, _groups in _read_stat_groups(fs, paths, columns)]
+
+
+def _read_stat_groups(
+    fs, paths: list[str], columns: Sequence[str]
+) -> list[tuple[pa.Table, list[int]]]:
+    """``read_stat_columns`` with each file's row-group row counts, from
+    the same footer."""
     import pyarrow.parquet as pq
 
-    def project(src) -> pa.Table:
+    def project(src) -> tuple[pa.Table, list[int]]:
         with pq.ParquetFile(src) as pf:
             have = set(pf.schema_arrow.names)
-            return pf.read(columns=[c for c in columns if c in have])
+            md = pf.metadata
+            return (
+                pf.read(columns=[c for c in columns if c in have]),
+                [md.row_group(g).num_rows for g in range(md.num_row_groups)],
+            )
 
-    def one(path: str) -> pa.Table:
+    def one(path: str) -> tuple[pa.Table, list[int]]:
         if fs is None:
             return project(path)
         with fs.open_input_file(path) as src:
@@ -456,54 +496,27 @@ class AisleReader(DataSourceReader):
         files, fstats = _manifest_of(self.fs, self.path, self.version)
         prune = self._prune_spec()
         if prune is None or not files:
-            return _pack_partitions([(f, None) for f in files], fstats)
+            return _pack_partitions([(f, None, _file_bytes(fstats, f)) for f in files])
+        from aisle_spark.schema import read_plan
+
         # one normalized predicate for both tiers: a DATE literal on a
         # timestamp column compares at midnight of the driver's time zone
         where = utc_normalize(coerce_temporals(prune, self.arrow_schema))
-        # file tier: whole files drop on their manifest file_stats before
-        # a single manifest row is read
-        files = sorted(_files_kept(files, fstats, where, self.arrow_schema))
-        if not files:
-            return []
-        # survivors in (file, row number) order; plan-size cap (VERDICT r3
-        # wrong #3): above it a file ships rows=None and its task decodes
-        # the whole file with only the chunk tier skipping — same results
-        # through Spark's residual, constant plan size
+        leaves = read_plan(self.arrow_schema, self.columns, where.columns()).leaves
+        # plan-size cap (VERDICT r3 wrong #3): above it a file ships
+        # rows=None and its task decodes the whole file with only the
+        # chunk tier skipping — same results through Spark's residual,
+        # constant plan size
         return _pack_partitions(
             [
-                (f, tuple(rows) if len(rows) <= _PARTITION_ROWS_CAP else None)
-                for f, rows in zip(files, self._surviving_rows(files, where))
-                if rows
-            ],
-            fstats,
+                (f, tuple(rows), size)
+                if len(rows) <= _PARTITION_ROWS_CAP
+                else (f, None, _file_bytes(fstats, f))
+                for f, rows, size in plan_pruned(
+                    self.fs, self.arrow_schema, files, fstats, where, leaves
+                )
+            ]
         )
-
-    def _surviving_rows(self, files: list[str], where: Spec) -> list[list[int]]:
-        """Per file, the manifest rows (blocks) the numpy block tier keeps
-        for ``where`` (already ``utc_normalize``d). Each file's stat
-        columns are cast to the block schema's types — Spark-written and
-        pyarrow-written files then concatenate — and one evaluation covers
-        every file."""
-        from aisle_spark.chunkstats import manifest_keep, stat_columns
-        from aisle_spark.schema import blocks_arrow_schema, specs_for_schema
-
-        specs = specs_for_schema(self.arrow_schema)
-        target = blocks_arrow_schema(specs)
-        cols = ["n_rows", *sorted(stat_columns(where) & set(target.names))]
-        tables = [
-            t.cast(pa.schema([target.field(n) for n in t.column_names]))
-            for t in read_stat_columns(self.fs, files, cols)
-        ]
-        keep = manifest_keep(
-            where,
-            pa.concat_tables(tables, promote_options="default"),
-            {s.name: s for s in specs},
-        )
-        bounds = np.cumsum([0] + [t.num_rows for t in tables])
-        return [
-            np.flatnonzero(keep[lo:hi]).tolist()
-            for lo, hi in zip(bounds[:-1], bounds[1:])
-        ]
 
     def read(self, partition: AislePartition) -> Iterator[pa.RecordBatch]:
         if partition is None:  # Spark schedules one task when partitions()==[]
@@ -1093,6 +1106,57 @@ def _files_kept(files: list[str], fstats: dict, where: Spec, schema: pa.Schema) 
     return [f for f, k in zip(files, keep) if k]
 
 
+def plan_pruned(
+    fs,
+    schema: pa.Schema,
+    files: list[str],
+    fstats: dict,
+    where: Spec,
+    leaves: Sequence[str],
+) -> list[tuple[str, list[int], int | None]]:
+    """The pruned-read planner of ``AisleReader``: the file tier drops
+    whole files on their manifest ``file_stats``, then the numpy block
+    tier (``chunkstats.manifest_keep``) runs once over the surviving
+    files' stat columns, each cast to the block schema's types so Spark-
+    and pyarrow-written files concatenate. ``where`` is already
+    ``utc_normalize``d.
+
+    Returns, in name order, each file that keeps a block: (path, kept
+    manifest rows, read bytes). ``_decode_file`` reads whole row groups,
+    so read bytes are ``<leaf>__enc_bytes`` summed over ``leaves`` (the
+    decode set) and over every block of each row group that holds a kept
+    block; None when the file lacks one of those columns."""
+    from aisle_spark.chunkstats import manifest_keep, stat_columns
+    from aisle_spark.schema import blocks_arrow_schema, specs_for_schema
+
+    files = sorted(_files_kept(files, fstats, where, schema))
+    if not files:
+        return []
+    specs = specs_for_schema(schema)
+    target = blocks_arrow_schema(specs)
+    stats = sorted(stat_columns(where) & set(target.names))
+    sizes = [f"{c}__enc_bytes" for c in leaves]
+    read = _read_stat_groups(fs, files, ["n_rows", *stats, *sizes])
+    tables = [t.cast(pa.schema([target.field(n) for n in t.column_names])) for t, _g in read]
+    both = pa.concat_tables(tables, promote_options="default")
+    keep = manifest_keep(where, both, {s.name: s for s in specs})
+    # per block: decode-set bytes, and whether every leaf's size is known
+    block_b = np.zeros(both.num_rows, np.int64)
+    known = np.full(both.num_rows, all(c in both.column_names for c in sizes))
+    for c in set(sizes) & set(both.column_names):
+        known &= both.column(c).is_valid().to_numpy(zero_copy_only=False)
+        block_b += both.column(c).fill_null(0).to_numpy()
+    bounds = np.cumsum([0] + [t.num_rows for t in tables])
+    out = []
+    for f, (_t, groups), lo, hi in zip(files, read, bounds[:-1], bounds[1:]):
+        rows = np.flatnonzero(keep[lo:hi])
+        if rows.size:
+            group = np.repeat(np.arange(len(groups)), groups)
+            at = lo + np.flatnonzero(np.isin(group, group[rows]))
+            out.append((f, rows.tolist(), int(block_b[at].sum()) if known[at].all() else None))
+    return out
+
+
 def _merge_file_stat(
     acc: dict, row: dict, cols: list[str], map_cols: tuple | list = ()
 ) -> None:
@@ -1108,10 +1172,22 @@ def _merge_file_stat(
     discipline one level up (a key provably absent from the whole file
     prunes ``props['k'] op v`` at planning, VERDICT r4 missing #3).
     Exact-or-nothing: any block with NULL key evidence, or a union past
-    MAP_KEYS_MAX, poisons the file entry to no-evidence."""
+    MAP_KEYS_MAX, poisons the file entry to no-evidence.
+
+    Every ``<leaf>__enc_bytes`` in ``row`` sums into a per-leaf payload
+    total under the accumulator key None (no column name): the bytes a
+    read of that leaf moves, which ``pipeline.scan`` sizes its decode
+    stage by. A NULL size poisons that leaf's total."""
     import math
 
     from aisle_spark.schema import MAP_KEYS_MAX
+
+    sizes = acc.setdefault(None, {})
+    for k, v in row.items():
+        if k.endswith("__enc_bytes"):
+            leaf = k[: -len("__enc_bytes")]
+            had = sizes.get(leaf, 0)
+            sizes[leaf] = None if v is None or had is None else had + int(v)
 
     for m in map_cols:
         ks = row.get(f"{m}__keys")
@@ -1155,10 +1231,13 @@ def _merge_file_stat(
 def _json_file_stats(acc: dict, fs, path: str) -> dict:
     """A file's folded stats (``_merge_file_stat``) in the manifest's JSON
     encoding, plus its ``__bytes``; columns with no evidence at all are
-    left out (absent = Unknown = file kept). The block writer and the
-    file-stat recompute both end here."""
+    left out (absent = Unknown = file kept), plus ``__enc_bytes``: the
+    known per-leaf payload totals. The block writer and the file-stat
+    recompute both end here."""
     out: dict = {}
     for c, v in acc.items():
+        if c is None:  # payload totals, below
+            continue
         if isinstance(v, dict):  # map key set, already JSON-safe
             if v.get("keys") is not None:
                 out[c] = v
@@ -1173,6 +1252,9 @@ def _json_file_stats(acc: dict, fs, path: str) -> dict:
             )
         except OSError:
             pass  # size is rate-limiter advice only; never fail a commit
+    sizes = {c: b for c, b in (acc.get(None) or {}).items() if b is not None}
+    if sizes and "__enc_bytes" not in out:  # a real column of that name wins
+        out["__enc_bytes"] = sizes
     return out
 
 

@@ -175,8 +175,9 @@ def _recompute_file_stats(fs, root: str, rel_files: list[str]) -> dict:
     (datasource._files_kept), folded from each committed file's block stat
     columns with the block writer's own code (``_merge_file_stat`` +
     ``_json_file_stats``): NULL-poisoned bounds, null/row totals, map
-    key-set unions and ``__bytes``, exactly as ``BlockFileWriter`` records
-    them (absent => Unknown => file kept, always sound)."""
+    key-set unions, ``__bytes`` and the ``__enc_bytes`` payload totals,
+    exactly as ``BlockFileWriter`` records them (absent => Unknown =>
+    file kept, always sound)."""
     import pyarrow.parquet as pq
 
     from aisle_spark.datasource import (
@@ -205,6 +206,7 @@ def _recompute_file_stats(fs, root: str, rel_files: list[str]) -> dict:
     ]
     want = [f"{c}__{s}" for c in cols for s in ("min", "max", "nulls")]
     want += [f"{m}__keys" for m in map_cols] + ["n_rows"]
+    want += [n for n in names if n.endswith("__enc_bytes")]
     paths = [f"{root}/{f}" for f in rel_files]
     out: dict = {}
     for rel, path, t in zip(rel_files, paths, read_stat_columns(fs, paths, want)):

@@ -34,7 +34,6 @@ file names cross back to the JVM.
 
 from __future__ import annotations
 
-import struct
 from typing import Callable, Iterable, Iterator, NamedTuple
 
 import pyarrow as pa
@@ -987,6 +986,7 @@ def scan(
 
         where = parse_where(where)
     plan = read_plan(schema, columns, where.columns() if where is not None else ())
+    tasks = None if where is None else _decode_tasks(blocks, plan.leaves)
     if where is not None:
         _assert_utc_for_datetime_literals(blocks, where)
         from aisle_spark.filterspec import DEFAULT_OPTIONS
@@ -1001,9 +1001,12 @@ def scan(
     # into the reader, so it skips chunks (page-index analog) before
     # decode; the executor-side mask gets UTC-normalized datetime literals
     # (the same instants F.lit produces), computed driver-side
-    decoded = blocks.select(
+    payload = blocks.select(
         *[F.col(f"`{c}`").alias(c.replace(".", "__dot__")) for c in plan.columns]
-    ).mapInArrow(
+    )
+    if tasks is not None:
+        payload = payload.coalesce(tasks)
+    decoded = payload.mapInArrow(
         _decode_fn(
             specs_for_schema(schema),
             plan,
@@ -1024,6 +1027,41 @@ def scan(
     return decoded.select(
         *[F.col(n).dropFields(*x).alias(n) if x else n for n, x in cut.items()]
     )
+
+
+def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
+    """Python tasks a pruned decode stage needs, sized as the DataSource
+    packs its partitions (``datasource._pack_partitions``) by the bytes
+    each file's scan reads. ``filter(keep)`` drops pruned blocks only
+    after the parquet scan has read them, so a file counts at its whole
+    decode set: its manifest ``__enc_bytes`` totals over ``leaves``.
+
+    None, which leaves Spark's width, unless the files ``blocks`` reads
+    are local, lie under one table root (its schema sidecar present) and
+    each reads under ``_PACK_SMALL_BYTES``: a larger file keeps its own
+    task in the packing, but Spark may have split it, and ``coalesce``
+    would merge its splits. Remote files are left to Spark, whose
+    credentials opened them. Only partitioning depends on this."""
+    import json
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from aisle_spark import datasource as D
+
+    # one py4j round trip: DataFrame.inputFiles() makes one per file
+    mapper = blocks.sparkSession._jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    uris = json.loads(mapper.writeValueAsString(blocks._jdf.inputFiles()))
+    if not uris or not all(u.startswith("file:") for u in uris):
+        return None
+    files = sorted(unquote(urlparse(u).path) for u in uris)
+    roots = {os.path.dirname(f) for f in files}
+    if len(roots) != 1 or not os.path.exists(os.path.join(*roots, D._SCHEMA_SIDECAR)):
+        return None
+    fstats = D._manifest_of(None, roots.pop())[1]
+    entries = [(f, None, D._decode_set_bytes(fstats, f, leaves)) for f in files]
+    if any(b is None or b >= D._PACK_SMALL_BYTES for _f, _rows, b in entries):
+        return None
+    return len(D._pack_partitions(entries))
 
 
 def _extra_fields(dec: pa.DataType, out: pa.DataType, prefix: str = "") -> list[str]:
@@ -1539,5 +1577,45 @@ def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
         # orphans from failed/speculative attempts are never visible
         # (load_manifest resolves the large-table pointer form)
         files = [os.path.join(path, f) for f in m["files"]]
-        return spark.read.parquet(*files), schema
+        # the footer's schema is what Spark infers only under the default
+        # parquet inference settings
+        inferred = all(
+            spark.conf.get(f"spark.sql.parquet.{k}", "false").lower() == "false"
+            for k in ("binaryAsString", "mergeSchema")
+        )
+        known = _footer_spark_schema(files[0]) if files and inferred else None
+        reader = spark.read if known is None else spark.read.schema(known)
+        return reader.parquet(*files), schema
     return spark.read.parquet(path), schema
+
+
+def _footer_spark_schema(path: str):
+    """The Spark schema ``spark.read.parquet`` infers for one parquet file
+    without merging, read from its footer here so Spark does not run an
+    inference pass: the schema a Spark writer stored in the footer, else
+    the file's Arrow schema when every type in it is one Spark infers the
+    same way from what pyarrow writes. None otherwise (Spark then infers:
+    e.g. a duration, which Spark reads as the int64 pyarrow stores)."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow = pq.read_schema(path)
+    stored = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    from pyarrow import types as pt
+
+    plain = (pt.is_boolean, pt.is_signed_integer, pt.is_float32, pt.is_float64,
+             pt.is_decimal, pt.is_string, pt.is_binary, pt.is_date32)
+
+    def same(t: pa.DataType) -> bool:
+        if pt.is_timestamp(t):  # UTC-adjusted: TimestampType
+            return t.tz is not None and t.unit in ("ms", "us")
+        if pt.is_list(t) or pt.is_map(t) or pt.is_struct(t):
+            return all(same(t.field(i).type) for i in range(t.num_fields))
+        return any(p(t) for p in plain)
+
+    return from_arrow_schema(arrow) if all(same(f.type) for f in arrow) else None

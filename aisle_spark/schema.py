@@ -571,8 +571,6 @@ def _synth_chunk(chunk_idx: int, seed: int) -> pa.RecordBatch:
 
 def synth_token_df(spark, n_rows: int, seed: int = 42, slices: int | None = None):
     """Distributed deterministic token table as a Spark DataFrame."""
-    from pyspark.sql import functions as F
-
     slices = slices or max(8, n_rows // 50_000)
     rng_df = spark.range(0, n_rows, 1, slices)
 

@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from aisle_spark.datasource import AisleReader, _manifest_of
+from aisle_spark.datasource import _manifest_of, _read_sidecar_schema, plan_pruned
 from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col, utc_normalize
 from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
 from aisle_spark.schema import synth_batch
@@ -41,12 +41,13 @@ def _catalyst(blocks, spec) -> set:
 
 
 def _numpy(out: str, spec) -> set:
-    """block_ids of the manifest rows the planner's block tier keeps."""
+    """block_ids of the manifest rows the planner's block tier keeps (no
+    file stats given, so the file tier keeps every file)."""
     files, _ = _manifest_of(None, out)
-    rows = AisleReader(out)._surviving_rows(files, utc_normalize(spec))
+    kept = plan_pruned(None, _read_sidecar_schema(None, out), files, {}, utc_normalize(spec), ())
     return {
         b
-        for f, rs in zip(files, rows)
+        for f, rs, _bytes in kept
         for b in pq.read_table(f, columns=["block_id"])
         .column(0)
         .take(pa.array(rs, pa.int64()))

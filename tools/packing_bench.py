@@ -66,8 +66,8 @@ def main() -> None:
     n_packed = len(reader.partitions())
     real_pack = ds._pack_partitions
     try:
-        ds._pack_partitions = lambda entries, fstats: [
-            ds.AislePartition(p, rows) for p, rows in entries
+        ds._pack_partitions = lambda entries: [
+            ds.AislePartition(p, rows) for p, rows, _size in entries
         ]
         n_unpacked = len(ds.AisleReader(table).partitions())
     finally:
@@ -87,8 +87,8 @@ def main() -> None:
         walls_on.append(w)
         counts.add(c)
         try:
-            ds._pack_partitions = lambda entries, fstats: [
-                ds.AislePartition(p, rows) for p, rows in entries
+            ds._pack_partitions = lambda entries: [
+                ds.AislePartition(p, rows) for p, rows, _size in entries
             ]
             w, c = scan_count()
             walls_off.append(w)
