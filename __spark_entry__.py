@@ -554,8 +554,8 @@ _DS_PM_DIRS: dict[str, str] = {}
 
 def _ds_propsmap_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events with props as a REAL map column, written through
-    format("aisle") — per-file map key-set evidence rides the manifest
-    (datasource._merge_file_stat map_cols)."""
+    format("aisle") — per-file map key-set evidence rides each file's
+    stats row (``{m}__keys``, folded at commit)."""
     from aisle_spark.datasource import register
 
     register(spark)

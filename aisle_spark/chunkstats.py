@@ -16,11 +16,10 @@ The same evaluator is the block and file tiers off the JVM:
 DataSource planner reads, selecting exactly the blocks Catalyst's
 ``Spec.keep()`` selects — dictionary, bloom, list-element, list-length
 and map-key evidence included — and over the one row per file that
-``datasource.file_stats_table`` decodes from the manifest's JSON
-``file_stats``. One tri-state, three granularities (file → block →
-512-row chunk): stat arrays over N units plus each unit's row count
-(aisle's compile-once pruner evaluating every metadata granularity,
-src/prune/api.rs).
+``fold_blocks`` folds from the file's blocks at commit. One
+tri-state, three granularities (file → block → 512-row chunk): stat
+arrays over N units plus each unit's row count (aisle's compile-once
+pruner evaluating every metadata granularity, src/prune/api.rs).
 
 Soundness invariants match filterspec's:
   f[i] True  => no row in unit i evaluates TRUE   (prunable)
@@ -606,17 +605,81 @@ def chunk_keep(spec, row: dict, kinds, n_rows: int) -> np.ndarray:
 def manifest_keep(spec, stats: pa.Table, kinds) -> np.ndarray:
     """keep[i] = unit i may hold a matching row. A unit is a block (one
     manifest row: the block tier off the JVM, selecting exactly the
-    blocks Catalyst's ``spec.keep()`` selects) or a file (one row of
-    ``datasource.file_stats_table``: the file tier). ``stats`` holds
-    ``n_rows`` and the ``stat_columns(spec)`` the units have, each in its
-    stat type; a missing or NULL stat is Unknown."""
+    blocks Catalyst's ``spec.keep()`` selects) or a file (one
+    ``fold_blocks`` row: the file tier). ``stats`` holds ``n_rows``
+    and the ``stat_columns(spec)`` the units have, each in its stat type;
+    a missing or NULL stat is Unknown, and a NULL ``n_rows`` equals no
+    null count."""
     names = set(stats.column_names)
 
     def get(name: str):
         return stats.column(name) if name in names else None
 
-    _, f = _tri(spec, _Units(get, stats.column("n_rows").to_numpy(), kinds, False))
+    n_rows = stats.column("n_rows").fill_null(-1).to_numpy()
+    _, f = _tri(spec, _Units(get, n_rows, kinds, False))
     return ~f
+
+
+def fold_blocks(files: list[str], tables: list[pa.Table], sizes: list, specs) -> pa.Table:
+    """One ``schema.file_stats_schema`` row per file, folded from its
+    blocks' stat rows (``tables[i]``: block-schema columns) and its size
+    in bytes (``sizes[i]``). The file tier prunes on these rows, so the
+    fold is sound or NULL (Unknown): a bound is the min of the blocks'
+    ``__min`` / max of their ``__max``, NULL when a block's is NULL or
+    NaN (Spark orders NaN greatest, and ``pc.min_max`` skips it);
+    ``n_rows``, ``__nulls`` and ``__enc_bytes`` sum, NULL when a block's
+    is; a map's ``__keys`` is the sorted union of its blocks' key sets,
+    NULL when a block's is or the union passes ``MAP_KEYS_MAX``."""
+    from aisle_spark.schema import MAP_KEYS_MAX, blocks_arrow_schema, file_stats_schema
+
+    target = file_stats_schema(specs)
+    n = len(files)
+    cols = {"file": pa.array(files, pa.string()), "__bytes": pa.array(sizes, pa.int64())}
+    if n:
+        block = blocks_arrow_schema(specs)
+        blocks = pa.concat_tables(
+            [t.cast(pa.schema([block.field(c) for c in t.column_names])) for t in tables],
+            promote_options="default",
+        )
+        owner = np.repeat(np.arange(n), [t.num_rows for t in tables])
+        whole = pc.ScalarAggregateOptions(skip_nulls=False)
+        work, aggs = {"i": owner}, []
+        for name in set(target.names) & set(blocks.column_names):
+            x = blocks.column(name)
+            if name.endswith("__keys"):
+                cols[name] = _key_union(x.combine_chunks(), owner, n, MAP_KEYS_MAX)
+                continue
+            op = name[-3:] if name.endswith(("__min", "__max")) else "sum"
+            if pa.types.is_floating(x.type):
+                x = pc.if_else(pc.is_nan(x), None, x)
+            elif pa.types.is_duration(x.type):  # no min_max kernel
+                x = x.cast(pa.int64())
+            work[name] = x
+            aggs.append((name, op, whole))
+        out = pa.table(work).group_by("i", use_threads=False).aggregate(aggs)
+        at = pc.index_in(pa.array(np.arange(n)), value_set=out.column("i"))
+        for name, op, _ in aggs:
+            cols[name] = out.column(f"{name}_{op}").take(at)
+    return pa.Table.from_arrays(
+        [cols[f.name].cast(f.type) if f.name in cols else pa.nulls(n, f.type) for f in target],
+        schema=target,
+    )
+
+
+def _key_union(keys: pa.ListArray, owner: np.ndarray, n: int, cap: int) -> pa.Array:
+    """Per file, the sorted union of its blocks' key sets (``owner`` maps
+    block to file); NULL when a block's set is NULL or the union passes
+    ``cap``."""
+    bad = np.zeros(n, dtype=bool)
+    bad[owner[keys.is_null().to_numpy(zero_copy_only=False)]] = True
+    union: list[set] = [set() for _ in range(n)]
+    parents = owner[pc.list_parent_indices(keys).to_numpy()]
+    for i, k in zip(parents.tolist(), pc.list_flatten(keys).to_pylist()):
+        union[i].add(k)
+    return pa.array(
+        [None if bad[i] or len(u) > cap else sorted(u) for i, u in enumerate(union)],
+        pa.list_(pa.string()),
+    )
 
 
 _LEAF_STATS = {

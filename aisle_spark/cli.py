@@ -179,49 +179,30 @@ def cmd_describe(args) -> None:
     is submitted."""
     import json as _json
 
-    from aisle_spark.datasource import _fs_of, _read_sidecar_schema
+    from aisle_spark.datasource import _file_rows, _fs_of, _read_sidecar_schema
     from aisle_spark.pipeline import _fs_list, list_snapshots, load_manifest
 
     fs, root = _fs_of(args.table)
     root = root.rstrip("/")
-    m = load_manifest(fs, root)
+    schema = _read_sidecar_schema(fs, root)
+    m = load_manifest(fs, root, stats=True)
     if m is None:
         # manifest-less layout (plain blocks.write.parquet): list files,
         # no stats totals
-        m = {"files": [p for p, _sz in _fs_list(fs, root, ".parquet")]}
-    stats = m.get("file_stats", {})
-    total_bytes = 0
-    rows = 0
-    files = m.get("files", [])
-    # totals iterate the FILE LIST, not the stats dict: a file missing
-    # its stats entry (pre-stats writer era) must flip the row total to
-    # unknown, never silently under-report (code-review r5)
-    rows_known = bool(files)
-    for f in files:
-        st = stats.get(f) or {}
-        b = st.get("__bytes")
-        if isinstance(b, int):
-            total_bytes += b
-        ent = next(
-            (
-                v
-                for k, v in st.items()
-                if k != "__bytes" and isinstance(v, list) and len(v) >= 4
-            ),
-            None,
-        )
-        if ent is None or not isinstance(ent[3], int):
-            rows_known = False
-        else:
-            rows += ent[3]
+        m = {"files": [p for p, _sz in _fs_list(fs, root, ".parquet")], "stats": None}
+    files = m["files"]
+    stats = _file_rows(m["stats"], files, schema)
+    # a file without a stats row makes the row total unknown, never an
+    # under-report
+    n_rows = stats.column("n_rows").to_pylist()
+    total_bytes = sum(b for b in stats.column("__bytes").to_pylist() if b is not None)
     versions = list_snapshots(fs, root)
-    schema = _read_sidecar_schema(fs, root)
     print(
         _json.dumps(
             {
-                "files": len(m.get("files", [])),
+                "files": len(files),
                 "bytes": total_bytes,
-                "rows": rows if rows_known else None,
+                "rows": sum(n_rows) if files and None not in n_rows else None,
                 "version": m.get("version"),
                 "snapshots": (
                     {"oldest": versions[0], "latest": versions[-1]}

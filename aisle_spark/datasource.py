@@ -16,8 +16,9 @@ contract):
 * ``partitions`` prunes at PLANNING time with one numpy tri-state
   (``chunkstats.manifest_keep`` — the evaluator the reader runs per
   chunk, differentially tested against Catalyst's ``keep()``) at two
-  granularities (``plan_pruned``): whole files drop on the manifest's
-  per-file stats (``file_stats_table``), then the surviving files'
+  granularities (``plan_pruned``): whole files drop on their stats rows
+  (one Arrow row per file, folded from its blocks at commit and stored
+  beside each snapshot; ``_file_rows``), then the surviving files'
   manifest stat columns prune blocks. Each file that still has
   surviving blocks becomes one entry carrying the survivors' row numbers
   and the bytes its task reads (the decode set's ``<leaf>__enc_bytes``
@@ -25,7 +26,7 @@ contract):
   by those bytes: a point lookup over four small files is one Python
   task, not four. Blocks that are definitely-false never get a task
   scheduled. ``pipeline.scan`` packs its decode stage by the same rule,
-  from the manifest's per-file ``__enc_bytes`` totals.
+  from the files' ``<leaf>__enc_bytes`` stats.
 * ``read`` decodes surviving blocks through the very same plan the
   ``scan()`` path uses (``schema.read_plan``: the projection and the
   predicate leaves decide the decode set and the partial-struct output)
@@ -34,8 +35,9 @@ contract):
 
 Write path: each task slices its Arrow stream into sorted blocks
 (``pipeline._order_and_slice`` + ``blocks.encode_block``), writes ONE
-parquet file, and reports it in its commit message; ``commit`` publishes
-the file list into the manifest (``pipeline.MANIFEST``) plus the Arrow
+parquet file, and reports it in its commit message; ``commit`` folds the
+new files' stats rows and publishes the file list into the manifest
+(``pipeline.MANIFEST``) plus the Arrow
 schema sidecar — the same manifest-commit protocol the direct-write
 encode uses, so readers never observe files from failed or speculative
 attempts.
@@ -46,8 +48,8 @@ payload bytes untouched) — the same
 footer-sized I/O the reference's metadata load performs — one file per
 task of a bounded thread pool, locally and on object stores alike. At
 10^5+ files the per-file partition list stays O(files); small entries
-(< 4 MB by the bytes their task reads when pruned, by their manifest
-``__bytes`` otherwise) bin-pack sequentially into combined ~32 MB
+(< 4 MB by the bytes their task reads when pruned, by their ``__bytes``
+stat otherwise) bin-pack sequentially into combined ~32 MB
 partitions so a not-yet-OPTIMIZEd streaming table never schedules 10^5
 near-empty tasks, and a pruned read of small files pays the fixed cost
 of a Python task (0.2 s of worker set-up measured on a 4-vCPU host by
@@ -197,20 +199,16 @@ _PACK_SMALL_BYTES = 4 * 1024 * 1024
 _PACK_MAX_BYTES = 32 * 1024 * 1024
 
 
-def _file_bytes(fstats: dict, path: str) -> int | None:
-    """A file's manifest ``__bytes`` stat; None when unknown."""
-    b = (fstats.get(path) or {}).get("__bytes")
-    return b if isinstance(b, int) else None
+def _decode_set_bytes(rows: pa.Table, leaves: Sequence[str]) -> list[int | None]:
+    """Each file's payload bytes for the decode set ``leaves``: its
+    ``<leaf>__enc_bytes`` stats (``_file_rows``) summed; None where one
+    is unknown."""
+    import pyarrow.compute as pc
 
-
-def _decode_set_bytes(fstats: dict, path: str, leaves: Sequence[str]) -> int | None:
-    """A file's payload bytes for the decode set ``leaves``: its manifest
-    ``__enc_bytes`` totals (``_json_file_stats``) summed; None when one is
-    unknown (a table committed before the totals were recorded)."""
-    sizes = (fstats.get(path) or {}).get("__enc_bytes")
-    if not isinstance(sizes, dict) or not all(isinstance(sizes.get(c), int) for c in leaves):
-        return None
-    return sum(sizes[c] for c in leaves)
+    total = pa.array(np.zeros(rows.num_rows, np.int64))
+    for c in leaves:
+        total = pc.add(total, rows.column(f"{c}__enc_bytes"))
+    return total.to_pylist()
 
 
 def _pack_partitions(
@@ -220,7 +218,7 @@ def _pack_partitions(
     combined partitions. ``size`` is the bytes the entry's task reads: for
     a pruned entry, the decode set's ``<leaf>__enc_bytes`` over the row
     groups that hold a kept block (``plan_pruned``; a task reads whole row
-    groups), else the file's manifest ``__bytes``; an entry of unknown
+    groups), else the file's ``__bytes`` stat; an entry of unknown
     size (None) never packs. Sequential, not best-fit: committed file
     lists are name-sorted, so neighbors cover adjacent value ranges under
     clustering and a packed task stays range-local."""
@@ -298,8 +296,8 @@ def _parallel_fetch(fn, items: list):
 def read_stat_columns(fs, paths: list[str], columns: Sequence[str]) -> list[pa.Table]:
     """Each file's ``columns`` (those it has, in ``columns`` order) as one
     table per path — one open per file under the bounded planning thread
-    pool. The one reader of manifest stat columns: the file-stat
-    recompute uses it and block-tier planning its row-group form
+    pool. The one reader of manifest stat columns: the commit's file
+    stats fold uses it and block-tier planning its row-group form
     (``_read_stat_groups``), so payload and chunk-array bytes never
     move."""
     return [t for t, _groups in _read_stat_groups(fs, paths, columns)]
@@ -339,28 +337,48 @@ def _exists(fs, path: str) -> bool:
 
 
 def _manifest_of(
-    fs, path: str, version: int | None = None
-) -> tuple[list[str], dict]:
-    """(full file paths, per-file stats keyed by full path); ``version``
+    fs, path: str, schema: pa.Schema, version: int | None = None
+) -> tuple[list[str], pa.Table]:
+    """(full file paths, their stats rows (``_file_rows``)); ``version``
     pins a committed snapshot (time travel)."""
     from aisle_spark.pipeline import _fs_list, load_manifest, read_snapshot
 
     root = path.rstrip("/")
     if version is not None:
-        m = read_snapshot(fs, root, version)
+        m = read_snapshot(fs, root, version, stats=True)
     else:
-        m = load_manifest(fs, root)
+        m = load_manifest(fs, root, stats=True)
         if m is None:
-            return [p for p, _size in _fs_list(fs, path, ".parquet")], {}
-    stats = m.get("file_stats", {})
-    return (
-        [f"{root}/{f}" for f in m["files"]],
-        {f"{root}/{k}": v for k, v in stats.items()},
-    )
+            files = [p for p, _size in _fs_list(fs, path, ".parquet")]
+            return files, _file_rows(None, files, schema)
+    return [f"{root}/{f}" for f in m["files"]], _file_rows(m["stats"], m["files"], schema)
 
 
-def _committed_files(fs, path: str) -> list[str]:
-    return _manifest_of(fs, path)[0]
+def _file_rows(stats: pa.Table | None, files: Sequence[str], schema: pa.Schema) -> pa.Table:
+    """One ``schema.file_stats_schema`` row per name in ``files``, in
+    order: the file's committed stats row (``stats``, keyed by ``file``).
+    A file without a row, and a column that is missing or does not cast
+    to its stat type, is NULL: Unknown, so the file is kept. Legacy
+    manifests, whose stats were JSON, have no rows."""
+    import pyarrow.compute as pc
+
+    from aisle_spark.schema import file_stats_schema, specs_for_schema
+
+    target = file_stats_schema(specs_for_schema(schema))
+    names = pa.array(files, pa.string())
+    at = None
+    if stats is not None and "file" in stats.column_names:
+        at = pc.index_in(names, stats.column("file"))
+    cols = [names]
+    for f in target.remove(0):
+        col = None
+        if at is not None and f.name in stats.column_names:
+            try:
+                col = stats.column(f.name).cast(f.type).take(at)
+            except pa.ArrowException:
+                pass
+        cols.append(pa.nulls(len(files), f.type) if col is None else col)
+    return pa.Table.from_arrays(cols, schema=target)
 
 
 def _read_sidecar_schema(fs, path: str) -> pa.Schema:
@@ -493,10 +511,11 @@ class AisleReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[AislePartition]:
-        files, fstats = _manifest_of(self.fs, self.path, self.version)
+        files, stats = _manifest_of(self.fs, self.path, self.arrow_schema, self.version)
+        size = dict(zip(files, stats.column("__bytes").to_pylist()))
         prune = self._prune_spec()
         if prune is None or not files:
-            return _pack_partitions([(f, None, _file_bytes(fstats, f)) for f in files])
+            return _pack_partitions([(f, None, size[f]) for f in files])
         from aisle_spark.schema import read_plan
 
         # one normalized predicate for both tiers: a DATE literal on a
@@ -509,11 +528,11 @@ class AisleReader(DataSourceReader):
         # constant plan size
         return _pack_partitions(
             [
-                (f, tuple(rows), size)
+                (f, tuple(rows), b)
                 if len(rows) <= _PARTITION_ROWS_CAP
-                else (f, None, _file_bytes(fstats, f))
-                for f, rows, size in plan_pruned(
-                    self.fs, self.arrow_schema, files, fstats, where, leaves
+                else (f, None, size[f])
+                for f, rows, b in plan_pruned(
+                    self.fs, self.arrow_schema, files, stats, where, leaves
                 )
             ]
         )
@@ -645,24 +664,49 @@ class AisleStreamReader(DataSourceStreamReader):
         # first latestOffset() then runs uncapped (the Python stream API
         # gives latestOffset no start offset), every later one is capped.
         self._cursor: dict | None = None
+        # snapshot and stats files read by the current latestOffset() or
+        # partitions() call: each is read once per call
+        self._memo: dict = {}
 
     def initialOffset(self) -> dict:
         self._cursor = {"version": 0}
         return {"version": 0}
 
-    def _read_snap(self, v: int) -> dict:
-        """read_snapshot with the retention-violation diagnostic (a raw
-        FileNotFoundError would lose the contract; ADVICE r3 low)."""
+    def _expired(self, v: int) -> RuntimeError:
+        """The retention-violation diagnostic (a raw FileNotFoundError
+        would lose the contract; ADVICE r3 low)."""
+        return RuntimeError(
+            f"stream offset snapshot v{v} was expired while the "
+            "stream was reading it — expire_snapshots retention must "
+            "outlive active streams"
+        )
+
+    def _read_snap(self, v: int, stats: bool = False) -> dict:
+        """read_snapshot through this call's memo."""
         from aisle_spark.pipeline import read_snapshot
 
         try:
-            return read_snapshot(self.fs, self.path.rstrip("/"), v)
-        except (FileNotFoundError, OSError):
-            raise RuntimeError(
-                f"stream offset snapshot v{v} was expired while the "
-                "stream was reading it — expire_snapshots retention must "
-                "outlive active streams"
-            ) from None
+            return read_snapshot(self.fs, self.path, v, stats=stats, cache=self._memo)
+        except OSError:
+            raise self._expired(v) from None
+
+    def _own_stats(self, v: int) -> pa.Table | None:
+        """Version v's own stats rows, through this call's memo: a
+        delta's are exactly the files it added, a full snapshot's every
+        live file."""
+        from aisle_spark.pipeline import snapshot_json, snapshot_stats
+
+        try:
+            snap = snapshot_json(self.fs, self.path, v, self._memo)
+            return snapshot_stats(self.fs, self.path, snap, self._memo)
+        except OSError:
+            raise self._expired(v) from None
+
+    def _sizes(self, stats: pa.Table | None, files: list[str]) -> list[int]:
+        """``__bytes`` of ``files`` from ``stats`` rows. Unknown size
+        (legacy commit) counts 0 toward the byte budget — file-count
+        capping still bounds those batches."""
+        return _file_rows(stats, files, self.arrow_schema).column("__bytes").fill_null(0).to_pylist()
 
     def _additions(self, v: int) -> list[str]:
         """Sorted files entering the table at version v (empty for
@@ -696,6 +740,7 @@ class AisleStreamReader(DataSourceStreamReader):
         so a restart is never mistaken for a fresh stream."""
         from aisle_spark.pipeline import list_snapshots
 
+        self._memo = {}
         versions = list_snapshots(self.fs, self.path.rstrip("/"))
         latest = versions[-1] if versions else 0
         cap_f, cap_b, cur = self._max_files, self._max_bytes, self._cursor
@@ -704,70 +749,40 @@ class AisleStreamReader(DataSourceStreamReader):
         if cur is None:
             cur = {"version": 0}
 
-        def sizer(snap):
-            st = snap.get("file_stats", {})
-
-            def size(f):
-                b = (st.get(f) or {}).get("__bytes")
-                # unknown size (legacy commit) counts 0 toward the byte
-                # budget — file-count capping still bounds those batches
-                return int(b) if isinstance(b, int) else 0
-
-            return size
-
         # pending = every unemitted file with the offset that would
         # follow it, in emission order (same order _new_files replays)
         pend: list[tuple[int, dict]] = []
+
+        def queue(files, sizes, last: dict, partial, done: int = 0) -> None:
+            for i in range(done, len(files)):
+                pend.append((sizes[i], partial(i + 1) if i + 1 < len(files) else last))
+
+        def backfill(bv: int, done: int = 0) -> None:
+            # a pinned snapshot's live file list
+            snap = self._read_snap(bv, stats=True)
+            queue(snap["files"], self._sizes(snap["stats"], snap["files"]), {"version": bv},
+                  lambda p: {"version": 0, "backfill_v": bv, "pos": p}, done)
+
+        def additions(w: int, done: int = 0) -> None:
+            adds = self._additions(w)
+            queue(adds, self._sizes(self._own_stats(w), adds), {"version": w},
+                  lambda p: {"version": w, "pos": p}, done)
+
         v = int(cur.get("version", 0))
         if cur.get("backfill_v") is not None:
-            bv = int(cur["backfill_v"])
-            snap = self._read_snap(bv)
-            files, size = snap["files"], sizer(snap)
-            done = int(cur["pos"])
-            for i in range(done, len(files)):
-                off = (
-                    {"version": 0, "backfill_v": bv, "pos": i + 1}
-                    if i + 1 < len(files)
-                    else {"version": bv}
-                )
-                pend.append((size(files[i]), off))
-            start_w = bv
+            start_w = int(cur["backfill_v"])
+            backfill(start_w, int(cur["pos"]))
         elif v == 0:
             # fresh stream: pin the backfill list to the CURRENT snapshot
             # (compacted/vacuumed history must never be read)
-            snap = self._read_snap(latest)
-            files, size = snap["files"], sizer(snap)
-            for i, f in enumerate(files):
-                off = (
-                    {"version": 0, "backfill_v": latest, "pos": i + 1}
-                    if i + 1 < len(files)
-                    else {"version": latest}
-                )
-                pend.append((size(f), off))
             start_w = latest
+            backfill(latest)
         else:
             start_w = v
             if cur.get("pos") is not None:
-                adds = self._additions(v)
-                size = sizer(self._read_snap(v))
-                done = int(cur["pos"])
-                for i in range(done, len(adds)):
-                    off = (
-                        {"version": v, "pos": i + 1}
-                        if i + 1 < len(adds)
-                        else {"version": v}
-                    )
-                    pend.append((size(adds[i]), off))
+                additions(v, int(cur["pos"]))
         for w in range(start_w + 1, latest + 1):
-            adds = self._additions(w)
-            size = sizer(self._read_snap(w))
-            for i, f in enumerate(adds):
-                off = (
-                    {"version": w, "pos": i + 1}
-                    if i + 1 < len(adds)
-                    else {"version": w}
-                )
-                pend.append((size(f), off))
+            additions(w)
         if not pend:
             return {"version": latest}
         # soft limits, always >= 1 file of progress: stop BEFORE file
@@ -817,7 +832,8 @@ class AisleStreamReader(DataSourceStreamReader):
 
     def _new_files(self, start: dict, end: dict) -> tuple[list[str], dict]:
         """Manifest-relative files a stream must emit for (start, end],
-        plus the horizon snapshot's file_stats. A plain version-0 start
+        plus the horizon snapshot's stats rows when the ``where`` option
+        needs them (else None). A plain version-0 start
         loads the END snapshot's CURRENT file set (fresh streams over
         compacted/vacuumed tables read exactly the live data);
         rate-limited backfills slice the pinned ``backfill_v`` list;
@@ -843,12 +859,12 @@ class AisleStreamReader(DataSourceStreamReader):
         if self._off_key(end) < self._off_key(start):
             raise _violation()
 
+        want = self.exact_where is not None
         if e_bf is not None:
             # capped backfill slice: only a fresh start or an earlier
             # position in the SAME pinned list may precede it
             bv = int(e_bf)
-            files = list(self._read_snap(bv)["files"])
-            stats = self._read_snap(bv).get("file_stats", {})
+            snap = self._read_snap(bv, want)
             if s_bf is not None:
                 if int(s_bf) != bv:
                     raise _violation()
@@ -857,11 +873,11 @@ class AisleStreamReader(DataSourceStreamReader):
                 lo = 0
             else:
                 raise _violation()
-            return files[lo:int(ep)], stats
+            return snap["files"][lo:int(ep)], snap.get("stats")
         if end_v == 0:
-            return [], {}
-        end_snap = self._read_snap(end_v)
-        stats = end_snap.get("file_stats", {})
+            return [], None
+        end_snap = self._read_snap(end_v, want)
+        stats = end_snap.get("stats")
         out: list[str] = []
         if s_bf is not None:
             # backfill completes within this batch, then deltas follow
@@ -891,13 +907,15 @@ class AisleStreamReader(DataSourceStreamReader):
         return out, stats
 
     def partitions(self, start: dict, end: dict) -> Sequence[AislePartition]:
-        new, fstats = self._new_files(start, end)  # validates start <= end
+        self._memo = {}
+        new, stats = self._new_files(start, end)  # validates start <= end
         self._cursor = dict(end)
         if self.exact_where is not None and new:
             # the file tier per micro-batch: whole new files drop on their
-            # manifest file_stats when the where option excludes them
+            # stats rows when the where option excludes them
             where = utc_normalize(self.exact_where)
-            new = _files_kept(new, fstats, where, self.arrow_schema)
+            rows = _file_rows(stats, new, self.arrow_schema)
+            new = _files_kept(new, rows, where, self.arrow_schema)
         root = self.path.rstrip("/")
         return [AislePartition(f"{root}/{f}", None) for f in new]
 
@@ -932,177 +950,17 @@ class AisleStreamReader(DataSourceStreamReader):
 class AisleCommit(WriterCommitMessage):
     filename: str | None  # None: the task wrote no block
     n_blocks: int
-    stats: dict | None = None  # per-column [min, max] over the whole file
 
 
-# file-level stats cover every orderable scalar kind with a JSON-safe
-# canonical encoding (the reference prunes all orderable leaves at its
-# coarsest granularity, src/prune/stats.rs:120-157, 365-410); binary
-# bounds ride as tagged base64 ({"b64": ...}) so byte order survives JSON
-_FILE_STAT_KINDS = (
-    "int", "float", "string", "timestamp", "duration", "decimal", "binary",
-)
-
-
-def _json_stat_bound(v):
-    """One file-level stat bound -> its canonical JSON-safe encoding:
-    timestamp -> epoch-µs int (naive = UTC instant, the engine's storage
-    domain), date -> epoch-days int, duration -> µs int, decimal -> exact
-    string, float NaN -> None (Unknown — Spark orders NaN greatest, so a
-    lost NaN bound would wrongly prune ``x > v`` files; ADVICE r3
-    medium). Anything unrepresentable -> None = no evidence.
-    :func:`file_stats_table` inverts it."""
-    import datetime as _dt
-    import decimal as _decimal
-    import math
-
-    v = v.item() if hasattr(v, "item") else v  # numpy -> python
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-    if isinstance(v, _dt.date):
-        return (v - _dt.date(1970, 1, 1)).days
-    if isinstance(v, _dt.timedelta):
-        return v // _dt.timedelta(microseconds=1)
-    if isinstance(v, _decimal.Decimal):
-        return str(v)
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        import base64
-
-        return {"b64": base64.b64encode(bytes(v)).decode("ascii")}
-    if isinstance(v, float):
-        return None if math.isnan(v) else v
-    if isinstance(v, (int, str)):
-        return v
-    return None
-
-
-def file_stats_table(entries: list, specs, columns) -> pa.Table:
-    """The manifest's JSON ``file_stats`` entries (one per file; None when
-    a file has none) decoded back from :func:`_json_stat_bound` into one
-    row per file in the stat types of ``blocks_arrow_schema`` — the table
-    the file tier runs ``chunkstats.manifest_keep`` over. Only ``columns``
-    (``stat_columns`` of the predicate) are decoded: ``{c}__min/max`` from
-    the µs, day, decimal-string, tagged-base64 and plain bounds,
-    ``{c}__nulls`` and ``n_rows`` from the ``[mn, mx, nulls, rows]``
-    totals, ``{m}__keys`` from ``{"keys": [...]}``; the manifest carries no
-    other stat. The manifest is input read from disk, so nothing here
-    raises: a missing entry, a legacy ``[mn, mx]`` entry's totals, or a
-    bound that does not parse in its column's type decodes to NULL —
-    Unknown, the file is kept. ``n_rows`` is int64 (a file can outgrow a
-    block's int32); a column's nulls count only when its row total is
-    the file's."""
-    kinds = {s.name: s for s in specs}
-    sts = [e if isinstance(e, dict) else {} for e in entries]
-    n = len(sts)
-
-    def field(c: str, i: int) -> list:
-        """Element i of each file's ``[mn, mx, nulls, rows]`` entry for c."""
-        return [
-            e[i] if isinstance(e, list) and len(e) > i else None
-            for e in (st.get(c) for st in sts)
-        ]
-
-    def counts(c: str, i: int) -> np.ndarray:
-        return np.fromiter(
-            (x if type(x) is int and 0 <= x < 2**63 else -1 for x in field(c, i)),
-            np.int64,
-            n,
-        )
-
-    out: dict[str, pa.Array] = {}
-    n_rows = np.full(n, -1, dtype=np.int64)
-    totals = {}
-    for name in sorted(columns):
-        c, _, stat = name.rpartition("__")
-        s = kinds.get(c)
-        if s is None:
-            continue
-        if stat == "keys" and s.kind == "map":
-            keys = [e.get("keys") if isinstance(e, dict) else None
-                    for e in (st.get(c) for st in sts)]
-            out[name] = pa.array(
-                [k if isinstance(k, list) and all(isinstance(x, str) for x in k) else None
-                 for k in keys],
-                pa.list_(pa.string()),
-            )
-        elif stat in ("min", "max") and s.kind in _FILE_STAT_KINDS:
-            out[name] = _stat_bounds(field(c, 0 if stat == "min" else 1), s)
-        elif stat == "nulls":
-            totals[name] = nulls, rows = counts(c, 2), counts(c, 3)
-            n_rows = np.where(n_rows < 0, rows, n_rows)
-    for name, (nulls, rows) in totals.items():
-        ok = (nulls >= 0) & (rows >= 0) & (rows == n_rows) & (nulls <= rows)
-        out[name] = pa.array(nulls, pa.int64(), mask=~ok)
-    return pa.table({"n_rows": np.maximum(n_rows, 0), **out})
-
-
-def _stat_bounds(vals: list, s) -> pa.Array:
-    """One column's JSON file bounds -> an array of its stat type; a value
-    that does not parse in that type is NULL."""
-    import decimal as _decimal
-
-    import pyarrow.compute as pc
-
-    t = s.stat_type
-    if s.kind == "decimal":
-
-        def parse(v):
-            try:
-                d = _decimal.Decimal(v)
-                u = d.scaleb(t.scale)
-                if u == u.to_integral_value() and abs(u) < 10**t.precision:
-                    return d
-            except ArithmeticError:  # decimal.InvalidOperation
-                pass
-            return None
-
-        return pa.array([parse(v) if isinstance(v, str) else None for v in vals], t)
-    if s.kind == "binary":
-        import base64
-
-        def parse(v):
-            raw = v.get("b64") if isinstance(v, dict) else None
-            if isinstance(raw, str):
-                try:
-                    return base64.b64decode(raw, validate=True)
-                except ValueError:  # binascii.Error, non-ASCII text
-                    pass
-            return None
-
-        return pa.array([parse(v) for v in vals], t)
-    if s.kind == "string":
-        return pa.array([v if isinstance(v, str) else None for v in vals], t)
-    if s.kind == "float":
-        wide = pa.array([v if type(v) is float else None for v in vals], pa.float64())
-        if t == pa.float64():
-            return wide
-        out = wide.cast(t, safe=False)  # float32: exact or NULL
-        return pc.if_else(pc.equal(out.cast(pa.float64()), wide), out, None)
-    # ints, bools and dates (days), timestamps and durations (µs)
-    if pa.types.is_boolean(t):
-        return pa.array([v == 1 if type(v) is int and v in (0, 1) else None for v in vals], t)
-    bits = t.bit_width
-    lo, hi = (0, 2**bits - 1) if pa.types.is_unsigned_integer(t) else (
-        -(2 ** (bits - 1)), 2 ** (bits - 1) - 1)
-    return pa.array([v if type(v) is int and lo <= v <= hi else None for v in vals], t)
-
-
-def _files_kept(files: list[str], fstats: dict, where: Spec, schema: pa.Schema) -> list[str]:
-    """The file tier: ``files`` whose manifest ``file_stats`` may hold a
-    row matching ``where`` (already ``utc_normalize``d), in order — the
-    block tier's own evaluator over one row per file."""
-    from aisle_spark.chunkstats import manifest_keep, stat_columns
+def _files_kept(files: list[str], rows: pa.Table, where: Spec, schema: pa.Schema) -> list[str]:
+    """The file tier: ``files`` whose stats rows (``_file_rows``, in the
+    same order) may hold a row matching ``where`` (already
+    ``utc_normalize``d), in order — the block tier's own evaluator over
+    one row per file."""
+    from aisle_spark.chunkstats import manifest_keep
     from aisle_spark.schema import specs_for_schema
 
-    specs = specs_for_schema(schema)
-    table = file_stats_table([fstats.get(f) for f in files], specs, stat_columns(where))
-    keep = manifest_keep(where, table, {s.name: s for s in specs})
+    keep = manifest_keep(where, rows, {s.name: s for s in specs_for_schema(schema)})
     return [f for f, k in zip(files, keep) if k]
 
 
@@ -1110,12 +968,12 @@ def plan_pruned(
     fs,
     schema: pa.Schema,
     files: list[str],
-    fstats: dict,
+    stats: pa.Table,
     where: Spec,
     leaves: Sequence[str],
 ) -> list[tuple[str, list[int], int | None]]:
     """The pruned-read planner of ``AisleReader``: the file tier drops
-    whole files on their manifest ``file_stats``, then the numpy block
+    whole files on their stats rows (``_file_rows``), then the numpy block
     tier (``chunkstats.manifest_keep``) runs once over the surviving
     files' stat columns, each cast to the block schema's types so Spark-
     and pyarrow-written files concatenate. ``where`` is already
@@ -1129,7 +987,7 @@ def plan_pruned(
     from aisle_spark.chunkstats import manifest_keep, stat_columns
     from aisle_spark.schema import blocks_arrow_schema, specs_for_schema
 
-    files = sorted(_files_kept(files, fstats, where, schema))
+    files = sorted(_files_kept(files, stats, where, schema))
     if not files:
         return []
     specs = specs_for_schema(schema)
@@ -1154,107 +1012,6 @@ def plan_pruned(
             group = np.repeat(np.arange(len(groups)), groups)
             at = lo + np.flatnonzero(np.isin(group, group[rows]))
             out.append((f, rows.tolist(), int(block_b[at].sum()) if known[at].all() else None))
-    return out
-
-
-def _merge_file_stat(
-    acc: dict, row: dict, cols: list[str], map_cols: tuple | list = ()
-) -> None:
-    """Fold one block's [min, max, nulls, rows] into the per-file
-    accumulator, in the stats' NATURAL domain (datetime/Decimal/...
-    compare correctly there; decimal strings would sort
-    lexicographically). ``_json_stat_bound`` canonicalizes once, at
-    commit time. The null/row totals feed IsNull file pruning — the
-    ``WHERE deleted_at IS NULL`` shape over event tables.
-
-    ``map_cols``: map columns whose per-block sorted key sets union into
-    a per-file key set ``{"keys": [...]}`` — the dictionary-hint
-    discipline one level up (a key provably absent from the whole file
-    prunes ``props['k'] op v`` at planning, VERDICT r4 missing #3).
-    Exact-or-nothing: any block with NULL key evidence, or a union past
-    MAP_KEYS_MAX, poisons the file entry to no-evidence.
-
-    Every ``<leaf>__enc_bytes`` in ``row`` sums into a per-leaf payload
-    total under the accumulator key None (no column name): the bytes a
-    read of that leaf moves, which ``pipeline.scan`` sizes its decode
-    stage by. A NULL size poisons that leaf's total."""
-    import math
-
-    from aisle_spark.schema import MAP_KEYS_MAX
-
-    sizes = acc.setdefault(None, {})
-    for k, v in row.items():
-        if k.endswith("__enc_bytes"):
-            leaf = k[: -len("__enc_bytes")]
-            had = sizes.get(leaf, 0)
-            sizes[leaf] = None if v is None or had is None else had + int(v)
-
-    for m in map_cols:
-        ks = row.get(f"{m}__keys")
-        if hasattr(ks, "tolist"):  # numpy / pyarrow array
-            ks = ks.tolist()
-        cur = acc.get(m, {"keys": []})
-        if cur.get("keys") is None or ks is None:
-            acc[m] = {"keys": None}
-            continue
-        u = set(cur["keys"]) | set(ks)
-        acc[m] = {"keys": None if len(u) > MAP_KEYS_MAX else sorted(u)}
-
-    n_rows = row.get("n_rows")
-    n_rows = int(n_rows) if n_rows is not None else 0
-    for c in cols:
-        mn, mx = row.get(f"{c}__min"), row.get(f"{c}__max")
-        mn = mn.item() if hasattr(mn, "item") else mn
-        mx = mx.item() if hasattr(mx, "item") else mx
-        # NaN bounds (deliberate: Spark orders NaN greatest) don't merge
-        # soundly through min()/max() — poison to Unknown like None
-        if isinstance(mn, float) and math.isnan(mn):
-            mn = None
-        if isinstance(mx, float) and math.isnan(mx):
-            mx = None
-        nulls = row.get(f"{c}__nulls")
-        nulls = int(nulls) if nulls is not None else None
-        cur = acc.get(c)
-        if cur is None:
-            acc[c] = [mn, mx, nulls, n_rows]
-            continue
-        # a None bound (all-null block / truncation overflow / NaN)
-        # poisons the file bound to None = Unknown on that side
-        acc[c] = [
-            None if (cur[0] is None or mn is None) else min(cur[0], mn),
-            None if (cur[1] is None or mx is None) else max(cur[1], mx),
-            None if (cur[2] is None or nulls is None) else cur[2] + nulls,
-            cur[3] + n_rows,
-        ]
-
-
-def _json_file_stats(acc: dict, fs, path: str) -> dict:
-    """A file's folded stats (``_merge_file_stat``) in the manifest's JSON
-    encoding, plus its ``__bytes``; columns with no evidence at all are
-    left out (absent = Unknown = file kept), plus ``__enc_bytes``: the
-    known per-leaf payload totals. The block writer and the file-stat
-    recompute both end here."""
-    out: dict = {}
-    for c, v in acc.items():
-        if c is None:  # payload totals, below
-            continue
-        if isinstance(v, dict):  # map key set, already JSON-safe
-            if v.get("keys") is not None:
-                out[c] = v
-            continue
-        b = [_json_stat_bound(v[0]), _json_stat_bound(v[1]), v[2], v[3]]
-        if b[0] is not None or b[1] is not None or b[2] is not None:
-            out[c] = b
-    if "__bytes" not in out:  # a real column of that name wins
-        try:
-            out["__bytes"] = (
-                os.path.getsize(path) if fs is None else int(fs.get_file_info(path).size)
-            )
-        except OSError:
-            pass  # size is rate-limiter advice only; never fail a commit
-    sizes = {c: b for c, b in (acc.get(None) or {}).items() if b is not None}
-    if sizes and "__enc_bytes" not in out:  # a real column of that name wins
-        out["__enc_bytes"] = sizes
     return out
 
 
@@ -1294,55 +1051,43 @@ class AisleWriter(DataSourceArrowWriter):
         rec = w.close()
         if rec is None:  # empty task: no file, nothing to commit
             return AisleCommit(filename=None, n_blocks=0)
-        return AisleCommit(
-            filename=rec["file"], n_blocks=rec["n_blocks"], stats=rec["file_stats"]
-        )
+        return AisleCommit(filename=rec["file"], n_blocks=rec["n_blocks"])
 
     def commit(self, messages: list[AisleCommit]) -> None:
         from aisle_spark.pipeline import (
             _write_schema_sidecar,
+            fold_file_stats,
             load_manifest,
             manifest_lock,
             publish_manifest,
         )
+        from aisle_spark.schema import specs_for_schema
 
-        live = [m for m in messages if m is not None and m.n_blocks > 0]
-        new_files = sorted(m.filename for m in live)
-        new_stats = {m.filename: m.stats for m in live if m.stats}
+        new_files = sorted(m.filename for m in messages if m is not None and m.n_blocks > 0)
+        stats = fold_file_stats(
+            self.fs, self.path, new_files, specs_for_schema(self._arrow_schema())
+        )
         # read-merge-write under the manifest lock: concurrent local
         # appends can never drop each other's files (object-store callers
         # get last-writer-wins; see manifest_lock)
         with manifest_lock(self.fs, self.path):
-            files, fstats = new_files, new_stats
-            extras: dict = {}
+            payload: dict = {"files": new_files}
             old = None if self.overwrite else load_manifest(self.fs, self.path)
             if old is not None:
-                files = sorted(set(old["files"]) | set(files))
-                fstats = {**old.get("file_stats", {}), **fstats}
-                # carry manifest extras forward — dropping the streaming
-                # sink's "batches" map here would let a later batch
-                # REPLAY add duplicate rows instead of replacing files
+                payload["files"] = sorted(set(old["files"]) | set(new_files))
+                # carry the streaming sink's "batches" map forward —
+                # dropping it here would let a later batch REPLAY add
+                # duplicate rows instead of replacing files.
                 # "compacted_from" must NOT ride along: it marks a commit
                 # whose files carry only already-emitted rows, and a
                 # stream reader skips such commits — tagging an APPEND
                 # with it would hide the new file from streams forever
-                extras = {
-                    k: v
-                    for k, v in old.items()
-                    if k
-                    not in (
-                        "files", "file_stats", "version", "pointer",
-                        "compacted_from",
-                    )
-                }
+                if "batches" in old:
+                    payload["batches"] = old["batches"]
             # local: tmp + atomic rename; object store: one atomic PUT —
             # the same commit discipline as the direct-write encode; every
             # commit also publishes an immutable snapshot (time travel)
-            publish_manifest(
-                self.fs,
-                self.path,
-                {**extras, "files": files, "file_stats": fstats},
-            )
+            publish_manifest(self.fs, self.path, payload, stats)
         _write_schema_sidecar(self.path, self._arrow_schema(), fs=self.fs)
 
     def abort(self, messages: list[AisleCommit]) -> None:
@@ -1383,8 +1128,9 @@ class AisleDataSource(DataSource):
       path: caps on NEW files / bytes per micro-batch (soft max: one
       oversized file may exceed the byte budget), including the initial
       backfill (a fresh stream over a 10^5-file table otherwise reads
-      everything in one batch). Byte costs come from per-file ``__bytes``
-      recorded at every commit; files from pre-r4 commits count zero.
+      everything in one batch). Byte costs come from the ``__bytes`` of
+      each file's stats row; a file without one (a legacy manifest, whose
+      stats were JSON, until compaction rewrites it) counts zero.
       Sub-version offsets stay self-contained and exactly-once across
       restarts; with Trigger.AvailableNow each RUN advances one bounded
       batch (the Python DataSource API exposes no admission control).

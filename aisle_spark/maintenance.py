@@ -40,14 +40,16 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from aisle_spark.datasource import _fs_of
+from aisle_spark.datasource import _fs_of, _read_sidecar_schema
 from aisle_spark.pipeline import (
     MANIFEST,
     _fs_list,
     _fs_read_json,
     _fs_write_json,
+    fold_file_stats,
     load_manifest,
 )
+from aisle_spark.schema import specs_for_schema
 
 
 def _current_manifest(fs, root: str) -> dict:
@@ -68,12 +70,14 @@ def compact_encoded(
     min_file_mb: float | None = None,
 ) -> dict:
     """Rewrite the committed block files into ``target_files`` larger ones
-    (default: total committed bytes / ``target_mb``). Returns a summary
-    dict. Payloads are never decoded; only block rows move.
+    (default: total committed bytes / ``target_mb``), with their stats
+    rows folded anew — which also gives the files of a legacy manifest
+    stats again. Returns a summary dict. Payloads are never decoded; only
+    block rows move.
 
     ``min_file_mb``: INCREMENTAL mode — only files smaller than this are
     rewritten; files already at target size survive untouched (with
-    their manifest stats). At 10^5-file scale a nightly OPTIMIZE must
+    their stats rows). At 10^5-file scale a nightly OPTIMIZE must
     not re-shuffle the 99% of bytes that previous runs already
     compacted — the size-thresholded form of lakehouse OPTIMIZE. The
     run is a no-op (``skipped``) when fewer than two files are under
@@ -129,7 +133,7 @@ def compact_encoded(
     )
     if not new_files:
         raise RuntimeError("compaction produced no files")
-    new_stats = _recompute_file_stats(fs, root, new_files)
+    stats = fold_file_stats(fs, root, new_files, specs_for_schema(_read_sidecar_schema(fs, root)))
     from aisle_spark.pipeline import manifest_lock
 
     with manifest_lock(fs, root):
@@ -137,14 +141,9 @@ def compact_encoded(
         # (not among our inputs) must survive the manifest swap
         old = _current_manifest(fs, root)
         survivors = sorted(set(old["files"]) - set(files))
-        old_stats = old.get("file_stats", {})
         payload: dict = {
             "files": sorted(set(new_files) | set(survivors)),
             "compacted_from": len(files),
-            "file_stats": {
-                **{k: v for k, v in old_stats.items() if k in set(survivors)},
-                **new_stats,
-            },
         }
         if "batches" in old:
             # streaming-sink tables: retire the per-batch map for
@@ -160,7 +159,7 @@ def compact_encoded(
             }
         from aisle_spark.pipeline import publish_manifest
 
-        publish_manifest(fs, root, payload)
+        publish_manifest(fs, root, payload, stats)
     return {
         "files_before": len(files),
         "files_after": len(new_files),
@@ -168,53 +167,6 @@ def compact_encoded(
         "subdir": subdir,
         "ordered_by": order_by,
     }
-
-
-def _recompute_file_stats(fs, root: str, rel_files: list[str]) -> dict:
-    """Per-file stats for the manifest-list pruning tier
-    (datasource._files_kept), folded from each committed file's block stat
-    columns with the block writer's own code (``_merge_file_stat`` +
-    ``_json_file_stats``): NULL-poisoned bounds, null/row totals, map
-    key-set unions, ``__bytes`` and the ``__enc_bytes`` payload totals,
-    exactly as ``BlockFileWriter`` records them (absent => Unknown =>
-    file kept, always sound)."""
-    import pyarrow.parquet as pq
-
-    from aisle_spark.datasource import (
-        _json_file_stats,
-        _merge_file_stat,
-        read_stat_columns,
-    )
-
-    first = f"{root}/{rel_files[0]}"
-    if fs is None:
-        names = pq.read_schema(first).names
-    else:
-        with fs.open_input_file(first) as src:
-            names = pq.read_schema(src).names
-    cols = [
-        n[: -len("__min")]
-        for n in names
-        if n.endswith("__min") and f"{n[: -len('__min')]}__max" in names
-    ]
-    # map columns: per-file key-set union (exact-or-nothing, like the
-    # block dictionary hint) for MapKeyCmp file pruning
-    map_cols = [
-        n[: -len("__keys")]
-        for n in names
-        if n.endswith("__keys") and f"{n[: -len('__keys')]}__kmin" in names
-    ]
-    want = [f"{c}__{s}" for c in cols for s in ("min", "max", "nulls")]
-    want += [f"{m}__keys" for m in map_cols] + ["n_rows"]
-    want += [n for n in names if n.endswith("__enc_bytes")]
-    paths = [f"{root}/{f}" for f in rel_files]
-    out: dict = {}
-    for rel, path, t in zip(rel_files, paths, read_stat_columns(fs, paths, want)):
-        acc: dict = {}
-        for row in t.to_pylist():
-            _merge_file_stat(acc, row, cols, map_cols)
-        out[rel] = _json_file_stats(acc, fs, path)
-    return out
 
 
 def vacuum_encoded(
@@ -316,17 +268,20 @@ def snapshots(path: str) -> list[dict]:
 
 
 def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
-    """Delete snapshot files older than the newest ``keep_last`` (the
-    retention knob of the time-travel surface). Data files they referenced
-    become collectible by the NEXT ``vacuum_encoded``. Never touches the
-    current manifest — including the POINTER form, whose pointed-at
-    snapshot (and chain) always survives regardless of ``keep_last``."""
+    """Delete snapshot files (and the stats files they name) older than
+    the newest ``keep_last`` (the retention knob of the time-travel
+    surface). Data files they referenced become collectible by the NEXT
+    ``vacuum_encoded``. Never touches the current manifest, and the
+    current version's snapshot (and chain) always survives regardless of
+    ``keep_last``: readers resolve the pointer form and every file's
+    stats through it."""
     import os
 
     from aisle_spark.pipeline import (
         _SNAP_DIR,
         _fs_read_json,
         _fs_write_json,
+        _write_stats,
         list_snapshots,
         manifest_lock,
         read_snapshot,
@@ -344,27 +299,32 @@ def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
         # any OTHER read failure propagates: proceeding without the
         # pointer check could delete the snapshot the current manifest
         # resolves through (code-review r5)
-        if "files" not in cur and cur.get("version") is not None:
-            # pointer-form current manifest: deleting the pointed-at
-            # snapshot would brick the table (every load_manifest read
-            # resolves through it)
+        if cur.get("version") is not None:
+            # deleting the current snapshot would brick the table: the
+            # pointer form and every file's stats resolve through it
             victims = [v for v in victims if v < int(cur["version"])]
         retained = sorted(set(versions) - set(victims))
         if victims and retained:
             # the oldest RETAINED snapshot may be a delta whose chain
             # passes through the victims; materialize it as a full
-            # snapshot first (equivalent content, atomic replace) so
-            # every retained chain stops at or after the boundary
+            # snapshot first (equivalent content, atomic replaces) so
+            # every retained chain stops at or after the boundary. Its
+            # stats file goes first: a delta replays full rows to the
+            # same result, so the table reads right between the writes
             boundary = retained[0]
-            snap = read_snapshot(fs, root, boundary)
+            snap = read_snapshot(fs, root, boundary, stats=True)
+            rows = snap.pop("stats")
+            if rows is not None:
+                snap["stats"] = _write_stats(fs, root, boundary, rows)
             _fs_write_json(fs, f"{root}/{_SNAP_DIR}/v{boundary:08d}.json", snap)
         for v in victims:
-            target = f"{root}/{_SNAP_DIR}/v{v:08d}.json"
-            try:
-                if fs is None:
-                    os.remove(target)
-                else:
-                    fs.delete_file(target)
-            except OSError:
-                pass
+            for suffix in (".json", ".stats.parquet"):
+                target = f"{root}/{_SNAP_DIR}/v{v:08d}{suffix}"
+                try:
+                    if fs is None:
+                        os.remove(target)
+                    else:
+                        fs.delete_file(target)
+                except OSError:
+                    pass
     return victims

@@ -7,9 +7,9 @@ Shape (SURVEY.md §7.0):
              -> packed into byte-balanced tasks (whole files per task)
              -> mapInArrow: each task reads its files with pyarrow and
                 writes its own block parquet through BlockFileWriter
-                (_order_and_slice -> encode_block -> row groups, file
-                stats folded as it goes)
-             -> per-input _done/ sidecars -> publish_manifest
+                (_order_and_slice -> encode_block -> row groups)
+             -> per-input _done/ sidecars -> file stats folded from the
+                written files' block stats -> publish_manifest
 
            ``encode_table`` is the row-shuffle variant: rows move to a
            salted ``part_id`` (xxhash64(salt_cols) % P) through
@@ -169,13 +169,13 @@ class BlockFileWriter:
     writer and the streaming sink all write block parquet through it.
 
     ``write(slab)`` takes one slab of flattened rows through
-    ``_order_and_slice`` -> ``encode_block``, folds every block into the
-    file-level stats (``datasource._merge_file_stat``) and streams a
-    parquet row group out every ``flush_blocks`` blocks, so the task's
-    block buffer is bounded whatever the input size. ``close()`` returns
-    the file's commit record: file name, ``n_blocks``/``n_rows``/
-    ``enc_bytes``/``raw_bytes``, the JSON file stats and the sort/encode/
-    write seconds — or None when no block was written (no file is left).
+    ``_order_and_slice`` -> ``encode_block`` and streams a parquet row
+    group out every ``flush_blocks`` blocks, so the task's block buffer
+    is bounded whatever the input size. ``close()`` returns the file's
+    commit record: file name, ``n_blocks``/``n_rows``/``enc_bytes``/
+    ``raw_bytes`` and the sort/encode/write seconds — or None when no
+    block was written (no file is left). File stats are folded at commit,
+    from the written file (``fold_file_stats``).
 
     The rules every caller shares: ``part_id`` = crc32 of the block's
     first-row salt columns mod ``parts``; ``block_id`` = (Spark partition
@@ -201,8 +201,6 @@ class BlockFileWriter:
     ):
         from pyspark import TaskContext
 
-        from aisle_spark.datasource import _FILE_STAT_KINDS
-
         tc = TaskContext.get()
         self._id_base = (tc.partitionId() if tc else 0) << 24
         self._specs = specs
@@ -213,8 +211,6 @@ class BlockFileWriter:
         self._block_rows = block_rows
         self._max_values = max_values
         self._flush_blocks = flush_blocks
-        self._stat_cols = [s.name for s in specs if s.kind in _FILE_STAT_KINDS]
-        self._map_cols = [s.name for s in specs if s.kind == "map"]
         self._fs = fs
         self.fname = fname
         root = out_path.rstrip("/")
@@ -222,7 +218,6 @@ class BlockFileWriter:
         self._target = f"{root}/.{fname}.tmp" if fs is None else self._final
         self._writer = None
         self._pending: list[dict] = []
-        self._fstats: dict = {}
         self._seq = 0
         self.n_blocks = self.n_rows = self.enc_bytes = self.raw_bytes = 0
         self.stages = {"sort_sec": 0.0, "encode_sec": 0.0, "write_sec": 0.0}
@@ -230,8 +225,6 @@ class BlockFileWriter:
     def write(self, slab: pa.Table) -> None:
         import time
         import zlib
-
-        from aisle_spark.datasource import _merge_file_stat
 
         ts = time.time()
         # single-gather ordering: sort + block bounds + width clustering
@@ -250,7 +243,6 @@ class BlockFileWriter:
                 self._id_base | self._seq,
             )
             self._seq += 1
-            _merge_file_stat(self._fstats, row, self._stat_cols, self._map_cols)
             self._pending.append(row)
             if len(self._pending) >= self._flush_blocks:
                 self.stages["encode_sec"] += time.time() - ts
@@ -301,8 +293,6 @@ class BlockFileWriter:
     def close(self) -> dict | None:
         import os
 
-        from aisle_spark.datasource import _json_file_stats
-
         self._flush()
         if self._writer is None:
             return None
@@ -315,7 +305,6 @@ class BlockFileWriter:
             "n_rows": self.n_rows,
             "enc_bytes": self.enc_bytes,
             "raw_bytes": self.raw_bytes,
-            "file_stats": _json_file_stats(self._fstats, self._fs, self._final),
             "stages": {k: round(v, 4) for k, v in self.stages.items()},
         }
 
@@ -371,25 +360,37 @@ def encode_table(
     )
 
 
-def _fs_write_json(fs, path: str, obj) -> None:
-    """Commit-point JSON write. Local: tmp + atomic rename. Object store
+def _fs_write(fs, path: str, body: bytes) -> None:
+    """Commit-point write. Local: tmp + atomic rename. Object store
     (``fs`` given): ONE streamed PUT — object stores create objects
     atomically (readers never observe partial bodies), and a retried task
     re-PUTs the same key with identical semantics to os.replace
     (last-writer-wins). This is the productionization path the round-2
     verdict flagged: no POSIX rename is assumed when fs is set."""
-    import json as _json
     import os as _os
 
-    body = _json.dumps(obj)
     if fs is None:
         tmp = f"{path}.tmp{_os.getpid()}"
-        with open(tmp, "w") as fh:
+        with open(tmp, "wb") as fh:
             fh.write(body)
         _os.replace(tmp, path)
     else:
         with fs.open_output_stream(path) as out:
-            out.write(body.encode())
+            out.write(body)
+
+
+def _fs_write_json(fs, path: str, obj) -> None:
+    import json as _json
+
+    _fs_write(fs, path, _json.dumps(obj).encode())
+
+
+def _fs_read(fs, path: str) -> bytes:
+    if fs is None:
+        with open(path, "rb") as fh:
+            return fh.read()
+    with fs.open_input_stream(path) as inp:
+        return inp.read()
 
 
 from contextlib import contextmanager
@@ -419,8 +420,8 @@ def manifest_lock(fs, root: str):
 
 
 _SNAP_DIR = "_aisle_snapshots"
-# the current-state manifest: the committed file list (+ per-file stats),
-# or a pointer to the snapshot holding it
+# the current-state manifest: the committed file list, or a pointer to
+# the snapshot holding it
 MANIFEST = "_aisle_files.json"
 
 
@@ -442,49 +443,103 @@ def list_snapshots(fs, root: str) -> list[int]:
 _SNAP_FULL_EVERY = 16
 
 
-def read_snapshot(fs, root: str, version: int) -> dict:
+def _cached(cache: dict | None, key: str, read: Callable):
+    """``read()``, once per key while ``cache`` (a dict) lives."""
+    if cache is None:
+        return read()
+    if key not in cache:
+        cache[key] = read()
+    return cache[key]
+
+
+def snapshot_json(fs, root: str, version: int, cache: dict | None = None) -> dict:
+    """Snapshot ``version`` as persisted: full, or a delta naming its
+    ``delta_base``."""
+    path = f"{root.rstrip('/')}/{_SNAP_DIR}/v{version:08d}.json"
+    return _cached(cache, path, lambda: _fs_read_json(fs, path))
+
+
+def snapshot_stats(fs, root: str, snap: dict, cache: dict | None = None) -> pa.Table | None:
+    """The file stats rows (``schema.file_stats_schema``) a persisted
+    snapshot names: every live file's when it is full, the rows its
+    commit wrote when it is a delta. None when it names none (a legacy
+    manifest: its files have no stats, Unknown). A named file that is
+    missing raises FileNotFoundError, like a missing snapshot."""
+    if snap.get("stats") is None:
+        return None
+    import pyarrow.parquet as pq
+
+    path = f"{root.rstrip('/')}/{_SNAP_DIR}/{snap['stats']}"
+    return _cached(cache, path, lambda: pq.read_table(pa.BufferReader(_fs_read(fs, path))))
+
+
+def _write_stats(fs, root: str, version: int, rows: pa.Table) -> str:
+    """Write ``rows`` as snapshot ``version``'s stats file (atomically,
+    like the snapshot); returns the name the snapshot records."""
+    import pyarrow.parquet as pq
+
+    name = f"v{version:08d}.stats.parquet"
+    body = pa.BufferOutputStream()
+    pq.write_table(rows, body)
+    _fs_write(fs, f"{root.rstrip('/')}/{_SNAP_DIR}/{name}", body.getvalue().to_pybytes())
+    return name
+
+
+def _merge_stats(rows: pa.Table | None, gone, added: pa.Table | None) -> pa.Table | None:
+    """``rows`` without the files in ``gone`` or in ``added``, then
+    ``added``: a rewritten file's new rows replace its old ones. None
+    when no row is left (an overwrite may change the schema)."""
+    import pyarrow.compute as pc
+
+    if rows is not None:
+        drop = list(gone) + ([] if added is None else added.column("file").to_pylist())
+        rows = rows.filter(pc.invert(pc.is_in(rows.column("file"), pa.array(drop, pa.string()))))
+    parts = [t for t in (rows, added) if t is not None and t.num_rows]
+    return pa.concat_tables(parts, promote_options="default") if parts else None
+
+
+def read_snapshot(
+    fs, root: str, version: int, stats: bool = False, cache: dict | None = None
+) -> dict:
     """Materialize one committed manifest version. Delta snapshots replay
     forward from the nearest full ancestor (chains are strictly
-    consecutive, so the walk is bounded by _SNAP_FULL_EVERY). A missing
-    file anywhere in the chain raises FileNotFoundError exactly like a
-    missing full snapshot — retention violations stay loud."""
+    consecutive, so the walk is bounded by _SNAP_FULL_EVERY). With
+    ``stats`` the payload also carries ``"stats"``: the live files' stats
+    rows, replayed along the same chain (``snapshot_stats``), or None
+    when no snapshot of the chain has any. A missing file anywhere in the
+    chain raises FileNotFoundError exactly like a missing full snapshot —
+    retention violations stay loud. ``cache`` (a dict) memoizes the reads
+    of snapshot and stats files across calls."""
     root = root.rstrip("/")
-    snap = _fs_read_json(fs, f"{root}/{_SNAP_DIR}/v{version:08d}.json")
+    snap = snapshot_json(fs, root, version, cache)
     chain = []
     while "delta_base" in snap:
         chain.append(snap)
-        snap = _fs_read_json(
-            fs, f"{root}/{_SNAP_DIR}/v{snap['delta_base']:08d}.json"
-        )
-    payload = snap
+        snap = snapshot_json(fs, root, snap["delta_base"], cache)
+    payload = {k: v for k, v in snap.items() if k != "stats"}
+    files = set(payload.get("files", []))
+    rows = snapshot_stats(fs, root, snap, cache) if stats else None
     for d in reversed(chain):
-        files = (set(payload.get("files", [])) - set(d["del_files"])) | set(
-            d["add_files"]
-        )
-        dropped = set(d["del_stats"]) | set(d["del_files"])
-        stats = {
-            k: v
-            for k, v in payload.get("file_stats", {}).items()
-            if k not in dropped
-        }
-        stats.update(d["set_stats"])
-        payload = {
-            "version": d["version"],
-            "files": sorted(files),
-            "file_stats": stats,
-            **d.get("extras", {}),
-        }
+        # in place: a step costs its delta, not the table's file count
+        files.difference_update(d["del_files"])
+        files.update(d["add_files"])
+        payload = {"version": d["version"], **d.get("extras", {})}
+        if stats:
+            rows = _merge_stats(rows, d["del_files"], snapshot_stats(fs, root, d, cache))
+    payload["files"] = sorted(files)
+    if stats:
+        payload["stats"] = rows
     return payload
 
 
 def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
-    """The bytes actually persisted for snapshot ``version``: the full
+    """The JSON actually persisted for snapshot ``version``: the full
     payload on the periodic checkpoints (and whenever the delta would not
-    be smaller — e.g. compaction rewrites the whole file set), otherwise
-    a delta against version-1 as read from the CURRENT manifest. Any
-    lineage surprise degrades to full — always correct, never smaller."""
-    import json as _json
-
+    be smaller: it would name as many files as the full list, and its
+    stats file would hold as many rows — e.g. compaction rewrites the
+    whole file set), otherwise a delta against version-1 as read from the
+    CURRENT manifest. Any lineage surprise degrades to full — always
+    correct, never smaller."""
     if version == 1 or version % _SNAP_FULL_EVERY == 1:
         return payload
     try:
@@ -495,26 +550,14 @@ def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
         return payload
     old_files = set(prev.get("files", []))
     new_files = set(payload.get("files", []))
-    old_stats = prev.get("file_stats", {})
-    new_stats = payload.get("file_stats", {})
     delta = {
         "version": version,
         "delta_base": version - 1,
         "add_files": sorted(new_files - old_files),
         "del_files": sorted(old_files - new_files),
-        "set_stats": {
-            k: v for k, v in new_stats.items() if old_stats.get(k) != v
-        },
-        "del_stats": sorted(
-            k for k in old_stats if k not in new_stats and k in new_files
-        ),
-        "extras": {
-            k: v
-            for k, v in payload.items()
-            if k not in ("version", "files", "file_stats")
-        },
+        "extras": {k: v for k, v in payload.items() if k not in ("version", "files")},
     }
-    if len(_json.dumps(delta)) >= len(_json.dumps(payload)):
+    if len(delta["add_files"]) + len(delta["del_files"]) >= len(new_files):
         return payload
     return delta
 
@@ -522,30 +565,31 @@ def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
 # above this many committed files the current-state manifest switches to
 # the POINTER form ({"version": N, "pointer": true}): the commit then
 # writes O(changed) bytes total — one delta snapshot plus a ~40-byte
-# pointer swap — instead of rewriting the full file list + stats (~180 MB
-# at 10^6 files). Readers resolve the pointer through read_snapshot
+# pointer swap — instead of rewriting the full file list (~10 MB at 10^6
+# files). Readers resolve the pointer through read_snapshot
 # (<= _SNAP_FULL_EVERY-1 footer-sized delta reads past the last full
 # checkpoint) — the Delta-Lake commit-log + periodic-checkpoint
 # amortization. Small tables keep the single-read full form.
 _MANIFEST_POINTER_MIN_FILES = 4096
 
 
-def load_manifest(fs, root: str) -> dict | None:
+def load_manifest(fs, root: str, stats: bool = False) -> dict | None:
     """The current-state manifest as a FULL dict, resolving the pointer
     form through the snapshot chain; None when the table has no manifest
     (a plain ``blocks.write.parquet`` layout, or nothing committed yet).
-    Every in-engine reader of the manifest goes through here."""
+    ``stats`` adds the live files' stats rows (``read_snapshot``). Every
+    in-engine reader of the manifest goes through here."""
     root = root.rstrip("/")
     try:
         m = _fs_read_json(fs, f"{root}/{MANIFEST}")
     except FileNotFoundError:
         return None
-    if "files" in m:
+    if "files" in m and not stats:
         return m
-    return read_snapshot(fs, root, int(m["version"]))
+    return read_snapshot(fs, root, int(m["version"]), stats=stats)
 
 
-def publish_manifest(fs, root: str, payload: dict) -> int:
+def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None) -> int:
     """The ONE manifest commit point: write an immutable numbered
     snapshot (full or delta, see _snapshot_payload) — time travel for
     training-data reproducibility (readers pin ``versionAsOf``; vacuum
@@ -553,14 +597,33 @@ def publish_manifest(fs, root: str, payload: dict) -> int:
     swapping ``_aisle_files.json``: the full payload for small tables,
     the pointer form past _MANIFEST_POINTER_MIN_FILES files so a
     single-file append writes O(changed) bytes at ANY table size.
-    Callers hold ``manifest_lock`` where concurrent writers exist, which
-    also serializes version numbering. Returns the new version."""
+
+    ``stats`` holds the stats rows (``fold_file_stats``) of the files
+    this commit wrote; the survivors' rows carry forward. They go to an
+    immutable ``v{N}.stats.parquet`` written before the snapshot that
+    names it — every live file's rows when the snapshot is full, only
+    ``stats`` when it is a delta — so the snapshot stays the commit
+    point. Callers hold ``manifest_lock`` where concurrent writers exist,
+    which also serializes version numbering. Returns the new version."""
+    import pyarrow.compute as pc
+
     root = root.rstrip("/")
     versions = list_snapshots(fs, root)
     version = (versions[-1] + 1) if versions else 1
     payload = dict(payload, version=version)
     _fs_mkdirs(fs, f"{root}/{_SNAP_DIR}")
     snap = _snapshot_payload(fs, root, payload, version)
+    live = pa.array(payload.get("files", []), pa.string())
+
+    def alive(rows: pa.Table | None) -> pa.Table | None:
+        return None if rows is None else rows.filter(pc.is_in(rows.column("file"), live))
+
+    stats = alive(stats)
+    if "delta_base" not in snap and versions:
+        prev = read_snapshot(fs, root, versions[-1], stats=True)["stats"]
+        stats = _merge_stats(alive(prev), (), stats)
+    if stats is not None:
+        snap = dict(snap, stats=_write_stats(fs, root, version, stats))
     _fs_write_json(fs, f"{root}/{_SNAP_DIR}/v{version:08d}.json", snap)
     if len(payload.get("files", ())) > _MANIFEST_POINTER_MIN_FILES:
         current = {"version": version, "pointer": True}
@@ -570,14 +633,31 @@ def publish_manifest(fs, root: str, payload: dict) -> int:
     return version
 
 
+def fold_file_stats(fs, root: str, rel_files: list[str], specs: list[ColumnSpec]) -> pa.Table:
+    """The stats rows a commit records for ``rel_files`` (manifest-
+    relative), folded on the driver from each committed file's block stat
+    columns (``chunkstats.fold_blocks``) — one footer-sized read per
+    file under the bounded planning thread pool — plus its size."""
+    import os as _os
+
+    from aisle_spark.chunkstats import fold_blocks
+    from aisle_spark.datasource import read_stat_columns
+    from aisle_spark.schema import file_stats_schema
+
+    root = root.rstrip("/")
+    paths = [f"{root}/{f}" for f in rel_files]
+    want = [n for n in file_stats_schema(specs).names if n not in ("file", "__bytes")]
+    if fs is None:
+        sizes = [_os.path.getsize(p) for p in paths]
+    else:
+        sizes = [i.size for i in fs.get_file_info(paths)] if paths else []
+    return fold_blocks(list(rel_files), read_stat_columns(fs, paths, want), sizes, specs)
+
+
 def _fs_read_json(fs, path: str):
     import json as _json
 
-    if fs is None:
-        with open(path) as fh:
-            return _json.load(fh)
-    with fs.open_input_stream(path) as inp:
-        return _json.loads(inp.read().decode())
+    return _json.loads(_fs_read(fs, path))
 
 
 def _fs_list(fs, directory: str, suffix: str) -> list[tuple[str, int]]:
@@ -644,8 +724,8 @@ def encode_files_direct(
     Commit protocol (speculation/retry-safe): each attempt writes a
     uniquely-named file (tmp-name + atomic rename locally), then a
     per-input lineage sidecar under ``_done/`` (also atomic) recording
-    the data file, its file-level stats and codec/size/throughput
-    metrics — the sidecar IS the per-input commit point. The driver
+    the data file and its codec/size/throughput metrics — the sidecar IS
+    the per-input commit point. The driver folds the new files' stats and
     publishes ``_aisle_files.json`` from the sidecars; readers list that
     manifest, never the directory, so orphans from failed attempts are
     invisible. On an object store the renames drop out and the manifest
@@ -797,27 +877,25 @@ def encode_files_direct(
 def _rebuild_manifest(out_path: str, in_schema: pa.Schema, fs=None) -> list[str]:
     """Manifest = exactly the data files named by committed ``_done/``
     sidecars (this run's AND previous runs', so resume unions correctly),
-    with the per-file [min,max] bounds each sidecar carries from the
-    writer — the manifest-list pruning tier the data source plans with
-    (datasource._files_kept). A sidecar without stats gives its file no
-    entry (Unknown: the file is always kept). On an object store the
-    manifest PUT is the only commit primitive — no rename anywhere on the
-    fs path."""
+    with the stats rows of the files the current manifest lacks folded
+    from their block stats — the file tier the data source plans with
+    (datasource._files_kept). The schema sidecar is written first, so a
+    committed table always has one. On an object store the manifest PUT
+    is the only commit primitive — no rename anywhere on the fs path."""
     cars = [
         _fs_read_json(fs, p)
         for p, _sz in _fs_list(fs, f"{out_path.rstrip('/')}/_done", ".json")
     ]
     committed = sorted(c["file"] for c in cars)
-    manifest = {
-        "files": committed,
-        "file_stats": {c["file"]: c["file_stats"] for c in cars if c.get("file_stats")},
-    }
-    with manifest_lock(fs, out_path):
-        publish_manifest(fs, out_path, manifest)
     # sidecar records the ORIGINAL (possibly nested) schema — scan derives
     # the flat leaf specs from it
     in_arrow = pa.schema([f for f in in_schema if not f.name.startswith("_")])
     _write_schema_sidecar(out_path, in_arrow, fs)
+    with manifest_lock(fs, out_path):
+        old = load_manifest(fs, out_path)
+        new = sorted(set(committed) - set(old["files"] if old else ()))
+        stats = fold_file_stats(fs, out_path, new, specs_for_schema(in_arrow))
+        publish_manifest(fs, out_path, {"files": committed}, stats)
     return committed
 
 
@@ -1034,7 +1112,7 @@ def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
     packs its partitions (``datasource._pack_partitions``) by the bytes
     each file's scan reads. ``filter(keep)`` drops pruned blocks only
     after the parquet scan has read them, so a file counts at its whole
-    decode set: its manifest ``__enc_bytes`` totals over ``leaves``.
+    decode set: its ``<leaf>__enc_bytes`` stats over ``leaves``.
 
     None, which leaves Spark's width, unless the files ``blocks`` reads
     are local, lie under one table root (its schema sidecar present) and
@@ -1057,8 +1135,10 @@ def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
     roots = {os.path.dirname(f) for f in files}
     if len(roots) != 1 or not os.path.exists(os.path.join(*roots, D._SCHEMA_SIDECAR)):
         return None
-    fstats = D._manifest_of(None, roots.pop())[1]
-    entries = [(f, None, D._decode_set_bytes(fstats, f, leaves)) for f in files]
+    root = roots.pop()
+    committed, stats = D._manifest_of(None, root, D._read_sidecar_schema(None, root))
+    size = dict(zip(committed, D._decode_set_bytes(stats, leaves)))
+    entries = [(f, None, size.get(f)) for f in files]
     if any(b is None or b >= D._PACK_SMALL_BYTES for _f, _rows, b in entries):
         return None
     return len(D._pack_partitions(entries))
@@ -1529,41 +1609,18 @@ def prune_report(blocks: DataFrame, where: Spec | str) -> dict:
 def write_encoded(blocks: DataFrame, path: str, schema: pa.Schema, mode: str = "error") -> None:
     blocks.write.mode(mode).parquet(path)
     _write_schema_sidecar(path, schema)
-    # commit a manifest with per-file [min,max] bounds so the data source
-    # gets the manifest-list pruning tier over this layout too
-    import glob as _glob
-    import os as _os
-
-    files = sorted(
-        _os.path.basename(p)
-        for p in _glob.glob(_os.path.join(path, "*.parquet"))
-        if not _os.path.basename(p).startswith(("_", "."))
-    )
-    from aisle_spark.maintenance import _recompute_file_stats
-
+    # commit a manifest with per-file stats so the data source gets the
+    # file pruning tier over this layout too
+    files = [p.rsplit("/", 1)[-1] for p, _sz in _fs_list(None, path, ".parquet")]
     with manifest_lock(None, path):
         publish_manifest(
-            None,
-            path,
-            {
-                "files": files,
-                "file_stats": _recompute_file_stats(None, path.rstrip("/"), files)
-                if files
-                else {},
-            },
+            None, path, {"files": files}, fold_file_stats(None, path, files, specs_for_schema(schema))
         )
 
 
 def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
     _fs_mkdirs(fs, path)
-    body = schema.serialize().to_pybytes()
-    target = f"{path.rstrip('/')}/_aisle_schema.arrow"
-    if fs is None:
-        with open(target, "wb") as fh:
-            fh.write(body)
-    else:
-        with fs.open_output_stream(target) as out:
-            out.write(body)
+    _fs_write(fs, f"{path.rstrip('/')}/_aisle_schema.arrow", schema.serialize().to_pybytes())
 
 
 def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:

@@ -402,6 +402,32 @@ def blocks_arrow_schema(specs: list[ColumnSpec]) -> pa.Schema:
     return pa.schema(fields)
 
 
+def file_stats_schema(specs: list[ColumnSpec]) -> pa.Schema:
+    """Arrow schema of one file's stats row — the file tier's unit, folded
+    at commit from the file's blocks (``chunkstats.fold_blocks``):
+    ``file`` (manifest-relative name), ``n_rows``, ``__bytes`` (file
+    size), then per leaf the block schema's ``{c}__min``/``{c}__max``
+    (scalar leaves, in the stat type) and ``{c}__nulls``, or
+    ``{c}__keys`` (maps), and ``{c}__enc_bytes``."""
+    block = blocks_arrow_schema(specs)
+    names = []
+    for s in specs:
+        c = s.name
+        if s.kind == "map":
+            names.append(f"{c}__keys")
+        elif s.kind not in ("intlist", "floatlist"):
+            names += [f"{c}__min", f"{c}__max", f"{c}__nulls"]
+        names.append(f"{c}__enc_bytes")
+    return pa.schema(
+        [
+            pa.field("file", pa.string()),
+            pa.field("n_rows", pa.int64()),
+            pa.field("__bytes", pa.int64()),
+            *(block.field(n) for n in names),
+        ]
+    )
+
+
 # element type of the per-chunk min/max lists of each scalar kind
 _CHUNK_STAT_TYPES = {
     "int": pa.int64(),

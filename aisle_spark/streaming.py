@@ -9,11 +9,11 @@ Shape:  readStream (any source) -> encode_stream(...) -> encoded table
 Exactly-once protocol (the streaming face of the batch direct-write
 commit): every ``mapInArrow`` task of micro-batch ``b`` writes its blocks
 straight to ``stream-b{b:08d}-{partition:04d}.parquet`` (tmp + atomic
-rename locally) and returns the file's stats; the driver then publishes
-the manifest with the batch's file list. A replayed batch (failure
-before the manifest commit) rewrites the SAME file names and replaces
-the batch's manifest entry, so duplicates are impossible — keyed by
-Spark's monotonically increasing batchId.
+rename locally) and returns the file's name; the driver then folds the
+files' stats and publishes the manifest with the batch's file list. A
+replayed batch (failure before the manifest commit) rewrites the SAME
+file names and replaces the batch's manifest entry, so duplicates are
+impossible — keyed by Spark's monotonically increasing batchId.
 
 This mirrors the reference's "streaming extensibility" surface
 (SURVEY.md §2.9) re-expressed on Spark's own streaming engine: watermarks,
@@ -23,7 +23,6 @@ contributes only the per-batch vectorized encode + the commit protocol.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -45,46 +44,33 @@ def _read_manifest(out_path: str) -> dict:
     return m
 
 
-def _commit_batch(
-    out_path: str, batch_id: int, files: list[str], file_stats: dict | None = None
-) -> None:
+def _commit_batch(out_path: str, batch_id: int, files: list[str]) -> None:
     """Atomically record this batch's files; replays replace, never add.
-    ``file_stats`` maps each file to the [min,max] bounds its writer
-    folded, so streamed tables participate in the manifest-list pruning
-    tier (datasource._files_kept) like batch-written ones; a file without
-    an entry is Unknown and always kept."""
-    from aisle_spark.pipeline import manifest_lock
+    The files' stats rows are folded from their blocks, so streamed
+    tables participate in the file pruning tier (datasource._files_kept)
+    like batch-written ones."""
+    from aisle_spark.datasource import _read_sidecar_schema
+    from aisle_spark.pipeline import fold_file_stats, manifest_lock, publish_manifest
+    from aisle_spark.schema import specs_for_schema
 
+    specs = specs_for_schema(_read_sidecar_schema(None, out_path))
+    stats = fold_file_stats(None, out_path, files, specs)
     with manifest_lock(None, out_path):
-        _commit_batch_locked(out_path, batch_id, files, file_stats or {})
-
-
-def _commit_batch_locked(
-    out_path: str, batch_id: int, files: list[str], file_stats: dict
-) -> None:
-    m = _read_manifest(out_path)
-    replaced = set(m["batches"].get(str(batch_id), []))
-    m["batches"][str(batch_id)] = files
-    # files = non-batch files (compaction retires the batches map but its
-    # output files must survive subsequent batch commits — ADVICE r3 high)
-    # ∪ every live batch's files; a replayed batch replaces, never adds
-    batch_files = {f for fs in m["batches"].values() for f in fs}
-    m["files"] = sorted(
-        (set(m.get("files", [])) - replaced) | set(files) | batch_files
-    )
-    kept = set(m["files"]) - replaced
-    stats = {k: v for k, v in m.get("file_stats", {}).items() if k in kept}
-    stats.update({f: file_stats[f] for f in files if file_stats.get(f)})
-    m["file_stats"] = stats
-    # a compaction commit leaves "compacted_from" in the current
-    # manifest; republishing it here would tag THIS batch's snapshot as
-    # a compaction commit too, and stream readers skip those
-    # (_additions returns []) — every post-OPTIMIZE batch would be
-    # silently invisible downstream
-    m.pop("compacted_from", None)
-    from aisle_spark.pipeline import publish_manifest
-
-    publish_manifest(None, out_path, m)
+        m = _read_manifest(out_path)
+        replaced = set(m["batches"].get(str(batch_id), []))
+        m["batches"][str(batch_id)] = files
+        # files = non-batch files (compaction retires the batches map but
+        # its output files must survive subsequent batch commits — ADVICE
+        # r3 high) ∪ every live batch's files; a replayed batch replaces,
+        # never adds. A compaction commit's "compacted_from" is not
+        # republished: it would tag THIS batch's snapshot as a compaction
+        # commit too, and stream readers skip those (_additions returns
+        # []) — every post-OPTIMIZE batch would be silently invisible
+        batch_files = {f for fs in m["batches"].values() for f in fs}
+        live = (set(m["files"]) - replaced) | set(files) | batch_files
+        publish_manifest(
+            None, out_path, {"files": sorted(live), "batches": m["batches"]}, stats
+        )
 
 
 def write_batch(
@@ -125,14 +111,11 @@ def write_batch(
         w.write_batches(batches)
         rec = w.close()
         if rec is not None:
-            yield pa.RecordBatch.from_pylist(
-                [{"file": rec["file"], "stats": json.dumps(rec["file_stats"])}]
-            )
+            yield pa.RecordBatch.from_pylist([{"file": rec["file"]}])
 
-    rows = batch_df.mapInArrow(encode_partition, "file string, stats string").collect()
-    stats = {r.file: json.loads(r.stats) for r in rows}
-    files = sorted(stats)
-    _commit_batch(out_path, batch_id, files, stats)
+    rows = batch_df.mapInArrow(encode_partition, "file string").collect()
+    files = sorted(r.file for r in rows)
+    _commit_batch(out_path, batch_id, files)
     return files
 
 

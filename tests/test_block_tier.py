@@ -12,7 +12,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from aisle_spark.datasource import _manifest_of, _read_sidecar_schema, plan_pruned
+from aisle_spark.datasource import _file_rows, _manifest_of, _read_sidecar_schema, plan_pruned
 from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col, utc_normalize
 from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
 from aisle_spark.schema import synth_batch
@@ -43,8 +43,9 @@ def _catalyst(blocks, spec) -> set:
 def _numpy(out: str, spec) -> set:
     """block_ids of the manifest rows the planner's block tier keeps (no
     file stats given, so the file tier keeps every file)."""
-    files, _ = _manifest_of(None, out)
-    kept = plan_pruned(None, _read_sidecar_schema(None, out), files, {}, utc_normalize(spec), ())
+    schema = _read_sidecar_schema(None, out)
+    files, _ = _manifest_of(None, out, schema)
+    kept = plan_pruned(None, schema, files, _file_rows(None, files, schema), utc_normalize(spec), ())
     return {
         b
         for f, rs, _bytes in kept

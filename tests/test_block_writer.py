@@ -1,6 +1,6 @@
 """The one block-file writer behind every file-writing encode: the bytes it
-writes are pinned by a golden hash, and the file stats it folds while
-writing equal the stats recomputed from its files."""
+writes are pinned by a golden hash, and the file stats the commit folds
+from its files equal the stats of the rows that went into them."""
 
 from __future__ import annotations
 
@@ -54,16 +54,18 @@ def test_direct_encode_golden_hash(spark, tmp_path):
 
 
 def test_manifest_file_stats_equal_recomputed(spark, tmp_path):
-    """The stats the writer folds block by block, carried to the manifest
-    through the ``_done`` sidecars, equal the stats recomputed from the
-    committed files' stat columns — for int, string, timestamp, decimal
-    and map columns, with nulls and all-null blocks."""
+    """The stats rows the commit folds from each written file's blocks
+    equal the stats of that file's input rows — for int, string,
+    timestamp, decimal and map columns, with nulls and all-null blocks —
+    and its ``__enc_bytes`` totals equal its blocks' sums."""
     import datetime as dt
     import decimal
+    import json
 
     import numpy as np
+    import pyarrow.compute as pc
 
-    from aisle_spark.maintenance import _recompute_file_stats
+    from tests.test_datasource import _stats
 
     rng = np.random.default_rng(3)
     src = tmp_path / "src"
@@ -105,7 +107,21 @@ def test_manifest_file_stats_equal_recomputed(spark, tmp_path):
         pq.write_table(table, str(src / f"f{f}.parquet"))
     encode_files_direct(spark, str(src), out, parts=4, sort_cols=["id"], block_rows=512)
     m = load_manifest(None, out)
-    assert len(m["files"]) == 3 and set(m["file_stats"]) == set(m["files"])
-    assert m["file_stats"] == _recompute_file_stats(None, out, m["files"])
-    cols = set().union(*m["file_stats"].values())
-    assert {"id", "name", "ts", "amount", "props", "__bytes"} <= cols
+    sts = _stats(out)
+    assert len(m["files"]) == 3 and set(sts) == set(m["files"])
+    for car in os.listdir(os.path.join(out, "_done")):
+        rec = json.load(open(os.path.join(out, "_done", car)))
+        (inp,) = rec["inputs"]  # one input file per task
+        rows = pq.read_table(str(src / inp))
+        st = sts[rec["file"]]
+        assert st["n_rows"] == rows.num_rows
+        assert st["__bytes"] == os.path.getsize(os.path.join(out, rec["file"]))
+        for c in ("id", "name", "ts", "amount"):
+            mm = pc.min_max(rows.column(c)).as_py()
+            assert (st[f"{c}__min"], st[f"{c}__max"]) == (mm["min"], mm["max"]), c
+            assert st[f"{c}__nulls"] == rows.column(c).null_count, c
+        keys = {k for v in rows.column("props").to_pylist() for k, _v in v}
+        assert st["props__keys"] == sorted(keys)
+        blocks = pq.read_table(os.path.join(out, rec["file"]))
+        for c in ("id", "name", "ts", "amount", "props"):
+            assert st[f"{c}__enc_bytes"] == pc.sum(blocks.column(f"{c}__enc_bytes")).as_py()

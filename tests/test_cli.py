@@ -100,7 +100,12 @@ class TestAggregateSubcommand:
 
 
 class TestDescribeAndMinMaxBy:
-    def test_describe_reads_manifest_only(self, spark, encoded, capsys):
+    def test_describe_reads_manifest_only(self, spark, encoded, capsys, tmp_path):
+        import shutil
+
+        from aisle_spark.datasource import register
+        from aisle_spark.pipeline import load_manifest, publish_manifest
+
         df, out, _base = encoded
         main(["describe", "--table", out])
         got = json.loads(capsys.readouterr().out)
@@ -108,6 +113,23 @@ class TestDescribeAndMinMaxBy:
         assert got["files"] >= 1 and got["bytes"] > 0
         assert got["version"] >= 1
         assert any(c.startswith("doc_id") for c in got["columns"])
+
+        # two commits: rows and bytes sum both commits' stats rows
+        register(spark)
+        two = str(tmp_path / "two")
+        for _ in range(2):
+            df.limit(300).repartition(1).write.format("aisle").mode("append").save(two)
+        files = load_manifest(None, two)["files"]
+        size = sum(os.path.getsize(os.path.join(two, f)) for f in files)
+        main(["describe", "--table", two])
+        got = json.loads(capsys.readouterr().out)
+        assert (got["files"], got["rows"], got["bytes"], got["version"]) == (2, 600, size, 2)
+        # a file without a stats row makes the row total unknown
+        shutil.copy(os.path.join(two, files[0]), os.path.join(two, "nostats.parquet"))
+        publish_manifest(None, two, {"files": files + ["nostats.parquet"]})
+        main(["describe", "--table", two])
+        got = json.loads(capsys.readouterr().out)
+        assert (got["files"], got["rows"], got["bytes"], got["version"]) == (3, None, size, 3)
 
     def test_min_max_by(self, spark, encoded):
         df, out, base = encoded

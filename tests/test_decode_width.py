@@ -8,8 +8,6 @@ change partitioning, never results."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
 import pyarrow as pa
@@ -18,7 +16,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from aisle_spark import datasource as D
-from aisle_spark.datasource import AisleReader, _manifest_of, plan_pruned, planned_files, register
+from aisle_spark.datasource import (
+    AisleReader,
+    _manifest_of,
+    _read_sidecar_schema,
+    plan_pruned,
+    planned_files,
+    register,
+)
 from aisle_spark.filterspec import col, utc_normalize
 from aisle_spark.pipeline import (
     _decode_tasks,
@@ -48,9 +53,14 @@ def table(spark, tmp_path_factory):
         pq.write_table(tbl.slice(i * ROWS, ROWS), str(base / "in" / f"p{i}.parquet"))
     out = str(base / "enc")
     encode_files_direct(spark, str(base / "in"), out, sort_cols=["source", "n_tok"], block_rows=512)
-    assert len(_manifest_of(None, out)[0]) == N_FILES
+    assert len(_committed(out)[0]) == N_FILES
     register(spark)
     return out, spark.createDataFrame(tbl), tbl
+
+
+def _committed(out: str):
+    """(file paths, stats rows) of a committed table."""
+    return _manifest_of(None, out, _read_sidecar_schema(None, out))
 
 
 def _tasks(spark, action) -> int:
@@ -100,7 +110,7 @@ def test_datasource_packs_by_read_bytes(spark, table):
     r.pushFilters([EqualTo(("source",), "code")])
     parts = r.partitions()
     assert len(parts) == 1
-    assert planned_files(parts) == _manifest_of(None, out)[0]
+    assert planned_files(parts) == _committed(out)[0]
     got = (spark.read.format("aisle").option("columns", ",".join(cols)).load(out)
            .filter(F.col("source") == "code"))
     assert _tasks(spark, got.collect) == 1
@@ -130,7 +140,7 @@ def grouped(spark, tmp_path_factory):
         encode_files_direct(spark, str(base / "in"), out, sort_cols=["source", "n_tok"], block_rows=256)
     finally:
         mp.undo()
-    files = _manifest_of(None, out)[0]
+    files = _committed(out)[0]
     assert all(pq.ParquetFile(f).metadata.num_row_groups >= 3 for f in files)
     return out
 
@@ -140,7 +150,7 @@ def test_read_bytes_are_the_kept_row_groups(spark, grouped):
     groups that hold a block Catalyst's ``keep()`` keeps: the row groups
     its task reads."""
     blocks, schema = read_encoded(spark, grouped)
-    files, fstats = _manifest_of(None, grouped)
+    files, stats = _committed(grouped)
     for where, columns in (
         (col("source") == "code", ["doc_id", "n_tok"]),
         (col("n_tok").between(1000, 2000) & (col("source") == "books"), None),
@@ -160,7 +170,7 @@ def test_read_bytes_are_the_kept_row_groups(spark, grouped):
                 group = [g for g in range(md.num_row_groups) for _ in range(md.row_group(g).num_rows)]
                 enc = _enc(f, leaves)
                 want[f] = sum(e for e, g in zip(enc, group) if g in {group[i] for i in hit})
-        got = plan_pruned(None, schema, files, fstats, utc_normalize(where), leaves)
+        got = plan_pruned(None, schema, files, stats, utc_normalize(where), leaves)
         assert {f: b for f, _rows, b in got} == want, where
         assert any(b < sum(_enc(f, leaves)) for f, b in want.items())  # a row group skipped
 
@@ -170,9 +180,9 @@ def test_scan_sizes_by_the_files_decode_set(spark, table):
     over the decode set, which equal its blocks' column sums."""
     out, _df, _tbl = table
     blocks, schema = read_encoded(spark, out)
-    files, fstats = _manifest_of(None, out)
+    files, stats = _committed(out)
     leaves = read_plan(schema, None, ["source"]).leaves
-    sizes = [D._decode_set_bytes(fstats, f, leaves) for f in files]
+    sizes = D._decode_set_bytes(stats, leaves)
     assert sizes == [sum(_enc(f, leaves)) for f in files]
     want = len(D._pack_partitions([(f, None, b) for f, b in zip(files, sizes)]))
     assert _decode_tasks(blocks, leaves) == want == 1
@@ -226,23 +236,20 @@ class TestWidthNeverChangesResults:
         self._check(blocks, schema, df)
 
     def test_unknown_size_keeps_spark_width(self, spark, table, tmp_path):
-        """A manifest without ``__enc_bytes`` totals (a table committed
-        before they were recorded): no estimate, one task per file, same
+        """Stats without ``__enc_bytes`` (a legacy manifest's files have
+        no stats rows at all): no estimate, one task per file, same
         rows."""
+        from tests.test_datasource import _rewrite_stats
+
         out, df, _tbl = table
         legacy = str(tmp_path / "legacy")
-        os.makedirs(legacy)
-        for p in glob.glob(os.path.join(out, "*")):
-            if os.path.isfile(p):
-                os.link(p, os.path.join(legacy, os.path.basename(p)))
-        manifest = os.path.join(legacy, "_aisle_files.json")
-        with open(manifest) as fh:
-            m = json.load(fh)
-        for st in m["file_stats"].values():
-            del st["__enc_bytes"]
-        os.unlink(manifest)
-        with open(manifest, "w") as fh:
-            json.dump(m, fh)
+        for d, _dirs, names in os.walk(out):
+            os.makedirs(d.replace(out, legacy, 1), exist_ok=True)
+            for n in names:
+                os.link(os.path.join(d, n), os.path.join(d.replace(out, legacy, 1), n))
+        _rewrite_stats(
+            legacy, lambda t: t.drop_columns([c for c in t.column_names if c.endswith("__enc_bytes")])
+        )
         blocks, schema = read_encoded(spark, legacy)
         leaves = read_plan(schema, ["doc_id", "n_tok"], self.WHERE.columns()).leaves
         assert _decode_tasks(blocks, leaves) is None
@@ -294,7 +301,7 @@ def test_read_encoded_schema_equals_inferred(spark, tmp_path, kind, conf, writer
         write_encoded(encode_table(df, parts=2, block_rows=128), out, arrow_schema_of(df))
     else:  # the data source's tasks write it with pyarrow
         df.repartition(2).write.format("aisle").mode("append").save(out)
-    files = _manifest_of(None, out)[0]
+    files = _committed(out)[0]
     assert (_footer_spark_schema(files[0]) is None) == (kind == "duration" and writer == "datasource")
     for k, v in _CONFS[conf].items():
         spark.conf.set(k, v)

@@ -235,17 +235,28 @@ class TestDeltaSnapshots:
                 cur = sorted(set(states[v - 1]["files"]) | {
                     f"part-new{v:04d}-{'b' * 24}.parquet"
                 })
-            # per-file bounds are immutable once written (like real blocks)
-            stats = {
-                f: {"n_tok": [1, len(f)], "source": ["a", "z"]} for f in cur
-            }
-            payload = {"files": cur, "file_stats": stats}
+            # a commit hands over the rows of the files it wrote; the
+            # survivors' rows are immutable (like real blocks)
+            new = sorted(set(cur) - set(states[v - 1]["files"] if v > 1 else ()))
+            stats = pa.table({"file": new, "n_rows": [len(f) for f in new]})
+            payload = {"files": cur}
             if v % 3 == 0:  # streaming-style extras ride along
                 payload["batches"] = {str(v): cur[-1:]}
-            got = publish_manifest(None, root, payload)
+            got = publish_manifest(None, root, payload, stats)
             assert got == v
-            states[v] = {**payload, "files": sorted(cur)}
+            states[v] = {
+                **payload,
+                "files": sorted(cur),
+                "stats": [{"file": f, "n_rows": len(f)} for f in sorted(cur)],
+            }
         return states
+
+    @staticmethod
+    def _read(root: str, v: int) -> dict:
+        from aisle_spark.pipeline import read_snapshot
+
+        snap = read_snapshot(None, root, v, stats=True)
+        return {**snap, "stats": snap["stats"].sort_by("file").to_pylist()}
 
     def test_replay_identity_and_size_bound(self, tmp_path):
         import json as _json
@@ -258,11 +269,12 @@ class TestDeltaSnapshots:
         os.makedirs(root)
         states = self._commit_states(root, 40)
         for v, payload in states.items():
-            snap = read_snapshot(None, root, v)
+            snap = self._read(root, v)
             assert snap["files"] == payload["files"], v
-            assert snap["file_stats"] == payload["file_stats"], v
+            assert snap["stats"] == payload["stats"], v
             assert snap.get("batches") == payload.get("batches"), v
             assert snap["version"] == v
+            assert read_snapshot(None, root, v) == {k: x for k, x in snap.items() if k != "stats"}
         sizes = {
             v: os.path.getsize(f"{root}/{_SNAP_DIR}/v{v:08d}.json")
             for v in states
@@ -280,6 +292,14 @@ class TestDeltaSnapshots:
         assert sizes[5] < sizes[1] * 0.25
         # the rewrite commit degrades to full (delta would be larger)
         assert "delta_base" not in on_disk[20]
+        # a delta's stats file holds only the rows its commit wrote, a
+        # full snapshot's every live file's
+        import pyarrow.parquet as pq
+
+        def rows(v):
+            return pq.read_table(f"{root}/{_SNAP_DIR}/{on_disk[v]['stats']}").num_rows
+
+        assert rows(5) == 1 and rows(17) == len(states[17]["files"])
 
     def test_expire_materializes_boundary_full(self, tmp_path):
         import os
@@ -289,16 +309,81 @@ class TestDeltaSnapshots:
 
         root = str(tmp_path / "e")
         os.makedirs(root)
-        states = self._commit_states(root, 25)
-        before = {v: read_snapshot(None, root, v) for v in range(21, 26)}
+        self._commit_states(root, 25)
+        before = {v: self._read(root, v) for v in range(21, 26)}
         victims = expire_snapshots(root, keep_last=5)
         assert victims == list(range(1, 21))
         for v in range(21, 26):  # every retained chain still materializes
-            assert read_snapshot(None, root, v) == before[v]
+            assert self._read(root, v) == before[v]
         import pytest as _pytest
 
         with _pytest.raises((FileNotFoundError, OSError)):
             read_snapshot(None, root, 20)
+        # the boundary is full, files and stats; the victims' stats go
+        snaps = sorted(os.listdir(f"{root}/_aisle_snapshots"))
+        assert snaps[0] == "v00000021.json"
+        assert not any(n.endswith(".stats.parquet") and n < "v00000021" for n in snaps)
+        on_disk = json.load(open(f"{root}/_aisle_snapshots/v00000021.json"))
+        assert "delta_base" not in on_disk and on_disk["stats"] == "v00000021.stats.parquet"
+
+    def test_expire_writes_boundary_stats_before_its_snapshot(self, tmp_path, monkeypatch):
+        """A crash after the boundary's full stats file and before its
+        full snapshot leaves every retained version reading the same."""
+        import aisle_spark.pipeline as pl
+        from aisle_spark.maintenance import expire_snapshots
+
+        root = str(tmp_path / "c")
+        os.makedirs(root)
+        self._commit_states(root, 25)
+        before = {v: self._read(root, v) for v in range(21, 26)}
+
+        def crash(fs, path, obj):
+            raise OSError("injected crash")
+
+        monkeypatch.setattr(pl, "_fs_write_json", crash)
+        with pytest.raises(OSError, match="injected"):
+            expire_snapshots(root, keep_last=5)
+        monkeypatch.undo()
+        on_disk = json.load(open(f"{root}/_aisle_snapshots/v00000021.json"))
+        assert "delta_base" in on_disk  # the snapshot was not rewritten
+        for v in range(21, 26):
+            assert self._read(root, v) == before[v]
+        expire_snapshots(root, keep_last=5)
+        for v in range(21, 26):
+            assert self._read(root, v) == before[v]
+
+    def test_crash_between_stats_and_snapshot(self, tmp_path, monkeypatch):
+        """A commit that dies after writing its stats file and before its
+        snapshot leaves the previous version fully readable, and the
+        next commit takes the same version number."""
+        import aisle_spark.pipeline as pl
+
+        root = str(tmp_path / "a")
+        os.makedirs(root)
+        states = self._commit_states(root, 3)
+        real = pl._fs_write_json
+
+        def crash(fs, path, obj):
+            if "_aisle_snapshots" in path:
+                raise OSError("injected crash")
+            real(fs, path, obj)
+
+        monkeypatch.setattr(pl, "_fs_write_json", crash)
+        lost = pa.table({"file": ["lost.parquet"], "n_rows": [1]})
+        with pytest.raises(OSError, match="injected"):
+            pl.publish_manifest(None, root, {"files": states[3]["files"] + ["lost.parquet"]}, lost)
+        monkeypatch.undo()
+        assert os.path.exists(f"{root}/_aisle_snapshots/v00000004.stats.parquet")
+        assert pl.list_snapshots(None, root) == [1, 2, 3]
+        m = pl.load_manifest(None, root, stats=True)
+        assert m["version"] == 3 and m["files"] == states[3]["files"]
+        assert m["stats"].sort_by("file").to_pylist() == states[3]["stats"]
+        kept = pa.table({"file": ["next.parquet"], "n_rows": [2]})
+        assert pl.publish_manifest(None, root, {"files": states[3]["files"] + ["next.parquet"]}, kept) == 4
+        got = self._read(root, 4)
+        assert {r["file"]: r["n_rows"] for r in got["stats"]} == {
+            **{r["file"]: r["n_rows"] for r in states[3]["stats"]}, "next.parquet": 2
+        }
 
 
 class TestManifestPointerForm:
@@ -337,8 +422,9 @@ class TestManifestPointerForm:
 
         df, out = pointer_table
         assert _manifest(out) == {"version": 5, "pointer": True}
-        m = load_manifest(None, out)
-        assert len(m["files"]) >= 2 and set(m["file_stats"]) == set(m["files"])
+        m = load_manifest(None, out, stats=True)
+        assert len(m["files"]) >= 2
+        assert set(m["stats"].column("file").to_pylist()) == set(m["files"])
         # full read through the datasource (planning resolves the pointer)
         assert spark.read.format("aisle").load(out).count() == df.count()
         got = (
@@ -413,8 +499,10 @@ class TestIncrementalCompaction:
         after = _manifest(out)
         assert big_file in after["files"]  # untouched survivor
         assert len(after["files"]) == 2
-        # survivor keeps its manifest stats; results stay exact
-        assert big_file in after["file_stats"]
+        # survivor keeps its stats row; results stay exact
+        from tests.test_datasource import _stats
+
+        assert _stats(out)[big_file]["__bytes"] == sizes[big_file]
         assert spark.read.format("aisle").load(out).count() == df.count()
 
     def test_idempotent_when_nothing_small(self, spark, mixed_table):

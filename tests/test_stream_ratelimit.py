@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from aisle_spark.datasource import AisleStreamReader, register
 from aisle_spark.schema import synth_batch
+from tests.test_datasource import _stats
 
 BASE = "/tmp/aisle_ratelimit_test"
 
@@ -201,7 +202,7 @@ class TestMaxBytesPerTrigger:
         _df, out = table
         m = json.load(open(os.path.join(out, "_aisle_files.json")))
         for f in m["files"]:
-            b = m["file_stats"][f].get("__bytes")
+            b = _stats(out)[f]["__bytes"]
             assert isinstance(b, int) and b > 0
             assert b == os.path.getsize(os.path.join(out, f))
 
@@ -210,7 +211,7 @@ class TestMaxBytesPerTrigger:
 
         _df, out = table
         m = json.load(open(os.path.join(out, "_aisle_files.json")))
-        sizes = {f: m["file_stats"][f]["__bytes"] for f in m["files"]}
+        sizes = {f: _stats(out)[f]["__bytes"] for f in m["files"]}
         avg = sum(sizes.values()) // len(sizes)
         # soft max at ~1.5 files: every batch stops after the file that
         # crosses the budget => at most 2 files per batch, >= 3 batches
@@ -281,6 +282,6 @@ class TestMaxBytesPerTrigger:
         compact_encoded(spark, out, target_files=2)
         m = json.load(open(os.path.join(out, "_aisle_files.json")))
         for f in m["files"]:
-            assert m["file_stats"][f]["__bytes"] == os.path.getsize(
+            assert _stats(out)[f]["__bytes"] == os.path.getsize(
                 os.path.join(out, f)
             )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from aisle_spark.filterspec import col
 from aisle_spark.pipeline import read_encoded, scan
 from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
+from tests.test_datasource import _stats
 from aisle_spark.streaming import _read_manifest, encode_stream, write_batch
 
 BASE = "/tmp/aisle_stream_test"
@@ -146,8 +147,8 @@ def test_batch_commit_after_compaction_keeps_compacted_files(spark, dirs):
     assert compacted <= set(m["files"])  # compacted history survives
     blocks, schema = read_encoded(spark, out)
     assert scan(blocks, schema).count() == 3000
-    # file_stats stay consistent with the file list
-    assert set(m["file_stats"]) <= set(m["files"])
+    # the stats rows stay consistent with the file list
+    assert set(_stats(out)) == set(m["files"])
 
 
 def test_stream_commits_record_file_stats(spark, dirs):
@@ -169,11 +170,13 @@ def test_stream_commits_record_file_stats(spark, dirs):
     finally:
         q.stop()
     m = _read_manifest(out)
-    assert m["files"] and set(m["file_stats"]) == set(m["files"])
-    some = next(iter(m["file_stats"].values()))
-    assert "n_tok" in some and some["n_tok"][0] <= some["n_tok"][1]
+    sts = _stats(out)
+    assert m["files"] and set(sts) == set(m["files"])
+    some = next(iter(sts.values()))
+    assert some["n_tok__min"] <= some["n_tok__max"]
 
-    from aisle_spark.datasource import _files_kept, _read_sidecar_schema
+    from aisle_spark.datasource import _files_kept, _manifest_of, _read_sidecar_schema
 
     schema = _read_sidecar_schema(None, out)
-    assert not _files_kept(list(m["file_stats"]), m["file_stats"], col("n_tok") > 10**9, schema)
+    files, rows = _manifest_of(None, out, schema)
+    assert not _files_kept(files, rows, col("n_tok") > 10**9, schema)
