@@ -179,8 +179,8 @@ def cmd_describe(args) -> None:
     is submitted."""
     import json as _json
 
-    from aisle_spark.datasource import _file_rows, _fs_of, _read_sidecar_schema
-    from aisle_spark.pipeline import _fs_list, list_snapshots, load_manifest
+    from aisle_spark.datasource import _file_rows, _fs_of
+    from aisle_spark.pipeline import _fs_list, _read_sidecar_schema, list_snapshots, load_manifest
 
     fs, root = _fs_of(args.table)
     root = root.rstrip("/")

@@ -35,12 +35,11 @@ contract):
 
 Write path: each task slices its Arrow stream into sorted blocks
 (``pipeline._order_and_slice`` + ``blocks.encode_block``), writes ONE
-parquet file, and reports it in its commit message; ``commit`` folds the
-new files' stats rows and publishes the file list into the manifest
-(``pipeline.MANIFEST``) plus the Arrow
-schema sidecar — the same manifest-commit protocol the direct-write
-encode uses, so readers never observe files from failed or speculative
-attempts.
+parquet file, and reports it in its commit message; ``commit`` is one
+``pipeline.commit`` — fold the new files' stats rows, write the Arrow
+schema sidecar, publish the file list into the manifest
+(``pipeline.MANIFEST``) — the same transaction every writer ends in, so
+readers never observe files from failed or speculative attempts.
 
 Scale notes: planning reads ONLY the manifest stat columns the predicate
 needs and the decode set's ``__enc_bytes`` (parquet projection pushdown;
@@ -103,8 +102,6 @@ from aisle_spark.filterspec import (
     StartsWith,
     utc_normalize,
 )
-
-_SCHEMA_SIDECAR = "_aisle_schema.arrow"
 
 
 # ---------------------------------------------------------------------------
@@ -381,15 +378,6 @@ def _file_rows(stats: pa.Table | None, files: Sequence[str], schema: pa.Schema) 
     return pa.Table.from_arrays(cols, schema=target)
 
 
-def _read_sidecar_schema(fs, path: str) -> pa.Schema:
-    target = f"{path.rstrip('/')}/{_SCHEMA_SIDECAR}"
-    if fs is None:
-        with open(target, "rb") as fh:
-            return pa.ipc.read_schema(pa.py_buffer(fh.read()))
-    with fs.open_input_stream(target) as inp:
-        return pa.ipc.read_schema(pa.py_buffer(inp.read()))
-
-
 def _validate_exact_where(spec: Spec, arrow_schema: pa.Schema) -> None:
     """The ``where`` option is EXACT (Spark never re-evaluates it), so it
     is restricted to the predicate subset the in-reader row mask fully
@@ -472,6 +460,8 @@ def _open_read(path: str, where: str | None):
     """What both readers' constructors share: (fs, fs-local path, sidecar
     schema, the validated and temporal-coerced ``where`` option Spec or
     None)."""
+    from aisle_spark.pipeline import _read_sidecar_schema
+
     fs, root = _fs_of(path)
     arrow_schema = _read_sidecar_schema(fs, root)
     exact = None
@@ -1016,6 +1006,12 @@ def plan_pruned(
 
 
 class AisleWriter(DataSourceArrowWriter):
+    """``df.write.format("aisle")``: each task writes one block file
+    through ``BlockFileWriter``; the job's commit is one
+    ``pipeline.commit`` that adds the files (an overwrite replaces the
+    whole file set) and writes the schema sidecar before the snapshot.
+    ``abort`` deletes the tasks' files; they were never committed."""
+
     def __init__(self, path: str, spark_schema: StructType, overwrite: bool,
                  sort_cols: list[str], block_rows: int):
         self.fs, self.path = _fs_of(path)
@@ -1054,54 +1050,17 @@ class AisleWriter(DataSourceArrowWriter):
         return AisleCommit(filename=rec["file"], n_blocks=rec["n_blocks"])
 
     def commit(self, messages: list[AisleCommit]) -> None:
-        from aisle_spark.pipeline import (
-            _write_schema_sidecar,
-            fold_file_stats,
-            load_manifest,
-            manifest_lock,
-            publish_manifest,
-        )
-        from aisle_spark.schema import specs_for_schema
+        from aisle_spark.pipeline import ALL, commit
 
-        new_files = sorted(m.filename for m in messages if m is not None and m.n_blocks > 0)
-        stats = fold_file_stats(
-            self.fs, self.path, new_files, specs_for_schema(self._arrow_schema())
-        )
-        # read-merge-write under the manifest lock: concurrent local
-        # appends can never drop each other's files (object-store callers
-        # get last-writer-wins; see manifest_lock)
-        with manifest_lock(self.fs, self.path):
-            payload: dict = {"files": new_files}
-            old = None if self.overwrite else load_manifest(self.fs, self.path)
-            if old is not None:
-                payload["files"] = sorted(set(old["files"]) | set(new_files))
-                # carry the streaming sink's "batches" map forward —
-                # dropping it here would let a later batch REPLAY add
-                # duplicate rows instead of replacing files.
-                # "compacted_from" must NOT ride along: it marks a commit
-                # whose files carry only already-emitted rows, and a
-                # stream reader skips such commits — tagging an APPEND
-                # with it would hide the new file from streams forever
-                if "batches" in old:
-                    payload["batches"] = old["batches"]
-            # local: tmp + atomic rename; object store: one atomic PUT —
-            # the same commit discipline as the direct-write encode; every
-            # commit also publishes an immutable snapshot (time travel)
-            publish_manifest(self.fs, self.path, payload, stats)
-        _write_schema_sidecar(self.path, self._arrow_schema(), fs=self.fs)
+        new_files = [m.filename for m in messages if m is not None and m.n_blocks > 0]
+        commit(self.fs, self.path, self._arrow_schema(), new_files, drop=ALL if self.overwrite else ())
 
     def abort(self, messages: list[AisleCommit]) -> None:
+        from aisle_spark.pipeline import _fs_delete
+
         for m in messages:
-            if m is None or m.filename is None:
-                continue
-            target = f"{self.path.rstrip('/')}/{m.filename}"
-            try:
-                if self.fs is None:
-                    os.remove(target)
-                else:
-                    self.fs.delete_file(target)
-            except OSError:
-                pass
+            if m is not None and m.filename is not None:
+                _fs_delete(self.fs, f"{self.path.rstrip('/')}/{m.filename}")
 
 
 # ---------------------------------------------------------------------------
@@ -1169,9 +1128,8 @@ class AisleDataSource(DataSource):
     def schema(self) -> StructType:
         from pyspark.sql import types as T
 
-        from aisle_spark.schema import _spark_type
-
-        from aisle_spark.schema import read_plan
+        from aisle_spark.pipeline import _read_sidecar_schema
+        from aisle_spark.schema import _spark_type, read_plan
 
         fs, root = _fs_of(self._path())
         try:
@@ -1208,14 +1166,14 @@ class AisleDataSource(DataSource):
         )
 
     def writer(self, schema: StructType, overwrite: bool) -> AisleWriter:
-        from aisle_spark.pipeline import DEFAULT_BLOCK_ROWS
+        from aisle_spark.pipeline import DEFAULT_BLOCK_ROWS, SCHEMA_SIDECAR, _read_sidecar_schema
 
         if not overwrite:
             # append must match the committed schema exactly — a silent
             # manifest merge of differently-shaped block files would
             # corrupt every reader
             fs, root = _fs_of(self._path())
-            if _exists(fs, f"{root.rstrip('/')}/{_SCHEMA_SIDECAR}"):
+            if _exists(fs, f"{root.rstrip('/')}/{SCHEMA_SIDECAR}"):
                 from pyspark.sql.pandas.types import to_arrow_schema
 
                 existing = _read_sidecar_schema(fs, root)

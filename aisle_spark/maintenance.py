@@ -40,16 +40,15 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from aisle_spark.datasource import _fs_of, _read_sidecar_schema
+from aisle_spark.datasource import _fs_of
 from aisle_spark.pipeline import (
     MANIFEST,
+    _fs_delete,
     _fs_list,
-    _fs_read_json,
-    _fs_write_json,
-    fold_file_stats,
+    _read_sidecar_schema,
+    commit,
     load_manifest,
 )
-from aisle_spark.schema import specs_for_schema
 
 
 def _current_manifest(fs, root: str) -> dict:
@@ -70,10 +69,13 @@ def compact_encoded(
     min_file_mb: float | None = None,
 ) -> dict:
     """Rewrite the committed block files into ``target_files`` larger ones
-    (default: total committed bytes / ``target_mb``), with their stats
-    rows folded anew — which also gives the files of a legacy manifest
-    stats again. Returns a summary dict. Payloads are never decoded; only
-    block rows move.
+    (default: total committed bytes / ``target_mb``). The swap is one
+    ``pipeline.commit``: it drops the rewritten files, adds the new ones
+    with their stats rows folded anew (which also gives the files of a
+    legacy manifest stats again), retires the rewritten files from the
+    streaming ``batches`` map and tags the snapshot ``compacted_from``.
+    Returns a summary dict. Payloads are never decoded; only block rows
+    move.
 
     ``min_file_mb``: INCREMENTAL mode — only files smaller than this are
     rewritten; files already at target size survive untouched (with
@@ -89,8 +91,6 @@ def compact_encoded(
     if not files:
         return {"files_before": 0, "files_after": 0, "skipped": True}
     if fs is None:
-        import os
-
         sizes = {f: os.path.getsize(f"{root}/{f}") for f in files}
     else:
         infos = fs.get_file_info([f"{root}/{f}" for f in files])
@@ -133,33 +133,9 @@ def compact_encoded(
     )
     if not new_files:
         raise RuntimeError("compaction produced no files")
-    stats = fold_file_stats(fs, root, new_files, specs_for_schema(_read_sidecar_schema(fs, root)))
-    from aisle_spark.pipeline import manifest_lock
-
-    with manifest_lock(fs, root):
-        # re-read under the lock: files appended since compaction started
-        # (not among our inputs) must survive the manifest swap
-        old = _current_manifest(fs, root)
-        survivors = sorted(set(old["files"]) - set(files))
-        payload: dict = {
-            "files": sorted(set(new_files) | set(survivors)),
-            "compacted_from": len(files),
-        }
-        if "batches" in old:
-            # streaming-sink tables: retire the per-batch map for
-            # compacted files (their history is now the compacted set)
-            # but KEEP the replace-mapping for files an incremental run
-            # left untouched — a replayed batch must still replace, not
-            # duplicate, its surviving files
-            surv = set(survivors)
-            payload["batches"] = {
-                bid: kept
-                for bid, flist in old.get("batches", {}).items()
-                if (kept := [f for f in flist if f in surv])
-            }
-        from aisle_spark.pipeline import publish_manifest
-
-        publish_manifest(fs, root, payload, stats)
+    # the commit re-reads the manifest under its lock: files appended
+    # since compaction started (not among ``files``) survive the swap
+    commit(fs, root, _read_sidecar_schema(fs, root), new_files, drop=files, compacted_from=len(files))
     return {
         "files_before": len(files),
         "files_after": len(new_files),
@@ -193,7 +169,6 @@ def vacuum_encoded(
     entries = list(_fs_list(fs, root, ".parquet"))
     if fs is None:
         import glob as _glob
-        import os
 
         for sub in _glob.glob(f"{root}/compact-*"):
             if os.path.isdir(sub):
@@ -239,19 +214,9 @@ def vacuum_encoded(
     if not dry_run:
         from aisle_spark.datasource import _parallel_fetch
 
-        def _delete(rel: str) -> None:
-            target = f"{root}/{rel}"
-            try:
-                if fs is None:
-                    os.remove(target)
-                else:
-                    fs.delete_file(target)
-            except OSError:
-                pass
-
         # bounded-concurrency deletes: 1e5 orphans x ~50ms store
         # round-trips must overlap, same as planning fetches
-        _parallel_fetch(_delete, victims)
+        _parallel_fetch(lambda rel: _fs_delete(fs, f"{root}/{rel}"), victims)
     return sorted(victims)
 
 
@@ -275,8 +240,6 @@ def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
     current version's snapshot (and chain) always survives regardless of
     ``keep_last``: readers resolve the pointer form and every file's
     stats through it."""
-    import os
-
     from aisle_spark.pipeline import (
         _SNAP_DIR,
         _fs_read_json,
@@ -319,12 +282,5 @@ def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
             _fs_write_json(fs, f"{root}/{_SNAP_DIR}/v{boundary:08d}.json", snap)
         for v in victims:
             for suffix in (".json", ".stats.parquet"):
-                target = f"{root}/{_SNAP_DIR}/v{v:08d}{suffix}"
-                try:
-                    if fs is None:
-                        os.remove(target)
-                    else:
-                        fs.delete_file(target)
-                except OSError:
-                    pass
+                _fs_delete(fs, f"{root}/{_SNAP_DIR}/v{v:08d}{suffix}")
     return victims

@@ -393,6 +393,20 @@ def _fs_read(fs, path: str) -> bytes:
         return inp.read()
 
 
+def _fs_delete(fs, path: str) -> None:
+    """Best-effort delete: a file that is already gone, or that cannot
+    be removed, stays behind for ``vacuum_encoded``."""
+    import os as _os
+
+    try:
+        if fs is None:
+            _os.remove(path)
+        else:
+            fs.delete_file(path)
+    except OSError:
+        pass
+
+
 from contextlib import contextmanager
 
 
@@ -423,6 +437,8 @@ _SNAP_DIR = "_aisle_snapshots"
 # the current-state manifest: the committed file list, or a pointer to
 # the snapshot holding it
 MANIFEST = "_aisle_files.json"
+# the table's Arrow schema (IPC), written by every commit
+SCHEMA_SIDECAR = "_aisle_schema.arrow"
 
 
 def list_snapshots(fs, root: str) -> list[int]:
@@ -603,8 +619,8 @@ def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None
     immutable ``v{N}.stats.parquet`` written before the snapshot that
     names it — every live file's rows when the snapshot is full, only
     ``stats`` when it is a delta — so the snapshot stays the commit
-    point. Callers hold ``manifest_lock`` where concurrent writers exist,
-    which also serializes version numbering. Returns the new version."""
+    point. ``commit`` calls it under ``manifest_lock``, which also
+    serializes version numbering. Returns the new version."""
     import pyarrow.compute as pc
 
     root = root.rstrip("/")
@@ -652,6 +668,63 @@ def fold_file_stats(fs, root: str, rel_files: list[str], specs: list[ColumnSpec]
     else:
         sizes = [i.size for i in fs.get_file_info(paths)] if paths else []
     return fold_blocks(list(rel_files), read_stat_columns(fs, paths, want), sizes, specs)
+
+
+# ``commit(..., drop=ALL)``: the commit replaces the whole live set
+ALL = object()
+
+
+def commit(
+    fs,
+    root: str,
+    schema: pa.Schema,
+    add: Iterable[str],
+    drop: Iterable[str] | object = (),
+    batch: int | None = None,
+    compacted_from: int | None = None,
+) -> int:
+    """The ONE manifest transaction; every writer ends in it. Under
+    ``manifest_lock`` it reads the current manifest once and makes the
+    live set (current − ``drop``) ∪ ``add`` (``drop=ALL``: ``add`` alone).
+    It folds stats rows (``fold_file_stats``) for the files of ``add``
+    that do not survive unchanged: a survivor is a current file that
+    ``drop`` does not name or, under ``ALL``, that ``add`` names again.
+    So a resumed encode does not refold its committed files, while a
+    rewritten name (a replayed batch) is folded anew. It then writes the
+    schema sidecar (tmp + rename) and publishes (``publish_manifest``),
+    so a committed table always has its schema.
+
+    ``batches`` (the streaming sink's batch-id → files map) is carried
+    forward, filtered to live files. ``batch=b`` also drops batch b's
+    old files and maps b to ``add``: a replay replaces, never adds.
+    ``compacted_from`` is written only when given, never carried: it
+    marks a commit whose files hold only already-emitted rows, which
+    stream readers skip. Returns the new version."""
+    root = root.rstrip("/")
+    new = set(add)
+    _fs_mkdirs(fs, root)
+    with manifest_lock(fs, root):
+        cur = load_manifest(fs, root) or {"files": []}
+        old = set(cur["files"])
+        batches = cur.get("batches")
+        replaced = set()
+        if batch is not None:
+            batches = dict(batches or {})
+            replaced = set(batches.get(str(batch), ()))
+            batches[str(batch)] = sorted(new)
+        # the survivors: files whose stats rows carry forward unfolded
+        kept = (old & new if drop is ALL else old - set(drop)) - replaced
+        live = kept | new
+        stats = fold_file_stats(fs, root, sorted(new - kept), specs_for_schema(schema))
+        payload: dict = {"files": sorted(live)}
+        if batches is not None:
+            payload["batches"] = {
+                b: left for b, files in batches.items() if (left := [f for f in files if f in live])
+            }
+        if compacted_from is not None:
+            payload["compacted_from"] = compacted_from
+        _write_schema_sidecar(root, schema, fs)
+        return publish_manifest(fs, root, payload, stats)
 
 
 def _fs_read_json(fs, path: str):
@@ -725,11 +798,14 @@ def encode_files_direct(
     uniquely-named file (tmp-name + atomic rename locally), then a
     per-input lineage sidecar under ``_done/`` (also atomic) recording
     the data file and its codec/size/throughput metrics — the sidecar IS
-    the per-input commit point. The driver folds the new files' stats and
-    publishes ``_aisle_files.json`` from the sidecars; readers list that
-    manifest, never the directory, so orphans from failed attempts are
-    invisible. On an object store the renames drop out and the manifest
-    alone is the commit (same shape as Iceberg's file-list commit).
+    the per-input commit point. The driver then ``commit``s exactly the
+    files the sidecars name as the table's whole file set (``drop=ALL``):
+    one transaction that folds the stats of files the current manifest
+    lacks, writes the schema sidecar and publishes ``_aisle_files.json``.
+    Readers list that manifest, never the directory, so orphans from
+    failed attempts are invisible. On an object store the renames drop
+    out and the manifest alone is the commit (same shape as Iceberg's
+    file-list commit).
 
     ``resume=True`` skips every input file that already has a committed
     sidecar — an interrupted run continues from the last committed input
@@ -749,7 +825,7 @@ def encode_files_direct(
             committed_inputs.update(_fs_read_json(fs, p)["inputs"])
         files = [f for f in files if _os.path.basename(f) not in committed_inputs]
         if not files:
-            return _rebuild_manifest(out_path, in_schema, fs)
+            return _commit_done(fs, out_path, in_schema)
     # pyarrow reads the ORIGINAL top-level columns; structs flatten after
     names = [f.name for f in in_schema if not f.name.startswith("_")]
     _fs_mkdirs(fs, out_path)
@@ -871,31 +947,21 @@ def encode_files_direct(
     fdf.mapInArrow(
         encode_and_write, "file string, n_blocks long, n_rows long"
     ).collect()
-    return _rebuild_manifest(out_path, in_schema, fs)
+    return _commit_done(fs, out_path, in_schema)
 
 
-def _rebuild_manifest(out_path: str, in_schema: pa.Schema, fs=None) -> list[str]:
-    """Manifest = exactly the data files named by committed ``_done/``
-    sidecars (this run's AND previous runs', so resume unions correctly),
-    with the stats rows of the files the current manifest lacks folded
-    from their block stats — the file tier the data source plans with
-    (datasource._files_kept). The schema sidecar is written first, so a
-    committed table always has one. On an object store the manifest PUT
-    is the only commit primitive — no rename anywhere on the fs path."""
-    cars = [
-        _fs_read_json(fs, p)
+def _commit_done(fs, out_path: str, in_schema: pa.Schema) -> list[str]:
+    """Commit exactly the data files named by committed ``_done/``
+    sidecars (this run's AND previous runs', so resume unions
+    correctly) as the table's file set; returns them. The schema sidecar
+    records the ORIGINAL (possibly nested) schema — scan derives the
+    flat leaf specs from it."""
+    committed = sorted(
+        _fs_read_json(fs, p)["file"]
         for p, _sz in _fs_list(fs, f"{out_path.rstrip('/')}/_done", ".json")
-    ]
-    committed = sorted(c["file"] for c in cars)
-    # sidecar records the ORIGINAL (possibly nested) schema — scan derives
-    # the flat leaf specs from it
+    )
     in_arrow = pa.schema([f for f in in_schema if not f.name.startswith("_")])
-    _write_schema_sidecar(out_path, in_arrow, fs)
-    with manifest_lock(fs, out_path):
-        old = load_manifest(fs, out_path)
-        new = sorted(set(committed) - set(old["files"] if old else ()))
-        stats = fold_file_stats(fs, out_path, new, specs_for_schema(in_arrow))
-        publish_manifest(fs, out_path, {"files": committed}, stats)
+    commit(fs, out_path, in_arrow, committed, drop=ALL)
     return committed
 
 
@@ -1133,10 +1199,10 @@ def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
         return None
     files = sorted(unquote(urlparse(u).path) for u in uris)
     roots = {os.path.dirname(f) for f in files}
-    if len(roots) != 1 or not os.path.exists(os.path.join(*roots, D._SCHEMA_SIDECAR)):
+    if len(roots) != 1 or not os.path.exists(os.path.join(*roots, SCHEMA_SIDECAR)):
         return None
     root = roots.pop()
-    committed, stats = D._manifest_of(None, root, D._read_sidecar_schema(None, root))
+    committed, stats = D._manifest_of(None, root, _read_sidecar_schema(None, root))
     size = dict(zip(committed, D._decode_set_bytes(stats, leaves)))
     entries = [(f, None, size.get(f)) for f in files]
     if any(b is None or b >= D._PACK_SMALL_BYTES for _f, _rows, b in entries):
@@ -1608,26 +1674,25 @@ def prune_report(blocks: DataFrame, where: Spec | str) -> dict:
 
 def write_encoded(blocks: DataFrame, path: str, schema: pa.Schema, mode: str = "error") -> None:
     blocks.write.mode(mode).parquet(path)
-    _write_schema_sidecar(path, schema)
     # commit a manifest with per-file stats so the data source gets the
     # file pruning tier over this layout too
     files = [p.rsplit("/", 1)[-1] for p, _sz in _fs_list(None, path, ".parquet")]
-    with manifest_lock(None, path):
-        publish_manifest(
-            None, path, {"files": files}, fold_file_stats(None, path, files, specs_for_schema(schema))
-        )
+    commit(None, path, schema, files, drop=ALL)
 
 
 def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
     _fs_mkdirs(fs, path)
-    _fs_write(fs, f"{path.rstrip('/')}/_aisle_schema.arrow", schema.serialize().to_pybytes())
+    _fs_write(fs, f"{path.rstrip('/')}/{SCHEMA_SIDECAR}", schema.serialize().to_pybytes())
+
+
+def _read_sidecar_schema(fs, path: str) -> pa.Schema:
+    return pa.ipc.read_schema(pa.py_buffer(_fs_read(fs, f"{path.rstrip('/')}/{SCHEMA_SIDECAR}")))
 
 
 def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
     import os
 
-    with open(os.path.join(path, "_aisle_schema.arrow"), "rb") as fh:
-        schema = pa.ipc.read_schema(pa.py_buffer(fh.read()))
+    schema = _read_sidecar_schema(None, path)
     m = load_manifest(None, path)
     if m is not None:
         # direct-write layout: read EXACTLY the committed file list —

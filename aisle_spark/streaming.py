@@ -9,11 +9,13 @@ Shape:  readStream (any source) -> encode_stream(...) -> encoded table
 Exactly-once protocol (the streaming face of the batch direct-write
 commit): every ``mapInArrow`` task of micro-batch ``b`` writes its blocks
 straight to ``stream-b{b:08d}-{partition:04d}.parquet`` (tmp + atomic
-rename locally) and returns the file's name; the driver then folds the
-files' stats and publishes the manifest with the batch's file list. A
-replayed batch (failure before the manifest commit) rewrites the SAME
-file names and replaces the batch's manifest entry, so duplicates are
-impossible — keyed by Spark's monotonically increasing batchId.
+rename locally) and returns the file's name; the driver then commits the
+batch's files as batch ``b`` (``pipeline.commit(..., batch=b)``), which
+folds their stats and maps ``b`` to them in the manifest's ``batches``.
+A replayed batch (failure before the manifest commit) rewrites the SAME
+file names and replaces the batch's files and their stats rows, so
+duplicates are impossible — keyed by Spark's monotonically increasing
+batchId.
 
 This mirrors the reference's "streaming extensibility" surface
 (SURVEY.md §2.9) re-expressed on Spark's own streaming engine: watermarks,
@@ -32,45 +34,8 @@ from aisle_spark.pipeline import (
     DEFAULT_MAX_VALUES,
     _write_schema_sidecar,
     arrow_schema_of,
+    commit,
 )
-
-
-def _read_manifest(out_path: str) -> dict:
-    from aisle_spark.pipeline import load_manifest
-
-    # resolves the pointer form; a sink's first commit starts empty
-    m = load_manifest(None, out_path) or {"files": []}
-    m.setdefault("batches", {})
-    return m
-
-
-def _commit_batch(out_path: str, batch_id: int, files: list[str]) -> None:
-    """Atomically record this batch's files; replays replace, never add.
-    The files' stats rows are folded from their blocks, so streamed
-    tables participate in the file pruning tier (datasource._files_kept)
-    like batch-written ones."""
-    from aisle_spark.datasource import _read_sidecar_schema
-    from aisle_spark.pipeline import fold_file_stats, manifest_lock, publish_manifest
-    from aisle_spark.schema import specs_for_schema
-
-    specs = specs_for_schema(_read_sidecar_schema(None, out_path))
-    stats = fold_file_stats(None, out_path, files, specs)
-    with manifest_lock(None, out_path):
-        m = _read_manifest(out_path)
-        replaced = set(m["batches"].get(str(batch_id), []))
-        m["batches"][str(batch_id)] = files
-        # files = non-batch files (compaction retires the batches map but
-        # its output files must survive subsequent batch commits — ADVICE
-        # r3 high) ∪ every live batch's files; a replayed batch replaces,
-        # never adds. A compaction commit's "compacted_from" is not
-        # republished: it would tag THIS batch's snapshot as a compaction
-        # commit too, and stream readers skip those (_additions returns
-        # []) — every post-OPTIMIZE batch would be silently invisible
-        batch_files = {f for fs in m["batches"].values() for f in fs}
-        live = (set(m["files"]) - replaced) | set(files) | batch_files
-        publish_manifest(
-            None, out_path, {"files": sorted(live), "batches": m["batches"]}, stats
-        )
 
 
 def write_batch(
@@ -88,7 +53,8 @@ def write_batch(
     with the same id replaces the batch. Returns the batch's files."""
     from aisle_spark.schema import specs_for_schema
 
-    specs = specs_for_schema(arrow_schema_of(batch_df))
+    schema = arrow_schema_of(batch_df)
+    specs = specs_for_schema(schema)
 
     def encode_partition(batches):
         import pyarrow as pa
@@ -115,7 +81,7 @@ def write_batch(
 
     rows = batch_df.mapInArrow(encode_partition, "file string").collect()
     files = sorted(r.file for r in rows)
-    _commit_batch(out_path, batch_id, files)
+    commit(None, out_path, schema, files, batch=batch_id)
     return files
 
 

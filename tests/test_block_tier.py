@@ -12,9 +12,9 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from aisle_spark.datasource import _file_rows, _manifest_of, _read_sidecar_schema, plan_pruned
+from aisle_spark.datasource import _file_rows, _manifest_of, plan_pruned
 from aisle_spark.filterspec import DEFAULT_OPTIONS, PruneOptions, col, utc_normalize
-from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
+from aisle_spark.pipeline import _read_sidecar_schema, arrow_schema_of, encode_table, write_encoded
 from aisle_spark.schema import synth_batch
 
 from tests.test_random_predicates import _rand_spec

@@ -618,7 +618,8 @@ class TestFileLevelPruning:
 
     def test_file_tier_prunes_an_or(self, spark, per_source_files):
         """An Or of two eqs keeps exactly the one file that can match."""
-        from aisle_spark.datasource import _files_kept, _manifest_of, _read_sidecar_schema
+        from aisle_spark.datasource import _files_kept, _manifest_of
+        from aisle_spark.pipeline import _read_sidecar_schema
         from aisle_spark.filterspec import col
 
         _df, out = per_source_files
@@ -712,7 +713,8 @@ class TestStatsFiles:
         """A manifest whose stats are JSON ``file_stats`` has no stats
         file: Unknown, so the file tier keeps every file and results stay
         exact; compaction folds stats rows again."""
-        from aisle_spark.datasource import _files_kept, _manifest_of, _read_sidecar_schema
+        from aisle_spark.datasource import _files_kept, _manifest_of
+        from aisle_spark.pipeline import _read_sidecar_schema
         from aisle_spark.filterspec import col
         from aisle_spark.maintenance import compact_encoded
 
@@ -1349,8 +1351,8 @@ class TestParallelPlanningIO:
     def test_recompute_file_stats_is_parallel_and_bounded(self, spark, many_files):
         import json as _json
 
-        from aisle_spark.datasource import _PLANNING_IO_THREADS, _fs_of, _read_sidecar_schema
-        from aisle_spark.pipeline import fold_file_stats
+        from aisle_spark.datasource import _PLANNING_IO_THREADS, _fs_of
+        from aisle_spark.pipeline import _read_sidecar_schema, fold_file_stats
         from aisle_spark.schema import specs_for_schema
 
         fs, root = _fs_of("file://" + many_files)

@@ -19,7 +19,6 @@ from aisle_spark import datasource as D
 from aisle_spark.datasource import (
     AisleReader,
     _manifest_of,
-    _read_sidecar_schema,
     plan_pruned,
     planned_files,
     register,
@@ -28,6 +27,7 @@ from aisle_spark.filterspec import col, utc_normalize
 from aisle_spark.pipeline import (
     _decode_tasks,
     _footer_spark_schema,
+    _read_sidecar_schema,
     arrow_schema_of,
     encode_files_direct,
     encode_table,

@@ -267,25 +267,3 @@ def test_sidecar_skew_balance(spark, dirs):
     assert sum(c["n_rows"] for c in cars) == sum(rows)
     assert all(0 < c["enc_bytes"] < c["raw_bytes"] for c in cars)
     assert all(c["rows_per_sec"] > 0 for c in cars)
-
-
-def test_schema_sidecar_precedes_the_commit(tmp_path, monkeypatch):
-    """The manifest rebuild writes the schema sidecar (tmp + rename, like
-    every commit-point file) before it publishes: a crash in the commit
-    leaves a readable schema and no manifest, never the reverse."""
-    import aisle_spark.pipeline as pl
-    from aisle_spark.datasource import _read_sidecar_schema
-
-    out = str(tmp_path / "enc")
-    os.makedirs(os.path.join(out, "_done"))
-    schema = pa.schema([("n_tok", pa.int32()), ("source", pa.string())])
-
-    def crash(*args, **kwargs):
-        raise OSError("injected crash")
-
-    monkeypatch.setattr(pl, "publish_manifest", crash)
-    with pytest.raises(OSError, match="injected"):
-        pl._rebuild_manifest(out, schema)
-    assert _read_sidecar_schema(None, out).equals(schema)
-    assert pl.load_manifest(None, out) is None
-    assert sorted(os.listdir(out)) == ["_aisle_manifest.lock", "_aisle_schema.arrow", "_done"]

@@ -35,6 +35,13 @@ def _manifest(out):
         return json.load(fh)
 
 
+def _commit_batch(out, batch_id, files):
+    """What the streaming sink commits for micro-batch ``batch_id``."""
+    from aisle_spark.pipeline import _read_sidecar_schema, commit
+
+    return commit(None, out, _read_sidecar_schema(None, out), files, batch=batch_id)
+
+
 class TestCompact:
     def test_compact_preserves_rows_and_prunes_files(self, spark, small_files_table):
         df, out = small_files_table
@@ -519,8 +526,6 @@ class TestIncrementalCompaction:
         replace, never duplicate)."""
         import json as _json
 
-        from aisle_spark.streaming import _commit_batch
-
         register(spark)
         out = str(tmp_path / "st")
         os.makedirs(out)
@@ -572,7 +577,6 @@ class TestReviewRegressions:
         from pyspark.sql import functions as F
 
         from aisle_spark.datasource import AisleStreamReader
-        from aisle_spark.streaming import _commit_batch
 
         register(spark)
         out = str(tmp_path / "pc")

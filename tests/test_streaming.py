@@ -12,10 +12,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from aisle_spark.filterspec import col
-from aisle_spark.pipeline import read_encoded, scan
+from aisle_spark.pipeline import load_manifest, read_encoded, scan
 from aisle_spark.schema import TOKEN_SCHEMA, synth_batch
 from tests.test_datasource import _stats
-from aisle_spark.streaming import _read_manifest, encode_stream, write_batch
+from aisle_spark.streaming import encode_stream, write_batch
 
 BASE = "/tmp/aisle_stream_test"
 
@@ -72,7 +72,7 @@ def test_stream_encode_commits_and_scans(spark, dirs):
         got = scan(blocks, schema, where=col("source") == "code").count()
         exp = spark.read.parquet(src).filter(F.col("source") == "code").count()
         assert got == exp
-        m = _read_manifest(out)
+        m = load_manifest(None, out)
         assert len(m["batches"]) == 2
         assert sorted(m["files"]) == m["files"]
     finally:
@@ -104,7 +104,32 @@ def test_replayed_batch_is_idempotent(spark, dirs):
         assert files and all(f.startswith("stream-b00000000-") for f in files)
         blocks, schema = read_encoded(spark, out)
         assert scan(blocks, schema).count() == n_before  # replaced, not appended
-        assert _read_manifest(out)["batches"]["0"] == files
+        assert load_manifest(None, out)["batches"]["0"] == files
+
+
+def test_replay_with_other_rows_refolds_stats(spark, dirs):
+    """A batch replayed with different rows rewrites the same file names;
+    the commit folds their stats anew instead of carrying the first
+    run's rows forward."""
+    from aisle_spark.pipeline import _read_sidecar_schema, fold_file_stats
+    from aisle_spark.schema import specs_for_schema
+
+    _src, out, _ckp = dirs
+    os.makedirs(out)
+
+    def batch(start, n, seed):
+        t = pa.Table.from_batches([synth_batch(start, n, seed=seed)])
+        return spark.createDataFrame(t).repartition(2)
+
+    first = write_batch(batch(0, 1500, 42), 0, out, parts=2, block_rows=512)
+    files = write_batch(batch(9000, 700, 7), 0, out, parts=2, block_rows=512)
+    assert files == first  # rewritten in place
+    assert load_manifest(None, out)["files"] == files
+    specs = specs_for_schema(_read_sidecar_schema(None, out))
+    want = fold_file_stats(None, out, files, specs).to_pylist()
+    sts = _stats(out)
+    assert [sts[f] for f in files] == want
+    assert sum(r["n_rows"] for r in sts.values()) == 700
 
 
 def test_batch_commit_after_compaction_keeps_compacted_files(spark, dirs):
@@ -127,7 +152,7 @@ def test_batch_commit_after_compaction_keeps_compacted_files(spark, dirs):
     from aisle_spark.maintenance import compact_encoded
 
     compact_encoded(spark, out, target_files=1)
-    m = _read_manifest(out)
+    m = load_manifest(None, out)
     assert m["batches"] == {} and len(m["files"]) == 1
     compacted = set(m["files"])
 
@@ -143,7 +168,7 @@ def test_batch_commit_after_compaction_keeps_compacted_files(spark, dirs):
         q2.processAllAvailable()
     finally:
         q2.stop()
-    m = _read_manifest(out)
+    m = load_manifest(None, out)
     assert compacted <= set(m["files"])  # compacted history survives
     blocks, schema = read_encoded(spark, out)
     assert scan(blocks, schema).count() == 3000
@@ -169,13 +194,14 @@ def test_stream_commits_record_file_stats(spark, dirs):
         q.processAllAvailable()
     finally:
         q.stop()
-    m = _read_manifest(out)
+    m = load_manifest(None, out)
     sts = _stats(out)
     assert m["files"] and set(sts) == set(m["files"])
     some = next(iter(sts.values()))
     assert some["n_tok__min"] <= some["n_tok__max"]
 
-    from aisle_spark.datasource import _files_kept, _manifest_of, _read_sidecar_schema
+    from aisle_spark.datasource import _files_kept, _manifest_of
+    from aisle_spark.pipeline import _read_sidecar_schema
 
     schema = _read_sidecar_schema(None, out)
     files, rows = _manifest_of(None, out, schema)

@@ -85,7 +85,7 @@ def stats_rows(n: int):
 def measure(n: int) -> dict:
     from aisle_spark.datasource import _files_kept, _manifest_of
     from aisle_spark.filterspec import utc_normalize
-    from aisle_spark.pipeline import _write_schema_sidecar, publish_manifest
+    from aisle_spark.pipeline import SCHEMA_SIDECAR, _write_schema_sidecar, publish_manifest
 
     root = tempfile.mkdtemp(prefix="aisle_tier_probe_")
     try:
@@ -96,7 +96,7 @@ def measure(n: int) -> dict:
             os.path.getsize(os.path.join(d, f))
             for d, _dirs, names in os.walk(root)
             for f in names
-            if f != "_aisle_schema.arrow"
+            if f != SCHEMA_SIDECAR
         )
         loads = []
         for _ in range(3):

@@ -4,7 +4,8 @@ times under a new table root (no payload is copied; every file holds the
 same blocks).
 
 Encodes a 1,500-row token table into one block file, links it N times,
-commits the N names with their folded stats (``commit``), then times,
+commits the N names in one ``pipeline.commit`` (which folds their
+stats) and times it, then times,
 best of 3: the ``scan()`` build (no action runs) for a predicate every
 file keeps, and ``partitions()`` for a predicate every file keeps and
 for one that none keeps.
@@ -26,14 +27,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def commit(root: str, files: list[str], schema) -> None:
-    """Commit ``files`` under ``root`` with their folded stats rows."""
-    from aisle_spark.pipeline import fold_file_stats, publish_manifest
-    from aisle_spark.schema import specs_for_schema
-
-    publish_manifest(None, root, {"files": files}, fold_file_stats(None, root, files, specs_for_schema(schema)))
-
-
 def best(fn, n: int = 3) -> float:
     times = []
     for _ in range(n):
@@ -47,9 +40,17 @@ def measure(spark, n: int, work: str) -> dict:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from aisle_spark.datasource import AisleReader, _read_sidecar_schema
+    from aisle_spark.datasource import AisleReader
     from aisle_spark.filterspec import col
-    from aisle_spark.pipeline import encode_files_direct, load_manifest, read_encoded, scan
+    from aisle_spark.pipeline import (
+        SCHEMA_SIDECAR,
+        _read_sidecar_schema,
+        commit,
+        encode_files_direct,
+        load_manifest,
+        read_encoded,
+        scan,
+    )
     from aisle_spark.schema import synth_batch
 
     os.makedirs(f"{work}/in")
@@ -58,12 +59,12 @@ def measure(spark, n: int, work: str) -> dict:
     (one,) = load_manifest(None, f"{work}/enc")["files"]
     many = f"{work}/many"
     os.makedirs(many)
-    shutil.copy(f"{work}/enc/_aisle_schema.arrow", many)
+    shutil.copy(f"{work}/enc/{SCHEMA_SIDECAR}", many)
     files = [f"blocks-{i:06d}.parquet" for i in range(n)]
     for f in files:
         os.link(f"{work}/enc/{one}", f"{many}/{f}")
     t0 = time.perf_counter()
-    commit(many, files, _read_sidecar_schema(None, many))
+    commit(None, many, _read_sidecar_schema(None, many), files)
     commit_s = round(time.perf_counter() - t0, 3)
     t0 = time.perf_counter()
     blocks, schema = read_encoded(spark, many)
