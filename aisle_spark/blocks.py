@@ -632,12 +632,16 @@ def encode_block(
     return row
 
 
+# a block whose surviving rows exceed this share of its rows decodes in
+# full: gathering most rows costs more than decoding them all
+_SELECT_MAX_SHARE = 0.5
+
+
 def decode_block_filtered(
     specs: list[ColumnSpec],
     row: dict,
     columns: list[str],
     where,
-    select_threshold: float = 0.5,
 ) -> pa.RecordBatch:
     """RowFilter-inside-the-reader (/root/reference/src/row_filter.rs
     analog + the reference's page-level refinement): decode the cheap
@@ -707,7 +711,7 @@ def decode_block_filtered(
         return decode_block(specs, row, columns)
     n = pred_batch.num_rows
     sel = np.flatnonzero(mask)
-    if sel.size > n * select_threshold:
+    if sel.size > n * _SELECT_MAX_SHARE:
         return decode_block(specs, row, columns)
     if sel.size == 0:
         return pa.RecordBatch.from_arrays(

@@ -37,9 +37,10 @@ Write path: each task slices its Arrow stream into sorted blocks
 (``pipeline._order_and_slice`` + ``blocks.encode_block``), writes ONE
 parquet file, and reports it in its commit message; ``commit`` is one
 ``pipeline.commit`` — fold the new files' stats rows, write the Arrow
-schema sidecar, publish the file list into the manifest
-(``pipeline.MANIFEST``) — the same transaction every writer ends in, so
-readers never observe files from failed or speculative attempts.
+schema sidecar, write a snapshot naming the file list, then swap the
+manifest (``pipeline.MANIFEST``) to its version — the same transaction
+every writer ends in, so readers never observe files from failed or
+speculative attempts.
 
 Scale notes: planning reads ONLY the manifest stat columns the predicate
 needs and the decode set's ``__enc_bytes`` (parquet projection pushdown;
@@ -338,16 +339,13 @@ def _manifest_of(
 ) -> tuple[list[str], pa.Table]:
     """(full file paths, their stats rows (``_file_rows``)); ``version``
     pins a committed snapshot (time travel)."""
-    from aisle_spark.pipeline import _fs_list, load_manifest, read_snapshot
+    from aisle_spark.pipeline import _fs_list, load_manifest
 
     root = path.rstrip("/")
-    if version is not None:
-        m = read_snapshot(fs, root, version, stats=True)
-    else:
-        m = load_manifest(fs, root, stats=True)
-        if m is None:
-            files = [p for p, _size in _fs_list(fs, path, ".parquet")]
-            return files, _file_rows(None, files, schema)
+    m = load_manifest(fs, root, stats=True, version=version)
+    if m is None:
+        files = [p for p, _size in _fs_list(fs, path, ".parquet")]
+        return files, _file_rows(None, files, schema)
     return [f"{root}/{f}" for f in m["files"]], _file_rows(m["stats"], m["files"], schema)
 
 
@@ -624,8 +622,11 @@ class AisleStreamReader(DataSourceStreamReader):
     files that entered the manifest since the last offset. Pairs
     with the engine's streaming sink (streaming.py) and the batch writer's
     append mode for an end-to-end exactly-once encoded stream: files
-    become visible atomically at manifest rename, so an offset is a
-    consistent snapshot by construction.
+    become visible atomically when ``_aisle_files.json`` swaps to their
+    version, so an offset is a consistent snapshot by construction. The
+    newest offset is ``pipeline.current_version``, read without listing
+    the snapshots: a snapshot left above it by an interrupted commit is
+    never emitted, and the next commit's snapshot replaces it.
 
     Offsets are SNAPSHOT VERSIONS (constant-size, immutable replay): a
     fresh stream's first batch loads the current snapshot's file set, and
@@ -728,11 +729,10 @@ class AisleStreamReader(DataSourceStreamReader):
         and anchors at version 0; on restart the runner calls
         partitions(checkpoint, checkpoint) first, which seeds the cursor,
         so a restart is never mistaken for a fresh stream."""
-        from aisle_spark.pipeline import list_snapshots
+        from aisle_spark.pipeline import current_version
 
         self._memo = {}
-        versions = list_snapshots(self.fs, self.path.rstrip("/"))
-        latest = versions[-1] if versions else 0
+        latest = current_version(self.fs, self.path)
         cap_f, cap_b, cur = self._max_files, self._max_bytes, self._cursor
         if (not cap_f and not cap_b) or latest == 0:
             return {"version": latest}

@@ -35,20 +35,30 @@ Other schemes (s3a:// etc.) work wherever both layers carry the scheme.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from aisle_spark.datasource import _fs_of
 from aisle_spark.pipeline import (
+    _SNAP_DIR,
     MANIFEST,
     _fs_delete,
     _fs_list,
     _read_sidecar_schema,
+    _write_stats,
     commit,
+    list_snapshots,
     load_manifest,
+    manifest_lock,
+    read_snapshot,
+    write_subdir,
 )
+
+
+# the subdirectories compaction and ``write_encoded`` write block files to
+# (``pipeline.write_subdir``)
+_DATA_SUBDIRS = ("compact-", "write-")
 
 
 def _current_manifest(fs, root: str) -> dict:
@@ -108,7 +118,6 @@ def compact_encoded(
     total = sum(sizes[f] for f in files)
     n_out = target_files or max(1, round(total / (target_mb * 1024 * 1024)))
 
-    subdir = f"compact-{uuid.uuid4().hex[:12]}"
     blocks = spark.read.parquet(*[f"{spark_root}/{f}" for f in files])
     if order_by:
         # range-partition on the blocks' min stats (lexicographic across
@@ -125,12 +134,7 @@ def compact_encoded(
         )
     else:
         blocks = blocks.repartition(n_out)
-    blocks.write.mode("errorifexists").parquet(f"{spark_root}/{subdir}")
-
-    new_files = sorted(
-        f"{subdir}/{p.rsplit('/', 1)[-1]}"
-        for p, _size in _fs_list(fs, f"{root}/{subdir}", ".parquet")
-    )
+    new_files = write_subdir(blocks.write, fs, root, "compact", spark_root)
     if not new_files:
         raise RuntimeError("compaction produced no files")
     # the commit re-reads the manifest under its lock: files appended
@@ -140,7 +144,7 @@ def compact_encoded(
         "files_before": len(files),
         "files_after": len(new_files),
         "bytes": total,
-        "subdir": subdir,
+        "subdir": new_files[0].split("/")[0],
         "ordered_by": order_by,
     }
 
@@ -148,16 +152,15 @@ def compact_encoded(
 def vacuum_encoded(
     path: str, dry_run: bool = False, min_age_seconds: float = 600.0
 ) -> list[str]:
-    """Delete data files the manifest no longer references (pre-compaction
-    leftovers, failed attempts). Never touches the manifest, sidecars, or
+    """Delete data files no committed snapshot references (pre-compaction
+    leftovers, the files of failed attempts and of orphan snapshots above
+    the current version). Never touches the manifest, sidecars, or
     Spark metadata. Run only after readers of older snapshots finished.
 
     ``min_age_seconds`` protects IN-FLIGHT writers: a concurrent append
     writes its data file BEFORE the manifest commit, so an unreferenced
     file younger than the grace window is skipped (same discipline as
     lakehouse VACUUM retention). Set 0 only when no writer can be live."""
-    from aisle_spark.pipeline import list_snapshots, read_snapshot
-
     fs, root = _fs_of(path)
     root = root.rstrip("/")
     keep = set(_current_manifest(fs, root)["files"])
@@ -167,20 +170,12 @@ def vacuum_encoded(
         keep.update(read_snapshot(fs, root, v)["files"])
     victims: list[str] = []
     entries = list(_fs_list(fs, root, ".parquet"))
-    if fs is None:
-        import glob as _glob
+    from pyarrow import fs as pafs
 
-        for sub in _glob.glob(f"{root}/compact-*"):
-            if os.path.isdir(sub):
-                entries += _fs_list(fs, sub, ".parquet")
-    else:
-        from pyarrow import fs as pafs
-
-        for info in fs.get_file_info(pafs.FileSelector(root, allow_not_found=True)):
-            if info.type == pafs.FileType.Directory and info.base_name.startswith(
-                "compact-"
-            ):
-                entries += _fs_list(fs, info.path, ".parquet")
+    top = pafs.FileSelector(root, allow_not_found=True)
+    for info in (fs or pafs.LocalFileSystem()).get_file_info(top):
+        if info.type == pafs.FileType.Directory and info.base_name.startswith(_DATA_SUBDIRS):
+            entries += _fs_list(fs, info.path, ".parquet")
     import time
 
     now = time.time()
@@ -222,8 +217,6 @@ def vacuum_encoded(
 
 def snapshots(path: str) -> list[dict]:
     """Committed manifest versions, oldest first: [{version, n_files}]."""
-    from aisle_spark.pipeline import list_snapshots, read_snapshot
-
     fs, root = _fs_of(path)
     root = root.rstrip("/")
     return [
@@ -233,48 +226,30 @@ def snapshots(path: str) -> list[dict]:
 
 
 def expire_snapshots(path: str, keep_last: int = 10) -> list[int]:
-    """Delete snapshot files (and the stats files they name) older than
-    the newest ``keep_last`` (the retention knob of the time-travel
-    surface). Data files they referenced become collectible by the NEXT
-    ``vacuum_encoded``. Never touches the current manifest, and the
-    current version's snapshot (and chain) always survives regardless of
-    ``keep_last``: readers resolve the pointer form and every file's
-    stats through it."""
-    from aisle_spark.pipeline import (
-        _SNAP_DIR,
-        _fs_read_json,
-        _fs_write_json,
-        _write_stats,
-        list_snapshots,
-        manifest_lock,
-        read_snapshot,
-    )
+    """Delete the committed snapshot files (and the stats files they
+    name) older than the newest ``keep_last`` (the retention knob of the
+    time-travel surface). Data files they referenced become collectible
+    by the NEXT ``vacuum_encoded``. The current version's snapshot (and
+    chain) always survives regardless of ``keep_last``: every read of the
+    table and of its files' stats resolves through it. Orphan snapshots
+    above the current version are left for the next commit to overwrite."""
+    # looked up per call, so a fault injected at the write reaches here
+    from aisle_spark.pipeline import _fs_write_json
 
     fs, root = _fs_of(path)
     root = root.rstrip("/")
     with manifest_lock(fs, root):
+        # committed versions only, so the last one is the current version
         versions = list_snapshots(fs, root)
-        victims = versions[:-keep_last] if keep_last > 0 else list(versions)
-        try:
-            cur = _fs_read_json(fs, f"{root}/{MANIFEST}")
-        except FileNotFoundError:
-            cur = {}  # no manifest yet => nothing pointed at
-        # any OTHER read failure propagates: proceeding without the
-        # pointer check could delete the snapshot the current manifest
-        # resolves through (code-review r5)
-        if cur.get("version") is not None:
-            # deleting the current snapshot would brick the table: the
-            # pointer form and every file's stats resolve through it
-            victims = [v for v in victims if v < int(cur["version"])]
-        retained = sorted(set(versions) - set(victims))
-        if victims and retained:
+        victims = versions[: -max(keep_last, 1)]
+        if victims:
             # the oldest RETAINED snapshot may be a delta whose chain
             # passes through the victims; materialize it as a full
             # snapshot first (equivalent content, atomic replaces) so
             # every retained chain stops at or after the boundary. Its
             # stats file goes first: a delta replays full rows to the
             # same result, so the table reads right between the writes
-            boundary = retained[0]
+            boundary = versions[len(victims)]
             snap = read_snapshot(fs, root, boundary, stats=True)
             rows = snap.pop("stats")
             if rows is not None:

@@ -434,19 +434,33 @@ def manifest_lock(fs, root: str):
 
 
 _SNAP_DIR = "_aisle_snapshots"
-# the current-state manifest: the committed file list, or a pointer to
-# the snapshot holding it
+# the table's one commit point, ``{"version": N}``: swapped last by every
+# commit, read only by current_version
 MANIFEST = "_aisle_files.json"
 # the table's Arrow schema (IPC), written by every commit
 SCHEMA_SIDECAR = "_aisle_schema.arrow"
 
 
+def current_version(fs, root: str) -> int:
+    """The committed version named by ``_aisle_files.json`` (0 when the
+    table has none). The only reader of that file: a snapshot above it is
+    the orphan of a commit that died before its swap, which the next
+    commit overwrites. Manifests written in the older full-list and
+    pointer forms carry ``version`` too."""
+    try:
+        return int(_fs_read_json(fs, f"{root.rstrip('/')}/{MANIFEST}")["version"])
+    except FileNotFoundError:
+        return 0
+
+
 def list_snapshots(fs, root: str) -> list[int]:
-    """Committed manifest versions, ascending."""
+    """Committed manifest versions still retained, ascending: the
+    snapshots at or below ``current_version``."""
+    cur = current_version(fs, root)
     out = []
     for p, _sz in _fs_list(fs, f"{root.rstrip('/')}/{_SNAP_DIR}", ".json"):
         name = p.rsplit("/", 1)[-1]
-        if name.startswith("v") and name[1:-5].isdigit():
+        if name.startswith("v") and name[1:-5].isdigit() and int(name[1:-5]) <= cur:
             out.append(int(name[1:-5]))
     return sorted(out)
 
@@ -548,23 +562,17 @@ def read_snapshot(
     return payload
 
 
-def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
-    """The JSON actually persisted for snapshot ``version``: the full
+def _snapshot_payload(payload: dict, prev: dict | None) -> dict:
+    """The JSON actually persisted for ``payload``'s version: the full
     payload on the periodic checkpoints (and whenever the delta would not
     be smaller: it would name as many files as the full list, and its
     stats file would hold as many rows — e.g. compaction rewrites the
-    whole file set), otherwise a delta against version-1 as read from the
-    CURRENT manifest. Any lineage surprise degrades to full — always
-    correct, never smaller."""
-    if version == 1 or version % _SNAP_FULL_EVERY == 1:
+    whole file set), otherwise a delta against ``prev``, the committed
+    version it follows (None for a table's first commit)."""
+    version = payload["version"]
+    if prev is None or version % _SNAP_FULL_EVERY == 1:
         return payload
-    try:
-        prev = load_manifest(fs, root)
-    except OSError:
-        return payload
-    if prev is None or prev.get("version") != version - 1:
-        return payload
-    old_files = set(prev.get("files", []))
+    old_files = set(prev["files"])
     new_files = set(payload.get("files", []))
     delta = {
         "version": version,
@@ -578,74 +586,61 @@ def _snapshot_payload(fs, root: str, payload: dict, version: int) -> dict:
     return delta
 
 
-# above this many committed files the current-state manifest switches to
-# the POINTER form ({"version": N, "pointer": true}): the commit then
-# writes O(changed) bytes total — one delta snapshot plus a ~40-byte
-# pointer swap — instead of rewriting the full file list (~10 MB at 10^6
-# files). Readers resolve the pointer through read_snapshot
-# (<= _SNAP_FULL_EVERY-1 footer-sized delta reads past the last full
-# checkpoint) — the Delta-Lake commit-log + periodic-checkpoint
-# amortization. Small tables keep the single-read full form.
-_MANIFEST_POINTER_MIN_FILES = 4096
-
-
-def load_manifest(fs, root: str, stats: bool = False) -> dict | None:
-    """The current-state manifest as a FULL dict, resolving the pointer
-    form through the snapshot chain; None when the table has no manifest
-    (a plain ``blocks.write.parquet`` layout, or nothing committed yet).
-    ``stats`` adds the live files' stats rows (``read_snapshot``). Every
-    in-engine reader of the manifest goes through here."""
+def load_manifest(fs, root: str, stats: bool = False, version: int | None = None) -> dict | None:
+    """The committed manifest: ``read_snapshot`` of ``current_version``,
+    or of ``version`` when given (time travel). None when the table has
+    no manifest (a plain ``blocks.write.parquet`` layout, or nothing
+    committed yet). A ``version`` above the current one is not
+    committed and raises FileNotFoundError, as an expired or never
+    written one does. ``stats`` adds the live files' stats rows. Every
+    in-engine reader of the committed state goes through here."""
     root = root.rstrip("/")
-    try:
-        m = _fs_read_json(fs, f"{root}/{MANIFEST}")
-    except FileNotFoundError:
-        return None
-    if "files" in m and not stats:
-        return m
-    return read_snapshot(fs, root, int(m["version"]), stats=stats)
+    cur = current_version(fs, root)
+    if version is not None and not 0 < version <= cur:
+        raise FileNotFoundError(f"{root}: version {version} is not committed (current: {cur})")
+    version = version or cur
+    return read_snapshot(fs, root, version, stats=stats) if version else None
 
 
 def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None) -> int:
-    """The ONE manifest commit point: write an immutable numbered
-    snapshot (full or delta, see _snapshot_payload) — time travel for
-    training-data reproducibility (readers pin ``versionAsOf``; vacuum
-    keeps every file any retained snapshot references) — then commit by
-    swapping ``_aisle_files.json``: the full payload for small tables,
-    the pointer form past _MANIFEST_POINTER_MIN_FILES files so a
-    single-file append writes O(changed) bytes at ANY table size.
+    """Commit ``payload`` as version ``current_version`` + 1. First write
+    its immutable numbered snapshot (full or a delta against the current
+    version, see _snapshot_payload) — time travel for training-data
+    reproducibility (readers pin ``versionAsOf``; vacuum keeps every file
+    any retained snapshot references) — then swap ``_aisle_files.json``
+    to ``{"version": N}``: the one commit point, a constant-size write at
+    any table size. A crash before the swap leaves version N-1 committed;
+    the files it wrote are orphans the next commit overwrites.
 
     ``stats`` holds the stats rows (``fold_file_stats``) of the files
     this commit wrote; the survivors' rows carry forward. They go to an
     immutable ``v{N}.stats.parquet`` written before the snapshot that
     names it — every live file's rows when the snapshot is full, only
-    ``stats`` when it is a delta — so the snapshot stays the commit
-    point. ``commit`` calls it under ``manifest_lock``, which also
+    ``stats`` when it is a delta. The current version is read once for
+    both. ``commit`` calls it under ``manifest_lock``, which also
     serializes version numbering. Returns the new version."""
     import pyarrow.compute as pc
 
     root = root.rstrip("/")
-    versions = list_snapshots(fs, root)
-    version = (versions[-1] + 1) if versions else 1
+    version = current_version(fs, root) + 1
+    cache: dict = {}
+    prev = read_snapshot(fs, root, version - 1, cache=cache) if version > 1 else None
     payload = dict(payload, version=version)
     _fs_mkdirs(fs, f"{root}/{_SNAP_DIR}")
-    snap = _snapshot_payload(fs, root, payload, version)
+    snap = _snapshot_payload(payload, prev)
     live = pa.array(payload.get("files", []), pa.string())
 
     def alive(rows: pa.Table | None) -> pa.Table | None:
         return None if rows is None else rows.filter(pc.is_in(rows.column("file"), live))
 
     stats = alive(stats)
-    if "delta_base" not in snap and versions:
-        prev = read_snapshot(fs, root, versions[-1], stats=True)["stats"]
-        stats = _merge_stats(alive(prev), (), stats)
+    if prev is not None and "delta_base" not in snap:
+        old = read_snapshot(fs, root, version - 1, stats=True, cache=cache)["stats"]
+        stats = _merge_stats(alive(old), (), stats)
     if stats is not None:
         snap = dict(snap, stats=_write_stats(fs, root, version, stats))
     _fs_write_json(fs, f"{root}/{_SNAP_DIR}/v{version:08d}.json", snap)
-    if len(payload.get("files", ())) > _MANIFEST_POINTER_MIN_FILES:
-        current = {"version": version, "pointer": True}
-    else:
-        current = payload
-    _fs_write_json(fs, f"{root}/{MANIFEST}", current)
+    _fs_write_json(fs, f"{root}/{MANIFEST}", {"version": version})
     return version
 
 
@@ -1181,7 +1176,8 @@ def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
     decode set: its ``<leaf>__enc_bytes`` stats over ``leaves``.
 
     None, which leaves Spark's width, unless the files ``blocks`` reads
-    are local, lie under one table root (its schema sidecar present) and
+    are local, lie under one table root (its schema sidecar present; the
+    files of ``write_encoded`` and compaction sit one directory down) and
     each reads under ``_PACK_SMALL_BYTES``: a larger file keeps its own
     task in the packing, but Spark may have split it, and ``coalesce``
     would merge its splits. Remote files are left to Spark, whose
@@ -1198,10 +1194,11 @@ def _decode_tasks(blocks: DataFrame, leaves: list[str]) -> int | None:
     if not uris or not all(u.startswith("file:") for u in uris):
         return None
     files = sorted(unquote(urlparse(u).path) for u in uris)
-    roots = {os.path.dirname(f) for f in files}
-    if len(roots) != 1 or not os.path.exists(os.path.join(*roots, SCHEMA_SIDECAR)):
+    # block files lie in the table root or in a data subdirectory of it
+    common = os.path.commonpath([os.path.dirname(f) for f in files])
+    root = common if os.path.exists(f"{common}/{SCHEMA_SIDECAR}") else os.path.dirname(common)
+    if not os.path.exists(f"{root}/{SCHEMA_SIDECAR}"):
         return None
-    root = roots.pop()
     committed, stats = D._manifest_of(None, root, _read_sidecar_schema(None, root))
     size = dict(zip(committed, D._decode_set_bytes(stats, leaves)))
     entries = [(f, None, size.get(f)) for f in files]
@@ -1673,11 +1670,34 @@ def prune_report(blocks: DataFrame, where: Spec | str) -> dict:
 
 
 def write_encoded(blocks: DataFrame, path: str, schema: pa.Schema, mode: str = "error") -> None:
-    blocks.write.mode(mode).parquet(path)
-    # commit a manifest with per-file stats so the data source gets the
-    # file pruning tier over this layout too
-    files = [p.rsplit("/", 1)[-1] for p, _sz in _fs_list(None, path, ".parquet")]
-    commit(None, path, schema, files, drop=ALL)
+    """Write ``blocks`` as the table at ``path`` under Spark's save
+    ``mode``: ``error`` and ``ignore`` act when ``path`` exists,
+    ``append`` adds to the live files and ``overwrite`` replaces them.
+    The block files go to a fresh ``write-<token>/`` subdirectory and the
+    commit names exactly them, so the files of a failed earlier attempt
+    are never committed (``vacuum_encoded`` collects them)."""
+    import os
+
+    if os.path.exists(path) and mode in ("error", "errorifexists", "ignore"):
+        if mode == "ignore":
+            return
+        raise FileExistsError(f"{path} already exists (mode={mode!r})")
+    # Spark rejects an unknown mode
+    files = write_subdir(blocks.write.mode(mode), None, path, "write")
+    commit(None, path, schema, files, drop=ALL if mode == "overwrite" else ())
+
+
+def write_subdir(writer, fs, root: str, prefix: str, spark_root: str | None = None) -> list[str]:
+    """Write block files with Spark's ``writer`` into a fresh
+    ``<prefix>-<token>/`` subdirectory of the table at ``root``
+    (``spark_root``: the path or URI Spark sees, default ``root``); the
+    manifest-relative names of the files written, for one commit."""
+    import uuid
+
+    subdir = f"{prefix}-{uuid.uuid4().hex[:12]}"
+    writer.parquet(f"{spark_root or root}/{subdir}")
+    written = _fs_list(fs, f"{root}/{subdir}", ".parquet")
+    return [f"{subdir}/{p.rsplit('/', 1)[-1]}" for p, _size in written]
 
 
 def _write_schema_sidecar(path: str, schema: pa.Schema, fs=None) -> None:
@@ -1697,7 +1717,6 @@ def read_encoded(spark: SparkSession, path: str) -> tuple[DataFrame, pa.Schema]:
     if m is not None:
         # direct-write layout: read EXACTLY the committed file list —
         # orphans from failed/speculative attempts are never visible
-        # (load_manifest resolves the large-table pointer form)
         files = [os.path.join(path, f) for f in m["files"]]
         # the footer's schema is what Spark infers only under the default
         # parquet inference settings

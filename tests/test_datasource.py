@@ -17,7 +17,7 @@ from aisle_spark.datasource import (
     planned_files,
     register,
 )
-from aisle_spark.pipeline import arrow_schema_of, encode_table, write_encoded
+from aisle_spark.pipeline import arrow_schema_of, encode_table, load_manifest, write_encoded
 from aisle_spark.schema import synth_batch
 
 
@@ -55,8 +55,6 @@ def _b(c: str, lo, hi, nulls=None, n_rows: int = 10) -> dict:
 
 def _stats(out: str) -> dict:
     """A table's committed stats rows, by file."""
-    from aisle_spark.pipeline import load_manifest
-
     return {r["file"]: r for r in load_manifest(None, out, stats=True)["stats"].to_pylist()}
 
 
@@ -263,15 +261,14 @@ class TestWrite:
         assert got.count() == df1.count() * 2
 
     def test_uncommitted_files_invisible(self, spark, tmp_path):
-        """Manifest-commit: a stray parquet not in _aisle_files.json is
+        """Manifest-commit: a stray parquet the manifest does not name is
         never read (failed/speculative attempt semantics)."""
         register(spark)
         out = str(tmp_path / "w4")
         df = spark.createDataFrame(pa.Table.from_batches([synth_batch(6, 500)]))
         df.write.format("aisle").mode("append").save(out)
         n = spark.read.format("aisle").load(out).count()
-        with open(os.path.join(out, "_aisle_files.json")) as fh:
-            committed = json.load(fh)["files"]
+        committed = load_manifest(None, out)["files"]
         import shutil
 
         shutil.copy(
@@ -374,8 +371,7 @@ def test_multi_rowgroup_filtered_read(spark, tmp_path):
 
 
 def _committed(out):
-    with open(os.path.join(out, "_aisle_files.json")) as fh:
-        return os.path.join(out, json.load(fh)["files"][0])
+    return os.path.join(out, load_manifest(None, out)["files"][0])
 
 
 class TestColumnsOption:
@@ -578,8 +574,8 @@ class TestHardening:
 
 
 class TestFileLevelPruning:
-    """Two-tier pruning: the manifest-list level (per-file [min,max] in
-    _aisle_files.json) must drop whole files before any manifest row is
+    """Two-tier pruning: the manifest-list level (per-file stats rows
+    beside each snapshot) must drop whole files before any manifest row is
     scanned — and never drop a file whose blocks could match."""
 
     @pytest.fixture()
@@ -597,7 +593,7 @@ class TestFileLevelPruning:
 
     def test_manifest_carries_file_stats(self, spark, per_source_files):
         _df, out = per_source_files
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         st = _stats(out)
         assert set(st) == set(m["files"])
         some = next(iter(st.values()))
@@ -679,7 +675,7 @@ class TestFileLevelPruning:
 
         df, out = per_source_files
         compact_encoded(spark, out, target_files=3, order_by="source")
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         st = _stats(out)
         assert st and set(st) == set(m["files"])
         r = AisleReader(out)
@@ -836,7 +832,7 @@ class TestTypedFileStats:
         import decimal
 
         _df, out = typed_files
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         assert len(m["files"]) == 3
         sts = _stats(out)
         assert set(sts) == set(m["files"])
@@ -952,7 +948,7 @@ class TestMapKeyFileStats:
         return out
 
     def test_manifest_carries_key_sets(self, spark, map_files):
-        m = json.load(open(os.path.join(map_files, "_aisle_files.json")))
+        m = load_manifest(None, map_files)
         assert len(m["files"]) == 3
         seen = []
         for st in _stats(map_files).values():
@@ -1001,7 +997,7 @@ class TestMapKeyFileStats:
         from aisle_spark.maintenance import compact_encoded
 
         compact_encoded(spark, map_files, target_files=1)
-        m = json.load(open(os.path.join(map_files, "_aisle_files.json")))
+        m = load_manifest(None, map_files)
         assert len(m["files"]) == 1
         st = next(iter(_stats(map_files).values()))
         assert st["props__keys"] == ["k0", "k1", "k2", "shared"]
@@ -1349,17 +1345,13 @@ class TestParallelPlanningIO:
         assert 2 <= fsw.max_active <= _PLANNING_IO_THREADS
 
     def test_recompute_file_stats_is_parallel_and_bounded(self, spark, many_files):
-        import json as _json
-
         from aisle_spark.datasource import _PLANNING_IO_THREADS, _fs_of
         from aisle_spark.pipeline import _read_sidecar_schema, fold_file_stats
         from aisle_spark.schema import specs_for_schema
 
         fs, root = _fs_of("file://" + many_files)
         fsw = _CountingFS(fs)
-        files = _json.load(open(os.path.join(many_files, "_aisle_files.json")))[
-            "files"
-        ]
+        files = load_manifest(None, many_files)["files"]
         specs = specs_for_schema(_read_sidecar_schema(fs, root))
         stats = fold_file_stats(fsw, root, files, specs)
         assert stats.column("file").to_pylist() == files
@@ -1714,7 +1706,7 @@ class TestLeafColumnsOption:
         import pyarrow.parquet as pq
 
         _df, out = nested_table
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         # drop the score payload from every committed block file
         for f in m["files"]:
             p = os.path.join(out, f)
@@ -1789,7 +1781,7 @@ class TestLeafColumnsOption:
         from aisle_spark.pipeline import read_encoded, scan
 
         df, out = nested_table
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         for f in m["files"]:
             p = os.path.join(out, f)
             pq.write_table(pq.read_table(p).drop_columns(["meta.lang__payload"]), p)
@@ -1972,7 +1964,7 @@ class TestSmallFilePacking:
             df.filter(F.crc32(F.col("doc_id")) % 4 == i).repartition(
                 1
             ).write.format("aisle").mode("append").save(out)
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         ordered = sorted(m["files"])
         sizes = [_stats(out)[f]["__bytes"] for f in ordered]
         # a PACK target of two files forces a split into two tasks

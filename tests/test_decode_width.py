@@ -93,6 +93,22 @@ def test_point_predicate_decodes_in_one_task(spark, table):
     assert [r.doc_id for r in got] == [target]
 
 
+def test_subdirectory_files_decode_in_one_task(spark, table, tmp_path):
+    """``write_encoded`` writes its block files one directory below the
+    table root; a point predicate over them still decodes in one task."""
+    _out, df, tbl = table
+    out = str(tmp_path / "sub")
+    write_encoded(encode_table(df, parts=N_FILES, block_rows=512), out, arrow_schema_of(df))
+    files = _committed(out)[0]
+    assert len(files) > 1 and all(os.path.dirname(os.path.dirname(f)) == out for f in files)
+    blocks, schema = read_encoded(spark, out)
+    target = tbl.column("doc_id")[1234].as_py()
+    got = []
+    n = _tasks(spark, lambda: got.extend(scan(blocks, schema, where=col("doc_id") == target).collect()))
+    assert n == 1
+    assert [r.doc_id for r in got] == [target]
+
+
 def test_unpruned_scan_keeps_one_task_per_file(spark, table):
     out, _df, _tbl = table
     blocks, schema = read_encoded(spark, out)

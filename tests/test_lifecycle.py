@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aisle_spark.datasource import AisleStreamReader, register
+from aisle_spark.pipeline import load_manifest
 
 BASE = "/tmp/aisle_lifecycle_test"
 
@@ -132,12 +133,10 @@ def test_full_table_lifecycle(spark, env):
     blocks.unpersist()
 
 
-def test_pointer_manifest_lifecycle(spark, env, monkeypatch):
-    """r5 interactions in one flow: pointer-form manifest + incremental
+def test_pointer_manifest_lifecycle(spark, env):
+    """r5 interactions in one flow: the version-only manifest + incremental
     compaction + small-file partition packing + CLI aggregate + a stream
     over it all — each step checked against the plain-DataFrame truth."""
-    import aisle_spark.pipeline as pl
-
     from aisle_spark.cli import main as cli_main
     from aisle_spark.datasource import planned_files, AisleReader
     from aisle_spark.maintenance import (
@@ -153,15 +152,13 @@ def test_pointer_manifest_lifecycle(spark, env, monkeypatch):
         "concat('s', id % 5) AS src",
         "cast(id % 89 + 0.25 as decimal(10,2)) AS amt",
     )
-    # 1) six small appends (writer commits run in a Python worker with
-    # the default threshold, so the manifest stays full form here)
+    # 1) six small appends (writer commits run in a Python worker)
     for q in range(6):
         part = df.filter(f"id >= {q * 1000} AND id < {(q + 1) * 1000}")
         part.repartition(1).write.format("aisle").option(
             "sortCols", "src,n"
         ).mode("append").save(out)
-    m = json.load(open(os.path.join(out, "_aisle_files.json")))
-    assert "files" in m and len(m["files"]) == 6
+    assert len(load_manifest(None, out)["files"]) == 6
 
     # 2) small files pack into combined partitions; results exact
     parts = AisleReader(out).partitions()
@@ -176,19 +173,21 @@ def test_pointer_manifest_lifecycle(spark, env, monkeypatch):
     assert got == df.filter("src = 's2' AND n < 3000").count()
 
     # 3) incremental compaction through the CLI (public surface, runs
-    # IN-PROCESS where the patched threshold applies): everything is
-    # tiny, so min-file-mb=64 rewrites all six — and the commit flips
-    # the current manifest to POINTER form
-    monkeypatch.setattr(pl, "_MANIFEST_POINTER_MIN_FILES", 0)
+    # in-process): everything is tiny, so min-file-mb=64 rewrites all six
     cli_main([
         "compact", "--table", out, "--target-files", "2",
         "--min-file-mb", "64", "--order-by", "src",
     ])
-    m = json.load(open(os.path.join(out, "_aisle_files.json")))
-    assert m == {"version": 7, "pointer": True}
+    m = load_manifest(None, out)
+    assert m["version"] == 7 and all(f.startswith("compact-") for f in m["files"])
+    # a stream's newest offset is the compaction's version, which emits
+    # no file: its rows were emitted by versions 1-6
+    stream = AisleStreamReader(out)
+    assert stream.latestOffset() == {"version": 7}
+    assert planned_files(stream.partitions({"version": 6}, {"version": 7})) == []
     assert spark.read.format("aisle").load(out).count() == 6000
 
-    # 4) CLI aggregate over the pointer-form compacted table
+    # 4) CLI aggregate over the compacted table
     agg_out = os.path.join(BASE, "agg")
     cli_main([
         "aggregate", "--table", out, "--sum-by", "src:n",
@@ -206,7 +205,7 @@ def test_pointer_manifest_lifecycle(spark, env, monkeypatch):
     }
     assert got_sums == exp_sums
 
-    # 5) retention + vacuum keep the pointer chain intact
+    # 5) retention + vacuum keep the current version's chain intact
     expire_snapshots(out, keep_last=1)
     vacuum_encoded(out, min_age_seconds=0)
     assert spark.read.format("aisle").load(out).count() == 6000

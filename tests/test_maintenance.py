@@ -31,8 +31,9 @@ def small_files_table(spark, tmp_path):
 
 
 def _manifest(out):
-    with open(os.path.join(out, "_aisle_files.json")) as fh:
-        return json.load(fh)
+    from aisle_spark.pipeline import load_manifest
+
+    return load_manifest(None, out)
 
 
 def _commit_batch(out, batch_id, files):
@@ -394,21 +395,15 @@ class TestDeltaSnapshots:
 
 
 class TestManifestPointerForm:
-    """Current-state manifest past _MANIFEST_POINTER_MIN_FILES files
-    (VERDICT r4 missing #2): the commit writes a delta snapshot plus a
-    ~32-byte pointer swap — O(changed) bytes at any table size — and
-    every reader resolves the pointer through the snapshot chain.
-
-    The datasource writer commits in a separate Python worker (default
-    threshold there), so these tests flip the table into pointer form
-    via an IN-PROCESS commit (compaction) with the threshold patched —
-    which also proves the worker-side commit path RESOLVES a pointer it
-    finds when a later append merges through it."""
+    """The current-state manifest is always ``{"version": N}``: a commit
+    writes a delta snapshot plus that constant-size swap — O(changed)
+    bytes at any table size — and every reader resolves the version
+    through the snapshot chain. The fixture's last commit is an
+    in-process compaction; a later append commits in the data source's
+    Python worker and must merge through the chain it finds."""
 
     @pytest.fixture()
-    def pointer_table(self, spark, tmp_path, monkeypatch):
-        import aisle_spark.pipeline as pl
-
+    def pointer_table(self, spark, tmp_path):
         from pyspark.sql import functions as F
 
         register(spark)
@@ -419,20 +414,18 @@ class TestManifestPointerForm:
             part.write.format("aisle").option("sortCols", "source").mode(
                 "append"
             ).save(out)
-        assert "files" in _manifest(out)  # below threshold: full form
-        monkeypatch.setattr(pl, "_MANIFEST_POINTER_MIN_FILES", 1)
         compact_encoded(spark, out, target_files=3)
         return df, out
 
     def test_manifest_is_pointer_and_readers_resolve(self, spark, pointer_table):
-        from aisle_spark.pipeline import load_manifest
+        from aisle_spark.pipeline import current_version, load_manifest
 
         df, out = pointer_table
-        assert _manifest(out) == {"version": 5, "pointer": True}
+        assert current_version(None, out) == 5
         m = load_manifest(None, out, stats=True)
-        assert len(m["files"]) >= 2
+        assert m["version"] == 5 and len(m["files"]) >= 2
         assert set(m["stats"].column("file").to_pylist()) == set(m["files"])
-        # full read through the datasource (planning resolves the pointer)
+        # full read through the datasource (planning resolves the version)
         assert spark.read.format("aisle").load(out).count() == df.count()
         got = (
             spark.read.format("aisle")
@@ -448,8 +441,9 @@ class TestManifestPointerForm:
         assert blocks.selectExpr("sum(n_rows)").collect()[0][0] == df.count()
 
     def test_append_merges_through_pointer(self, spark, pointer_table):
-        """The writer-commit worker finds a POINTER manifest and must
-        read-merge through the snapshot chain, never drop files."""
+        """The writer-commit worker finds the version the compaction
+        committed and must read-merge through the snapshot chain, never
+        drop files."""
         from pyspark.sql import functions as F
 
         df, out = pointer_table
@@ -462,7 +456,7 @@ class TestManifestPointerForm:
         from aisle_spark.maintenance import expire_snapshots
 
         df, out = pointer_table
-        # versionAsOf pins a pre-pointer snapshot
+        # versionAsOf pins a snapshot before the compaction
         got = (
             spark.read.format("aisle").option("versionAsOf", "1").load(out).count()
         )
@@ -614,14 +608,11 @@ class TestReviewRegressions:
         ]
         assert any(newf in p for p in emitted)
 
-    def test_expire_keep_zero_never_bricks_pointer_table(
-        self, spark, tmp_path, monkeypatch
-    ):
+    def test_expire_keep_zero_never_bricks_pointer_table(self, spark, tmp_path):
         """expire_snapshots(keep_last=0) must not delete the snapshot the
-        pointer-form current manifest resolves through."""
-        import aisle_spark.pipeline as pl
-
+        current version resolves through."""
         from aisle_spark.maintenance import expire_snapshots
+        from aisle_spark.pipeline import current_version
 
         register(spark)
         out = str(tmp_path / "ek")
@@ -632,12 +623,10 @@ class TestReviewRegressions:
             df.filter(F.crc32(F.col("doc_id")) % 3 == i).repartition(
                 1
             ).write.format("aisle").mode("append").save(out)
-        monkeypatch.setattr(pl, "_MANIFEST_POINTER_MIN_FILES", 1)
         compact_encoded(spark, out, target_files=2)
-        assert "pointer" in _manifest(out)
         victims = expire_snapshots(out, keep_last=0)
-        # pointed-at snapshot survives; table stays readable
-        assert _manifest(out)["version"] not in victims
+        # the current version's snapshot survives; table stays readable
+        assert victims == [1, 2, 3] and current_version(None, out) == 4
         assert spark.read.format("aisle").load(out).count() == df.count()
         vacuum_encoded(out, min_age_seconds=0)
         assert spark.read.format("aisle").load(out).count() == df.count()

@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aisle_spark.datasource import AisleStreamReader, register
+from aisle_spark.pipeline import load_manifest
 from aisle_spark.schema import synth_batch
 from tests.test_datasource import _stats
 
@@ -61,10 +62,8 @@ def _drain(reader: AisleStreamReader) -> list[list[str]]:
 
 class TestOffsetProtocol:
     def test_initial_backfill_is_capped_and_complete(self, table):
-        import json
-
         _df, out = table
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         n_files = len(m["files"])
         assert n_files == 6
         r = AisleStreamReader(out, max_files_per_trigger=2)
@@ -197,20 +196,16 @@ class TestEndToEnd:
 
 class TestMaxBytesPerTrigger:
     def test_manifest_records_file_sizes(self, table):
-        import json
-
         _df, out = table
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         for f in m["files"]:
             b = _stats(out)[f]["__bytes"]
             assert isinstance(b, int) and b > 0
             assert b == os.path.getsize(os.path.join(out, f))
 
     def test_byte_budget_bounds_batches(self, table):
-        import json
-
         _df, out = table
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         sizes = {f: _stats(out)[f]["__bytes"] for f in m["files"]}
         avg = sum(sizes.values()) // len(sizes)
         # soft max at ~1.5 files: every batch stops after the file that
@@ -274,13 +269,11 @@ class TestMaxBytesPerTrigger:
         assert AisleStreamReader._off_key(nxt) >= AisleStreamReader._off_key(ckpt)
 
     def test_compaction_recompute_records_sizes(self, spark, table):
-        import json
-
         from aisle_spark.maintenance import compact_encoded
 
         _df, out = table
         compact_encoded(spark, out, target_files=2)
-        m = json.load(open(os.path.join(out, "_aisle_files.json")))
+        m = load_manifest(None, out)
         for f in m["files"]:
             assert _stats(out)[f]["__bytes"] == os.path.getsize(
                 os.path.join(out, f)

@@ -1,36 +1,47 @@
-"""Measure manifest/snapshot commit bytes vs table size — the growth
-discipline behind delta-encoded snapshots (pipeline._snapshot_payload).
+"""Measure commit bytes and commit time against table size and against
+the number of prior snapshots — the growth discipline behind
+delta-encoded snapshots (pipeline._snapshot_payload) and the version-only
+``_aisle_files.json`` commit point (pipeline.current_version).
 
-Simulates a table of N committed files receiving single-file appends and
-reports bytes persisted per commit for (a) the always-full snapshot
-scheme (pre-r4) and (b) the delta scheme actually in use, plus the
-replay cost of materializing a version at the end of a delta chain.
-Each commit hands ``publish_manifest`` the stats row of the file it
-adds (hand-built ``ts``/``n_tok`` rows); ``commit_ms`` is each append's
-commit time against the number of snapshots already written — flat but
-for the periodic full checkpoint, which rewrites every file's stats.
+Simulates a table of N committed files receiving single-file appends.
+Each commit hands ``publish_manifest`` the stats row of the file it adds
+(hand-built ``ts``/``n_tok`` rows). Reported per N:
 
-Run: python tools/manifest_growth.py [n_files ...]
+* bytes one append persists (delta snapshot + its stats file) against
+  the full snapshot and stats file of the first commit;
+* ``commit_ms_by_prior_snapshots``: the median delta commit time over
+  each window of 16 prior snapshots, and ``checkpoint_ms`` for the
+  periodic full checkpoints, which rewrite every file's stats. A flat
+  series means numbering a version does not grow with history;
+* the time to materialize the last version (``read_snapshot`` with
+  stats) and to load the current manifest.
+
+Run: python tools/manifest_growth.py [n_files ...] [--appends K]
 Prints one JSON line per N.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+WINDOW = 16  # prior snapshots per reported median
 
-def measure(n_files: int, appends: int = 16) -> dict:
+
+def measure(n_files: int, appends: int = 64) -> dict:
     import pyarrow as pa
 
     from aisle_spark.pipeline import (
         _SNAP_DIR,
+        _SNAP_FULL_EVERY,
         load_manifest,
         publish_manifest,
         read_snapshot,
@@ -47,62 +58,56 @@ def measure(n_files: int, appends: int = 16) -> dict:
             "n_tok__max": [4096] * len(names),
         })
 
+    def persisted(v: int) -> int:
+        return sum(os.path.getsize(f"{root}/{_SNAP_DIR}/v{v:08d}{s}") for s in (".json", ".stats.parquet"))
+
     root = tempfile.mkdtemp(prefix="aisle_growth_")
     try:
         files = [f"part-{i:05d}-0123456789abcdef0123456789abcdef.parquet"
                  for i in range(n_files)]
         publish_manifest(None, root, {"files": files}, rows(files, 0))
-        full_bytes = os.path.getsize(f"{root}/{_SNAP_DIR}/v{1:08d}.json")
-        stats_bytes = os.path.getsize(f"{root}/{_SNAP_DIR}/v{1:08d}.stats.parquet")
-        delta_sizes = []
-        commit_ms = []
-        current_sizes = []  # _aisle_files.json bytes per commit (r5:
-        # pointer form past _MANIFEST_POINTER_MIN_FILES => O(1) swap)
+        full_bytes = persisted(1)
+        delta_bytes, delta_ms, checkpoint_ms = [], {}, []
         for k in range(appends):
             f = f"part-new{k:05d}-0123456789abcdef0123456789abcdef.parquet"
             files = sorted(files + [f])
-            t0 = time.time()
+            t0 = time.perf_counter()
             v = publish_manifest(None, root, {"files": files}, rows([f], n_files + k))
-            commit_ms.append(round((time.time() - t0) * 1000, 2))
-            delta_sizes.append(
-                os.path.getsize(f"{root}/{_SNAP_DIR}/v{v:08d}.json")
-                + os.path.getsize(f"{root}/{_SNAP_DIR}/v{v:08d}.stats.parquet")
-            )
-            current_sizes.append(os.path.getsize(f"{root}/_aisle_files.json"))
-        t0 = time.time()
+            ms = (time.perf_counter() - t0) * 1000
+            if v % _SNAP_FULL_EVERY == 1:
+                checkpoint_ms.append(round(ms, 2))
+            else:
+                delta_bytes.append(persisted(v))
+                delta_ms.setdefault((v - 2) // WINDOW, []).append(ms)
+        t0 = time.perf_counter()
         snap = read_snapshot(None, root, v, stats=True)
-        replay_ms = round((time.time() - t0) * 1000, 2)
+        replay_ms = (time.perf_counter() - t0) * 1000
         assert len(snap["files"]) == snap["stats"].num_rows == n_files + appends
-        t0 = time.time()
+        t0 = time.perf_counter()
         cur = load_manifest(None, root)
-        resolve_ms = round((time.time() - t0) * 1000, 2)
+        load_ms = (time.perf_counter() - t0) * 1000
         assert cur["files"] == snap["files"]
-        commit_per = [d + c for d, c in zip(delta_sizes, current_sizes)]
         return {
             "n_files": n_files,
-            "full_snapshot_bytes": full_bytes,
-            "full_stats_bytes": stats_bytes,
-            "delta_snapshot_bytes_median": sorted(delta_sizes)[len(delta_sizes) // 2],
-            "current_manifest_bytes_median": sorted(current_sizes)[
-                len(current_sizes) // 2
-            ],
-            "total_commit_bytes_median": sorted(commit_per)[len(commit_per) // 2],
-            "delta_vs_full": round(
-                sorted(commit_per)[len(commit_per) // 2] / full_bytes, 6
-            ),
-            "replay_chain_ms": replay_ms,
-            "commit_ms": commit_ms,
-            "pointer_resolve_ms": resolve_ms,
-            "note": "total_commit_bytes = delta snapshot + its stats file + "
-                    "current-state swap; O(changed) at every table size past the pointer "
-                    "threshold (periodic full checkpoints amortize, "
-                    "Delta-Lake style)",
+            "full_commit_bytes": full_bytes,
+            "delta_commit_bytes_median": statistics.median(delta_bytes),
+            "delta_vs_full": round(statistics.median(delta_bytes) / full_bytes, 6),
+            "commit_ms_by_prior_snapshots": {
+                f"{w * WINDOW + 1}-{(w + 1) * WINDOW}": round(statistics.median(ms), 2)
+                for w, ms in sorted(delta_ms.items())
+            },
+            "checkpoint_ms": checkpoint_ms,
+            "replay_chain_ms": round(replay_ms, 2),
+            "load_manifest_ms": round(load_ms, 2),
         }
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
-    ns = [int(a) for a in sys.argv[1:]] or [1_000, 10_000, 100_000]
-    for n in ns:
-        print(json.dumps(measure(n)))
+    ap = argparse.ArgumentParser()
+    ap.add_argument("n_files", type=int, nargs="*", default=[1_000, 10_000, 100_000])
+    ap.add_argument("--appends", type=int, default=64)
+    args = ap.parse_args()
+    for n in args.n_files:
+        print(json.dumps(measure(n, args.appends)))
