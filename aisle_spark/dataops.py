@@ -83,10 +83,6 @@ _DIALECTS = {
 }
 
 
-def _render(template, dialect: str) -> str:
-    return template(_DIALECTS[dialect])
-
-
 # --------------------------------------------------------------------------
 # templates: functions dialect-dict -> SQL over view `documents`/`embeddings`
 # --------------------------------------------------------------------------

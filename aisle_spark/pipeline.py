@@ -434,19 +434,17 @@ def manifest_lock(fs, root: str):
 
 
 _SNAP_DIR = "_aisle_snapshots"
-# the table's one commit point, ``{"version": N}``: swapped last by every
-# commit, read only by current_version
+# the one commit point, ``{"version": N}``, swapped last, read by current_version
 MANIFEST = "_aisle_files.json"
 # the table's Arrow schema (IPC), written by every commit
 SCHEMA_SIDECAR = "_aisle_schema.arrow"
 
 
 def current_version(fs, root: str) -> int:
-    """The committed version named by ``_aisle_files.json`` (0 when the
-    table has none). The only reader of that file: a snapshot above it is
-    the orphan of a commit that died before its swap, which the next
-    commit overwrites. Manifests written in the older full-list and
-    pointer forms carry ``version`` too."""
+    """The committed version named by ``_aisle_files.json`` (0 without
+    one), its only reader: a snapshot above it is the orphan of a commit
+    that died before its swap, which the next commit overwrites. The
+    older full-list and pointer forms carry ``version`` too."""
     try:
         return int(_fs_read_json(fs, f"{root.rstrip('/')}/{MANIFEST}")["version"])
     except FileNotFoundError:
@@ -457,12 +455,9 @@ def list_snapshots(fs, root: str) -> list[int]:
     """Committed manifest versions still retained, ascending: the
     snapshots at or below ``current_version``."""
     cur = current_version(fs, root)
-    out = []
-    for p, _sz in _fs_list(fs, f"{root.rstrip('/')}/{_SNAP_DIR}", ".json"):
-        name = p.rsplit("/", 1)[-1]
-        if name.startswith("v") and name[1:-5].isdigit() and int(name[1:-5]) <= cur:
-            out.append(int(name[1:-5]))
-    return sorted(out)
+    snaps = _fs_list(fs, f"{root.rstrip('/')}/{_SNAP_DIR}", ".json")
+    vs = (n[1:-5] for n in (p.rsplit("/", 1)[-1] for p, _sz in snaps) if n.startswith("v"))
+    return sorted(int(v) for v in vs if v.isdigit() and int(v) <= cur)
 
 
 # every Nth snapshot is written FULL; the ones between are deltas against
@@ -562,15 +557,15 @@ def read_snapshot(
     return payload
 
 
-def _snapshot_payload(payload: dict, prev: dict | None) -> dict:
+def _snapshot_payload(payload: dict, prev: dict) -> dict:
     """The JSON actually persisted for ``payload``'s version: the full
     payload on the periodic checkpoints (and whenever the delta would not
     be smaller: it would name as many files as the full list, and its
     stats file would hold as many rows — e.g. compaction rewrites the
     whole file set), otherwise a delta against ``prev``, the committed
-    version it follows (None for a table's first commit)."""
+    version it follows (a table's first commit is a checkpoint)."""
     version = payload["version"]
-    if prev is None or version % _SNAP_FULL_EVERY == 1:
+    if version % _SNAP_FULL_EVERY == 1:
         return payload
     old_files = set(prev["files"])
     new_files = set(payload.get("files", []))
@@ -602,7 +597,15 @@ def load_manifest(fs, root: str, stats: bool = False, version: int | None = None
     return read_snapshot(fs, root, version, stats=stats) if version else None
 
 
-def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None) -> int:
+def _committed(fs, root: str, cache: dict) -> dict:
+    """``load_manifest`` with its reads memoized in ``cache``; version 0 before any commit."""
+    cur = current_version(fs, root)
+    return read_snapshot(fs, root, cur, cache=cache) if cur else {"version": 0, "files": []}
+
+
+def publish_manifest(
+    fs, root: str, payload: dict, stats: pa.Table | None = None, prev=None, cache=None
+) -> int:
     """Commit ``payload`` as version ``current_version`` + 1. First write
     its immutable numbered snapshot (full or a delta against the current
     version, see _snapshot_payload) — time travel for training-data
@@ -617,14 +620,15 @@ def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None
     immutable ``v{N}.stats.parquet`` written before the snapshot that
     names it — every live file's rows when the snapshot is full, only
     ``stats`` when it is a delta. The current version is read once for
-    both. ``commit`` calls it under ``manifest_lock``, which also
+    both: ``prev`` (``_committed``, with its read ``cache``), read here
+    unless ``commit`` passes it under ``manifest_lock``, which also
     serializes version numbering. Returns the new version."""
     import pyarrow.compute as pc
 
     root = root.rstrip("/")
-    version = current_version(fs, root) + 1
-    cache: dict = {}
-    prev = read_snapshot(fs, root, version - 1, cache=cache) if version > 1 else None
+    cache = {} if cache is None else cache
+    prev = _committed(fs, root, cache) if prev is None else prev
+    version = prev["version"] + 1
     payload = dict(payload, version=version)
     _fs_mkdirs(fs, f"{root}/{_SNAP_DIR}")
     snap = _snapshot_payload(payload, prev)
@@ -634,7 +638,7 @@ def publish_manifest(fs, root: str, payload: dict, stats: pa.Table | None = None
         return None if rows is None else rows.filter(pc.is_in(rows.column("file"), live))
 
     stats = alive(stats)
-    if prev is not None and "delta_base" not in snap:
+    if version > 1 and "delta_base" not in snap:
         old = read_snapshot(fs, root, version - 1, stats=True, cache=cache)["stats"]
         stats = _merge_stats(alive(old), (), stats)
     if stats is not None:
@@ -699,7 +703,8 @@ def commit(
     new = set(add)
     _fs_mkdirs(fs, root)
     with manifest_lock(fs, root):
-        cur = load_manifest(fs, root) or {"files": []}
+        cache: dict = {}
+        cur = _committed(fs, root, cache)
         old = set(cur["files"])
         batches = cur.get("batches")
         replaced = set()
@@ -719,7 +724,7 @@ def commit(
         if compacted_from is not None:
             payload["compacted_from"] = compacted_from
         _write_schema_sidecar(root, schema, fs)
-        return publish_manifest(fs, root, payload, stats)
+        return publish_manifest(fs, root, payload, stats, cur, cache)
 
 
 def _fs_read_json(fs, path: str):
@@ -1671,19 +1676,23 @@ def prune_report(blocks: DataFrame, where: Spec | str) -> dict:
 
 def write_encoded(blocks: DataFrame, path: str, schema: pa.Schema, mode: str = "error") -> None:
     """Write ``blocks`` as the table at ``path`` under Spark's save
-    ``mode``: ``error`` and ``ignore`` act when ``path`` exists,
-    ``append`` adds to the live files and ``overwrite`` replaces them.
-    The block files go to a fresh ``write-<token>/`` subdirectory and the
-    commit names exactly them, so the files of a failed earlier attempt
-    are never committed (``vacuum_encoded`` collects them)."""
+    ``mode``, in any case: ``error`` (``errorifexists``, ``default``) and
+    ``ignore`` act when ``path`` exists, ``append`` adds to the live files
+    (and, on a plain ``blocks.write.parquet`` layout, adopts its files)
+    and ``overwrite`` replaces them. The block files go to a fresh
+    ``write-<token>/`` subdirectory and the commit names exactly them, so
+    a failed earlier attempt's files are never committed."""
     import os
 
-    if os.path.exists(path) and mode in ("error", "errorifexists", "ignore"):
+    mode = {"default": "error", "errorifexists": "error"}.get(mode.lower(), mode.lower())
+    if os.path.exists(path) and mode in ("error", "ignore"):
         if mode == "ignore":
             return
         raise FileExistsError(f"{path} already exists (mode={mode!r})")
     # Spark rejects an unknown mode
     files = write_subdir(blocks.write.mode(mode), None, path, "write")
+    if mode == "append" and current_version(None, path) == 0:
+        files += [p.rsplit("/", 1)[-1] for p, _size in _fs_list(None, path, ".parquet")]
     commit(None, path, schema, files, drop=ALL if mode == "overwrite" else ())
 
 

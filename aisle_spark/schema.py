@@ -138,10 +138,6 @@ def _specs_for_field(field: pa.Field, prefix: str) -> list[ColumnSpec]:
     return [spec_for_field(pa.field(name, t, nullable=field.nullable))]
 
 
-def has_structs(schema: pa.Schema) -> bool:
-    return any(pa.types.is_struct(schema.field(i).type) for i in range(len(schema)))
-
-
 def flatten_table(tbl: pa.Table) -> pa.Table:
     """Explode struct columns into dotted leaf columns (+ __defined).
     Leaves under a NULL struct slot are canonicalized to NULL so the

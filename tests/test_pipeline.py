@@ -222,6 +222,45 @@ class TestEndToEnd:
         out = scan(blocks2, schema2, where=col("source") == "books")
         assert out.count() == df.filter("source = 'books'").count()
 
+    @pytest.mark.parametrize(
+        "mode, rows",
+        [("Overwrite", 1000), ("IGNORE", 1000), ("Append", 2000), ("default", None), ("ErrorIfExists", None)],
+    )
+    def test_save_mode_on_existing_table(self, spark, tmp_path, mode, rows):
+        """A second ``write_encoded`` of 1,000 rows under Spark's save
+        modes, in any case: overwrite replaces, ignore skips, append adds,
+        and ``default``/``errorifexists`` raise, leaving the first write."""
+        from aisle_spark.pipeline import list_snapshots
+
+        blocks = encode_table(spark.createDataFrame(pa.Table.from_batches([synth_batch(0, 1000)])), parts=2)
+        path = str(tmp_path / "enc")
+        write_encoded(blocks, path, TOKEN_SCHEMA)
+        if rows is None:
+            with pytest.raises(FileExistsError):
+                write_encoded(blocks, path, TOKEN_SCHEMA, mode=mode)
+            rows = 1000
+        else:
+            write_encoded(blocks, path, TOKEN_SCHEMA, mode=mode)
+        assert scan(*read_encoded(spark, path)).count() == rows
+        assert list_snapshots(None, path) == ([1, 2] if mode.lower() in ("overwrite", "append") else [1])
+
+    def test_append_adopts_layout_without_manifest(self, spark, tmp_path):
+        """An append onto a plain ``blocks.write.parquet`` directory commits
+        the block files its readers listed beside its own, so none of the
+        first write's rows disappears."""
+        import os
+
+        from aisle_spark.pipeline import load_manifest
+
+        blocks = encode_table(spark.createDataFrame(pa.Table.from_batches([synth_batch(0, 1000)])), parts=2)
+        path = str(tmp_path / "enc")
+        blocks.write.parquet(path)
+        plain = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        write_encoded(blocks, path, TOKEN_SCHEMA, mode="append")
+        files = load_manifest(None, path)["files"]
+        assert [f for f in files if "/" not in f] == plain
+        assert scan(*read_encoded(spark, path)).count() == 2000
+
     def test_keep_pushed_into_block_file_scan(self, spark, tmp_path):
         """keep() spells Unknown as ``cmp OR stat IS NULL``, never as a
         coalesce, so Spark pushes its min/max leaves into the parquet scan

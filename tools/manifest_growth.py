@@ -3,7 +3,7 @@ the number of prior snapshots — the growth discipline behind
 delta-encoded snapshots (pipeline._snapshot_payload) and the version-only
 ``_aisle_files.json`` commit point (pipeline.current_version).
 
-Simulates a table of N committed files receiving single-file appends.
+Simulates a table of N committed files receiving 256 single-file appends.
 Each commit hands ``publish_manifest`` the stats row of the file it adds
 (hand-built ``ts``/``n_tok`` rows). Reported per N:
 
@@ -16,13 +16,12 @@ Each commit hands ``publish_manifest`` the stats row of the file it adds
 * the time to materialize the last version (``read_snapshot`` with
   stats) and to load the current manifest.
 
-Run: python tools/manifest_growth.py [n_files ...] [--appends K]
+Run: python tools/manifest_growth.py [n_files ...]
 Prints one JSON line per N.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import shutil
@@ -34,9 +33,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 WINDOW = 16  # prior snapshots per reported median
+APPENDS = 256  # single-file appends after the first commit
 
 
-def measure(n_files: int, appends: int = 64) -> dict:
+def measure(n_files: int) -> dict:
     import pyarrow as pa
 
     from aisle_spark.pipeline import (
@@ -68,7 +68,7 @@ def measure(n_files: int, appends: int = 64) -> dict:
         publish_manifest(None, root, {"files": files}, rows(files, 0))
         full_bytes = persisted(1)
         delta_bytes, delta_ms, checkpoint_ms = [], {}, []
-        for k in range(appends):
+        for k in range(APPENDS):
             f = f"part-new{k:05d}-0123456789abcdef0123456789abcdef.parquet"
             files = sorted(files + [f])
             t0 = time.perf_counter()
@@ -82,7 +82,7 @@ def measure(n_files: int, appends: int = 64) -> dict:
         t0 = time.perf_counter()
         snap = read_snapshot(None, root, v, stats=True)
         replay_ms = (time.perf_counter() - t0) * 1000
-        assert len(snap["files"]) == snap["stats"].num_rows == n_files + appends
+        assert len(snap["files"]) == snap["stats"].num_rows == n_files + APPENDS
         t0 = time.perf_counter()
         cur = load_manifest(None, root)
         load_ms = (time.perf_counter() - t0) * 1000
@@ -105,9 +105,6 @@ def measure(n_files: int, appends: int = 64) -> dict:
 
 
 if __name__ == "__main__":
-    ap = argparse.ArgumentParser()
-    ap.add_argument("n_files", type=int, nargs="*", default=[1_000, 10_000, 100_000])
-    ap.add_argument("--appends", type=int, default=64)
-    args = ap.parse_args()
-    for n in args.n_files:
-        print(json.dumps(measure(n, args.appends)))
+    ns = [int(a) for a in sys.argv[1:]] or [1_000, 10_000, 100_000]
+    for n in ns:
+        print(json.dumps(measure(n)))
